@@ -1,13 +1,20 @@
-"""connected_components (large-star/small-star) vs brute-force
-union-find on random graphs, chains (multi-round convergence), and the
-dedup_keep_list join semantics."""
+"""connected_components vs brute-force union-find on random graphs,
+chains (multi-round convergence) and the dedup_keep_list join
+semantics. Every Spark case runs on both paths — star rounds only, a
+switch to the in-memory finish once a round reaches a spanning forest,
+and in-memory from the start — which must agree; the numpy kernel is
+checked against the union-find without Spark."""
 
 import random
 
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from tetrex_spark.operators import clusters
 from tetrex_spark.operators.clusters import (
+    _min_label_components,
     connected_components,
     dedup_keep_list,
 )
@@ -30,17 +37,42 @@ def _union_find(nodes, edges):
     return {n: find(n) for n in nodes}
 
 
-def _check(spark, edges):
+def _forest_size(comp):
+    """Edges in a spanning forest of the graph: ids minus components."""
+    return len(comp) - len(set(comp.values()))
+
+
+def _on_each_path(run, forest=None):
+    """run() with the in-memory bound at 0 (star rounds to the fixpoint),
+    at `forest` (the rounds hand over once the edge count falls to a
+    spanning forest's; by default the forest of the first run's
+    components) and at its default (in memory from the start). All runs
+    must agree; returns their common result."""
+
+    def under(bound):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(clusters, "_LOCAL_MAX_EDGES", bound)
+            return run()
+
+    star = under(0)
+    if forest is None:
+        forest = _forest_size(star)
+    for bound in (forest, clusters._LOCAL_MAX_EDGES):
+        assert under(bound) == star, f"bound {bound} disagrees with the star rounds"
+    return star
+
+
+def _components(pairs):
+    return {r.id: r.component for r in connected_components(pairs).collect()}
+
+
+def _check(spark, edges, id_type="long"):
     nodes = sorted({x for e in edges for x in e})
     truth = _union_find(nodes, edges)
     pairs = spark.createDataFrame(
-        [(a, b) for a, b in edges], "id_a long, id_b long"
+        [(a, b) for a, b in edges], f"id_a {id_type}, id_b {id_type}"
     )
-    got = {
-        r.id: r.component
-        for r in connected_components(pairs).collect()
-    }
-    assert got == truth
+    assert _on_each_path(lambda: _components(pairs)) == truth
 
 
 @pytest.mark.parametrize("seed", [0, 1, 2])
@@ -65,12 +97,79 @@ def test_two_components_and_duplicate_edges(spark):
     _check(spark, edges)
 
 
+def test_string_ids(spark):
+    edges = [("doc-b", "doc-a"), ("doc-c", "doc-b"), ("zz", "z"),
+             ("\u00e9t\u00e9", "doc-c"), ("z", "zz")]
+    _check(spark, edges, id_type="string")
+
+
+def test_empty_and_self_loop_only_input(spark):
+    # self loops are dropped with the canonical edges: no ids, on both paths
+    for rows in ([], [(4, 4), (7, 7)]):
+        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+        assert _on_each_path(lambda: _components(pairs)) == {}
+
+
+def test_rounds_hand_over_to_the_in_memory_finish(spark, monkeypatch):
+    """A 12-clique (66 edges) collapses to an 11-edge star in one round;
+    with the bound between the two, exactly one star round runs before
+    the in-memory finish."""
+    rounds, finishes = [], []
+    large_star, local = clusters._large_star, clusters._local_components
+    monkeypatch.setattr(clusters, "_LOCAL_MAX_EDGES", 20)
+    monkeypatch.setattr(
+        clusters, "_large_star", lambda e: rounds.append(1) or large_star(e)
+    )
+    monkeypatch.setattr(
+        clusters, "_local_components",
+        lambda e: finishes.append(1) or local(e),
+    )
+    edges = [(a, b) for a in range(100, 112) for b in range(a + 1, 112)]
+    edges += [(i, i + 1) for i in range(5)]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = _components(pairs)
+    assert (len(rounds), len(finishes)) == (1, 1)
+    assert got == {**{i: 0 for i in range(6)}, **{i: 100 for i in range(100, 112)}}
+
+
+_edge_lists = st.lists(
+    st.tuples(st.integers(-50, 50), st.integers(-50, 50)), max_size=80
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(_edge_lists, st.integers(0, 3))
+def test_kernel_matches_union_find_on_random_graphs(edges, dup):
+    # duplicate (and reversed) edges must not change the components
+    edges = edges + [(b, a) for a, b in edges[: dup * 5]] + edges[:dup]
+    _check_kernel(edges)
+
+
+@settings(max_examples=100, deadline=None)
+@given(st.permutations(list(range(60))), st.integers(1, 60))
+def test_kernel_matches_union_find_on_permuted_chains(labels, n):
+    # a path over permuted labels: the min label sits anywhere in it
+    chain = labels[:n]
+    _check_kernel(list(zip(chain, chain[1:])) or [(chain[0], chain[0])])
+
+
+def _check_kernel(edges):
+    src = np.array([a for a, _ in edges], dtype=np.int64)
+    dst = np.array([b for _, b in edges], dtype=np.int64)
+    nodes, comp = _min_label_components(src, dst)
+    truth = _union_find(sorted({x for e in edges for x in e}), edges)
+    assert dict(zip(nodes.tolist(), comp.tolist())) == truth
+
+
 def test_keep_list_covers_unpaired_docs(spark):
     docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
     pairs = spark.createDataFrame(
         [(1, 4), (4, 6), (2, 7)], "id_a long, id_b long"
     )
-    out = {r.id: (r.component, r.keep) for r in dedup_keep_list(docs, pairs).collect()}
+    out = _on_each_path(lambda: {
+        r.id: (r.component, r.keep)
+        for r in dedup_keep_list(docs, pairs).collect()
+    }, forest=3)
     assert out == {
         0: (0, 1), 1: (1, 1), 2: (2, 1), 3: (3, 1),
         4: (1, 0), 5: (5, 1), 6: (1, 0), 7: (2, 0),
@@ -86,7 +185,6 @@ def test_minhash_edges_components_equal_pair_components(spark):
     yield the same connected components as the full member-level pair
     list (quadratic in dup-cluster sizes) — including on the skewed
     boilerplate shape, and excluding shingle-ineligible groups."""
-    from tetrex_spark.operators.clusters import connected_components
     from tetrex_spark.operators.dedup import minhash_lsh_edges, minhash_lsh_pairs
 
     boiler = ("this site uses cookies to improve your experience accept "
@@ -102,12 +200,10 @@ def test_minhash_edges_components_equal_pair_components(spark):
     rows.append((7001, "too short"))
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    def comps(pairs):
-        c = connected_components(pairs).collect()
-        return {r["id"]: r["component"] for r in c}
-
-    got = comps(minhash_lsh_edges(df, k=3, threshold=0.7))
-    want = comps(minhash_lsh_pairs(df, k=3, threshold=0.7))
+    edges = minhash_lsh_edges(df, k=3, threshold=0.7)
+    pairs = minhash_lsh_pairs(df, k=3, threshold=0.7)
+    got = _on_each_path(lambda: _components(edges))
+    want = _on_each_path(lambda: _components(pairs))
     assert got == want
     # the boilerplate cluster + near-dup all collapse to component 0
     assert want and all(want[i] == 0 for i in list(range(300)) + [5000])
@@ -122,7 +218,6 @@ def test_simhash_edges_components_equal_pair_components(spark):
     """simhash_edges_from_fingerprints (rep pairs + stars) yields the
     same components as the member-level simhash pair list, with a linear
     edge count on a skewed identical-fingerprint cluster."""
-    from tetrex_spark.operators.clusters import connected_components
     from tetrex_spark.operators.dedup import (
         simhash_edges_from_fingerprints,
         simhash_pairs_from_fingerprints,
@@ -136,14 +231,10 @@ def test_simhash_edges_components_equal_pair_components(spark):
     rows.append((7001, 0x7EDCBA9876543210 ^ 0b1))   # small pair
     sh = spark.createDataFrame(rows, "id long, simhash long")
 
-    def comps(pairs):
-        return {
-            r["id"]: r["component"]
-            for r in connected_components(pairs).collect()
-        }
-
-    got = comps(simhash_edges_from_fingerprints(sh, n_blocks=4))
-    want = comps(simhash_pairs_from_fingerprints(sh, n_blocks=4))
+    edges = simhash_edges_from_fingerprints(sh, n_blocks=4)
+    pairs = simhash_pairs_from_fingerprints(sh, n_blocks=4)
+    got = _on_each_path(lambda: _components(edges))
+    want = _on_each_path(lambda: _components(pairs))
     assert got == want
     assert all(want[i] == 0 for i in list(range(400)) + [5000])
     assert want[7001] == 7000 and 6000 not in want
@@ -152,15 +243,12 @@ def test_simhash_edges_components_equal_pair_components(spark):
 
 
 def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
-    """connected_components must survive the Spark 4.1 AQE quirk where a
-    union whose attribute-defining branch is a checkpointed frame makes
-    derived localCheckpoints fail to re-plan (NoSuchElementException):
-    the round loop's re-wrap fallback mints fresh attributes and
-    completes. Constructed here with the checkpointed branch FIRST (the
-    shape minhash_lsh_edges deliberately avoids)."""
-    from pyspark.sql import functions as F
-
-    from tetrex_spark.operators.clusters import connected_components
+    """connected_components on a union whose attribute-defining branch
+    is a checkpointed frame (the opposite branch order to
+    minhash_lsh_edges). Spark 4.1's AQE can fail to re-plan
+    localCheckpoints derived from such unions (NoSuchElementException:
+    key not found <attr>), which the star rounds' re-wrap fallback
+    covers; both paths must find the boilerplate cluster."""
     from tetrex_spark.operators.dedup import _minhash_rep_level
 
     boiler = ("this site uses cookies to improve your experience accept "
@@ -185,8 +273,5 @@ def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
         .select(F.col("rid").alias("id_a"), F.col("id").alias("id_b"))
     )
     poisoned = rep_pairs.select("id_a", "id_b").unionByName(star)
-    comp = {
-        r["id"]: r["component"]
-        for r in connected_components(poisoned).collect()
-    }
+    comp = _on_each_path(lambda: _components(poisoned))
     assert comp and all(comp[i] == 0 for i in range(50))

@@ -1,6 +1,6 @@
-"""Eager-job budgets for the LSH dedup family (round-4 verdict item 2:
-the fixed per-call job count is the toy-scale cost driver — count it,
-budget it, and fail on regression).
+"""Eager-job budgets for the LSH dedup family and its keep-list
+(round-4 verdict item 2: the fixed per-call job count is the toy-scale
+cost driver — count it, budget it, and fail on regression).
 
 Spark jobs are counted per job group via the status tracker. With AQE on
 every materialized exchange is its own job, so the counts are
@@ -67,3 +67,19 @@ def test_simhash_pairs_job_budget(spark, corpus):
     assert "FileScan" not in plan and "Scan parquet" not in plan
     _, n_count = _jobs(spark, "sh-count", lambda: df.count())
     assert n_count <= 13, f"simhash count ran {n_count} jobs"
+
+
+def test_minhash_keep_list_job_budget(spark, corpus):
+    """Edges + connected components + keep-list join, collected. The
+    graph is small, so CC is one signature job on the edge checkpoint
+    plus the one-task in-memory finish; per-round star jobs (5+ a round,
+    40 in all for this call) would blow the budget."""
+    from tetrex_spark.operators.clusters import dedup_keep_list
+    from tetrex_spark.operators.dedup import minhash_lsh_edges
+
+    corpus.count()
+    rows, n_jobs = _jobs(spark, "mh-keep", lambda: dedup_keep_list(
+        corpus.select("doc_id"), minhash_lsh_edges(corpus, threshold=0.8)
+    ).collect())
+    assert len(rows) == 200
+    assert n_jobs <= 26, f"minhash keep-list ran {n_jobs} jobs"

@@ -186,6 +186,18 @@ def cmd_analyze(args) -> int:
     return 0
 
 
+def _keep_totals(spark, path: str) -> tuple[int, int]:
+    """(rows, kept rows) of a written keep-list, in one aggregate over
+    the parquet — the keep frame itself would re-run its join per count."""
+    from pyspark.sql import functions as F
+
+    row = spark.read.parquet(path).agg(
+        F.count(F.lit(1)).alias("total"),
+        F.coalesce(F.sum("keep"), F.lit(0)).alias("kept"),
+    ).collect()[0]
+    return row.total, row.kept
+
+
 def cmd_dedup(args) -> int:
     """Resumable near-dup dedup over a corpus: MinHash-LSH (default) or
     SimHash pairs through the matching checkpointed pipeline (a killed
@@ -223,8 +235,7 @@ def cmd_dedup(args) -> int:
         .select(args.id_col, "component", "keep")
     )
     keep.write.mode("overwrite").parquet(f"{args.output}/keep")
-    kept = keep.filter("keep = 1").count()
-    total = keep.count()
+    total, kept = _keep_totals(spark, f"{args.output}/keep")
     print(f"Deduplicated {total} documents: kept {kept}, "
           f"{stored.count()} near-dup pairs.")
     return 0
@@ -270,8 +281,8 @@ def cmd_embdedup(args) -> int:
         df.select(args.id_col), stored, id_col=args.id_col
     ).withColumnRenamed("id", args.id_col)
     keep.write.mode("overwrite").parquet(f"{args.output}/keep")
-    kept = keep.filter("keep = 1").count()
-    print(f"Deduplicated {keep.count()} vectors: kept {kept}, "
+    total, kept = _keep_totals(spark, f"{args.output}/keep")
+    print(f"Deduplicated {total} vectors: kept {kept}, "
           f"{stored.count()} near-dup pairs.")
     return 0
 

@@ -640,12 +640,11 @@ def minhash_lsh_edges(
     # exactly the shingle-eligible representatives — the former
     # eligibility join against elig_ids is a no-op on this path
     elig_groups = rg.filter(F.col("csize") > 1)
-    # star branch FIRST: with the checkpointed rep_pairs frame as the
-    # union's left (attribute-defining) branch, this Spark's AQE fails to
-    # re-plan derived localCheckpoints downstream (NoSuchElementException:
-    # key not found <attr> — hit by connected_components' round
-    # checkpoints); fresh star-side attributes avoid it, and
-    # connected_components additionally carries a re-wrap fallback.
+    # With either branch order, Spark 4.1's AQE can fail to re-plan the
+    # localCheckpoints that connected_components' star rounds derive from
+    # this union (NoSuchElementException: key not found <attr>); its
+    # round loop re-wraps the edge checkpoint when that happens.
+    # tests/test_clusters.py runs both orders on both of its paths.
     return _star_edges(members, elig_groups).unionByName(
         rep_pairs.select("id_a", "id_b")
     )
