@@ -257,7 +257,7 @@ def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
     rows += [(6000 + j, f"unrelated doc {j} about columnar engines {j}")
              for j in range(7)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    docs, rep_pairs, elig_ids, _rg = _minhash_rep_level(
+    docs, rep_pairs, elig_ids = _minhash_rep_level(
         df, 3, 128, 32, 0.7, "text", "doc_id", 512, with_elig=True,
     )
     members = docs.select("grp", "id")

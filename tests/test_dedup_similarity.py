@@ -446,6 +446,20 @@ def test_capped_pairs_logs_drops_by_default(spark, caplog):
     assert any("cap" in r.getMessage() for r in caplog.records)
 
 
+def test_band_buckets_refuses_mismatched_bands(spark, docs):
+    """band_buckets is the one reader of stored band keys: a sig table
+    built with bands=16 read as bands=32 must fail loudly, not band it
+    wrongly."""
+    from pyspark.errors import PySparkException
+
+    from tetrex_spark.operators.dedup import band_buckets, minhash_sigs_and_sets
+
+    ss = minhash_sigs_and_sets(docs, k=3, num_perm=128, bands=16)
+    assert band_buckets(ss, 16, 8).count() == 16 * ss.count()
+    with pytest.raises(PySparkException, match="16 band keys, expected bands=32"):
+        band_buckets(ss, 32, 4).count()
+
+
 def test_ivf_exhaustive_equals_exact_and_pruned_recall(vectors):
     """IVF with n_probe = n_cells is exactly brute-force top-k; with
     n_probe = 2 of 8 cells, planted tight clusters keep recall high

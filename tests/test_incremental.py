@@ -155,6 +155,26 @@ def test_neardup_gate_verdicts(spark, neardup_index):
     assert 0.8 <= by_inc[(1001, 12)] < 1.0
 
 
+def test_neardup_index_sets_equal_batch_sig_table(spark, tmp_path):
+    """The index is built by the batch construction: its stored sets are
+    the (id, s) rows of the in-session rep-level sig table."""
+    from tetrex_spark.operators.dedup import _minhash_rep_level
+    from tetrex_spark.operators.incremental import build_neardup_index
+
+    ref = _corpus(spark, [NEARDUP_REF[0]] * 3 + NEARDUP_REF[1:10] + ["tiny doc"])
+    d = str(tmp_path / "nd_sets")
+    build_neardup_index(ref, d, n_shards=4)
+    _, _, ss = _minhash_rep_level(
+        ref, 3, 128, 32, 0.8, "text", "doc_id", 512, with_elig=False,
+    )
+
+    def rows(df):
+        return sorted((r["id"], tuple(r["s"])) for r in df.select("id", "s").collect())
+
+    got = rows(spark.read.parquet(f"{d}/sets"))
+    assert got == rows(ss) and len(got) == 10
+
+
 def test_neardup_precollapse(spark, tmp_path):
     """10k exact copies of one text collapse to ONE representative
     before signing (no bucket blowup), and a copy still gates as dup."""

@@ -41,8 +41,8 @@ def test_minhash_lsh_pairs_job_budget(spark, corpus):
     df, n_construct = _jobs(
         spark, "mh-construct", lambda: minhash_lsh_pairs(corpus, threshold=0.8)
     )
-    # r5 plan: ONE kernel checkpoint + ONE fused rep_pairs/elig/members
-    # checkpoint + the cap-stats finisher ( + AQE stage jobs inside each)
+    # ONE kernel checkpoint + ONE fused rep_pairs/members checkpoint +
+    # the cap-stats finisher ( + AQE stage jobs inside each)
     assert n_construct <= 18, f"minhash construction ran {n_construct} jobs"
     # the member-level expansion must be cache-only: no text re-scan
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -83,3 +83,19 @@ def test_minhash_keep_list_job_budget(spark, corpus):
     ).collect())
     assert len(rows) == 200
     assert n_jobs <= 26, f"minhash keep-list ran {n_jobs} jobs"
+
+
+def test_checkpointed_dedup_job_budget(spark, corpus, tmp_path):
+    """The CLI dedup pipeline end to end in one chunk: the sigset stage,
+    the pairs stage and the member expansion counted. The expansion
+    reads eligibility and rep groups from the stored sig table, so it
+    adds no rep-group aggregate or rep-id -> group joins."""
+    from tetrex_spark.lineage import CheckpointedDedup
+
+    corpus.count()
+    n, n_jobs = _jobs(spark, "ckpt-dedup", lambda: CheckpointedDedup(
+        str(tmp_path / "ck"), threshold=0.8, n_chunks=1
+    ).run(corpus).count())
+    assert n > 0
+    # 33 jobs when written, plus the slack the budgets above allow
+    assert n_jobs <= 36, f"checkpointed dedup ran {n_jobs} jobs"

@@ -132,16 +132,58 @@ def test_checkpointed_dedup_kill_after_banding_resumes_identical(
 
 
 def test_checkpointed_dedup_rep_level_output(spark, dedup_docs, tmp_path):
-    from tetrex_spark.lineage import CheckpointedDedup
-    from tetrex_spark.operators.dedup import minhash_lsh_pairs
+    from tetrex_spark.lineage import CheckpointedDedup, CheckpointedSimhashDedup
+    from tetrex_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        simhash,
+        simhash_pairs_from_fingerprints,
+    )
 
     d = str(tmp_path / "dedup_ckpt_rep")
     cd = CheckpointedDedup(d, threshold=0.7, n_chunks=4)
-    got = _pairs_set(cd.run(dedup_docs, expand_exact_dups=False))
-    want = _pairs_set(
-        minhash_lsh_pairs(dedup_docs, k=3, threshold=0.7, expand_exact_dups=False)
+    got_df = cd.run(dedup_docs, expand_exact_dups=False)
+    want_df = minhash_lsh_pairs(
+        dedup_docs, k=3, threshold=0.7, expand_exact_dups=False
     )
+    # rep-level public outputs carry exactly the documented columns
+    assert got_df.columns == want_df.columns == ["id_a", "id_b", "jaccard"]
+    got, want = _pairs_set(got_df), _pairs_set(want_df)
     assert got == want and got
+    # ... and so do the SimHash family's
+    sh = CheckpointedSimhashDedup(str(tmp_path / "sh_rep"), n_blocks=4, n_chunks=2)
+    assert sh.run(dedup_docs, expand_exact_dups=False).columns == [
+        "id_a", "id_b", "hamming"
+    ] == simhash_pairs_from_fingerprints(
+        simhash(dedup_docs), n_blocks=4, expand_exact_dups=False
+    ).columns
+
+
+def test_checkpointed_dedup_sigsets_equal_in_session_table(
+    spark, dedup_docs, tmp_path
+):
+    """One sig-table schema: the stored sigset chunks hold exactly the
+    rows (id, s, bhs, grp, csize) the in-session construction
+    checkpoints, and the stored rep pairs carry (grp_a, grp_b)."""
+    from tetrex_spark.lineage import CheckpointedDedup
+    from tetrex_spark.operators.dedup import _minhash_rep_level
+
+    cd = CheckpointedDedup(str(tmp_path / "sig_schema"), threshold=0.7, n_chunks=4)
+    cd.run(dedup_docs, stop_after="pairs")
+    cols = ["id", "s", "bhs", "grp", "csize"]
+    stored = spark.read.parquet(*cd._chunk_paths("sigsets"))
+    _, _, ss = _minhash_rep_level(
+        dedup_docs, 3, 128, 32, 0.7, "text", "doc_id", 512, with_elig=False,
+    )
+    assert stored.columns == ss.columns == cols
+
+    def rows(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                      for r in df.select(*cols).collect())
+
+    assert rows(stored) == rows(ss)
+    assert spark.read.parquet(cd._apath("rep_pairs")).columns == [
+        "id_a", "id_b", "jaccard", "grp_a", "grp_b"
+    ]
 
 
 def test_checkpointed_dedup_refuses_param_mismatch(spark, dedup_docs, tmp_path):
@@ -301,6 +343,14 @@ def test_checkpoint_layout_guard(spark, tmp_path):
         f.write(json.dumps(legacy, sort_keys=True))
     with pytest.raises(ValueError, match="layout"):
         CheckpointedDedup(d, n_chunks=4)
+    # layout 2 stored sigset chunks with a raw signature and rep pairs
+    # without group keys: refused as well
+    d_v2 = str(tmp_path / "layout2")
+    os.makedirs(d_v2)
+    with open(f"{d_v2}/params_dedup-0.json", "w") as f:
+        f.write(json.dumps({**legacy, "_layout": 2}, sort_keys=True))
+    with pytest.raises(ValueError, match="layout 2"):
+        CheckpointedDedup(d_v2, n_chunks=4)
     # a checkpoint created by THIS version reopens cleanly
     d2 = str(tmp_path / "fresh")
     CheckpointedDedup(d2, n_chunks=4)

@@ -162,14 +162,14 @@ class _StagedCheckpoint:
     incomplete results."""
 
     # Artifact-layout version, recorded in every params_<build_id>.json:
-    # 2 = build_id-namespaced artifact paths (sigsets_<id>/ etc.); the
-    # unversioned layer-1 layout (bare sigsets/, rep_pairs/) predates the
-    # marker entirely. A checkpoint written under a different layout must
-    # refuse at open time with a clear message — its params fingerprint
-    # would otherwise still match and resume would skip the committed
-    # stages, then die with an opaque parquet path-not-found on the old
-    # artifact paths.
-    LAYOUT_VERSION = 2
+    # 3 = build_id-namespaced artifact paths (sigsets_<id>/ etc.), MinHash
+    # sigset chunks in the minhash_sigs_and_sets schema (id, s, bhs, grp,
+    # csize) and rep-pair chunks carrying (grp_a, grp_b). A params file
+    # without the marker is layout 1. A checkpoint written under a
+    # different layout must refuse at open time with a clear message —
+    # its params fingerprint would otherwise still match and resume would
+    # skip the committed stages, then read chunks of the wrong schema.
+    LAYOUT_VERSION = 3
 
     def __init__(
         self, checkpoint_dir: str, *, params: dict, build_id: str,
@@ -289,25 +289,30 @@ class _StagedCheckpoint:
 
 class CheckpointedDedup(_StagedCheckpoint):
     """Resumable MinHash-LSH near-dup pipeline (the dedup counterpart of
-    CheckpointedBuild — round-2 review asked for exactly this).
+    CheckpointedBuild). It builds the same rep-level tables as the
+    in-session minhash_lsh_pairs — dup_groups, then
+    minhash_sigs_and_sets, then verify_rep_pairs — and differs only in
+    materializing them as stored parquet stages instead of
+    localCheckpoints.
 
     Stage model, each committed to the JSONL lineage log:
 
-      sigsets:<i>  the rep-level fused signature+set table, in
+      sigsets:<i>  the rep-level sig table (id, s, bhs, grp, csize), in
                    `n_chunks` deterministic chunks of the rep id space
                    (pmod(xxhash64(id), n_chunks) — stable across runs
                    and parallelism), each written atomically to
                    `<dir>/sigsets_<build_id>/chunk=<i>/`.
-      pairs        verified rep-level near-dup pairs computed FROM THE
-                   STORED sigset chunks (banding + cap + exact-Jaccard
-                   verify), written to `<dir>/rep_pairs_<build_id>/`.
+      pairs        verified rep-level pairs (id_a, id_b, jaccard, grp_a,
+                   grp_b) computed FROM THE STORED sigset chunks
+                   (banding + cap + exact-Jaccard verify), written to
+                   `<dir>/rep_pairs_<build_id>/`.
 
     A killed job resumes at the first uncommitted stage; the expanded
     member-level pair list (and any clustering on top — the CC rounds
     are a deterministic function of the stored pairs) is recomputed
-    lazily from (docs, stored rep_pairs), so a resumed run is
-    byte-identical to a single-shot one — tested by killing after the
-    banding/sigset stage. `stop_after` ("sigsets:<i>" | "pairs")
+    lazily from (docs, stored rep_pairs, stored sigsets), so a resumed
+    run is byte-identical to a single-shot one — tested by killing after
+    the banding/sigset stage. `stop_after` ("sigsets:<i>" | "pairs")
     simulates the kill in tests."""
 
     def __init__(
@@ -322,8 +327,6 @@ class CheckpointedDedup(_StagedCheckpoint):
         n_chunks: int = 8,
         build_id: str = "dedup-0",
     ):
-        if num_perm % bands:
-            raise ValueError("bands must divide num_perm")
         self.k, self.num_perm, self.bands = k, num_perm, bands
         self.threshold, self.max_bucket = threshold, max_bucket
         self.n_chunks = n_chunks
@@ -351,8 +354,9 @@ class CheckpointedDedup(_StagedCheckpoint):
         expand_exact_dups: bool = True,
     ) -> DataFrame | None:
         """Build (or resume) the pipeline; returns the member-level pair
-        DataFrame (rep-level with expand_exact_dups=False), or None when
-        `stop_after` simulated a kill."""
+        DataFrame (id_a, id_b, jaccard) — rep-level with
+        expand_exact_dups=False — or None when `stop_after` simulated a
+        kill."""
         from .operators.dedup import (
             dup_groups,
             expand_rep_pairs,
@@ -368,6 +372,7 @@ class CheckpointedDedup(_StagedCheckpoint):
             lambda chunk: minhash_sigs_and_sets(
                 self._chunk_filter(reps, "id", chunk),
                 self.k, self.num_perm, "txt", "id",
+                passthrough=("grp", "csize"), bands=self.bands,
             ),
             done, stop_after,
         ):
@@ -392,14 +397,12 @@ class CheckpointedDedup(_StagedCheckpoint):
             return None
         rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
         if not expand_exact_dups:
-            return rep_pairs
-        # eligibility comes straight from the STORED sigset chunks (the
-        # rows there are exactly the shingle-eligible reps) — no text
-        # re-derivation on resume; the (grp, id) membership frame is
-        # checkpointed once (~40 B/doc) so the expansion's branches read
-        # a cache instead of re-scanning the raw text per branch
+            return rep_pairs.select("id_a", "id_b", "jaccard")
+        # the (grp, id) membership frame is checkpointed once (~40 B/doc)
+        # so the expansion's branches read a cache instead of re-scanning
+        # the raw text per branch
         members = docs.select("grp", "id").localCheckpoint(eager=True)
-        return expand_rep_pairs(members, rep_pairs, ss.select("id"))
+        return expand_rep_pairs(members, rep_pairs, ss)
 
 
 class CheckpointedSimhashDedup(_StagedCheckpoint):
@@ -411,9 +414,10 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
       fps:<i>  (id, simhash) fingerprints for the i-th deterministic
                chunk of the id space (pmod(xxhash64(id), n_chunks)),
                written atomically to `<dir>/fps_<build_id>/chunk=<i>/`.
-      pairs    rep-level pairs computed FROM THE STORED fingerprint
-               chunks (identical-simhash collapse + pigeonhole blocking
-               + bit_count verify), written to
+      pairs    rep-level pairs (id_a, id_b, hamming, grp_a, grp_b)
+               computed FROM THE STORED fingerprint chunks
+               (identical-simhash collapse + pigeonhole blocking +
+               bit_count verify), written to
                `<dir>/rep_pairs_<build_id>/`.
 
     The member-level expansion is recomputed lazily from (stored fps,
@@ -461,9 +465,9 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
         expand_exact_dups: bool = True,
     ) -> DataFrame | None:
         from .operators.dedup import (
+            _simhash_rep_level,
             expand_simhash_rep_pairs,
             simhash,
-            simhash_pairs_from_fingerprints,
         )
 
         spark = df.sparkSession
@@ -479,10 +483,11 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
         sh = spark.read.parquet(*self._chunk_paths("fps"))
 
         def make_pairs():
-            return simhash_pairs_from_fingerprints(
-                sh.persist(), self.max_hamming, n_blocks=self.n_blocks,
-                max_bucket=self.max_bucket, expand_exact_dups=False,
-            )
+            # stored pairs keep (grp_a, grp_b) for the expansion below
+            return _simhash_rep_level(
+                sh.persist(), self.max_hamming, self.n_blocks,
+                self.max_bucket, with_groups=False,
+            )[1]
 
         killed = self._run_write_stage(
             spark, "pairs", "rep_pairs", make_pairs,
@@ -493,7 +498,7 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
             return None
         rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
         if not expand_exact_dups:
-            return rep_pairs
+            return rep_pairs.select("id_a", "id_b", "hamming")
         return expand_simhash_rep_pairs(sh, rep_pairs)
 
 

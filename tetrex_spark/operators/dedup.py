@@ -183,27 +183,31 @@ _SIGSET_SCHEMA = T.StructType(
 def minhash_sigs_and_sets(
     df: DataFrame, k: int = 3, num_perm: int = 128,
     text_col: str = "text", id_col: str = "doc_id",
-    passthrough: tuple[str, ...] = (),
+    passthrough: tuple[str, ...] = (), *, bands: int = 32,
 ) -> DataFrame:
-    """(id, sig, s): MinHash signature AND sorted distinct shingle-hash set
-    from ONE tokenize+hash pass (the LSH blocking and its exact verify used
-    to be two full corpus scans; `_BatchDerived`-style fusion halves the
-    scan cost). Docs with fewer than k tokens emit no row.
+    """(id, s, bhs, *passthrough): the rep-level MinHash sig table every
+    near-dup caller builds (batch pairs/edges, CheckpointedDedup, the
+    near-dup index and its gate). One tokenize+hash pass per doc gives
+    both the sorted distinct shingle-hash set `s` (the exact verify's
+    input) and the `bands` band-bucket keys `bhs` (element b = xxhash64
+    of signature slice b, r = num_perm / bands rows each; band_buckets
+    is their one reader). The num_perm-long signature is not emitted.
+    Docs with fewer than k tokens emit no row, so the table's rows are
+    exactly the shingle-eligible docs.
 
     Each doc's row is computed where the doc lives — the shingle stream
-    never shuffles (an earlier 64-column groupBy-min formulation also paid
-    seconds of Janino codegen for the 64-aggregate plan). Each permutation
-    is an independent splitmix64 re-mix of the kernel shingle hash:
-    g_i(x) = splitmix64(x ^ seed_i). (A cheaper h1 + i*h2 double-hash is
-    NOT sound here: minima across i track the lower envelope of lines, so
-    the permutations are strongly correlated and band-match counts get fat
-    tails — observed as whole near-dup pairs missed at jaccard 0.71.)
+    never shuffles. Each permutation is an independent splitmix64
+    re-mix of the kernel shingle hash: g_i(x) = splitmix64(x ^ seed_i).
+    (A cheaper h1 + i*h2 double-hash is NOT sound here: minima across i
+    track the lower envelope of lines, so the permutations are strongly
+    correlated and band-match counts get fat tails.)
 
     `passthrough` names extra input columns copied verbatim onto each
-    output row: a caller whose downstream plan needs per-rep metadata
-    (the rep-group key and member count) reads it from the ONE
-    materialized kernel table instead of re-scanning/re-aggregating the
-    corpus in a separate plan branch."""
+    output row (the rep-group key and member count), so downstream
+    plans read per-rep metadata from the one materialized table."""
+    if num_perm % bands:
+        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
+    r = num_perm // bands
     from ..functions.text import normalize_series, token_shingle_hashes_series
     from ..kernel.hashing import splitmix64
 
@@ -260,48 +264,63 @@ def minhash_sigs_and_sets(
             yield pd.DataFrame(out)
 
     schema = T.StructType(
-        list(_SIGSET_SCHEMA)
-        + [df.schema[c] for c in passthrough]
+        list(_SIGSET_SCHEMA) + [df.schema[c] for c in passthrough]
     )
-    cols = [id_col, text_col, *passthrough]
-    return _spread(df.select(*cols)).mapInPandas(fn, schema)
-
-
-def band_hashes_col(bands: int, r: int, sig_col: str = "sig"):
-    """array<long> of the `bands` band-bucket keys of a signature column
-    — element b = xxhash64 of the band's signature slice. Precomputing
-    this ONCE into a materialized sig table replaces the 128-long
-    signature with `bands` longs (4x smaller checkpoint rows) and every
-    downstream band_buckets read explodes stored values instead of
-    re-hashing slices per consumer."""
-    return F.array(
-        *[F.xxhash64(F.slice(sig_col, b * r + 1, r)) for b in range(bands)]
+    bhs = F.array(
+        *[F.xxhash64(F.slice("sig", b * r + 1, r)) for b in range(bands)]
+    )
+    return (
+        _spread(df.select(id_col, text_col, *passthrough))
+        .mapInPandas(fn, schema)
+        .select("id", "s", bhs.alias("bhs"), *passthrough)
     )
 
 
 def band_buckets(sig_df: DataFrame, bands: int, r: int) -> DataFrame:
-    """(id, band, bh) rows from a signature table — one row per (doc, band),
-    bucket key = xxhash64 of the band's signature slice (JVM-side). A
-    table carrying a precomputed `bhs` column (see band_hashes_col) is
-    exploded directly — same values, no per-read hashing."""
-    if "bhs" in sig_df.columns:
-        return sig_df.select("id", F.posexplode("bhs").alias("band", "bh"))
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(F.slice("sig", b * r + 1, r)).alias("bh"),
-        )
-        for b in range(bands)
-    ]
-    return sig_df.select(
-        "id", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("id", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    """(id, band, bh) rows from a minhash_sigs_and_sets table — one row
+    per (doc, band), exploded from the stored `bhs` keys. This is the one
+    reader of band keys, so it checks them in-plan: a row carrying other
+    than `bands` keys (a table built or stored with different banding)
+    fails the consuming job with an error naming both counts, instead of
+    yielding wrong band indices. `r` (rows per band) is reported in that
+    error only — the keys were hashed when the table was built."""
+    bhs = F.when(F.size("bhs") == bands, F.col("bhs")).otherwise(
+        F.raise_error(F.format_string(
+            f"band_buckets: sig table row has %d band keys, expected "
+            f"bands={bands} (r={r}); rebuild the table with matching bands",
+            F.size("bhs"),
+        ))
+    )
+    return sig_df.select("id", F.posexplode(bhs).alias("band", "bh"))
+
+
+def cap_buckets(
+    buckets: DataFrame, max_bucket: int
+) -> tuple[DataFrame, DataFrame]:
+    """The LSH over-cap rule: (buckets minus every (band, bh) bucket with
+    more than `max_bucket` members, over), where `over` is the persisted
+    (band, bh, bc) list of dropped buckets. The list stays a distributed
+    DataFrame end to end and the anti-join against it is unconditional
+    (against an empty list it is a no-op), hinted — not forced —
+    broadcast, so no eager job runs before the caller's plan exists.
+    The caller reads its drop statistics from `over` after materializing
+    and then unpersists it."""
+    over = (
+        buckets.groupBy("band", "bh")
+        .agg(F.count(F.lit(1)).alias("bc"))
+        .filter(F.col("bc") > max_bucket)
+        .persist()
+    )
+    kept = buckets.join(
+        over.select("band", "bh").hint("broadcast"), ["band", "bh"], "left_anti"
+    )
+    return kept, over
 
 
 def capped_candidate_pairs(
     buckets: DataFrame, max_bucket: int | None, *, log_drops: bool = True,
     release: list | None = None, payload_col: str | None = None,
-    distinct: bool = True, persist_buckets: bool = True,
+    distinct: bool = True,
 ) -> DataFrame:
     """Distinct (id_a < id_b) candidate pairs from a (id, band, bh) bucket
     table, skipping buckets with more than `max_bucket` members.
@@ -327,72 +346,33 @@ def capped_candidate_pairs(
     The cap bounds the self-join at B buckets x max_bucket^2 pairs instead
     of the unbounded sum of bucket-size squares (one pathological bucket of
     10^6 members is 5*10^11 pairs). Over-cap buckets are *whole-bucket*
-    drops — a pair can still surface via its other bands — and are NEVER
-    silent: with a cap active, the over-cap bucket list is computed as a
-    size aggregate over the persisted bucket table and stays a
-    DISTRIBUTED, persisted DataFrame end to end — the anti-join against
-    it is part of the candidate plan (hinted, not forced, broadcast;
-    tiny by construction, <= n*bands/max_bucket rows), and the warn-log
-    scalars (count / member rows / largest) are read from its cache in a
+    drops (see cap_buckets) — a pair can still surface via its other
+    bands — and are NEVER silent: the warn-log scalars (count / member
+    rows / largest) are read from the persisted over-cap list in a
     release finisher AFTER the caller materializes the pairs, so no
-    eager job precedes the plan and nothing bucket-shaped ever reaches
-    the driver. (An in-plan DataFrame.observe variant was tried first —
-    zero extra jobs — but observed metrics do not propagate when the
-    subtree executes inside the verify's BroadcastExchange, so the drops
-    would go unreported on exactly the main path; and an earlier
-    collect-and-reship-literal variant was a driver-memory hazard on
-    pathological corpora.) With exact-dup pre-collapse
-    upstream (see minhash_lsh_pairs) an over-cap bucket requires
-    > max_bucket *distinct* texts colliding in one band — a genuine giant
-    near-dup cluster, which the cap converts from a quadratic join into a
+    eager job precedes the plan and nothing bucket-shaped is ever
+    collected. (In-plan DataFrame.observe is not used: observed metrics
+    do not propagate when the subtree executes inside the verify's
+    BroadcastExchange.) With exact-dup pre-collapse upstream (see
+    minhash_lsh_pairs) an over-cap bucket requires > max_bucket
+    *distinct* texts colliding in one band — a genuine giant near-dup
+    cluster, which the cap converts from a quadratic join into a
     bounded one.
 
-    Cache-release contract: the bucket table is persisted for its plan
-    branches; the unpersist finisher runs either through the caller's
-    `release` list (callables invoked right after the caller materializes
-    its result) or, with release=None, here after an eager
+    Cache-release contract: with a cap active the bucket table is
+    persisted for its plan branches (unless the caller already cached
+    it); the unpersist finishers run either through the caller's
+    `release` list (callables invoked right after the caller
+    materializes its result) or, with release=None, here after an eager
     localCheckpoint of the (bounded) candidate list."""
-    capped = max_bucket is not None
     finishers: list = []
-    if capped:
+    if max_bucket is not None:
         import logging
 
-        # persist_buckets=False: the caller's bucket table derives from
-        # an already-materialized checkpoint by cheap JVM expressions
-        # (explode + xxhash) — its plan branches (over-cap aggregate,
-        # both self-join sides) re-derive it from cache faster than a
-        # second cache tier's write+read, and ReuseExchange dedups the
-        # self-join sides anyway. Keep the default for Python-derived
-        # buckets (signature passes), where recomputation is a real
-        # kernel re-run.
-        if persist_buckets and not (
-            buckets.storageLevel.useMemory or buckets.storageLevel.useDisk
-        ):
+        if not (buckets.storageLevel.useMemory or buckets.storageLevel.useDisk):
             buckets = buckets.persist()
             finishers.append(buckets.unpersist)
-        # The over-cap bucket list stays a DISTRIBUTED DataFrame end to end
-        # (an earlier revision collected it to the driver to warn-log and
-        # re-ship as a literal — O(n*bands/max_bucket) rows, a driver-memory
-        # hazard on a pathological corpus at 1e10+ reps). The anti-join is
-        # UNCONDITIONAL — with no over-cap buckets it is an anti-join
-        # against an empty broadcast, a no-op — so no eager aggregate job
-        # has to run before the candidate plan exists; the warn-log scalars
-        # are read from the cached over-cap frame in a finisher AFTER the
-        # caller materializes the pair plan (which is what populates the
-        # cache), costing one tiny cached-aggregate job instead of a full
-        # upstream execution. Hinted, not forced, broadcast: Spark may fall
-        # back to a shuffled anti-join if the over list is ever large.
-        over = (
-            buckets.groupBy("band", "bh")
-            .agg(F.count(F.lit(1)).alias("bc"))
-            .filter(F.col("bc") > max_bucket)
-            .persist()
-        )
-        buckets = buckets.join(
-            over.select("band", "bh").hint("broadcast"),
-            ["band", "bh"],
-            "left_anti",
-        )
+        buckets, over = cap_buckets(buckets, max_bucket)
 
         def _log_and_release(_over=over, _cap=max_bucket, _log=log_drops):
             if _log:
@@ -475,7 +455,8 @@ def minhash_lsh_pairs(
     threshold: float = 0.8, text_col: str = "text", id_col: str = "doc_id",
     max_bucket: int | None = 512, expand_exact_dups: bool = True,
 ) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash LSH + exact-Jaccard verify.
+    """Near-duplicate pairs (id_a, id_b, jaccard) via banded MinHash LSH
+    + exact-Jaccard verify.
 
     bands x rows = num_perm; a pair collides in some band w.p.
     1-(1-j^r)^b — at the default (32x4) recall is ~0.99985 for j>=0.7
@@ -487,12 +468,13 @@ def minhash_lsh_pairs(
     exact-duplicate clusters of ~10^6 copies, which would put c copies in
     the SAME bucket of EVERY band (O(c^2) candidates x bands). So:
 
-      1. exact-dup pre-collapse: group by md5(normalized text) — partial
-         aggregation collapses copies map-side, so the shuffle carries one
-         row per distinct text; LSH runs on group representatives only.
-      2. ONE fused mapInPandas pass computes signature + shingle set per
-         representative (persisted: blocking and verify both read it
-         without recomputing the tokenize/hash kernel).
+      1. exact-dup pre-collapse (dup_groups): group by md5(normalized
+         text) — partial aggregation collapses copies map-side, so the
+         shuffle carries one row per distinct text; LSH runs on group
+         representatives only.
+      2. ONE kernel pass (minhash_sigs_and_sets) builds the checkpointed
+         rep-level sig table (id, s, bhs, grp, csize); blocking, verify
+         and the expansion all read it.
       3. band buckets are size-capped (see capped_candidate_pairs).
       4. verified representative pairs (tiny, broadcast) are expanded back
          to member pairs: cross-group pairs inherit the representatives'
@@ -504,112 +486,77 @@ def minhash_lsh_pairs(
 
     md5 collision risk for the pre-collapse is ~n^2/2^128 — far below the
     shingle-hash collision tolerance minhash itself assumes."""
-    members, rep_pairs, elig_ids, rg = _minhash_rep_level(
+    members, rep_pairs, ss = _minhash_rep_level(
         df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
         with_elig=expand_exact_dups,
     )
     if not expand_exact_dups:
-        return rep_pairs
-    # 5. expand representative pairs to member pairs (cache-only plan —
-    # members and the rep-group aggregate are checkpointed; see
-    # expand_rep_pairs)
-    return expand_rep_pairs(members, rep_pairs, elig_ids, rg=rg)
+        return rep_pairs.select("id_a", "id_b", "jaccard")
+    return expand_rep_pairs(members, rep_pairs, ss)
 
 
 def _minhash_rep_level(
     df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
     *, with_elig: bool,
 ):
-    """Steps 1-4 of minhash_lsh_pairs (pre-collapse, fused sig+set pass,
-    capped blocking, exact verify), shared with minhash_lsh_edges.
-    Returns (members, checkpointed rep_pairs, elig_ids, rg), where
-    `members` is a CHECKPOINTED (grp, id) frame and `rg` /`elig_ids`
-    are projections of the kernel checkpoint when with_elig (else the
-    lazy docs derivation and None): the rep-group key and member count
-    ride the sig pass as passthrough columns, so eligibility and the
-    (grp, rid, csize) aggregate cost zero extra scans or exchanges —
-    the r4 revision re-derived (grp, id) from the raw text in every
-    expansion branch (~4 parquet+md5 scans per consuming action), and
-    r5 still paid one corpus re-scan + one (grp, id) aggregate exchange
-    as extra union branches of the fused checkpoint. The whole
-    member-level expansion remains a cache-only plan.
+    """Steps 1-4 of minhash_lsh_pairs, shared with minhash_lsh_edges.
+    Returns (members, rep_pairs, ss):
 
-    EXACTLY TWO eager jobs run here (plus one tiny cached-aggregate read
-    in the cap-stats finisher — asserted by tests/test_clusters.py's job
-    budget): the kernel pass is its own localCheckpoint (it runs ONCE by
-    construction — the r4 shape relied on a persist populated inside the
-    verify's broadcast subtree, which left the kernel exposed to
-    concurrent-stage double-compute the moment another union branch read
-    it), and one fused checkpoint materializes rep_pairs + elig_ids +
-    members from it in a single action. The sig/set checkpoint storage
-    is released by GC when this frame goes out of scope at return."""
-    if num_perm % bands:
-        raise ValueError("bands must divide num_perm")
-    r = num_perm // bands
-    # 1. exact-dup pre-collapse (map-side combine does the heavy lifting)
+      ss         the localCheckpointed sig table (id, s, bhs, grp,
+                 csize) — one row per shingle-eligible representative,
+                 so the expansion reads eligibility and (grp, rid, csize)
+                 from it with no scan or exchange;
+      rep_pairs  checkpointed (id_a, id_b, jaccard, grp_a, grp_b);
+      members    the checkpointed (grp, id) table of every doc when
+                 with_elig (the expansion needs it), else None.
+
+    Eager jobs: the kernel checkpoint, then ONE checkpoint of rep_pairs
+    (fused with members when with_elig), plus the cap-stats finisher —
+    the job budget in tests/test_job_budget.py holds this. The kernel
+    runs exactly once: every branch reads its checkpoint.
+
+    Storage: `ss` stays pinned for as long as the returned `ss` or any
+    frame derived from it (the expansion's eligibility and rep-group
+    reads) is alive; it is released by GC together with them."""
     docs, reps = dup_groups(df, text_col, id_col)
-    # 2. one fused kernel pass, checkpointed — every downstream branch
-    # (buckets, both verify sides, eligibility) reads the materialized
-    # table; the tokenize/hash kernel cannot run twice
-    # the checkpoint stores the `bands` band-bucket keys instead of the
-    # num_perm-long signature (4x smaller rows — the signature has no
-    # other consumer on this path) and every blocking read explodes
-    # stored values instead of re-hashing slices per consumer
-    ss = (
-        minhash_sigs_and_sets(
-            reps, k, num_perm, "txt", "id", passthrough=("grp", "csize")
-        )
-        .select("id", "s", "grp", "csize", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )
-    # 3+4. capped blocking + exact verify on candidates only
+    ss = minhash_sigs_and_sets(
+        reps, k, num_perm, "txt", "id", passthrough=("grp", "csize"),
+        bands=bands,
+    ).localCheckpoint(eager=True)
     handles: list = []
     rp = verify_rep_pairs(
-        ss, bands=bands, r=r, threshold=threshold, max_bucket=max_bucket,
-        release=handles,
+        ss, bands=bands, r=num_perm // bands, threshold=threshold,
+        max_bucket=max_bucket, release=handles,
     )
     if with_elig:
         nulls = [
             F.lit(None).cast("long").alias("id_b"),
             F.lit(None).cast("double").alias("jaccard"),
+            F.lit(None).cast("string").alias("grp_a"),
+            F.lit(None).cast("string").alias("grp_b"),
         ]
         mem = docs.select("grp", "id")
-        # eligibility and the rep-group aggregate are PROJECTIONS of the
-        # kernel checkpoint now (grp/csize ride the sig pass): the r5
-        # fused checkpoint carried them as two extra union branches, one
-        # of which re-scanned the corpus and re-aggregated (grp, id) —
-        # a full extra scan + exchange inside the construction action.
-        # Only the verified pairs and the per-doc membership still need
-        # materializing; note ss's checkpoint storage now stays alive as
-        # long as the returned elig/rg frames do (released together).
         combined = (
             rp.select(F.lit(0).alias("part"),
                       F.lit(None).cast("string").alias("grp"),
                       "id_a", "id_b", "jaccard", "grp_a", "grp_b")
             .unionByName(
                 mem.select(F.lit(2).alias("part"), "grp",
-                           F.col("id").alias("id_a"), *nulls,
-                           F.lit(None).cast("string").alias("grp_a"),
-                           F.lit(None).cast("string").alias("grp_b")))
-            .transform(lambda u: _compact(u, sizer=docs.select("grp", "id")))
+                           F.col("id").alias("id_a"), *nulls))
+            .transform(lambda u: _compact(u, sizer=mem))
             .localCheckpoint(eager=True)
         )
         rep_pairs = combined.filter("part = 0").select(
             "id_a", "id_b", "jaccard", "grp_a", "grp_b"
         )
-        elig_ids = ss.select("id")
         members = combined.filter("part = 2").select(
             "grp", F.col("id_a").alias("id")
         )
-        rg = ss.select(
-            "grp", F.col("id").alias("rid"), F.col("csize").alias("csize")
-        )
     else:
-        rep_pairs = rp.localCheckpoint(eager=True)
-        elig_ids, members, rg = None, docs, None
+        rep_pairs, members = rp.localCheckpoint(eager=True), None
     for fin in handles:
         fin()
-    return members, rep_pairs, elig_ids, rg
+    return members, rep_pairs, ss
 
 
 def minhash_lsh_edges(
@@ -631,15 +578,13 @@ def minhash_lsh_edges(
     clusters.connected_components / dedup_keep_list; keep
     minhash_lsh_pairs for consumers that need the actual pair list with
     jaccard values."""
-    members, rep_pairs, elig_ids, rg = _minhash_rep_level(
+    members, rep_pairs, ss = _minhash_rep_level(
         df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
         with_elig=True,
     )
-    members = members.select("grp", "id")
-    # rg is a projection of the kernel checkpoint, whose rows are
-    # exactly the shingle-eligible representatives — the former
-    # eligibility join against elig_ids is a no-op on this path
-    elig_groups = rg.filter(F.col("csize") > 1)
+    elig_groups = ss.filter(F.col("csize") > 1).select(
+        "grp", F.col("id").alias("rid")
+    )
     # With either branch order, Spark 4.1's AQE can fail to re-plan the
     # localCheckpoints that connected_components' star rounds derive from
     # this union (NoSuchElementException: key not found <attr>); its
@@ -653,11 +598,12 @@ def minhash_lsh_edges(
 def dup_groups(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """(docs, reps): exact-dup pre-collapse by md5(normalized text).
-    docs = (id, txt, grp); reps = one representative row per distinct
-    text (min id, the text, the member count). Deterministic — the same
-    derivation at any parallelism, which is what lets the checkpointed
-    dedup pipeline (lineage.CheckpointedDedup) recompute it on resume."""
+    """(docs, reps): exact-dup pre-collapse by md5(normalized text), the
+    one pre-collapse every MinHash caller uses. docs = (id, txt, grp);
+    reps = one representative row per distinct text (grp, min id, the
+    text, the member count csize). Deterministic — the same derivation
+    at any parallelism, which is what lets the checkpointed dedup
+    pipeline (lineage.CheckpointedDedup) recompute it on resume."""
     docs = df.select(
         F.col(id_col).alias("id"),
         F.col(text_col).alias("txt"),
@@ -675,53 +621,32 @@ def verify_rep_pairs(
     ss: DataFrame, *, bands: int, r: int, threshold: float,
     max_bucket: int | None, release: list | None = None,
 ) -> DataFrame:
-    """Rep-level near-dup pairs from a sig/set table: banded blocking
-    (size-capped) then exact-Jaccard verify on candidates only — the
-    reference's filter-then-verify (query.h:265-281) transplanted to
-    similarity. The (tiny) candidate-pair side is broadcast into two
-    map-side joins; jaccard is array_intersect arithmetic on the sets.
-    `release` forwards to capped_candidate_pairs (cache-release
-    contract)."""
-    # persist stays ON for the bucket table (default): even though ss
-    # is checkpointed, the over-cap branch and both self-join sides
-    # otherwise re-derive the explode+xxhash tree per consumer — A/B at
-    # 50k docs measured ~1 s slower end-to-end without the cache
+    """(id_a, id_b, jaccard, grp_a, grp_b) rep-level near-dup pairs from
+    a sig table carrying `grp` (minhash_sigs_and_sets with the grp
+    passthrough): banded blocking (size-capped) then exact-Jaccard
+    verify on candidates only — the reference's filter-then-verify
+    (query.h:265-281) transplanted to similarity. The (tiny)
+    candidate-pair side is broadcast into two map-side joins; jaccard is
+    array_intersect arithmetic on the sets, and each side's group key
+    rides the same joins so the member expansion needs no rep-id ->
+    group lookup. `release` forwards to capped_candidate_pairs
+    (cache-release contract)."""
     cand = capped_candidate_pairs(
         band_buckets(ss, bands, r), max_bucket, release=release
     )
-    # when the sig table carries the rep-group key (grp passthrough),
-    # ride it through the verify joins so rep pairs arrive with
-    # (grp_a, grp_b) attached — the member-level expansion then needs
-    # no rep-id -> group joins at all (two broadcast builds per
-    # consuming action in the r5 plan)
-    with_grp = "grp" in ss.columns
-    sa_cols = [F.col("id").alias("id_a"), F.col("s").alias("s_a")]
-    sb_cols = [F.col("id").alias("id_b"), F.col("s").alias("s_b")]
-    out_cols = ["id_a", "id_b", F.round("jaccard", 6).alias("jaccard")]
-    if with_grp:
-        sa_cols.append(F.col("grp").alias("grp_a"))
-        sb_cols.append(F.col("grp").alias("grp_b"))
-        out_cols += ["grp_a", "grp_b"]
+
+    def side(x: str) -> DataFrame:
+        return ss.select(F.col("id").alias(f"id_{x}"),
+                         F.col("s").alias(f"s_{x}"),
+                         F.col("grp").alias(f"grp_{x}"))
+
     inter = F.size(F.array_intersect("s_a", "s_b"))
     return (
-        F.broadcast(cand).join(ss.select(*sa_cols), "id_a")
-        .join(ss.select(*sb_cols), "id_b")
-        .withColumn(
-            "jaccard",
-            inter / (F.size("s_a") + F.size("s_b") - inter),
-        )
+        F.broadcast(cand).join(side("a"), "id_a").join(side("b"), "id_b")
+        .withColumn("jaccard", inter / (F.size("s_a") + F.size("s_b") - inter))
         .filter(F.col("jaccard") >= threshold)
-        .select(*out_cols)
-    )
-
-
-def _rep_groups(members: DataFrame) -> DataFrame:
-    """(grp, rid, csize) from a (grp, id) membership table — integers
-    only: min(id) is the same representative dup_groups elects, csize
-    the member count. Shared by the pair-expansion and edge-list paths
-    (one derivation; a semantics fix reaches every consumer)."""
-    return members.groupBy("grp").agg(
-        F.min("id").alias("rid"), F.count(F.lit(1)).alias("csize")
+        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
+                "grp_a", "grp_b")
     )
 
 
@@ -738,11 +663,10 @@ def _star_edges(members: DataFrame, elig_groups: DataFrame) -> DataFrame:
 
 def _expand_pairs(
     members: DataFrame,
-    rep_map: DataFrame,
     rep_pairs: DataFrame,
     value_col: str,
     intra_value,
-    elig: DataFrame,
+    elig: DataFrame | None,
 ) -> DataFrame:
     """Shared rep→member pair expansion (the join choreography behind
     both the MinHash and SimHash paths — one implementation so a fix in
@@ -751,29 +675,18 @@ def _expand_pairs(
     their rep, so rep-to-rep distance IS member-to-member distance);
     intra-group pairs get the exact-duplicate constant `intra_value`.
 
-    members: (grp, id) — every document and its exact-dup group key;
-    rep_map: (rid, rgrp) — representative id → group key, or None when
-             `rep_pairs` already carries (grp_a, grp_b) columns (the
-             construction attached them via the sig-table passthrough),
-             in which case the two rep-id -> group joins are skipped;
-    elig:    (grp) — groups eligible for intra pairs, or None when EVERY
-             group is eligible (the SimHash family: any same-fingerprint
-             group of size > 1 pairs, and singleton groups emit nothing
-             from a self-join anyway — skipping the eligibility join
-             saves a shuffle; MinHash keeps it for the shingle-
-             eligibility semantics)."""
-    if rep_map is None:
-        pairs_g = F.broadcast(rep_pairs.select("grp_a", "grp_b", value_col))
-    else:
-        pairs_g = (
-            F.broadcast(rep_pairs)
-            .join(rep_map.withColumnRenamed("rid", "id_a").withColumnRenamed("rgrp", "grp_a"), "id_a")
-            .join(rep_map.withColumnRenamed("rid", "id_b").withColumnRenamed("rgrp", "grp_b"), "id_b")
-            .select("grp_a", "grp_b", value_col)
-        )
+    members:   (grp, id) — every document and its exact-dup group key;
+    rep_pairs: (grp_a, grp_b, value_col, ...) — verified rep pairs
+               carrying both group keys;
+    elig:      (grp) — groups eligible for intra pairs, or None when
+               EVERY group is eligible (the SimHash family: any
+               same-fingerprint group of size > 1 pairs, and singleton
+               groups emit nothing from a self-join anyway — skipping the
+               eligibility join saves a shuffle; MinHash keeps it for the
+               shingle-eligibility semantics)."""
     cross = (
         members.select(F.col("grp").alias("grp_a"), F.col("id").alias("ia"))
-        .join(F.broadcast(pairs_g), "grp_a")
+        .join(F.broadcast(rep_pairs.select("grp_a", "grp_b", value_col)), "grp_a")
         .join(
             members.select(F.col("grp").alias("grp_b"), F.col("id").alias("ib")),
             "grp_b",
@@ -802,45 +715,28 @@ def _expand_pairs(
 
 
 def expand_rep_pairs(
-    docs: DataFrame, rep_pairs: DataFrame, elig_ids: DataFrame,
-    rg: DataFrame | None = None,
+    members: DataFrame, rep_pairs: DataFrame, ss: DataFrame
 ) -> DataFrame:
-    """Expand verified representative pairs to member pairs: cross-group
-    pairs inherit the representatives' jaccard (identical normalized text
-    => identical shingle set); intra-group pairs are exact duplicates
-    (jaccard 1.0).
+    """Expand verified representative pairs to member pairs (id_a, id_b,
+    jaccard): cross-group pairs inherit the representatives' jaccard
+    (identical normalized text => identical shingle set); intra-group
+    pairs are exact duplicates (jaccard 1.0).
 
-    Text is NEVER re-shuffled here: every frame derives from
-    docs.select(grp, id) — the md5 is recomputed map-side, but the
-    rep-id/group-size table comes from an integer groupBy over (grp, id),
-    not a second full-text reps aggregation (which an earlier revision
-    re-ran three times — the dominant shuffle of the expansion at any
-    scale). `elig_ids` is the (id) frame of representatives that produced
-    a shingle set (i.e. have a sig row — normalized text has >= k
-    tokens): docs without shingles have no jaccard to anything, matching
-    the exact oracle; callers pass the (tiny, checkpointed) id column of
-    the sig/set table rather than re-deriving the predicate from text.
-    `rg` is the optional pre-checkpointed (grp, rid, csize) rep-group
-    aggregate — when given (minhash_lsh_pairs passes the part-3 slice of
-    its fused checkpoint), the two consumers below read it from cache
-    instead of re-running the groupBy per action."""
-    members = docs.select("grp", "id")
-    if rg is None:
-        rg = _rep_groups(members)
-    # rep pairs carrying (grp_a, grp_b) — attached by verify_rep_pairs
-    # from the sig-table passthrough — skip the two rep-id -> group
-    # broadcast joins; stored pair chunks from the lineage path predate
-    # the passthrough and keep the join path
-    rep_map = (
-        None
-        if {"grp_a", "grp_b"}.issubset(rep_pairs.columns)
-        else rg.select("rid", F.col("grp").alias("rgrp"))
+    members:   (grp, id) of every doc (dup_groups' docs projection);
+    rep_pairs: verify_rep_pairs output, carrying (grp_a, grp_b);
+    ss:        the rep-level sig table (id, s, bhs, grp, csize), in
+               session or read from stored chunks. Its rows are exactly
+               the shingle-eligible representatives, so intra pairs are
+               emitted for the groups with a sig row and csize > 1 —
+               docs without shingles have no jaccard to anything,
+               matching the exact oracle.
+
+    Text is never re-read here: every input is a (grp, id) projection, a
+    verified pair, or the sig table."""
+    elig = ss.filter(F.col("csize") > 1).select("grp")
+    return _expand_pairs(
+        members.select("grp", "id"), rep_pairs, "jaccard", 1.0, elig
     )
-    # intra eligibility: groups of size > 1 whose rep is shingle-eligible
-    elig = rg.filter(F.col("csize") > 1).join(
-        elig_ids.select(F.col(elig_ids.columns[0]).alias("rid")), "rid"
-    ).select("grp")
-    return _expand_pairs(members, rep_map, rep_pairs, "jaccard", 1.0, elig)
 
 
 # -- simhash -----------------------------------------------------------------
@@ -980,46 +876,42 @@ def simhash_pairs_from_fingerprints(
     """simhash_pairs over a precomputed (id, simhash) table — useful when
     fingerprints are stored (they are 8 bytes/doc; recomputing them is the
     expensive part) and for property-testing the blocking directly.
+    Returns (id_a, id_b, hamming).
 
     The fingerprint table is checkpointed once (linear, ~16 B/doc); the
     collapsed rep table is cached only while the (tiny,
     candidate-bounded) rep-level pairs are computed and checkpointed,
     then released — no storage leak across repeated calls. The
     member-level expansion stays LAZY (it can be quadratic for giant dup
-    clusters — never eagerly materialized here) and reads its small
-    group frames from the fused checkpoint (see _simhash_rep_level); at
-    10^12-doc scale use expand_exact_dups=False (rep-level pairs + the
-    dup-groups table) as documented on minhash_lsh_pairs."""
-    sh, rep_pairs, rg = _simhash_rep_level(
-        sh, max_hamming, n_blocks, max_bucket,
-        with_groups=expand_exact_dups,
+    clusters — never eagerly materialized here); at 10^12-doc scale use
+    expand_exact_dups=False (rep-level pairs + the dup-groups table) as
+    documented on minhash_lsh_pairs."""
+    sh, rep_pairs, _ = _simhash_rep_level(
+        sh, max_hamming, n_blocks, max_bucket, with_groups=False,
     )
     if not expand_exact_dups:
-        return rep_pairs
-    return expand_simhash_rep_pairs(sh, rep_pairs, rg=rg)
+        return rep_pairs.select("id_a", "id_b", "hamming")
+    return expand_simhash_rep_pairs(sh, rep_pairs)
 
 
 def _simhash_rep_level(
     sh: DataFrame, max_hamming: int, n_blocks: int | None,
     max_bucket: int | None, *, with_groups: bool,
 ):
-    """Blocking + verify shared by simhash_pairs_from_fingerprints and
-    simhash_edges_from_fingerprints. Returns (checkpointed sh,
-    rep_pairs, rg) where rg is the (grp, rid, csize) rep-group aggregate
-    when with_groups (else None) — fused into the SAME localCheckpoint
-    as rep_pairs (part-tagged union, the minhash _minhash_rep_level
-    pattern): every expansion/eligibility consumer reads the groupBy
-    result from cache instead of re-shuffling the fingerprint table per
-    plan branch (rep_map is joined twice in _expand_pairs alone)."""
+    """Blocking + verify shared by simhash_pairs_from_fingerprints,
+    simhash_edges_from_fingerprints and CheckpointedSimhashDedup.
+    Returns (checkpointed sh, rep_pairs, rg): rep_pairs is the
+    checkpointed (id_a, id_b, hamming, grp_a, grp_b) table, the group
+    keys being the fingerprints themselves; rg is the (grp, rid, csize)
+    rep-group aggregate when with_groups (the edge path's star edges),
+    fused into the SAME localCheckpoint as rep_pairs, else None."""
     # materialize the fingerprint table ONCE (localCheckpoint — linear,
     # ~16 B/doc, nothing like the quadratic member-pair list): the plan
     # branches (buckets, rep->group aggregate, member expansion) all
     # read it without ever re-running the simhash kernel pass; the
     # checkpoint blocks are freed when the returned frame is
     # garbage-collected. With adaptive width the checkpoint is LAZY and
-    # the count() both materializes it and returns the size — ONE job
-    # where the r4 shape paid an eager checkpoint plus a separate
-    # cache-scan count.
+    # the count() both materializes it and returns the size in ONE job.
     if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
         sh = sh.localCheckpoint(eager=n_blocks is not None)
     if n_blocks is None:
@@ -1029,9 +921,9 @@ def _simhash_rep_level(
     # one representative per distinct fingerprint; the 8-byte fingerprint
     # RIDES the bucket rows (payload_col) so the verify needs NO joins at
     # all — each candidate pair arrives with both fingerprints attached
-    # (bands * 8 extra shuffle bytes vs the broadcast + two join stages
-    # the r4 plan paid), and the candidate dedup runs AFTER the
-    # bit_count filter, shuffling only surviving pairs
+    # (bands * 8 extra shuffle bytes instead of a broadcast + two join
+    # stages), and the candidate dedup runs AFTER the bit_count filter,
+    # shuffling only surviving pairs
     groups = sh.groupBy("simhash").agg(
         F.min("id").alias("id"), F.count(F.lit(1)).alias("csize")
     )
@@ -1046,10 +938,6 @@ def _simhash_rep_level(
     cand = capped_candidate_pairs(
         buckets, max_bucket, release=handles,
         payload_col="simhash", distinct=False,
-        # persist stays ON: the bucket table sits above the groups
-        # aggregate, and without the cache the over-cap branch and the
-        # self-join sides re-run that exchange (A/B measured 3.2 s vs
-        # 2.2 s per rep-level pass at 50k docs)
     )
     rp = (
         cand.select(
@@ -1057,10 +945,9 @@ def _simhash_rep_level(
             F.bit_count(
                 F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
-            # the fingerprints ARE the group keys — keeping them on the
-            # verified pair removes the expansion's rep-id -> group
-            # joins (they are functions of the ids, so the dedup keeps
-            # a consistent value)
+            # the fingerprints ARE the group keys the expansion joins
+            # on (functions of the ids, so the dedup keeps a consistent
+            # value)
             F.col("simhash_a").alias("grp_a"),
             F.col("simhash_b").alias("grp_b"),
         )
@@ -1077,8 +964,7 @@ def _simhash_rep_level(
                 # the rep-group aggregate IS `groups` (min(id) = rid,
                 # count = csize, keyed by the fingerprint): reusing the
                 # same frame lets ReuseExchange serve this branch and
-                # the bucket branch from ONE groupBy(simhash) shuffle —
-                # the r5 shape re-aggregated mem from scratch here
+                # the bucket branch from ONE groupBy(simhash) shuffle
                 groups.select(
                     F.lit(1).alias("part"),
                     F.col("simhash").alias("grp"),
@@ -1130,32 +1016,19 @@ def simhash_edges_from_fingerprints(
     )
 
 
-def expand_simhash_rep_pairs(
-    sh: DataFrame, rep_pairs: DataFrame, rg: DataFrame | None = None,
-) -> DataFrame:
-    """Expand rep-level SimHash pairs to member pairs from a fingerprint
-    table (id, simhash): cross-group pairs inherit the representatives'
-    hamming (equal simhash => equal distance to everything); intra-group
-    pairs are hamming 0. Integer shuffles only; shared by the batch path
-    and the checkpointed pipeline's resume leg (which reads `sh` and
-    `rep_pairs` straight from stored chunks). Join choreography lives in
-    _expand_pairs (one implementation for both dedup families). `rg` is
-    the optional pre-checkpointed (grp, rid, csize) rep-group aggregate
-    (_simhash_rep_level passes its fused-checkpoint slice); when absent
-    — the lineage resume leg, which has only stored chunks — it is
-    derived here once per consuming action."""
+def expand_simhash_rep_pairs(sh: DataFrame, rep_pairs: DataFrame) -> DataFrame:
+    """Expand rep-level SimHash pairs (carrying the fingerprints as
+    grp_a, grp_b — _simhash_rep_level output, in session or read from
+    stored chunks) to member pairs (id_a, id_b, hamming) over a
+    fingerprint table (id, simhash): cross-group pairs inherit the
+    representatives' hamming (equal simhash => equal distance to
+    everything); intra-group pairs are hamming 0. Integer shuffles only;
+    join choreography lives in _expand_pairs (one implementation for
+    both dedup families)."""
     members = sh.select(F.col("simhash").alias("grp"), "id")
-    # rep pairs carrying (grp_a, grp_b) — the fingerprints attached at
-    # verify time — skip the rep-id -> group joins; lineage-stored pair
-    # chunks predate the columns and keep the join path
-    if {"grp_a", "grp_b"}.issubset(rep_pairs.columns):
-        rep_map = None
-    else:
-        rg = _rep_groups(members) if rg is None else rg
-        rep_map = rg.select("rid", F.col("grp").alias("rgrp"))
     # elig=None: every same-fingerprint group is intra-eligible (see
     # _expand_pairs) — singleton groups emit nothing from the self-join
-    return _expand_pairs(members, rep_map, rep_pairs, "hamming", 0, None)
+    return _expand_pairs(members, rep_pairs, "hamming", 0, None)
 
 
 # -- snapshot collapse --------------------------------------------------------

@@ -327,70 +327,42 @@ def build_neardup_index(
                      shingle-hash set the verify step needs
       <dir>/params.json  banding + normalization + layout guard
 
-    Exact-duplicate texts are pre-collapsed to one representative (min
-    id) before signing — the boilerplate-cluster killer from the batch
-    path (minhash_lsh_pairs step 1); a dup of ANY copy is a dup of the
+    The rep-level table is the batch path's: dup_groups pre-collapses
+    exact-duplicate texts to one representative (min id) and
+    minhash_sigs_and_sets signs it; a dup of ANY copy is a dup of the
     representative, so the gate verdict is unchanged. Buckets larger
-    than `max_bucket` representatives are dropped with their count
-    recorded in params (same trade, and the same visibility, as the
-    batch capped_candidate_pairs). num_perm/bands (default 32x4) give
-    recall ~1-5e-8 at jaccard >= 0.8."""
-    from .dedup import band_buckets, minhash_sigs_and_sets
+    than `max_bucket` representatives are dropped by the batch over-cap
+    rule (cap_buckets), with their count recorded in params.
+    num_perm/bands (default 32x4) give recall ~1-5e-8 at jaccard >= 0.8."""
+    from .dedup import band_buckets, cap_buckets, dup_groups, minhash_sigs_and_sets
 
-    if num_perm % bands:
-        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    r = num_perm // bands
-    reps = (
-        df.select(F.col(id_col).alias("__rid"), F.col(text_col))
-        .groupBy(F.md5(norm_col(text_col)).alias("__dk"))
-        .agg(
-            F.min("__rid").alias(id_col),
-            F.any_value(text_col).alias(text_col),
-        )
-        .drop("__dk")
-    )
-    from .dedup import band_hashes_col
-
-    ss = (
-        minhash_sigs_and_sets(
-            reps, k, num_perm, text_col=text_col, id_col=id_col
-        )
-        .select("id", "s", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )  # ONE kernel pass: the buckets write (and its over-cap anti-join
-    # branch), the sets write, and the over.count() all read this, and
-    # each would re-run the Arrow sign+set pass otherwise; the
-    # checkpoint stores the band keys, not the 4x-larger signature
-    n_reps = ss.count()  # cache read; reused for the params stat below
+    _, reps = dup_groups(df, text_col, id_col)
+    # ONE kernel pass: the buckets write (and its over-cap branch), the
+    # sets write and the over.count() all read this checkpoint. It is
+    # lazy: the count() below both materializes it and sizes the shards,
+    # in one job.
+    ss = minhash_sigs_and_sets(
+        reps, k, num_perm, "txt", "id", bands=bands
+    ).localCheckpoint(eager=False)
+    n_reps = ss.count()
     if n_shards is None:
-        # scale-adaptive sharding (n_shards=None, the default): target
-        # ~100k representatives per shard (sets dominate at ~1-2 KB/rep
-        # -> shard files land in the 100-300 MB range the I/O guide
-        # recommends) instead of a constant 64 — a toy corpus stops
-        # paying 64-tiny-file open/list overhead on every pruned gate
-        # read, and a 10^9-rep corpus gets real pruning granularity
-        # rather than 64 multi-GB shards. Recorded in params, so gates
-        # never depend on the default.
+        # scale-adaptive sharding: target ~100k representatives per shard
+        # (sets dominate at ~1-2 KB/rep -> shard files land in the
+        # 100-300 MB range), floor 4, cap 4096 — a toy corpus does not pay
+        # many tiny file opens per pruned gate read, and a 10^9-rep
+        # corpus gets real pruning granularity. Recorded in params, so
+        # gates never depend on the default.
         n_shards = max(4, min(4096, -(-n_reps // 100_000)))
-    buckets = band_buckets(ss, bands, r)
-    counts = buckets.groupBy("band", "bh").count()
-    # persist the (tiny, <= n*bands/max_bucket rows) over-cap list: the
-    # anti-join below AND the n_dropped stat both read it — without the
-    # persist the stat re-shuffled the whole bucket table a second time
-    over = (
-        counts.filter(F.col("count") > max_bucket).persist()
-        if max_bucket else None
-    )
-    if over is not None:
-        buckets = buckets.join(over.select("band", "bh"), ["band", "bh"], "left_anti")
+    buckets = band_buckets(ss, bands, num_perm // bands)
+    over = None
+    if max_bucket is not None:
+        buckets, over = cap_buckets(buckets, max_bucket)
     # repartition ON the partition column before the partitioned write:
     # otherwise every task writes into every shard dir (tasks x shards
-    # tiny files — measured 3.5k files for a 5k-doc corpus); this way
-    # each shard is one file and the gate's pruned reads open few.
-    # The two index writes are INDEPENDENT readers of the checkpointed
-    # sig/set table, so they run as concurrent jobs (guide §2.6): the
-    # second write's tasks back-fill executors freed by the first's
-    # tail instead of waiting for it.
+    # tiny files); this way each shard is one file and the gate's pruned
+    # reads open few. The two index writes are INDEPENDENT readers of
+    # the checkpointed sig table, so they run as concurrent jobs: the
+    # second write's tasks back-fill executors freed by the first's tail.
     from concurrent.futures import ThreadPoolExecutor
 
     def _write_buckets() -> None:
@@ -411,10 +383,9 @@ def build_neardup_index(
         for fut in [pool.submit(_write_buckets), pool.submit(_write_sets)]:
             fut.result()
 
-    # n_reps already counted from the checkpoint above (sets rows are
-    # 1:1 with it — no re-read of the parquet just written)
-    n_dropped = int(over.count()) if over is not None else 0
+    n_dropped = 0
     if over is not None:
+        n_dropped = int(over.count())
         over.unpersist()
     params = {
         "_layout": LAYOUT_VERSION,
@@ -434,48 +405,39 @@ def build_neardup_index(
     return {"n_reps": n_reps, "n_dropped_buckets": n_dropped}
 
 
-def incremental_neardup_pairs(
-    increment: DataFrame,
-    index_dir: str,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id_col, ref_id, jaccard): every frozen-corpus representative
-    within the index's Jaccard threshold of an increment doc. The
-    increment is signed in one Arrow pass; its band keys join the
-    stored buckets (read under a literal shard IN (...) partition
-    filter — a small delta touches few shards); candidate (inc, ref)
-    pairs are exact-verified against the stored sets, read pruned the
-    same way. Only the bounded shard-id lists (≤ n_shards, a config)
-    ever reach the driver."""
-    from .dedup import band_buckets, minhash_sigs_and_sets
+def _neardup_rep_matches(
+    increment: DataFrame, index_dir: str, text_col: str, id_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(docs, matches): the increment's dup_groups docs (id, txt, grp)
+    and the verified (grp, ref_id, jaccard) rows of its exact-dup
+    representatives against the frozen index. The increment is
+    collapsed and signed the way the index was built (dup_groups, then
+    one minhash_sigs_and_sets pass); its band keys join the stored
+    buckets read under a literal shard IN (...) partition filter (a
+    small delta touches few shards), and candidate (rep, ref) pairs are
+    exact-verified against the stored sets, read pruned the same way.
+    Only the bounded shard-id lists (<= n_shards, a config) are ever
+    collected."""
+    from .dedup import band_buckets, dup_groups, minhash_sigs_and_sets
 
     spark = increment.sparkSession
     params = _read_params(index_dir, kind="neardup")
-    bands, r = int(params["bands"]), int(params["num_perm"]) // int(params["bands"])
+    bands, num_perm = int(params["bands"]), int(params["num_perm"])
     n_shards, threshold = int(params["n_shards"]), float(params["threshold"])
-
-    from .dedup import band_hashes_col
-
-    inc_ss = (
-        minhash_sigs_and_sets(
-            increment, int(params["k"]), int(params["num_perm"]),
-            text_col=text_col, id_col=id_col,
-        )
-        .select("id", "s", band_hashes_col(bands, r).alias("bhs"))
-        .localCheckpoint(eager=True)
-    )  # one kernel pass; blocking + verify reuse (band keys stored,
-    # not the 4x-larger signature)
-    inc_b = band_buckets(inc_ss, bands, r).withColumn(
+    docs, reps = dup_groups(increment, text_col, id_col)
+    empty = spark.createDataFrame([], "grp string, ref_id long, jaccard double")
+    # one kernel pass that blocking and verify both read; the checkpoint
+    # is lazy, materialized by the shard-list collect (its first reader)
+    inc_ss = minhash_sigs_and_sets(
+        reps, int(params["k"]), num_perm, "txt", "id",
+        passthrough=("grp",), bands=bands,
+    ).localCheckpoint(eager=False)
+    inc_b = band_buckets(inc_ss, bands, num_perm // bands).withColumn(
         "shard", _sshard(F.col("bh"), n_shards)
     )
-
     shards = [int(x["shard"]) for x in inc_b.select("shard").distinct().collect()]
     if not shards:
-        return spark.createDataFrame(
-            [], f"{id_col} long, ref_id long, jaccard double"
-        )
+        return docs, empty
     ref_b = (
         spark.read.parquet(f"{index_dir}/buckets")
         .filter(F.col("shard").isin(shards))
@@ -493,29 +455,41 @@ def incremental_neardup_pairs(
         cand.select(_sshard(F.col("ref_id"), n_shards).alias("s")).distinct().collect()
     ]
     if not sshards:
-        return spark.createDataFrame(
-            [], f"{id_col} long, ref_id long, jaccard double"
-        )
+        return docs, empty
     ref_sets = (
         spark.read.parquet(f"{index_dir}/sets")
         .filter(F.col("sshard").isin(sshards))
         .select(F.col("id").alias("ref_id"), F.col("s").alias("s_b"))
     )
-    inc_sets = inc_ss.select(F.col("id").alias("__iid"), F.col("s").alias("s_a"))
+    inc_sets = inc_ss.select(F.col("id").alias("__iid"), F.col("s").alias("s_a"), "grp")
     inter = F.size(F.array_intersect("s_a", "s_b"))
     # cand is checkpointed (exact size stats), so AQE broadcasts it when
     # the delta is small — a FORCED broadcast would be an executor-memory
     # ceiling when a corpus-sized increment is gated (many candidates)
-    return (
+    matches = (
         cand.join(inc_sets, "__iid").join(ref_sets, "ref_id")
         .withColumn("jaccard", inter / (F.size("s_a") + F.size("s_b") - inter))
         .filter(F.col("jaccard") >= threshold)
-        .select(
-            F.col("__iid").alias(id_col),
-            "ref_id",
-            F.round("jaccard", 6).alias("jaccard"),
-        )
+        .select("grp", "ref_id", F.round("jaccard", 6).alias("jaccard"))
     )
+    return docs, matches
+
+
+def incremental_neardup_pairs(
+    increment: DataFrame,
+    index_dir: str,
+    *,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """(id_col, ref_id, jaccard): every frozen-corpus representative
+    within the index's Jaccard threshold of an increment doc (see
+    _neardup_rep_matches for the plan). Exact duplicates inside the
+    increment are signed once and share their representative's rows."""
+    docs, matches = _neardup_rep_matches(increment, index_dir, text_col, id_col)
+    return matches.join(
+        docs.select(F.col("id").alias(id_col), "grp"), "grp"
+    ).select(id_col, "ref_id", "jaccard")
 
 
 def incremental_neardup_gate(
@@ -529,12 +503,10 @@ def incremental_neardup_gate(
     doc within the index's Jaccard threshold. Docs with fewer than k
     tokens have no signature and cannot match — they are new (same
     convention as the batch LSH path, which emits no row for them)."""
-    pairs = incremental_neardup_pairs(
-        increment, index_dir, text_col=text_col, id_col=id_col
-    )
-    matched = pairs.select(F.col(id_col)).distinct()
+    docs, matches = _neardup_rep_matches(increment, index_dir, text_col, id_col)
+    matched = matches.select("grp").distinct()
     return (
-        increment.select(id_col)
-        .join(matched.withColumn("__m", F.lit(True)), id_col, "left")
+        docs.select(F.col("id").alias(id_col), "grp")
+        .join(matched.withColumn("__m", F.lit(True)), "grp", "left")
         .select(F.col(id_col), F.col("__m").isNull().alias("is_new"))
     )
