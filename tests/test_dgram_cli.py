@@ -23,11 +23,20 @@ def tracked(spark, tmp_path_factory):
     return corpus, idx, pdf
 
 
+def _assert_every_gap_constrained(dgram, gaps, doc):
+    """Every tracked gap's keys live in the one filter: at each gap a
+    d-gram of `doc` is found, and an absent one rules out some bin (the
+    probe is constrained, not all-ones)."""
+    for gap in gaps:
+        assert dgram.probe_gap(doc[:3], [gap], doc[3 + gap : 6 + gap]).any(), gap
+        assert not dgram.probe_gap("qxj", [gap], "jxq").all(), gap
+
+
 def test_dgram_loaded(tracked):
-    _, idx, _ = tracked
+    _, idx, pdf = tracked
     assert idx.dgram is not None
     assert idx.dgram.min_gap == 1 and idx.dgram.max_gap == 12
-    assert len(idx.dgram.matrices) == 12
+    _assert_every_gap_constrained(idx.dgram, range(1, 13), pdf["norm"][0])
 
 
 GAP_PATTERNS = ["w.{2}ld", "data.{2,6}merge", "merge.{1,4}index", "z.{3}yva"]
@@ -65,6 +74,25 @@ def test_dgram_tightens_candidates(tracked, spark, tmp_path_factory):
     assert strict, "d-gram index never pruned anything"
 
 
+def test_retrack_replaces_dgram_filter(tracked, spark, tmp_path):
+    """Tracking again replaces the d-gram filter (it used to append a
+    second row set that every later load refused): two tracks with other
+    gaps and fpr end equal to one fresh track with the last settings."""
+    corpus, fresh, _ = tracked
+    path = str(tmp_path / "idx_retrack")
+    idx = MotifIndex.build(corpus, path, n_bins=16, k=3)
+    idx.track(corpus, path, min_gap=2, max_gap=4, fpr=0.01)
+    idx = idx.track(corpus, path, min_gap=1, max_gap=12)
+    reloaded = MotifIndex.load(spark, path)
+    for got in (idx, reloaded):
+        assert (got.dgram.min_gap, got.dgram.max_gap) == (1, 12)
+        assert got.dgram.bloom.m_bits == fresh.dgram.bloom.m_bits
+        assert np.array_equal(got.dgram.bloom.matrix, fresh.dgram.bloom.matrix)
+        for pattern in GAP_PATTERNS:
+            assert (got.candidate_bins(pattern).bin_ids()
+                    == fresh.candidate_bins(pattern).bin_ids()), pattern
+
+
 def test_track_rejects_mismatched_bins(spark, tmp_path):
     """A d-gram build with a different modulus than the index manifest
     would AND mis-mapped bin vectors into query paths (silent recall
@@ -86,11 +114,12 @@ def test_gap0_tracked_min_gap_zero(spark, tmp_path):
     path = str(tmp_path / "idx_g0")
     idx = MotifIndex.build(corpus, path, n_bins=16, k=3)
     idx = idx.track(corpus, path, min_gap=0, max_gap=4)
-    assert 0 in idx.dgram.matrices
     pattern = "w.{0,2}ld"
     rx = re.compile(pattern, re.IGNORECASE)
     pdf = corpus.toPandas()
     pdf["norm"] = corpus_text_series(pdf["text"], pdf["html"])
+    assert idx.dgram.min_gap == 0 and idx.dgram.max_gap == 4
+    _assert_every_gap_constrained(idx.dgram, range(0, 5), pdf["norm"][0])
     truth = set()
     for url, doc in zip(pdf["url"], pdf["norm"]):
         for m in rx.finditer(doc):

@@ -99,3 +99,32 @@ def test_checkpointed_dedup_job_budget(spark, corpus, tmp_path):
     assert n > 0
     # 33 jobs when written, plus the slack the budgets above allow
     assert n_jobs <= 36, f"checkpointed dedup ran {n_jobs} jobs"
+
+
+def test_motif_index_job_budget(spark, tmp_path):
+    """Motif index write and read paths. build = one fused sizing and
+    alphabet aggregate + the sketch write; track reuses the build's
+    recorded sizing, so it is the d-gram write alone and does not grow
+    with the gap count; a load reads the index on the driver with no
+    Spark job at all."""
+    from tetrex_spark.plans.planner import MotifIndex
+    from tetrex_spark.sources.corpus import webtext_small
+
+    corpus = webtext_small(spark).cache()
+    corpus.count()
+    path = str(tmp_path / "motif_idx")
+    idx, n_build = _jobs(spark, "motif-build", lambda: MotifIndex.build(
+        corpus, path, n_bins=16, k=3))
+    # 5 jobs when written (3 sizing aggregate + 2 sketch write)
+    assert n_build <= 7, f"MotifIndex.build ran {n_build} jobs"
+    n_track = {}
+    for lo, hi in ((1, 3), (3, 21)):
+        idx, n_track[lo, hi] = _jobs(spark, f"motif-track-{lo}-{hi}",
+                                     lambda: idx.track(corpus, path, min_gap=lo, max_gap=hi))
+    assert n_track[1, 3] == n_track[3, 21], n_track
+    # 2 jobs when written (the d-gram sketch write)
+    assert n_track[1, 3] <= 4, f"track ran {n_track} jobs"
+    loaded, n_load = _jobs(spark, "motif-load", lambda: MotifIndex.load(spark, path))
+    assert loaded.dgram.max_gap == 21
+    assert n_load == 0, f"MotifIndex.load ran {n_load} jobs"
+    corpus.unpersist()

@@ -4,6 +4,8 @@ import pytest
 
 from tetrex_spark.kernel.hashing import (
     bloom_positions,
+    combine_dgram,
+    dgram_keys_from_chargrams,
     hash_char_kgrams,
     hash_char_kgrams_series,
     hash_str,
@@ -140,3 +142,25 @@ def test_concat_ranges():
     out = concat_ranges(np.array([5, 0, 9]), np.array([2, 0, 3]))
     assert list(out) == [5, 6, 9, 10, 11]
     assert concat_ranges(np.array([], dtype=np.int64), np.array([], dtype=np.int64)).size == 0
+
+
+@pytest.mark.parametrize("gaps", [(0, 0), (1, 3), (0, 9)])
+def test_dgram_keys_equal_per_doc_per_gap_loop(gaps):
+    """The one-call gap-range key function equals the plain loop: for each
+    doc, for each gap, every (left 3-gram, right 3-gram) pair `gap` chars
+    apart, laid out doc by doc — no pair crosses a document boundary."""
+    docs = ["", "ab", "abcdef", "the quick brown fox", "zyzzyva data stream", "abcabcabc"]
+    per_doc = [hash_char_kgrams(d, 3) for d in docs]
+    counts = np.array([g.size for g in per_doc], dtype=np.int64)
+    grams = np.concatenate(per_doc)
+    keys, key_counts = dgram_keys_from_chargrams(grams, counts, *gaps, 3)
+    want, want_counts = [], []
+    for g in per_doc:
+        n = 0
+        for gap in range(gaps[0], gaps[1] + 1):
+            for p in range(g.size - 3 - gap):
+                want.append(int(combine_dgram(g[p : p + 1], gap, g[p + 3 + gap : p + 4 + gap])[0]))
+                n += 1
+        want_counts.append(n)
+    assert key_counts.tolist() == want_counts
+    assert keys.tolist() == want

@@ -281,3 +281,34 @@ def test_bin_filter_and_projection_reach_parquet_scan(spark, tmp_path, webtext):
     assert read_cols == {"url", "text", "bin_id"}, read_cols
     # and the full-scan fallback (every bin a candidate) skips the filter
     assert prune_to_bins(stored, list(range(16)), 16) is stored
+
+
+def test_bloom_rows_refuse_duplicate_bins():
+    """Two rows for one bin are a corrupt table (e.g. an appended second
+    build); loading one of them silently would depend on read order."""
+    import numpy as np
+
+    from tetrex_spark.kernel.bloom import BloomFilter
+    from tetrex_spark.sources.sketch_store import BloomMatrix
+
+    a = BloomFilter(512).update(np.array([1, 2], dtype=np.uint64)).to_bytes()
+    b = BloomFilter(512).update(np.array([3], dtype=np.uint64)).to_bytes()
+    assert BloomMatrix.from_rows([(0, a), (1, b)], 2).n_bins == 2
+    with pytest.raises(ValueError, match="duplicate"):
+        BloomMatrix.from_rows([(0, a), (1, b), (0, b)], 2)
+
+
+def test_old_format_version_refused(tmp_path):
+    """Format 1 kept one d-gram filter per gap; such a directory must be
+    refused with a rebuild message, not read as the one-filter layout."""
+    import json
+
+    from tetrex_spark.functions.text import TOKENIZER_VERSION
+    from tetrex_spark.sources.sketch_store import read_manifest
+
+    (tmp_path / "manifest.json").write_text(json.dumps({
+        "format_version": 1, "tokenizer_version": TOKENIZER_VERSION,
+        "n_bins": 2, "specs": [],
+    }))
+    with pytest.raises(ValueError, match="rebuild required"):
+        read_manifest(str(tmp_path))

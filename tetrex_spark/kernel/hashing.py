@@ -270,35 +270,54 @@ def hash_char_kgrams_series(
     return _finalize(raw, np.full(raw.size, k, dtype=np.int64), seed), counts
 
 
-def combine_dgram(left_h: np.ndarray, gap: int, right_h: np.ndarray) -> np.ndarray:
+def combine_dgram(left_h: np.ndarray, gap, right_h: np.ndarray) -> np.ndarray:
     """(left 3-gram hash, gap length, right 3-gram hash) -> d-gram key,
-    position-weighted polynomial mix + splitmix finalize. One code path
-    for the vectorized build and the driver-side probe (plans/dgram.py).
-    The analog of the reference's gapped-gram code formula
-    (/root/reference/include/dGramIndex.h:231-238)."""
+    position-weighted polynomial mix + splitmix finalize. `gap` is a scalar
+    or an array aligned with the hashes. One code path for the vectorized
+    build and the driver-side probe (plans/dgram.py). The analog of the
+    reference's gapped-gram code formula (include/dGramIndex.h:231-238):
+    the gap is part of the key, so every gap's keys share one filter."""
     with np.errstate(over="ignore"):
         acc = (
             np.asarray(left_h, dtype=U64) * _POW[1]
             + np.asarray(right_h, dtype=U64) * _POW[2]
-            + U64(gap) * _POW[3]
+            + np.asarray(gap, dtype=U64) * _POW[3]
         )
         return splitmix64(acc)
 
 
 def dgram_keys_from_chargrams(
-    grams: np.ndarray, counts: np.ndarray, gap: int, pad: int
+    grams: np.ndarray, counts: np.ndarray, min_gap: int, max_gap: int, pad: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Concatenated per-doc char-`pad`-gram hashes -> d-gram keys for one
-    gap, respecting document boundaries (no cross-doc pairs). Returns
-    (keys, per-doc key counts)."""
-    counts_g = np.maximum(counts - pad - gap, 0)
-    if counts_g.sum() == 0:
-        return np.zeros(0, dtype=U64), counts_g
-    starts = np.concatenate([[0], np.cumsum(counts)])[:-1]
-    keep = concat_ranges(starts, counts_g)
-    left = grams[keep]
-    right = grams[keep + pad + gap]
-    return combine_dgram(left, gap, right), counts_g
+    """Concatenated per-doc char-`pad`-gram hashes -> d-gram keys for every
+    gap in [min_gap, max_gap], respecting document boundaries (no cross-doc
+    pairs). Keys are laid out per document (doc-major, then gap), the
+    layout every key source hands the sketch build. Returns (keys, per-doc
+    key counts).
+
+    One vectorized gather per gap writes straight into the output, so the
+    transient memory beyond the keys themselves is one gap's worth."""
+    counts = np.asarray(counts, dtype=np.int64)
+    gaps = np.arange(min_gap, max_gap + 1, dtype=np.int64)
+    per_gap = np.maximum(counts[:, None] - pad - gaps[None, :], 0)  # (docs, gaps)
+    counts_out = per_gap.sum(axis=1)
+    total = int(counts_out.sum())
+    if total == 0:
+        return np.zeros(0, dtype=U64), counts_out
+    gram_starts = np.zeros(counts.size, dtype=np.int64)
+    np.cumsum(counts[:-1], out=gram_starts[1:])
+    # out_starts[d, j]: where doc d's keys for gap j begin in the output
+    flat = per_gap.reshape(-1)
+    out_starts = np.zeros(flat.size, dtype=np.int64)
+    np.cumsum(flat[:-1], out=out_starts[1:])
+    out_starts = out_starts.reshape(per_gap.shape)
+    keys = np.empty(total, dtype=U64)
+    for j, gap in enumerate(gaps):
+        left = concat_ranges(gram_starts, per_gap[:, j])
+        keys[concat_ranges(out_starts[:, j], per_gap[:, j])] = combine_dgram(
+            grams[left], gap, grams[left + pad + gap]
+        )
+    return keys, counts_out
 
 
 def bloom_positions(keys: np.ndarray, m_bits: int, n_hashes: int) -> np.ndarray:

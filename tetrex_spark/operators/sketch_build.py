@@ -62,15 +62,20 @@ class SketchSpec:
     name: str
     kind: str  # bloom | hll | cms | kll | tdigest
     source: str  # token_shingle | char_kgram | token | dgram | doc_length_*
-    k: int = 3  # shingle/gram width; for source='dgram' the GAP length
+    k: int = 3  # shingle/gram width (source='dgram' pads are DGRAM_PAD wide)
     params: dict = field(default_factory=dict)
     seed: int = 42
+    # inclusive (min_gap, max_gap) for source='dgram': one spec holds the
+    # keys of every gap, because the key encodes its gap
+    gaps: tuple[int, int] | None = None
 
     def __post_init__(self):
         if self.kind not in REGISTRY:
             raise ValueError(f"unknown sketch kind {self.kind!r}")
         if self.source not in KEY_SOURCES + VALUE_SOURCES:
             raise ValueError(f"unknown source {self.source!r}")
+        if (self.source == "dgram") != (self.gaps is not None):
+            raise ValueError("gaps is required for source='dgram' and only there")
 
     def make(self):
         return REGISTRY[self.kind](**self.params)
@@ -83,6 +88,7 @@ class SketchSpec:
             "k": self.k,
             "params": self.params,
             "seed": self.seed,
+            "gaps": self.gaps,
         }
 
 
@@ -127,13 +133,12 @@ class _BatchDerived:
         if spec.source == "char_kgram":
             return self._char_grams(spec.k, spec.seed)
         if spec.source == "dgram":
-            # spec.k is the GAP length; keys pair char-PAD-grams across it.
-            # The char-gram pass is cached, so a full gap range costs ONE
-            # gram hashing pass + cheap per-gap gathers.
+            # keys pair char-PAD-grams across every gap of spec.gaps: one
+            # gram hashing pass, then one gather per gap into one key array
             from ..kernel.hashing import dgram_keys_from_chargrams
 
             grams, counts = self._char_grams(DGRAM_PAD, spec.seed)
-            return dgram_keys_from_chargrams(grams, counts, spec.k, DGRAM_PAD)
+            return dgram_keys_from_chargrams(grams, counts, *spec.gaps, DGRAM_PAD)
         if spec.source == "doc_length_chars":
             vals = self.text.str.len().fillna(0).to_numpy(dtype=np.float64)
             return vals, np.ones(len(self.text), dtype=np.int64)

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import normalize_query
-from ..operators.sketch_build import SketchSpec, build_sketches, max_bin_cardinality
+from ..operators.sketch_build import SketchSpec, build_sketches
 from ..operators.verify import (
     prune_to_bins,
     verify_conjunctive,
@@ -35,9 +35,11 @@ from ..sources.corpus import hot_hosts, with_bin_id
 from ..sources.sketch_store import (
     BloomMatrix,
     read_manifest,
+    read_sketch_payloads,
     write_sketch_table,
 )
 from ..kernel.bloom import bloom_m_bits
+from .dgram import MAX_BIN_PADGRAMS, PAD, DGramIndex, build_dgram_index
 from .nfa import compile_nfa
 from .rx import trim_regex
 from .traverse import TraversalResult, collect
@@ -65,52 +67,64 @@ def corpus_alphabet(corpus: DataFrame) -> str:
     return "".join(sorted(chars))
 
 
-def alphabet_and_sizing(binned: DataFrame, k: int) -> tuple[int, str]:
-    """(max per-bin char-kgram count, corpus alphabet) in ONE aggregation
-    job — the build used to pay two separate full corpus scans for the
-    Bloom-sizing pre-pass (max_bin_cardinality) and the alphabet
-    pre-pass (corpus_alphabet); at 100 TB each pre-pass is a full pass
-    over the text column, so fusing them removes one.
+def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
+    """(max per-bin char-gram count for each of `widths`..., corpus
+    alphabet) in ONE aggregation job — the build used to pay separate full
+    corpus scans for the Bloom-sizing pre-pass (max_bin_cardinality), the
+    alphabet pre-pass (corpus_alphabet) and, at track time, the d-gram
+    sizing pre-pass; at 100 TB each pre-pass is a full pass over the text
+    column, so fusing them removes all but one.
 
-    Shape: per row, project (bin_id, kgram count, distinct chars of the
-    lowered tag-stripped text), posexplode the char array (<= |alphabet|
-    rows per doc), attribute the count to pos==0 only, then ONE
-    groupBy(bin_id) with map-side-combined partials (per-bin sum + char
-    set, both tiny) and a final fold to (max, union). The alphabet is a
-    sound closed set for dot-expansion: it covers every char the indexed
-    (extracted, normalized) text can contain — a superset only ever adds
-    candidate probes, which verify removes."""
+    Shape: per row, project (bin_id, one gram count per width, distinct
+    chars of the lowered tag-stripped text), posexplode the char array
+    (<= |alphabet| rows per doc), attribute the counts to pos==0 only, then
+    ONE groupBy(bin_id) with map-side-combined partials (per-bin sums +
+    char set, all tiny) and a final fold to (maxes, union). A width-w count
+    is max(len - w + 1, 0) per doc, the count max_bin_cardinality(...,
+    "char_kgram", w) sums. The alphabet is a sound closed set for
+    dot-expansion: it covers every char the indexed (extracted,
+    normalized) text can contain — a superset only ever adds candidate
+    probes, which verify removes."""
     html_text = (
         F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", " ")
         if "html" in binned.columns
         else F.lit(None)
     )
     text = F.coalesce(F.col("text"), html_text, F.lit(""))
-    cnt = F.greatest(F.length(text) - F.lit(k - 1), F.lit(0))
+    cnts = [
+        F.greatest(F.length(text) - F.lit(w - 1), F.lit(0)).alias(f"cnt{i}")
+        for i, w in enumerate(widths)
+    ]
     chars = F.array_distinct(F.split(F.lower(text), ""))
-    ex = binned.select(
-        "bin_id", cnt.alias("cnt"), F.posexplode(chars).alias("pos", "c")
-    )
+    ex = binned.select("bin_id", *cnts, F.posexplode(chars).alias("pos", "c"))
     row = (
         ex.groupBy("bin_id")
         .agg(
-            F.sum(F.when(F.col("pos") == 0, F.col("cnt")).otherwise(0)).alias("n"),
+            *[
+                F.sum(F.when(F.col("pos") == 0, F.col(f"cnt{i}")).otherwise(0)).alias(f"n{i}")
+                for i in range(len(widths))
+            ],
             F.collect_set("c").alias("cs"),
         )
         .agg(
-            F.max("n").alias("mx"),
+            *[F.max(f"n{i}").alias(f"mx{i}") for i in range(len(widths))],
             F.array_distinct(F.flatten(F.collect_list("cs"))).alias("alpha"),
         )
         .collect()[0]
     )
     chars_out = {c for c in (row["alpha"] or []) if c != ""}
     chars_out = {(" " if c.isspace() else c) for c in chars_out}
-    return int(row["mx"] or 0), "".join(sorted(chars_out))
+    maxes = [int(row[f"mx{i}"] or 0) for i in range(len(widths))]
+    return (*maxes, "".join(sorted(chars_out)))
 
 
 class MotifIndex:
     """Built index handle: manifest + driver-side Bloom matrix (+ the
-    optional d-gram matrices from a `track` run)."""
+    optional d-gram filter from a `track` run, plans.dgram.DGramIndex).
+
+    The index directory is driver-local: `load` reads the manifest and
+    every sketch row with one pyarrow read on the driver and runs no Spark
+    job, whatever the number of tracked gaps."""
 
     def __init__(self, bloom: BloomMatrix, manifest: dict, k: int, alphabet: str,
                  dgram=None):
@@ -176,9 +190,9 @@ class MotifIndex:
                 corpus, n_bins, bin_key=bin_key,
                 salt_hot_hosts=salted or None, n_salt=n_salt,
             )
-        # ONE fused pre-pass for Bloom sizing + the manifest alphabet
-        # (was two separate full corpus scans)
-        n_max, alphabet = alphabet_and_sizing(binned, k)
+        # ONE fused pre-pass for Bloom sizing, the manifest alphabet and
+        # the PAD-gram count that sizes a later track's d-gram filter
+        n_max, n_padgrams, alphabet = alphabet_and_sizing(binned, k, PAD)
         m_bits = bloom_m_bits(n_max, fpr)
         spec = SketchSpec(
             MOTIF_SKETCH_NAME,
@@ -196,6 +210,7 @@ class MotifIndex:
             extra={
                 "k": k, "fpr": fpr, "alphabet": alphabet,
                 "salted_hosts": salted, "n_salt": n_salt,
+                MAX_BIN_PADGRAMS: n_padgrams,
             },
         )
         spark = corpus.sparkSession
@@ -203,11 +218,13 @@ class MotifIndex:
 
     @staticmethod
     def load(spark: SparkSession, path: str) -> "MotifIndex":
-        from .dgram import DGramIndex
-
+        """Driver-side load of a built (and possibly tracked) index: one
+        manifest read and one read of `rows/`, no Spark job. `spark` is
+        unused; the signature matches the other entry points."""
         manifest = read_manifest(path)
-        bloom = BloomMatrix.load(spark, path, MOTIF_SKETCH_NAME)
-        dgram = DGramIndex.load(spark, path)
+        payloads = read_sketch_payloads(path)
+        bloom = BloomMatrix.load(payloads, MOTIF_SKETCH_NAME, manifest["n_bins"])
+        dgram = DGramIndex.load(manifest, payloads)
         return MotifIndex(bloom, manifest, manifest["k"], manifest["alphabet"],
                           dgram=dgram)
 
@@ -225,12 +242,16 @@ class MotifIndex:
 
     def track(self, corpus: DataFrame, path: str, *, min_gap: int = 1,
               max_gap: int = 21, fpr: float = 0.05, bin_key=None) -> "MotifIndex":
-        """`tetrex track` analog: add the gapped-gram sketch family to
-        this index and reload (src/dGramIndex.cpp:20-38). The corpus is
-        binned with the manifest's (possibly salted) assignment before the
-        d-gram build so both sketch families prune identically."""
-        from .dgram import build_dgram_index
+        """`tetrex track` analog: add the one gapped-gram filter
+        (`dgram_bloom`, every gap in [min_gap, max_gap]) to this index and
+        reload (src/dGramIndex.cpp:20-38). The corpus is binned with the
+        manifest's (possibly salted) assignment before the d-gram build so
+        both sketch families prune identically.
 
+        `corpus` must be the corpus the index was built from: the filter
+        is sized from the PAD-gram count the build recorded in the
+        manifest, so track runs no sizing scan. Tracking again replaces
+        the previous d-gram filter and its gap range."""
         build_dgram_index(
             self._binned(corpus, self.manifest["n_bins"], bin_key), path,
             n_bins=self.manifest["n_bins"],

@@ -6,9 +6,19 @@ TetRex serializes {k, molecule, is_hibf} ahead of the index and re-probes
 them at query time to dispatch (src/query.cpp:477-498). We persist:
   - parquet sketch rows (bin_id, name, payload, n_items), partitioned by
     `name` so a query touching one sketch kind prunes the rest;
-  - `manifest.json` holding n_bins, tokenizer version, seed and the full
-    spec list — the query planner refuses to run against a manifest whose
-    tokenizer/seed disagree with its own (silent-recall-loss guard).
+  - `manifest.json` holding the format version, n_bins, tokenizer
+    version, seed and the full spec list — the query planner refuses to
+    run against a manifest whose format or tokenizer disagree with its own
+    (silent-recall-loss guard).
+
+Index directories are driver-local: `read_manifest` opens manifest.json on
+the driver, and `read_sketch_payloads` reads every `rows/` partition there
+too, with pyarrow and no Spark job. A motif index load is therefore one
+file-system read, whatever the number of sketch names it holds.
+
+Format 2 (this version) stores a motif index's d-grams as ONE sketch name,
+`dgram_bloom`, holding every tracked gap's keys; format 1 kept one name per
+gap. Format 1 directories are refused, not read.
 """
 
 from __future__ import annotations
@@ -17,6 +27,8 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import TOKENIZER_VERSION
@@ -24,7 +36,7 @@ from ..kernel import from_bytes, unpack_payload
 from ..operators.sketch_build import SketchSpec
 
 MANIFEST_NAME = "manifest.json"
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 
 
 def write_sketch_table(
@@ -53,6 +65,12 @@ def write_sketch_table(
 def read_manifest(path: str) -> dict:
     with open(f"{path}/{MANIFEST_NAME}") as f:
         manifest = json.load(f)
+    if manifest.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            "sketch table has format_version "
+            f"{manifest.get('format_version')!r}, this library reads "
+            f"{FORMAT_VERSION!r} — rebuild required"
+        )
     if manifest.get("tokenizer_version") != TOKENIZER_VERSION:
         raise ValueError(
             "sketch table was built with tokenizer "
@@ -62,11 +80,28 @@ def read_manifest(path: str) -> dict:
     return manifest
 
 
-def read_sketch_rows(spark: SparkSession, path: str, name: str | None = None) -> DataFrame:
-    df = spark.read.parquet(f"{path}/rows")
-    if name is not None:
-        df = df.filter(df["name"] == name)  # partition-pruned scan
-    return df
+def read_sketch_rows(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.parquet(f"{path}/rows")
+
+
+def read_sketch_payloads(path: str) -> dict[str, list[tuple[int, bytes]]]:
+    """Every sketch row under `path/rows`, read on the driver in one pass
+    with pyarrow (no Spark job): name -> [(bin_id, payload)]. The `name`
+    partition directories are decoded as strings; pyarrow's default ignore
+    prefixes skip Spark's `_SUCCESS` markers and `_temporary` dirs."""
+    table = pads.dataset(
+        f"{path}/rows",
+        format="parquet",
+        partitioning=pads.partitioning(pa.schema([("name", pa.string())]), flavor="hive"),
+    ).to_table(columns=["name", "bin_id", "payload"])
+    out: dict[str, list[tuple[int, bytes]]] = {}
+    for name, bin_id, payload in zip(
+        table.column("name").to_pylist(),
+        table.column("bin_id").to_pylist(),
+        table.column("payload").to_pylist(),
+    ):
+        out.setdefault(name, []).append((bin_id, payload))
+    return out
 
 
 def spec_from_manifest(manifest: dict, name: str) -> SketchSpec:
@@ -75,6 +110,7 @@ def spec_from_manifest(manifest: dict, name: str) -> SketchSpec:
             return SketchSpec(
                 name=e["name"], kind=e["kind"], source=e["source"],
                 k=e["k"], params=e["params"], seed=e["seed"],
+                gaps=tuple(e["gaps"]) if e["gaps"] else None,
             )
     raise KeyError(f"spec {name!r} not in manifest")
 
@@ -100,23 +136,25 @@ class BloomMatrix:
         first = from_bytes(rows[0][1])
         m_bits, n_hashes = first.m_bits, first.n_hashes
         matrix = np.zeros((n_bins, m_bits // 8), dtype=np.uint8)
+        seen = np.zeros(n_bins, dtype=bool)
         for bin_id, blob in rows:
             kind, params, body = unpack_payload(bytes(blob))
             if kind != "bloom" or params["m_bits"] != m_bits:
                 raise ValueError("inconsistent bloom rows")
+            if seen[bin_id]:
+                raise ValueError(f"duplicate bloom rows for bin {bin_id}")
+            seen[bin_id] = True
             matrix[bin_id] = np.frombuffer(body, dtype=np.uint8)
         return cls(n_bins, m_bits, n_hashes, matrix)
 
     @classmethod
-    def load(cls, spark: SparkSession, path: str, name: str) -> "BloomMatrix":
-        manifest = read_manifest(path)
-        rows = [
-            (r["bin_id"], bytes(r["payload"]))
-            for r in read_sketch_rows(spark, path, name).collect()
-        ]
+    def load(cls, payloads: dict[str, list[tuple[int, bytes]]], name: str,
+             n_bins: int) -> "BloomMatrix":
+        """One sketch name out of `read_sketch_payloads(path)`."""
+        rows = payloads.get(name)
         if not rows:
-            raise ValueError(f"no sketch rows for {name!r} at {path}")
-        return cls.from_rows(rows, manifest["n_bins"])
+            raise ValueError(f"no sketch rows for {name!r}")
+        return cls.from_rows(rows, n_bins)
 
     def probe(self, keys: np.ndarray) -> np.ndarray:
         """(n_keys,) uint64 -> (n_keys, n_bins) bool membership matrix."""
