@@ -246,6 +246,97 @@ def test_cli_dedup_resumable_keep_list(spark, tmp_path, capsys):
     assert pairs1 == pairs2
 
 
+def _rep_level_fixture(spark, path):
+    """String ids (urls) over: a 4-copy exact-dup cluster at the head of
+    a near-dup chain of three texts whose ends are not near-dups of each
+    other, for each method (the SimHash edits were picked so that the
+    fingerprints are 2, 2 and 4 bits apart), a duplicated text shorter
+    than k=3 tokens, a duplicated text near nothing else, and unrelated
+    singletons."""
+    long_ = [f"word{i}" for i in range(120)]
+    sh_chain = [list(long_), list(long_), list(long_)]
+    sh_chain[1][2] = sh_chain[2][2] = "edit2"
+    sh_chain[2][6] = "edit6"
+    short = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
+             "kilo lima mike november oscar papa quebec romeo sierra tango "
+             "uniform victor whiskey xray yankee zulu").split()
+    mh_chain = [list(short), list(short), list(short)]
+    mh_chain[1][5] = mh_chain[2][5] = "changed"
+    mh_chain[2][20] = "altered"
+    texts = [" ".join(sh_chain[0])] * 4 + [" ".join(c) for c in sh_chain[1:]]
+    texts += [" ".join(c) for c in mh_chain] + [" ".join(mh_chain[2])]
+    texts += ["short doc", "short doc"]
+    texts += [f"unrelated page {i} about topic {i * 7} with words {i * 13} "
+              f"and more words {i * 31} here" for i in range(6)]
+    texts.append(texts[-1])
+    rows = [(f"http://h{i % 3}.example/p{i}", t) for i, t in enumerate(texts)]
+    spark.createDataFrame(rows, "url string, text string").write.parquet(path)
+    return rows
+
+
+@pytest.mark.parametrize("method", ["minhash", "simhash"])
+def test_cli_dedup_rep_level_keep_list_equals_member_pairs(spark, tmp_path, method):
+    """The CLI's keep-list comes from the rep-level graph; it must equal
+    connected components over the member-level pairs it writes to
+    pairs/, for both methods."""
+    from tetrex_spark.cli import main
+    from tetrex_spark.operators.clusters import dedup_keep_list
+
+    corpus_path = str(tmp_path / "corpus")
+    rows = _rep_level_fixture(spark, corpus_path)
+    out_dir = str(tmp_path / "out")
+    assert main(["dedup", "--corpus", corpus_path, "--output", out_dir,
+                 "--method", method, "--threshold", "0.7", "--chunks", "2"]) == 0
+    docs = spark.read.parquet(corpus_path).withColumn(
+        "_did", F.xxhash64("url")
+    )
+    pairs = spark.read.parquet(f"{out_dir}/pairs")
+    url_of = {r["_did"]: r["url"] for r in docs.collect()}
+    want = {
+        (url_of[r["id"]], r["component"], r["keep"])
+        for r in dedup_keep_list(docs, pairs, id_col="_did").collect()
+    }
+    got = {tuple(r) for r in spark.read.parquet(f"{out_dir}/keep").collect()}
+    assert got == want and len(got) == len(rows)
+    # the fixture exercises what it is meant to: the 4 copies share one
+    # component, and a component holds two docs that are not paired (a
+    # chain across exact-dup groups)
+    paired = {
+        frozenset((url_of[r["id_a"]], url_of[r["id_b"]]))
+        for r in pairs.collect()
+    }
+    comps: dict = {}
+    for url, comp, _ in got:
+        comps.setdefault(comp, set()).add(url)
+    assert any(len(c) >= 5 for c in comps.values())
+    assert any(
+        frozenset((a, b)) not in paired
+        for c in comps.values() for a in c for b in c if a < b
+    )
+
+
+def test_cli_track_twice_standalone_dgram_index(spark, tmp_path, capsys):
+    """Tracking into a directory that holds only a standalone d-gram
+    index (no motif index) works again: the second run rebuilds the
+    d-gram filter with its own gaps instead of loading a motif index
+    that is not there."""
+    from tetrex_spark.cli import main
+    from tetrex_spark.plans.dgram import DGramIndex
+    from tetrex_spark.sources.sketch_store import read_manifest, read_sketch_payloads
+
+    corpus_path = str(tmp_path / "corpus")
+    webtext_small(spark).write.parquet(corpus_path)
+    path = str(tmp_path / "dg")
+    assert main(["track", "--corpus", corpus_path, "--output", path,
+                 "--bins", "8", "--min-gap", "2", "--max-gap", "4"]) == 0
+    assert main(["track", "--corpus", corpus_path, "--output", path,
+                 "--min-gap", "1", "--max-gap", "6"]) == 0
+    assert "Tracked d-grams (gap 1..6) across 8 bins." in capsys.readouterr().out
+    dgram = DGramIndex.load(read_manifest(path), read_sketch_payloads(path))
+    assert (dgram.min_gap, dgram.max_gap) == (1, 6)
+    assert dgram.bloom.n_bins == 8
+
+
 def test_cli_regex_file_duplicate_qids_not_dropped(spark, tmp_path, capsys):
     """Repeated query ids in a TSV file must not silently drop earlier
     lines (they are disambiguated, every line queried)."""

@@ -82,14 +82,17 @@ def test_minhash_keep_list_job_budget(spark, corpus):
         corpus.select("doc_id"), minhash_lsh_edges(corpus, threshold=0.8)
     ).collect())
     assert len(rows) == 200
-    assert n_jobs <= 26, f"minhash keep-list ran {n_jobs} jobs"
+    # 22 jobs when written (the cap-stats finisher is one job), + 3 slack
+    assert n_jobs <= 25, f"minhash keep-list ran {n_jobs} jobs"
 
 
 def test_checkpointed_dedup_job_budget(spark, corpus, tmp_path):
-    """The CLI dedup pipeline end to end in one chunk: the sigset stage,
+    """The checkpointed MinHash pipeline in one chunk: the sigset stage,
     the pairs stage and the member expansion counted. The expansion
     reads eligibility and rep groups from the stored sig table, so it
-    adds no rep-group aggregate or rep-id -> group joins."""
+    adds no rep-group aggregate or rep-id -> group joins; stage row
+    counts and read schemas come from the parquet footers, with no
+    re-read or schema-inference job."""
     from tetrex_spark.lineage import CheckpointedDedup
 
     corpus.count()
@@ -97,8 +100,29 @@ def test_checkpointed_dedup_job_budget(spark, corpus, tmp_path):
         str(tmp_path / "ck"), threshold=0.8, n_chunks=1
     ).run(corpus).count())
     assert n > 0
-    # 33 jobs when written, plus the slack the budgets above allow
-    assert n_jobs <= 36, f"checkpointed dedup ran {n_jobs} jobs"
+    # 23 jobs when written, plus the slack the budgets above allow
+    assert n_jobs <= 26, f"checkpointed dedup ran {n_jobs} jobs"
+
+
+def test_cli_dedup_job_budget(spark, corpus, tmp_path):
+    """`cli dedup` end to end in one chunk: the checkpointed stages, the
+    pairs/ write and the keep/ write. The keep-list runs components over
+    the rep-level graph, and nothing written is re-read to be counted."""
+    import contextlib
+    import io
+
+    from tetrex_spark import cli
+
+    path = str(tmp_path / "corpus")
+    corpus.write.parquet(path)
+    with contextlib.redirect_stdout(io.StringIO()) as out:
+        rc, n_jobs = _jobs(spark, "cli-dedup", lambda: cli.main([
+            "dedup", "--corpus", path, "--output", str(tmp_path / "out"),
+            "--id-col", "doc_id", "--chunks", "1",
+        ]))
+    assert rc == 0 and "Deduplicated 200 documents" in out.getvalue()
+    # 29 jobs when written, + 3 slack
+    assert n_jobs <= 32, f"cli dedup ran {n_jobs} jobs"
 
 
 def test_motif_index_job_budget(spark, tmp_path):

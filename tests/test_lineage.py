@@ -102,6 +102,18 @@ def _pairs_set(df):
     return {(r["id_a"], r["id_b"], r["jaccard"]) for r in df.collect()}
 
 
+def _assert_footer_counts(spark, cd, pairs_name):
+    """Every committed stage's lineage `rows` (read from the written
+    parquet footers) equals a Spark count of the stage's output."""
+    records = [r for r in cd.lineage() if r["status"] == "committed"]
+    assert records
+    for r in records:
+        prefix, _, chunk = r["stage"].partition(":")
+        path = (f"{cd._apath(prefix)}/chunk={chunk}" if chunk
+                else cd._apath(pairs_name))
+        assert r["rows"] == spark.read.parquet(path).count(), r
+
+
 def test_checkpointed_dedup_kill_after_banding_resumes_identical(
     spark, dedup_docs, tmp_path
 ):
@@ -129,6 +141,7 @@ def test_checkpointed_dedup_kill_after_banding_resumes_identical(
     # committed stages were never re-executed: exactly one commit each
     stages = [r["stage"] for r in cd3.lineage() if r["status"] == "committed"]
     assert len(stages) == len(set(stages)) == 9  # 8 sigset chunks + pairs
+    _assert_footer_counts(spark, cd3, "rep_pairs")
 
 
 def test_checkpointed_dedup_rep_level_output(spark, dedup_docs, tmp_path):
@@ -228,6 +241,7 @@ def test_checkpointed_simhash_kill_resume_identical(spark, dedup_docs, tmp_path)
     assert got == want
     stages = [r["stage"] for r in cd3.lineage() if r["status"] == "committed"]
     assert len(stages) == len(set(stages)) == 7  # 6 fp chunks + pairs
+    _assert_footer_counts(spark, cd3, "rep_pairs")
     # param mismatch refuses loudly
     with pytest.raises(ValueError, match="stale"):
         CheckpointedSimhashDedup(d, n_blocks=6, n_chunks=6)
@@ -267,6 +281,7 @@ def test_checkpointed_cosine_kill_resume_identical(spark, tmp_path):
     assert got == want
     stages = [r["stage"] for r in cd3.lineage() if r["status"] == "committed"]
     assert len(stages) == len(set(stages)) == 5  # 4 bucket chunks + pairs
+    _assert_footer_counts(spark, cd3, "pairs")
     with pytest.raises(ValueError, match="stale"):
         CheckpointedCosineDedup(d, dim=16, threshold=0.95, n_chunks=4)
     # a threshold the hyperplane planner cannot serve surfaces ITS

@@ -123,34 +123,40 @@ def cmd_inspect(args) -> int:
 
 def cmd_track(args) -> int:
     """`tetrex track` analog: build the d-gram (gapped-gram) sketch
-    (src/dGramIndex.cpp:20-38) alongside an existing index dir."""
+    (src/dGramIndex.cpp:20-38) alongside an existing index dir, or as a
+    standalone d-gram index in a dir without a motif index."""
+    import os
+
     from .plans.dgram import build_dgram_index
+    from .plans.planner import MOTIF_SKETCH_NAME, MotifIndex
+    from .sources.sketch_store import MANIFEST_NAME, read_manifest
 
     spark = _spark("track")
     corpus = read_corpus(spark, args.corpus)
-    # default --bins to the existing index manifest's n_bins: a different
+    manifest = (
+        read_manifest(args.output)
+        if os.path.exists(f"{args.output}/{MANIFEST_NAME}") else {}
+    )
+    # default --bins to the existing manifest's n_bins: a different
     # modulus would bucket d-grams into the wrong bin vectors (silent
     # recall loss); build_dgram_index raises on an explicit mismatch
-    import os
-
-    n_bins = args.bins
-    if os.path.exists(f"{args.output}/manifest.json"):
-        # an existing motif index: route through MotifIndex.track so the
-        # manifest's (possibly hot-host-salted) bin assignment applies —
-        # binning the d-grams with a different assignment would prune
-        # wrong bins at gap-query time (silent recall loss)
-        from .plans.planner import MotifIndex
-
-        idx = MotifIndex.load(spark, args.output)
-        n_bins = idx.manifest["n_bins"]
-        idx.track(corpus, args.output,
-                  min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr)
-    else:
-        build_dgram_index(
-            corpus, args.output, n_bins=n_bins or 64,
+    n_bins = args.bins or manifest.get("n_bins") or 64
+    if any(s["name"] == MOTIF_SKETCH_NAME for s in manifest.get("specs", [])):
+        # a motif index: route through MotifIndex.track so the manifest's
+        # (possibly hot-host-salted) bin assignment applies — binning the
+        # d-grams with a different assignment would prune wrong bins at
+        # gap-query time (silent recall loss)
+        MotifIndex.load(spark, args.output).track(
+            corpus, args.output,
             min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr,
         )
-        n_bins = n_bins or 64
+        n_bins = manifest["n_bins"]
+    else:
+        # no index, or a standalone d-gram index from an earlier track
+        build_dgram_index(
+            corpus, args.output, n_bins=n_bins,
+            min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr,
+        )
     print(f"Tracked d-grams (gap {args.min_gap}..{args.max_gap}) "
           f"across {n_bins} bins.")
     return 0
@@ -186,29 +192,43 @@ def cmd_analyze(args) -> int:
     return 0
 
 
-def _keep_totals(spark, path: str) -> tuple[int, int]:
-    """(rows, kept rows) of a written keep-list, in one aggregate over
-    the parquet — the keep frame itself would re-run its join per count."""
+def _write_keep_list(keep, path: str) -> tuple[int, int]:
+    """Write a keep-list to `path` and return its (rows, kept rows),
+    observed on that write — no second pass over the written parquet."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    row = spark.read.parquet(path).agg(
+    obs = Observation("keep_totals")
+    keep.observe(
+        obs,
         F.count(F.lit(1)).alias("total"),
         F.coalesce(F.sum("keep"), F.lit(0)).alias("kept"),
-    ).collect()[0]
-    return row.total, row.kept
+    ).write.mode("overwrite").parquet(path)
+    return obs.get["total"], obs.get["kept"]
 
 
 def cmd_dedup(args) -> int:
     """Resumable near-dup dedup over a corpus: MinHash-LSH (default) or
     SimHash pairs through the matching checkpointed pipeline (a killed
     run resumes at the first uncommitted stage; re-running a finished one
-    only re-reads), then the connected-components keep-list. Writes
-    pairs/ and keep/ parquet under --output; stage lineage under
-    --checkpoint."""
-    from .lineage import CheckpointedDedup, CheckpointedSimhashDedup
-    from .operators.clusters import dedup_keep_list
+    only re-reads). Writes pairs/ (the member-level pair list) and keep/
+    parquet under --output; stage lineage under --checkpoint.
+
+    The keep-list comes from the rep-level graph, not from pairs/:
+    connected components run over the stored representative pairs, and
+    each document takes its group representative's component
+    (clusters.rep_keep_list) — the same rows as components over the
+    member pairs, without re-reading a list that is quadratic in
+    exact-dup cluster size. Row counts (lineage stages, pairs/) are read
+    from the written parquet footers, and the keep totals are observed
+    on the keep/ write, so no output is re-read to be counted."""
+    from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import functions as F
+    from pyspark.util import inheritable_thread_target
+
+    from .lineage import CheckpointedDedup, CheckpointedSimhashDedup, parquet_rows
+    from .operators.clusters import rep_keep_list
 
     spark = _spark("dedup")
     corpus = read_corpus(spark, args.corpus)
@@ -225,19 +245,32 @@ def cmd_dedup(args) -> int:
         cd = CheckpointedDedup(
             ckpt, k=args.k, threshold=args.threshold, n_chunks=args.chunks,
         )
-    pairs = cd.run(keyed, text_col=args.text_col, id_col="_did")
-    pairs.write.mode("overwrite").parquet(f"{args.output}/pairs")
-    stored = spark.read.parquet(f"{args.output}/pairs")
-    ids = keyed.select(F.col("_did"), F.col(args.id_col))
-    keep = (
-        dedup_keep_list(ids.select("_did"), stored, id_col="_did")
-        .join(ids.withColumnRenamed("_did", "id"), "id")
-        .select(args.id_col, "component", "keep")
-    )
-    keep.write.mode("overwrite").parquet(f"{args.output}/keep")
-    total, kept = _keep_totals(spark, f"{args.output}/keep")
+    run = cd.run_rep_level(keyed, text_col=args.text_col, id_col="_did")
+    ids = keyed.select(F.col("_did").alias("id"), F.col(args.id_col))
+
+    # pairs/ and keep/ (components included) are independent readers of
+    # the stored rep level and the members checkpoint, so they run as
+    # concurrent jobs whose tasks back-fill each other's idle cores. The
+    # threads inherit the caller's job group and tags.
+    @inheritable_thread_target(spark)
+    def write_pairs() -> None:
+        run.pairs.write.mode("overwrite").parquet(f"{args.output}/pairs")
+
+    @inheritable_thread_target(spark)
+    def write_keep() -> tuple[int, int]:
+        keep = (
+            rep_keep_list(run.members, run.rep_pairs, run.reps)
+            .join(ids, "id")
+            .select(args.id_col, "component", "keep")
+        )
+        return _write_keep_list(keep, f"{args.output}/keep")
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        pairs_done, keep_done = pool.submit(write_pairs), pool.submit(write_keep)
+        pairs_done.result()
+        total, kept = keep_done.result()
     print(f"Deduplicated {total} documents: kept {kept}, "
-          f"{stored.count()} near-dup pairs.")
+          f"{parquet_rows(f'{args.output}/pairs')} near-dup pairs.")
     return 0
 
 
@@ -246,7 +279,7 @@ def cmd_embdedup(args) -> int:
     bucket chunks + packed-BLAS exact-cosine verify through
     CheckpointedCosineDedup, then the connected-components keep-list.
     Writes pairs/ and keep/ parquet under --output."""
-    from .lineage import CheckpointedCosineDedup
+    from .lineage import CheckpointedCosineDedup, parquet_rows, read_stored
     from .operators.clusters import dedup_keep_list
 
     spark = _spark("embdedup")
@@ -276,14 +309,13 @@ def cmd_embdedup(args) -> int:
     )
     pairs = cd.run(df, vec_col=args.vec_col, id_col=args.id_col)
     pairs.write.mode("overwrite").parquet(f"{args.output}/pairs")
-    stored = spark.read.parquet(f"{args.output}/pairs")
+    stored = read_stored(spark, f"{args.output}/pairs")
     keep = dedup_keep_list(
         df.select(args.id_col), stored, id_col=args.id_col
     ).withColumnRenamed("id", args.id_col)
-    keep.write.mode("overwrite").parquet(f"{args.output}/keep")
-    total, kept = _keep_totals(spark, f"{args.output}/keep")
+    total, kept = _write_keep_list(keep, f"{args.output}/keep")
     print(f"Deduplicated {total} vectors: kept {kept}, "
-          f"{stored.count()} near-dup pairs.")
+          f"{parquet_rows(f'{args.output}/pairs')} near-dup pairs.")
     return 0
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +31,32 @@ from pyspark.sql import functions as F
 from .operators.sketch_build import SKETCH_ROW_SCHEMA, SketchSpec, _merger, build_sketches
 
 LINEAGE_FILE = "lineage.jsonl"
+
+
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet directory Spark wrote, summed from the file
+    footers on the driver (pyarrow) — no Spark job. Spark's side files
+    (_SUCCESS, .crc) are skipped by pyarrow's default ignore prefixes.
+    The path must be readable from the driver, as every checkpoint dir
+    is: the lineage log and params files are driver-side files."""
+    import pyarrow.dataset as ds
+
+    return ds.dataset(path, format="parquet").count_rows()
+
+
+def read_stored(spark: SparkSession, *paths: str) -> DataFrame:
+    """spark.read.parquet of stage outputs Spark wrote, with the schema
+    Spark recorded in the first path's footer (read on the driver, like
+    parquet_rows) instead of a schema-inference job. Every stage output
+    carries that footer, an empty one included."""
+    import pyarrow.dataset as ds
+    from pyspark.sql.types import StructType
+
+    meta = ds.dataset(paths[0], format="parquet").schema.metadata
+    schema = StructType.fromJson(
+        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
+    )
+    return spark.read.schema(schema).parquet(*paths)
 
 
 class CheckpointedBuild:
@@ -159,7 +186,14 @@ class _StagedCheckpoint:
     build_id — committed stages are only valid under the parameters that
     produced them, so resuming with a changed configuration against old
     artifacts refuses loudly instead of silently returning stale or
-    incomplete results."""
+    incomplete results.
+
+    Footer-count contract: a committed stage's lineage `rows` is summed
+    from the written parquet footers on the driver (parquet_rows), and
+    stored stages are read back with the schema recorded in those footers
+    (read_stored). Neither runs a Spark job, so the checkpoint dir must
+    be readable from the driver — as the lineage log and params files,
+    written with open(), already require."""
 
     # Artifact-layout version, recorded in every params_<build_id>.json:
     # 3 = build_id-namespaced artifact paths (sigsets_<id>/ etc.), MinHash
@@ -244,7 +278,7 @@ class _StagedCheckpoint:
         return [f"{self._apath(name)}/chunk={i}" for i in range(self.n_chunks)]
 
     def _run_chunk_stages(
-        self, spark: SparkSession, prefix: str, name: str, make_chunk,
+        self, prefix: str, name: str, make_chunk,
         done: set[str], stop_after: str | None,
     ) -> bool:
         """Write each uncommitted chunk stage (`<prefix>:<i>` →
@@ -258,14 +292,14 @@ class _StagedCheckpoint:
             t0 = time.time()
             path = f"{self._apath(name)}/chunk={chunk}"
             make_chunk(chunk).write.mode("overwrite").parquet(path)
-            n = spark.read.parquet(path).count()
-            self._commit(stage, rows=n, duration_sec=round(time.time() - t0, 3))
+            self._commit(stage, rows=parquet_rows(path),
+                         duration_sec=round(time.time() - t0, 3))
             if stop_after == stage:
                 return True
         return False
 
     def _run_write_stage(
-        self, spark: SparkSession, stage: str, name: str, make_df,
+        self, stage: str, name: str, make_df,
         done: set[str], stop_after: str | None,
     ) -> bool:
         """Write a single whole-output stage (e.g. verified pairs) if not
@@ -273,8 +307,8 @@ class _StagedCheckpoint:
         if stage not in done:
             t0 = time.time()
             make_df().write.mode("overwrite").parquet(self._apath(name))
-            n = spark.read.parquet(self._apath(name)).count()
-            self._commit(stage, rows=n, duration_sec=round(time.time() - t0, 3))
+            self._commit(stage, rows=parquet_rows(self._apath(name)),
+                         duration_sec=round(time.time() - t0, 3))
             if stop_after == stage:
                 return True
         return False
@@ -287,7 +321,69 @@ class _StagedCheckpoint:
         )
 
 
-class CheckpointedDedup(_StagedCheckpoint):
+class RepLevelRun(NamedTuple):
+    """A finished exact-dup-collapsing near-dup run
+    (_RepLevelDedup.run_rep_level): the stored representative-level
+    result plus the member view that maps documents onto it.
+
+      pairs      the LAZY member-level expansion (id_a, id_b, <value>);
+      rep_pairs  the stored verified rep pairs (id_a, id_b, <value>,
+                 grp_a, grp_b);
+      members    (grp, id) of every document;
+      reps       (grp, rid) of every eligible group — one whose members
+                 the expansion pairs with each other — and its minimum
+                 id, the id its rep pairs carry.
+
+    clusters.rep_keep_list(members, rep_pairs, reps) is the keep-list of
+    `pairs` without materializing the expansion."""
+
+    pairs: DataFrame
+    rep_pairs: DataFrame
+    members: DataFrame
+    reps: DataFrame
+
+
+class _RepLevelDedup(_StagedCheckpoint):
+    """The exact-dup-collapsing pipelines (MinHash, SimHash): subclasses
+    implement run_rep_level; run() is the pair-list view of it."""
+
+    VALUE_COL: str
+
+    def run_rep_level(
+        self, df: DataFrame, *, text_col: str = "text",
+        id_col: str = "doc_id", resume: bool = True,
+        stop_after: str | None = None,
+    ) -> RepLevelRun | None:
+        """Build (or resume) the stages; the finished run's RepLevelRun,
+        or None when `stop_after` simulated a kill."""
+        raise NotImplementedError
+
+    def run(
+        self,
+        df: DataFrame,
+        *,
+        text_col: str = "text",
+        id_col: str = "doc_id",
+        resume: bool = True,
+        stop_after: str | None = None,
+        expand_exact_dups: bool = True,
+    ) -> DataFrame | None:
+        """Build (or resume) the pipeline; returns the member-level pair
+        DataFrame (id_a, id_b, <value>) — rep-level with
+        expand_exact_dups=False — or None when `stop_after` simulated a
+        kill."""
+        out = self.run_rep_level(
+            df, text_col=text_col, id_col=id_col, resume=resume,
+            stop_after=stop_after,
+        )
+        if out is None:
+            return None
+        if not expand_exact_dups:
+            return out.rep_pairs.select("id_a", "id_b", self.VALUE_COL)
+        return out.pairs
+
+
+class CheckpointedDedup(_RepLevelDedup):
     """Resumable MinHash-LSH near-dup pipeline (the dedup counterpart of
     CheckpointedBuild). It builds the same rep-level tables as the
     in-session minhash_lsh_pairs — dup_groups, then
@@ -308,12 +404,20 @@ class CheckpointedDedup(_StagedCheckpoint):
                    `<dir>/rep_pairs_<build_id>/`.
 
     A killed job resumes at the first uncommitted stage; the expanded
-    member-level pair list (and any clustering on top — the CC rounds
-    are a deterministic function of the stored pairs) is recomputed
-    lazily from (docs, stored rep_pairs, stored sigsets), so a resumed
-    run is byte-identical to a single-shot one — tested by killing after
-    the banding/sigset stage. `stop_after` ("sigsets:<i>" | "pairs")
-    simulates the kill in tests."""
+    member-level pair list is recomputed lazily from (docs, stored
+    rep_pairs, stored sigsets), so a resumed run is byte-identical to a
+    single-shot one — tested by killing after the banding/sigset stage.
+    `stop_after` ("sigsets:<i>" | "pairs") simulates the kill in tests.
+
+    Clustering on top reads the rep level, not the expansion
+    (clusters.rep_keep_list over the RepLevelRun): connected components run over the stored
+    rep pairs, and each document takes the component of its group's
+    sigset row (grp -> id, the group's minimum id). A document whose
+    group has no sigset row (fewer than k tokens) is its own component.
+    The keep-list equals the member-pair one and never grows with the
+    square of an exact-dup cluster."""
+
+    VALUE_COL = "jaccard"
 
     def __init__(
         self,
@@ -343,20 +447,11 @@ class CheckpointedDedup(_StagedCheckpoint):
 
     # -- stages -----------------------------------------------------------
 
-    def run(
-        self,
-        df: DataFrame,
-        *,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        resume: bool = True,
+    def run_rep_level(
+        self, df: DataFrame, *, text_col: str = "text",
+        id_col: str = "doc_id", resume: bool = True,
         stop_after: str | None = None,
-        expand_exact_dups: bool = True,
-    ) -> DataFrame | None:
-        """Build (or resume) the pipeline; returns the member-level pair
-        DataFrame (id_a, id_b, jaccard) — rep-level with
-        expand_exact_dups=False — or None when `stop_after` simulated a
-        kill."""
+    ) -> RepLevelRun | None:
         from .operators.dedup import (
             dup_groups,
             expand_rep_pairs,
@@ -368,7 +463,7 @@ class CheckpointedDedup(_StagedCheckpoint):
         docs, reps = dup_groups(df, text_col, id_col)
         done = self.committed() if resume else set()
         if self._run_chunk_stages(
-            spark, "sigsets", "sigsets",
+            "sigsets", "sigsets",
             lambda chunk: minhash_sigs_and_sets(
                 self._chunk_filter(reps, "id", chunk),
                 self.k, self.num_perm, "txt", "id",
@@ -377,7 +472,7 @@ class CheckpointedDedup(_StagedCheckpoint):
             done, stop_after,
         ):
             return None
-        ss = spark.read.parquet(*self._chunk_paths("sigsets"))
+        ss = read_stored(spark, *self._chunk_paths("sigsets"))
         handles: list = []
 
         def make_pairs():
@@ -388,24 +483,26 @@ class CheckpointedDedup(_StagedCheckpoint):
             )
 
         killed = self._run_write_stage(
-            spark, "pairs", "rep_pairs", make_pairs,
+            "pairs", "rep_pairs", make_pairs,
             self.committed() if resume else set(), stop_after,
         )
         for fin in handles:
             fin()
         if killed:
             return None
-        rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
-        if not expand_exact_dups:
-            return rep_pairs.select("id_a", "id_b", "jaccard")
-        # the (grp, id) membership frame is checkpointed once (~40 B/doc)
-        # so the expansion's branches read a cache instead of re-scanning
-        # the raw text per branch
-        members = docs.select("grp", "id").localCheckpoint(eager=True)
-        return expand_rep_pairs(members, rep_pairs, ss)
+        rep_pairs = read_stored(spark, self._apath("rep_pairs"))
+        # the (grp, id) membership frame is checkpointed once (~40 B/doc),
+        # lazily: the first action that reads it materializes it, and the
+        # expansion's branches and the keep-list then read the cache
+        # instead of re-scanning the raw text
+        members = docs.select("grp", "id").localCheckpoint(eager=False)
+        return RepLevelRun(
+            expand_rep_pairs(members, rep_pairs, ss), rep_pairs, members,
+            ss.select("grp", F.col("id").alias("rid")),
+        )
 
 
-class CheckpointedSimhashDedup(_StagedCheckpoint):
+class CheckpointedSimhashDedup(_RepLevelDedup):
     """Resumable SimHash near-dup pipeline — same stage model as
     CheckpointedDedup, with the 8-byte/doc fingerprint table as the
     natural chunk unit (computing fingerprints is the expensive text
@@ -423,7 +520,11 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
     The member-level expansion is recomputed lazily from (stored fps,
     stored rep_pairs) — a resumed run is byte-identical to a single-shot
     one. n_blocks is pinned (no adaptive width here: the blocking plan
-    is part of the parameter fingerprint a resume must reproduce)."""
+    is part of the parameter fingerprint a resume must reproduce). The
+    keep-list reads the rep level as CheckpointedDedup's does; every
+    fingerprint group is eligible, its rep being its minimum id."""
+
+    VALUE_COL = "hamming"
 
     def __init__(
         self,
@@ -454,16 +555,11 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
             subdirs=(f"fps_{build_id}",),
         )
 
-    def run(
-        self,
-        df: DataFrame,
-        *,
-        text_col: str = "text",
-        id_col: str = "doc_id",
-        resume: bool = True,
+    def run_rep_level(
+        self, df: DataFrame, *, text_col: str = "text",
+        id_col: str = "doc_id", resume: bool = True,
         stop_after: str | None = None,
-        expand_exact_dups: bool = True,
-    ) -> DataFrame | None:
+    ) -> RepLevelRun | None:
         from .operators.dedup import (
             _simhash_rep_level,
             expand_simhash_rep_pairs,
@@ -473,14 +569,14 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
         spark = df.sparkSession
         done = self.committed() if resume else set()
         if self._run_chunk_stages(
-            spark, "fps", "fps",
+            "fps", "fps",
             lambda chunk: simhash(
                 self._chunk_filter(df, id_col, chunk), text_col, id_col
             ),
             done, stop_after,
         ):
             return None
-        sh = spark.read.parquet(*self._chunk_paths("fps"))
+        sh = read_stored(spark, *self._chunk_paths("fps"))
 
         def make_pairs():
             # stored pairs keep (grp_a, grp_b) for the expansion below
@@ -490,16 +586,18 @@ class CheckpointedSimhashDedup(_StagedCheckpoint):
             )[1]
 
         killed = self._run_write_stage(
-            spark, "pairs", "rep_pairs", make_pairs,
+            "pairs", "rep_pairs", make_pairs,
             self.committed() if resume else set(), stop_after,
         )
         sh.unpersist()
         if killed:
             return None
-        rep_pairs = spark.read.parquet(self._apath("rep_pairs"))
-        if not expand_exact_dups:
-            return rep_pairs.select("id_a", "id_b", "hamming")
-        return expand_simhash_rep_pairs(sh, rep_pairs)
+        rep_pairs = read_stored(spark, self._apath("rep_pairs"))
+        members = sh.select(F.col("simhash").alias("grp"), "id")
+        return RepLevelRun(
+            expand_simhash_rep_pairs(sh, rep_pairs), rep_pairs, members,
+            members.groupBy("grp").agg(F.min("id").alias("rid")),
+        )
 
 
 class CheckpointedCosineDedup(_StagedCheckpoint):
@@ -573,7 +671,7 @@ class CheckpointedCosineDedup(_StagedCheckpoint):
         spark = df.sparkSession
         done = self.committed() if resume else set()
         if self._run_chunk_stages(
-            spark, "buckets", "buckets",
+            "buckets", "buckets",
             lambda chunk: lsh_buckets(
                 self._chunk_filter(df, id_col, chunk),
                 dim=self.dim, n_planes=self.n_planes, n_bands=self.n_bands,
@@ -585,7 +683,7 @@ class CheckpointedCosineDedup(_StagedCheckpoint):
         handles: list = []
 
         def make_pairs():
-            buckets = spark.read.parquet(*self._chunk_paths("buckets"))
+            buckets = read_stored(spark, *self._chunk_paths("buckets"))
             cand = capped_candidate_pairs(
                 buckets, self.max_bucket, release=handles
             )
@@ -595,11 +693,11 @@ class CheckpointedCosineDedup(_StagedCheckpoint):
             )
 
         killed = self._run_write_stage(
-            spark, "pairs", "pairs", make_pairs,
+            "pairs", "pairs", make_pairs,
             self.committed() if resume else set(), stop_after,
         )
         for fin in handles:
             fin()
         if killed:
             return None
-        return spark.read.parquet(self._apath("pairs"))
+        return read_stored(spark, self._apath("pairs"))

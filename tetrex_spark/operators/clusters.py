@@ -238,3 +238,36 @@ def dedup_keep_list(
             "keep", (F.col("component") == F.col("id")).cast("int")
         )
     )
+
+
+def rep_keep_list(
+    members: DataFrame, rep_pairs: DataFrame, reps: DataFrame
+) -> DataFrame:
+    """(id, component, keep) for every document of `members`, equal to
+    dedup_keep_list over the member-level pairs that an exact-dup
+    expansion of `rep_pairs` would emit — without that (quadratic) list.
+
+    members:   (grp, id) — every document and its exact-dup group key;
+    rep_pairs: verified representative pairs (id_a, id_b, ...);
+    reps:      (grp, rid) — one row per group whose members are all
+               paired with each other (an eligible group), rid being the
+               group's minimum id.
+
+    Components run over the rep pairs only; each document then takes the
+    component of its group's representative. The rows match because a
+    rep id is its group's minimum id (so the component minimum is the
+    same), an eligible group's members are all intra-paired, and a
+    document of an ineligible group (no `reps` row) is paired with
+    nothing, so it is its own component."""
+    comp = connected_components(rep_pairs, "id_a", "id_b").select(
+        F.col("id").alias("rid"), F.col("component").alias("rc")
+    )
+    return (
+        members.select("grp", "id")
+        .join(reps.select("grp", "rid"), "grp", "left")
+        .join(comp, "rid", "left")
+        .select("id", F.coalesce("rc", "rid", "id").alias("component"))
+        .withColumn(
+            "keep", (F.col("component") == F.col("id")).cast("int")
+        )
+    )

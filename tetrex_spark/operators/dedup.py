@@ -266,9 +266,12 @@ def minhash_sigs_and_sets(
     schema = T.StructType(
         list(_SIGSET_SCHEMA) + [df.schema[c] for c in passthrough]
     )
-    bhs = F.array(
-        *[F.xxhash64(F.slice("sig", b * r + 1, r)) for b in range(bands)]
-    )
+    # one SQL expression, parsed once on the JVM side: the same tree
+    # built column by column costs two py4j round trips per band
+    # (~0.1 s per call at 32 bands)
+    bhs = F.expr("array(" + ", ".join(
+        f"xxhash64(slice(sig, {b * r + 1}, {r}))" for b in range(bands)
+    ) + ")")
     return (
         _spread(df.select(id_col, text_col, *passthrough))
         .mapInPandas(fn, schema)
@@ -376,7 +379,9 @@ def capped_candidate_pairs(
 
         def _log_and_release(_over=over, _cap=max_bucket, _log=log_drops):
             if _log:
-                stats = _over.agg(
+                # the over-cap list is small; read through one partition,
+                # the aggregate needs no exchange and runs as one job
+                stats = _over.coalesce(1).agg(
                     F.count(F.lit(1)).alias("n_over"),
                     F.sum("bc").alias("rows_over"),
                     F.max("bc").alias("max_bc"),

@@ -385,7 +385,8 @@ def build_neardup_index(
 
     n_dropped = 0
     if over is not None:
-        n_dropped = int(over.count())
+        # one partition: the count needs no exchange (one job, not two)
+        n_dropped = int(over.coalesce(1).count())
         over.unpersist()
     params = {
         "_layout": LAYOUT_VERSION,
