@@ -10,10 +10,9 @@ north-rule metric), "rows" (result sizes, as a drift canary),
 FOREIGN-CPU GATING (round-4 verdict item 1): this host shows episodic
 foreign load bursts that inflated BENCH_r04 ~15-25% across
 code-identical entries, making round-over-round deltas unreadable. Every
-timed entry is therefore measured like the scaling pairs
-(scripts/pair_hunter.py): foreign CPU during the attempt = non-idle
-jiffies from /proc/stat minus this process tree's own CPU (rusage +
-live-descendant /proc walk — the py4j JVM is invisible to
+timed entry is therefore gated on foreign load: foreign CPU during the
+attempt = non-idle jiffies from /proc/stat minus this process tree's own
+CPU (rusage + live-descendant /proc walk — the py4j JVM is invisible to
 RUSAGE_CHILDREN); an attempt is ACCEPTED when foreign stayed under
 $SPARK_GRAFT_FOREIGN_MAX cores (default 0.7). Entries retry (bounded
 global budget) until an accepted attempt exists; entries that never got
@@ -137,9 +136,8 @@ def main() -> None:
     meter = _ForeignMeter()
     retries_left = RETRY_BUDGET
 
-    # bounded pre-wait for a quiet window (same spirit as
-    # evidence_orchestrator.wait_quiet, but bounded so the driver's bench
-    # run can never stall indefinitely)
+    # bounded pre-wait for a quiet window (bounded so a bench run can
+    # never stall indefinitely)
     wait_t0 = time.time()
     while _load1() >= 2.0 and time.time() - wait_t0 < PRE_WAIT_MAX:
         time.sleep(10)

@@ -257,16 +257,12 @@ def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
     rows += [(6000 + j, f"unrelated doc {j} about columnar engines {j}")
              for j in range(7)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    docs, rep_pairs, elig_ids = _minhash_rep_level(
-        df, 3, 128, 32, 0.7, "text", "doc_id", 512, with_elig=True,
-    )
-    members = docs.select("grp", "id")
+    run = _minhash_rep_level(df, 3, 128, 32, 0.7, "text", "doc_id", 512)
+    members, rep_pairs = run.members, run.rep_pairs
     rg = members.groupBy("grp").agg(
         F.min("id").alias("rid"), F.count(F.lit(1)).alias("csize")
     )
-    eg = rg.filter(F.col("csize") > 1).join(
-        elig_ids.select(F.col("id").alias("rid")), "rid"
-    )
+    eg = rg.filter(F.col("csize") > 1).join(run.reps.select("rid"), "rid")
     star = (
         members.join(eg.select("grp", "rid"), "grp")
         .where(F.col("id") != F.col("rid"))
@@ -275,3 +271,50 @@ def test_cc_rewrap_fallback_on_poisoned_checkpoint_input(spark):
     poisoned = rep_pairs.select("id_a", "id_b").unionByName(star)
     comp = _on_each_path(lambda: _components(poisoned))
     assert comp and all(comp[i] == 0 for i in range(50))
+
+
+def _keep_rows(df):
+    return sorted(tuple(r) for r in df.select("id", "component", "keep").collect())
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash"])
+def test_rep_keep_list_equals_pair_keep_list(spark, family):
+    """The keep-list from a RepLevelRun's rep level equals the keep-list
+    over its member-level pairs(), for both families. The fixture has a
+    3-copy cluster, an eligible singleton near-dup of it whose id is
+    larger than the cluster's rep (it is in no `reps` row, so only the
+    coalesce(rid, id) lookup reaches its rep pairs), a duplicated doc
+    with fewer than k tokens (MinHash: an ineligible group), and
+    unrelated singletons."""
+    from tetrex_spark.operators.clusters import rep_keep_list
+    from tetrex_spark.operators.dedup import _minhash_rep_level, _simhash_rep_level
+
+    if family == "minhash":
+        base = ("the archive holds letters written by the harbour master "
+                "about ships cargo storms and the long winter of that year")
+        near = base.rsplit(" ", 1)[0] + " decade"
+        rows = [(10, base), (11, base), (12, base), (20, near),
+                (40, "tiny doc"), (41, "tiny doc")]
+        rows += [(50 + j, f"unrelated note {j} on columnar storage engines {j * 7}")
+                 for j in range(4)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        run = _minhash_rep_level(docs, 3, 128, 32, 0.8, "text", "doc_id", 512)
+    else:
+        fp = 0x0123456789ABCDEF
+        rows = [(10, fp), (11, fp), (12, fp), (20, fp ^ 0b101),
+                (40, 0x7EDCBA9876543210), (41, 0x7EDCBA9876543210)]
+        rows += [(50 + j, (0x1111111111111111 * (j + 2)) & 0x7FFFFFFFFFFFFFFF)
+                 for j in range(4)]
+        sh = spark.createDataFrame(rows, "id long, simhash long")
+        docs = sh.select(F.col("id").alias("doc_id"))
+        run = _simhash_rep_level(sh, 3, 4, 512)
+    got = _keep_rows(rep_keep_list(run.members, run.rep_pairs, run.reps))
+    want = _keep_rows(dedup_keep_list(docs.select("doc_id"), run.pairs()))
+    assert got == want
+    comp = {i: c for i, c, _ in got}
+    assert comp[10] == comp[11] == comp[12] == comp[20] == 10
+    assert 20 not in {r["rid"] for r in run.reps.collect()}
+    if family == "minhash":
+        assert comp[40] == 40 and comp[41] == 41
+    else:
+        assert comp[40] == comp[41] == 40

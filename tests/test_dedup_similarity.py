@@ -127,14 +127,15 @@ def test_minhash_lsh_candidates_bounded_on_skew(boilerplate):
     assert cand.count() <= 36
 
 
-def test_minhash_bucket_cap_drops_and_reports(spark):
+def test_minhash_bucket_cap_drops_and_reports(spark, caplog):
     """max_bucket below the bucket population: the over-cap bucket is
-    skipped (pairs only reachable through it disappear) and
-    lsh_bucket_stats reports the drop — no silent caps."""
+    skipped (pairs only reachable through it disappear) and the cap
+    warning reports the drop — no silent caps."""
+    import logging
+
     from tetrex_spark.operators.dedup import (
         band_buckets,
         capped_candidate_pairs,
-        lsh_bucket_stats,
         minhash_sigs_and_sets,
     )
 
@@ -147,11 +148,15 @@ def test_minhash_bucket_cap_drops_and_reports(spark):
     ss = minhash_sigs_and_sets(df, k=3, num_perm=128)
     buckets = band_buckets(ss, 32, 4).persist()
     uncapped = capped_candidate_pairs(buckets, None).count()
-    capped = capped_candidate_pairs(buckets, 2).count()
+    with caplog.at_level(logging.WARNING, logger="tetrex_spark.operators.dedup"):
+        capped = capped_candidate_pairs(buckets, 2).count()
     assert uncapped == 15  # all C(6,2) pairs collide somewhere
     assert capped < uncapped
-    stats = lsh_bucket_stats(buckets, 2)
-    assert stats["n_over"] > 0 and stats["max_bucket_size"] >= 3
+    drops = [r for r in caplog.records if "LSH bucket cap 2 drops" in r.getMessage()]
+    assert len(drops) == 1
+    # args: cap, over-cap buckets, their member rows, largest bucket
+    _, n_over, _, max_bc = drops[0].args
+    assert n_over > 0 and max_bc >= 3
     buckets.unpersist()
 
 
@@ -427,7 +432,7 @@ def test_cosine_verify_pairs_matches_exact(vectors):
 def test_capped_pairs_logs_drops_by_default(spark, caplog):
     """No-silent-caps: a cap that actually drops buckets must warn-log
     WITHOUT the caller opting in (ADVICE r02: the drop used to be visible
-    only via a separate opt-in lsh_bucket_stats scan)."""
+    only via a separate opt-in bucket-stats scan)."""
     import logging
 
     from tetrex_spark.operators.dedup import (

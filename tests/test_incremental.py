@@ -158,14 +158,16 @@ def test_neardup_gate_verdicts(spark, neardup_index):
 def test_neardup_index_sets_equal_batch_sig_table(spark, tmp_path):
     """The index is built by the batch construction: its stored sets are
     the (id, s) rows of the in-session rep-level sig table."""
-    from tetrex_spark.operators.dedup import _minhash_rep_level
+    from tetrex_spark.operators.dedup import dup_groups, minhash_sigs_and_sets
     from tetrex_spark.operators.incremental import build_neardup_index
 
     ref = _corpus(spark, [NEARDUP_REF[0]] * 3 + NEARDUP_REF[1:10] + ["tiny doc"])
     d = str(tmp_path / "nd_sets")
     build_neardup_index(ref, d, n_shards=4)
-    _, _, ss = _minhash_rep_level(
-        ref, 3, 128, 32, 0.8, "text", "doc_id", 512, with_elig=False,
+    # the in-session sig table, as _minhash_rep_level builds it
+    ss = minhash_sigs_and_sets(
+        dup_groups(ref)[1], 3, 128, "txt", "id",
+        passthrough=("grp", "csize"), bands=32,
     )
 
     def rows(df):

@@ -38,10 +38,9 @@ def test_resume_skips_committed_chunks(spark, corpus, tmp_path):
     cb = CheckpointedBuild(ck, specs(), n_chunks=4)
     # simulate a partial run: build only chunks 0 and 1, then "crash"
     for chunk in [0, 1]:
-        part = build_sketches(cb._chunk_filter(corpus, chunk), specs())
-        part.write.mode("overwrite").parquet(f"{ck}/chunks/chunk={chunk}")
-        cb._commit({"build_id": cb.build_id, "chunk": chunk,
-                    "status": "committed", "duration_sec": 0.0, "metrics": {}})
+        part = build_sketches(cb._chunk_filter(corpus, "url", chunk), specs())
+        part.write.mode("overwrite").parquet(f"{cb._apath('chunks')}/chunk={chunk}")
+        cb._commit(f"chunk:{chunk}", duration_sec=0.0, metrics={})
     assert cb.committed_chunks() == {0, 1}
     # resume completes the rest; result identical to single shot
     out = _payloads(cb.run(corpus).collect())
@@ -68,6 +67,67 @@ def test_finalize_ignores_stale_chunk_dirs(spark, corpus, tmp_path):
     out = _payloads(cb.run(corpus).collect())
     single = _payloads(build_sketches(corpus, specs()).collect())
     assert out == single
+
+
+def _items(rows):
+    return {(r["bin_id"], r["name"]): r["n_items"] for r in rows}
+
+
+def _cms_specs():
+    return specs() + [
+        SketchSpec("cms", "cms", "token", k=1, params={"width": 2048, "depth": 5})
+    ]
+
+
+def test_builds_sharing_a_dir_keep_their_own_chunks(spark, corpus, tmp_path):
+    """Two build_ids in one dir write separate chunk dirs: re-running the
+    8-chunk build after a 4-chunk build overwrote chunks 0..3 must still
+    merge only its own partials (CMS payloads and n_items would
+    double-count otherwise)."""
+    ck = str(tmp_path / "ck_shared")
+    CheckpointedBuild(ck, _cms_specs(), n_chunks=8, build_id="old").run(corpus)
+    CheckpointedBuild(ck, _cms_specs(), n_chunks=4, build_id="new").run(corpus)
+    rows = CheckpointedBuild(
+        ck, _cms_specs(), n_chunks=8, build_id="old"
+    ).run(corpus).collect()
+    single = build_sketches(corpus, _cms_specs()).collect()
+    assert _payloads(rows) == _payloads(single)
+    assert _items(rows) == _items(single)
+
+
+def test_build_refuses_changed_specs_or_chunks(spark, corpus, tmp_path):
+    """Resuming a build with an added spec (or another chunk count) must
+    refuse loudly: the committed chunks hold only the old specs' rows."""
+    ck = str(tmp_path / "ck_params")
+    CheckpointedBuild(ck, specs(), n_chunks=2).run(corpus)
+    with pytest.raises(ValueError, match="stale"):
+        CheckpointedBuild(ck, _cms_specs(), n_chunks=2)
+    with pytest.raises(ValueError, match="stale"):
+        CheckpointedBuild(ck, specs(), n_chunks=4)
+    # the same specs reopen (a dgram spec's gaps tuple reads back as a
+    # list and still matches), and a new build_id starts afresh
+    dgram = [SketchSpec("dg", "bloom", "dgram", params={"m_bits": 1 << 12},
+                        gaps=(1, 3))]
+    CheckpointedBuild(ck, dgram, n_chunks=2, build_id="dg")
+    CheckpointedBuild(ck, dgram, n_chunks=2, build_id="dg")
+    CheckpointedBuild(ck, _cms_specs(), n_chunks=2, build_id="build-1")
+
+
+def test_build_refuses_old_layout_dir(tmp_path):
+    """A dir written before builds had params files (lineage records keyed
+    by `chunk`, chunks under chunks/) refuses with the rebuild message
+    instead of failing on the old records."""
+    import json
+    import os
+
+    ck = str(tmp_path / "ck_old")
+    os.makedirs(f"{ck}/chunks/chunk=0")
+    with open(f"{ck}/lineage.jsonl", "w") as f:
+        f.write(json.dumps({"build_id": "build-0", "chunk": 0,
+                            "status": "committed", "duration_sec": 0.1,
+                            "metrics": {}}) + "\n")
+    with pytest.raises(ValueError, match="layout 1.*rebuild"):
+        CheckpointedBuild(ck, specs(), n_chunks=4)
 
 
 def test_skew_report(spark, corpus, tmp_path):
@@ -178,14 +238,16 @@ def test_checkpointed_dedup_sigsets_equal_in_session_table(
     rows (id, s, bhs, grp, csize) the in-session construction
     checkpoints, and the stored rep pairs carry (grp_a, grp_b)."""
     from tetrex_spark.lineage import CheckpointedDedup
-    from tetrex_spark.operators.dedup import _minhash_rep_level
+    from tetrex_spark.operators.dedup import dup_groups, minhash_sigs_and_sets
 
     cd = CheckpointedDedup(str(tmp_path / "sig_schema"), threshold=0.7, n_chunks=4)
     cd.run(dedup_docs, stop_after="pairs")
     cols = ["id", "s", "bhs", "grp", "csize"]
     stored = spark.read.parquet(*cd._chunk_paths("sigsets"))
-    _, _, ss = _minhash_rep_level(
-        dedup_docs, 3, 128, 32, 0.7, "text", "doc_id", 512, with_elig=False,
+    # the in-session sig table, as _minhash_rep_level builds it
+    ss = minhash_sigs_and_sets(
+        dup_groups(dedup_docs)[1], 3, 128, "txt", "id",
+        passthrough=("grp", "csize"), bands=32,
     )
     assert stored.columns == ss.columns == cols
 

@@ -214,9 +214,11 @@ def cmd_dedup(args) -> int:
     only re-reads). Writes pairs/ (the member-level pair list) and keep/
     parquet under --output; stage lineage under --checkpoint.
 
-    The keep-list comes from the rep-level graph, not from pairs/:
-    connected components run over the stored representative pairs, and
-    each document takes its group representative's component
+    Both outputs are views of the pipeline's one RepLevelRun
+    (operators.dedup): pairs/ is its pairs() expansion, and the keep-list
+    comes from the rep-level graph, not from pairs/ — connected
+    components run over the stored representative pairs, and each
+    document takes its group representative's component
     (clusters.rep_keep_list) — the same rows as components over the
     member pairs, without re-reading a list that is quadratic in
     exact-dup cluster size. Row counts (lineage stages, pairs/) are read
@@ -254,7 +256,7 @@ def cmd_dedup(args) -> int:
     # threads inherit the caller's job group and tags.
     @inheritable_thread_target(spark)
     def write_pairs() -> None:
-        run.pairs.write.mode("overwrite").parquet(f"{args.output}/pairs")
+        run.pairs().write.mode("overwrite").parquet(f"{args.output}/pairs")
 
     @inheritable_thread_target(spark)
     def write_keep() -> tuple[int, int]:

@@ -1,15 +1,28 @@
 """Checkpointed per-partition lineage + metrics — resumable sketch builds
-(explicit north-rule requirement; no analog in the reference, whose build
-is a single-process all-or-nothing cereal dump, index_base.h:181-187).
+and near-dup pipelines (explicit north-rule requirement; no analog in the
+reference, whose build is a single-process all-or-nothing cereal dump,
+index_base.h:181-187).
 
 Model: the corpus is sliced into `n_chunks` deterministic chunks
-(pmod(xxhash64(url), n_chunks) — stable across runs and parallelism).
-Each chunk's partial sketch rows are written to
-`<dir>/chunks/chunk=<i>/` (parquet write is atomic via _SUCCESS), then a
-lineage record (JSONL on the driver) commits the chunk with metrics.
-Resume = skip committed chunks; finalize = merge all chunk partials with
-the same associative merge the two-level tree uses, so a resumed build is
-byte-identical (lattice sketches) to a single-shot one — property-tested.
+(pmod(xxhash64(url), n_chunks) for sketch builds, of the id for the
+dedup pipelines — stable across runs and parallelism). Every pipeline
+shares one checkpoint-dir layout:
+
+  params_<build_id>.json              the parameter fingerprint a
+                                      resume must match;
+  lineage.jsonl                       one JSON record per committed stage
+                                      (build_id, stage, rows, metrics);
+  <name>_<build_id>/chunk=<i>/        chunk stages, e.g. CheckpointedBuild's
+                                      partial sketch rows in
+                                      chunks_<build_id>/chunk=<i>/;
+  <name>_<build_id>/                  whole-output stages (rep pairs).
+
+A parquet write is atomic via _SUCCESS, and only then does the lineage
+record commit the stage. Resume = skip committed stages; a sketch build's
+finalize merges all chunk partials with the same associative merge the
+two-level tree uses, so a resumed build is byte-identical (lattice
+sketches) to a single-shot one — property-tested. Build ids never share
+artifact paths, so two builds in one dir cannot mix their chunks.
 
 At 100 TB: set n_chunks to the input's partition/file grain and store the
 corpus partitioned by the chunk key — each chunk scan is then partition-
@@ -23,12 +36,15 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import NamedTuple
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.sketch_build import SKETCH_ROW_SCHEMA, SketchSpec, _merger, build_sketches
+
+if TYPE_CHECKING:
+    from .operators.dedup import RepLevelRun
 
 LINEAGE_FILE = "lineage.jsonl"
 
@@ -59,127 +75,6 @@ def read_stored(spark: SparkSession, *paths: str) -> DataFrame:
     return spark.read.schema(schema).parquet(*paths)
 
 
-class CheckpointedBuild:
-    def __init__(
-        self,
-        checkpoint_dir: str,
-        specs: list[SketchSpec],
-        *,
-        n_chunks: int = 16,
-        build_id: str = "build-0",
-    ):
-        self.dir = checkpoint_dir
-        self.specs = specs
-        self.n_chunks = n_chunks
-        self.build_id = build_id
-        os.makedirs(f"{self.dir}/chunks", exist_ok=True)
-
-    # -- lineage ----------------------------------------------------------
-
-    def _lineage_path(self) -> str:
-        return f"{self.dir}/{LINEAGE_FILE}"
-
-    def lineage(self) -> list[dict]:
-        if not os.path.exists(self._lineage_path()):
-            return []
-        with open(self._lineage_path()) as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    def committed_chunks(self) -> set[int]:
-        return {
-            r["chunk"]
-            for r in self.lineage()
-            if r["build_id"] == self.build_id and r["status"] == "committed"
-        }
-
-    def _commit(self, record: dict) -> None:
-        with open(self._lineage_path(), "a") as f:
-            f.write(json.dumps(record, sort_keys=True) + "\n")
-
-    # -- build ------------------------------------------------------------
-
-    def _chunk_filter(self, corpus: DataFrame, chunk: int):
-        return corpus.filter(
-            F.pmod(F.xxhash64(F.col("url")), F.lit(self.n_chunks)) == chunk
-        )
-
-    def run(self, corpus: DataFrame, *, resume: bool = True) -> DataFrame:
-        """Build (or resume) all chunks, then return the merged sketch
-        rows. Raises nothing on re-run of a finished build: all chunks
-        are already committed and only the final merge executes."""
-        if "bin_id" not in corpus.columns:
-            raise ValueError("corpus needs bin_id (sources.corpus.with_bin_id)")
-        done = self.committed_chunks() if resume else set()
-        for chunk in range(self.n_chunks):
-            if chunk in done:
-                continue
-            t0 = time.time()
-            part = build_sketches(self._chunk_filter(corpus, chunk), self.specs)
-            path = f"{self.dir}/chunks/chunk={chunk}"
-            part.write.mode("overwrite").parquet(path)
-            spark = corpus.sparkSession
-            stats = (
-                spark.read.parquet(path)
-                .groupBy("name")
-                .agg(
-                    F.count(F.lit(1)).alias("bins"),
-                    F.sum("n_items").alias("items"),
-                    F.max("n_items").alias("max_bin_items"),
-                )
-                .collect()
-            )
-            self._commit(
-                {
-                    "build_id": self.build_id,
-                    "chunk": chunk,
-                    "status": "committed",
-                    "duration_sec": round(time.time() - t0, 3),
-                    "metrics": {
-                        r["name"]: {
-                            "bins": r["bins"],
-                            "items": int(r["items"]),
-                            "max_bin_items": int(r["max_bin_items"]),
-                        }
-                        for r in stats
-                    },
-                }
-            )
-        return self.finalize(corpus.sparkSession)
-
-    def finalize(self, spark: SparkSession) -> DataFrame:
-        """Merge every committed chunk's partials -> final sketch rows."""
-        missing = set(range(self.n_chunks)) - self.committed_chunks()
-        if missing:
-            raise RuntimeError(f"cannot finalize: chunks {sorted(missing)} not committed")
-        # read ONLY this build's chunk range — stale chunk=* dirs left by a
-        # previous build with a larger n_chunks would otherwise be silently
-        # merged in, double-counting documents
-        all_parts = spark.read.parquet(
-            *[f"{self.dir}/chunks/chunk={i}" for i in range(self.n_chunks)]
-        )
-        return all_parts.select("bin_id", "name", "payload", "n_items").groupBy(
-            "bin_id", "name"
-        ).applyInPandas(_merger, SKETCH_ROW_SCHEMA)
-
-    def skew_report(self) -> dict:
-        """Per-spec max/total item ratio across chunks — the 'document
-        skew stats in lineage metrics' hook for salting decisions."""
-        out: dict[str, dict] = {}
-        for rec in self.lineage():
-            if rec["build_id"] != self.build_id or rec["status"] != "committed":
-                continue
-            for name, m in rec["metrics"].items():
-                agg = out.setdefault(
-                    name, {"items": 0, "max_bin_items": 0, "max_to_mean_ratio": 0.0}
-                )
-                agg["items"] += m["items"]
-                agg["max_bin_items"] = max(agg["max_bin_items"], m["max_bin_items"])
-                # within-chunk skew: hottest bin vs mean bin
-                ratio = m["max_bin_items"] * m["bins"] / max(m["items"], 1)
-                agg["max_to_mean_ratio"] = max(agg["max_to_mean_ratio"], round(ratio, 3))
-        return out
-
-
 class _StagedCheckpoint:
     """Shared machinery for staged, resumable pipelines: a JSONL lineage
     log of committed stages plus a parameter fingerprint pinned per
@@ -199,7 +94,9 @@ class _StagedCheckpoint:
     # 3 = build_id-namespaced artifact paths (sigsets_<id>/ etc.), MinHash
     # sigset chunks in the minhash_sigs_and_sets schema (id, s, bhs, grp,
     # csize) and rep-pair chunks carrying (grp_a, grp_b). A params file
-    # without the marker is layout 1. A checkpoint written under a
+    # without the marker is layout 1, and so are lineage records of the
+    # build_id with no params file at all (CheckpointedBuild dirs from
+    # before it had one, chunks under chunks/). A checkpoint written under a
     # different layout must refuse at open time with a clear message —
     # its params fingerprint would otherwise still match and resume would
     # skip the committed stages, then read chunks of the wrong schema.
@@ -214,10 +111,17 @@ class _StagedCheckpoint:
         os.makedirs(self.dir, exist_ok=True)
         for s in subdirs:
             os.makedirs(f"{self.dir}/{s}", exist_ok=True)
-        params = {**params, "_layout": self.LAYOUT_VERSION}
+        # JSON-normalized, so a tuple compares equal to the list it reads
+        # back as
+        params = json.loads(json.dumps({**params, "_layout": self.LAYOUT_VERSION}))
         ppath = f"{self.dir}/params_{build_id}.json"
         if os.path.exists(ppath):
             stored = json.loads(open(ppath).read())
+        elif any(r.get("build_id") == build_id for r in self.lineage()):
+            stored = {}  # lineage records from before params files: layout 1
+        else:
+            stored = None
+        if stored is not None:
             if stored.get("_layout") != self.LAYOUT_VERSION:
                 raise ValueError(
                     f"checkpoint {self.dir} (build_id={build_id}) uses "
@@ -279,12 +183,12 @@ class _StagedCheckpoint:
 
     def _run_chunk_stages(
         self, prefix: str, name: str, make_chunk,
-        done: set[str], stop_after: str | None,
+        done: set[str], stop_after: str | None, *, metrics=None,
     ) -> bool:
         """Write each uncommitted chunk stage (`<prefix>:<i>` →
         `<dir>/<name>_<build_id>/chunk=<i>`) atomically and commit it with
-        row/duration metrics. Returns True when `stop_after` simulated a
-        kill."""
+        row/duration metrics, plus the fields `metrics(path)` returns.
+        Returns True when `stop_after` simulated a kill."""
         for chunk in range(self.n_chunks):
             stage = f"{prefix}:{chunk}"
             if stage in done:
@@ -293,7 +197,8 @@ class _StagedCheckpoint:
             path = f"{self._apath(name)}/chunk={chunk}"
             make_chunk(chunk).write.mode("overwrite").parquet(path)
             self._commit(stage, rows=parquet_rows(path),
-                         duration_sec=round(time.time() - t0, 3))
+                         duration_sec=round(time.time() - t0, 3),
+                         **(metrics(path) if metrics else {}))
             if stop_after == stage:
                 return True
         return False
@@ -321,41 +226,116 @@ class _StagedCheckpoint:
         )
 
 
-class RepLevelRun(NamedTuple):
-    """A finished exact-dup-collapsing near-dup run
-    (_RepLevelDedup.run_rep_level): the stored representative-level
-    result plus the member view that maps documents onto it.
+class CheckpointedBuild(_StagedCheckpoint):
+    """Resumable chunked sketch build. Stage `chunk:<i>` builds the i-th
+    chunk's partial sketch rows, writes them atomically to
+    `<dir>/chunks_<build_id>/chunk=<i>/` and commits them with their row
+    count and per-spec metrics (bins, items, max_bin_items — the input
+    of skew_report). The params fingerprint pins the spec manifest
+    entries and n_chunks: resuming with another spec list or chunk count
+    refuses instead of returning the old specs' rows or merging partials
+    of two chunkings."""
 
-      pairs      the LAZY member-level expansion (id_a, id_b, <value>);
-      rep_pairs  the stored verified rep pairs (id_a, id_b, <value>,
-                 grp_a, grp_b);
-      members    (grp, id) of every document;
-      reps       (grp, rid) of every eligible group — one whose members
-                 the expansion pairs with each other — and its minimum
-                 id, the id its rep pairs carry.
+    def __init__(
+        self,
+        checkpoint_dir: str,
+        specs: list[SketchSpec],
+        *,
+        n_chunks: int = 16,
+        build_id: str = "build-0",
+    ):
+        self.specs, self.n_chunks = specs, n_chunks
+        super().__init__(
+            checkpoint_dir,
+            params={"specs": [s.manifest_entry() for s in specs],
+                    "n_chunks": n_chunks},
+            build_id=build_id,
+        )
 
-    clusters.rep_keep_list(members, rep_pairs, reps) is the keep-list of
-    `pairs` without materializing the expansion."""
+    def committed_chunks(self) -> set[int]:
+        return {
+            int(stage.partition(":")[2])
+            for stage in self.committed() if stage.startswith("chunk:")
+        }
 
-    pairs: DataFrame
-    rep_pairs: DataFrame
-    members: DataFrame
-    reps: DataFrame
+    def run(self, corpus: DataFrame, *, resume: bool = True) -> DataFrame:
+        """Build (or resume) all chunks, then return the merged sketch
+        rows. Raises nothing on re-run of a finished build: all chunks
+        are already committed and only the final merge executes."""
+        if "bin_id" not in corpus.columns:
+            raise ValueError("corpus needs bin_id (sources.corpus.with_bin_id)")
+        self._run_chunk_stages(
+            "chunk", "chunks",
+            lambda chunk: build_sketches(
+                self._chunk_filter(corpus, "url", chunk), self.specs
+            ),
+            self.committed() if resume else set(), None,
+            metrics=_sketch_chunk_metrics,
+        )
+        return self.finalize(corpus.sparkSession)
+
+    def finalize(self, spark: SparkSession) -> DataFrame:
+        """Merge every committed chunk's partials -> final sketch rows."""
+        missing = set(range(self.n_chunks)) - self.committed_chunks()
+        if missing:
+            raise RuntimeError(f"cannot finalize: chunks {sorted(missing)} not committed")
+        return (
+            read_stored(spark, *self._chunk_paths("chunks"))
+            .select("bin_id", "name", "payload", "n_items")
+            .groupBy("bin_id", "name")
+            .applyInPandas(_merger, SKETCH_ROW_SCHEMA)
+        )
+
+    def skew_report(self) -> dict:
+        """Per-spec max/total item ratio across chunks — the 'document
+        skew stats in lineage metrics' hook for salting decisions."""
+        out: dict[str, dict] = {}
+        for rec in self.lineage():
+            if rec["build_id"] != self.build_id or rec["status"] != "committed":
+                continue
+            for name, m in rec["metrics"].items():
+                agg = out.setdefault(
+                    name, {"items": 0, "max_bin_items": 0, "max_to_mean_ratio": 0.0}
+                )
+                agg["items"] += m["items"]
+                agg["max_bin_items"] = max(agg["max_bin_items"], m["max_bin_items"])
+                # within-chunk skew: hottest bin vs mean bin
+                ratio = m["max_bin_items"] * m["bins"] / max(m["items"], 1)
+                agg["max_to_mean_ratio"] = max(agg["max_to_mean_ratio"], round(ratio, 3))
+        return out
+
+
+def _sketch_chunk_metrics(path: str) -> dict:
+    """Per-spec (bins, items, max_bin_items) of a stored chunk of partial
+    sketch rows, read on the driver (pyarrow) like parquet_rows."""
+    import pyarrow.dataset as ds
+
+    t = (
+        ds.dataset(path, format="parquet")
+        .to_table(columns=["name", "n_items"])
+        .group_by("name")
+        .aggregate([("n_items", "count"), ("n_items", "sum"), ("n_items", "max")])
+        .to_pylist()
+    )
+    return {"metrics": {
+        r["name"]: {"bins": r["n_items_count"], "items": r["n_items_sum"],
+                    "max_bin_items": r["n_items_max"]}
+        for r in t
+    }}
 
 
 class _RepLevelDedup(_StagedCheckpoint):
     """The exact-dup-collapsing pipelines (MinHash, SimHash): subclasses
     implement run_rep_level; run() is the pair-list view of it."""
 
-    VALUE_COL: str
-
     def run_rep_level(
         self, df: DataFrame, *, text_col: str = "text",
         id_col: str = "doc_id", resume: bool = True,
         stop_after: str | None = None,
     ) -> RepLevelRun | None:
-        """Build (or resume) the stages; the finished run's RepLevelRun,
-        or None when `stop_after` simulated a kill."""
+        """Build (or resume) the stages; the finished run's
+        operators.dedup.RepLevelRun over the stored rep pairs, or None
+        when `stop_after` simulated a kill."""
         raise NotImplementedError
 
     def run(
@@ -379,8 +359,8 @@ class _RepLevelDedup(_StagedCheckpoint):
         if out is None:
             return None
         if not expand_exact_dups:
-            return out.rep_pairs.select("id_a", "id_b", self.VALUE_COL)
-        return out.pairs
+            return out.rep_pairs.select("id_a", "id_b", out.value_col)
+        return out.pairs()
 
 
 class CheckpointedDedup(_RepLevelDedup):
@@ -403,21 +383,22 @@ class CheckpointedDedup(_RepLevelDedup):
                    (banding + cap + exact-Jaccard verify), written to
                    `<dir>/rep_pairs_<build_id>/`.
 
-    A killed job resumes at the first uncommitted stage; the expanded
-    member-level pair list is recomputed lazily from (docs, stored
-    rep_pairs, stored sigsets), so a resumed run is byte-identical to a
-    single-shot one — tested by killing after the banding/sigset stage.
-    `stop_after` ("sigsets:<i>" | "pairs") simulates the kill in tests.
+    A killed job resumes at the first uncommitted stage. run_rep_level
+    returns the same operators.dedup.RepLevelRun the in-session path
+    does, over the stored stages: members (grp, id) from dup_groups
+    (checkpointed lazily), the stored rep pairs, and reps = the stored
+    sigset rows with csize > 1. Its member pair list is recomputed
+    lazily, so a resumed run is byte-identical to a single-shot one —
+    tested by killing after the banding/sigset stage. `stop_after`
+    ("sigsets:<i>" | "pairs") simulates the kill in tests.
 
     Clustering on top reads the rep level, not the expansion
-    (clusters.rep_keep_list over the RepLevelRun): connected components run over the stored
-    rep pairs, and each document takes the component of its group's
-    sigset row (grp -> id, the group's minimum id). A document whose
-    group has no sigset row (fewer than k tokens) is its own component.
-    The keep-list equals the member-pair one and never grows with the
-    square of an exact-dup cluster."""
-
-    VALUE_COL = "jaccard"
+    (clusters.rep_keep_list over the run): connected components run
+    over the stored rep pairs, and each document takes the component of
+    its group's representative — of its own id when its group is not in
+    reps (a singleton, or fewer than k tokens). The keep-list equals the
+    member-pair one and never grows with the square of an exact-dup
+    cluster."""
 
     def __init__(
         self,
@@ -453,8 +434,8 @@ class CheckpointedDedup(_RepLevelDedup):
         stop_after: str | None = None,
     ) -> RepLevelRun | None:
         from .operators.dedup import (
+            _minhash_run,
             dup_groups,
-            expand_rep_pairs,
             minhash_sigs_and_sets,
             verify_rep_pairs,
         )
@@ -496,10 +477,7 @@ class CheckpointedDedup(_RepLevelDedup):
         # expansion's branches and the keep-list then read the cache
         # instead of re-scanning the raw text
         members = docs.select("grp", "id").localCheckpoint(eager=False)
-        return RepLevelRun(
-            expand_rep_pairs(members, rep_pairs, ss), rep_pairs, members,
-            ss.select("grp", F.col("id").alias("rid")),
-        )
+        return _minhash_run(members, rep_pairs, ss)
 
 
 class CheckpointedSimhashDedup(_RepLevelDedup):
@@ -517,14 +495,15 @@ class CheckpointedSimhashDedup(_RepLevelDedup):
                bit_count verify), written to
                `<dir>/rep_pairs_<build_id>/`.
 
-    The member-level expansion is recomputed lazily from (stored fps,
-    stored rep_pairs) — a resumed run is byte-identical to a single-shot
+    The pairs stage writes the simhash_rep_pairs plan directly (the
+    plan the in-session path checkpoints). run_rep_level returns a
+    RepLevelRun over (stored fps, stored rep_pairs): members keyed by
+    fingerprint, and reps = every fingerprint group with more than one
+    member, its rep being its minimum id. The member-level expansion is
+    recomputed lazily — a resumed run is byte-identical to a single-shot
     one. n_blocks is pinned (no adaptive width here: the blocking plan
     is part of the parameter fingerprint a resume must reproduce). The
-    keep-list reads the rep level as CheckpointedDedup's does; every
-    fingerprint group is eligible, its rep being its minimum id."""
-
-    VALUE_COL = "hamming"
+    keep-list reads the rep level as CheckpointedDedup's does."""
 
     def __init__(
         self,
@@ -560,11 +539,7 @@ class CheckpointedSimhashDedup(_RepLevelDedup):
         id_col: str = "doc_id", resume: bool = True,
         stop_after: str | None = None,
     ) -> RepLevelRun | None:
-        from .operators.dedup import (
-            _simhash_rep_level,
-            expand_simhash_rep_pairs,
-            simhash,
-        )
+        from .operators.dedup import _simhash_run, simhash, simhash_rep_pairs
 
         spark = df.sparkSession
         done = self.committed() if resume else set()
@@ -577,27 +552,23 @@ class CheckpointedSimhashDedup(_RepLevelDedup):
         ):
             return None
         sh = read_stored(spark, *self._chunk_paths("fps"))
+        handles: list = []
 
         def make_pairs():
-            # stored pairs keep (grp_a, grp_b) for the expansion below
-            return _simhash_rep_level(
-                sh.persist(), self.max_hamming, self.n_blocks,
-                self.max_bucket, with_groups=False,
-            )[1]
+            return simhash_rep_pairs(
+                sh, self.max_hamming, self.n_blocks, self.max_bucket,
+                release=handles,
+            )
 
         killed = self._run_write_stage(
             "pairs", "rep_pairs", make_pairs,
             self.committed() if resume else set(), stop_after,
         )
-        sh.unpersist()
+        for fin in handles:
+            fin()
         if killed:
             return None
-        rep_pairs = read_stored(spark, self._apath("rep_pairs"))
-        members = sh.select(F.col("simhash").alias("grp"), "id")
-        return RepLevelRun(
-            expand_simhash_rep_pairs(sh, rep_pairs), rep_pairs, members,
-            members.groupBy("grp").agg(F.min("id").alias("rid")),
-        )
+        return _simhash_run(sh, read_stored(spark, self._apath("rep_pairs")))
 
 
 class CheckpointedCosineDedup(_StagedCheckpoint):

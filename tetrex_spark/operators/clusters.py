@@ -245,28 +245,34 @@ def rep_keep_list(
 ) -> DataFrame:
     """(id, component, keep) for every document of `members`, equal to
     dedup_keep_list over the member-level pairs that an exact-dup
-    expansion of `rep_pairs` would emit — without that (quadratic) list.
+    expansion of `rep_pairs` would emit (operators.dedup.RepLevelRun's
+    pairs()) — without that (quadratic) list.
 
     members:   (grp, id) — every document and its exact-dup group key;
-    rep_pairs: verified representative pairs (id_a, id_b, ...);
-    reps:      (grp, rid) — one row per group whose members are all
-               paired with each other (an eligible group), rid being the
-               group's minimum id.
+    rep_pairs: verified representative pairs (id_a, id_b, ...), each id
+               its group's minimum id;
+    reps:      (grp, rid) — every eligible group (one whose members are
+               all paired with each other) with more than one member,
+               rid being its minimum id.
 
     Components run over the rep pairs only; each document then takes the
-    component of its group's representative. The rows match because a
-    rep id is its group's minimum id (so the component minimum is the
-    same), an eligible group's members are all intra-paired, and a
-    document of an ineligible group (no `reps` row) is paired with
-    nothing, so it is its own component."""
+    component of coalesce(rid, id): its group's representative, or its
+    own id when its group is not in `reps`. The rows match because a rep
+    id is its group's minimum id (so the component minimum is the same)
+    and an eligible group's members are all intra-paired. A document
+    outside `reps` is either an eligible singleton — its own id is its
+    group's rep id, so it looks up its rep pairs directly — or a member
+    of an ineligible group, whose id no rep pair carries, so it is its
+    own component."""
     comp = connected_components(rep_pairs, "id_a", "id_b").select(
-        F.col("id").alias("rid"), F.col("component").alias("rc")
+        F.col("id").alias("key"), F.col("component").alias("rc")
     )
     return (
         members.select("grp", "id")
         .join(reps.select("grp", "rid"), "grp", "left")
-        .join(comp, "rid", "left")
-        .select("id", F.coalesce("rc", "rid", "id").alias("component"))
+        .withColumn("key", F.coalesce("rid", "id"))
+        .join(comp, "key", "left")
+        .select("id", F.coalesce("rc", "key").alias("component"))
         .withColumn(
             "keep", (F.col("component") == F.col("id")).cast("int")
         )

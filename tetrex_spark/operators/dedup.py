@@ -17,7 +17,8 @@ Bloom index feeds these. Scale design:
 
 from __future__ import annotations
 
-from typing import Iterator
+import functools
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -323,10 +324,10 @@ def cap_buckets(
 def capped_candidate_pairs(
     buckets: DataFrame, max_bucket: int | None, *, log_drops: bool = True,
     release: list | None = None, payload_col: str | None = None,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Distinct (id_a < id_b) candidate pairs from a (id, band, bh) bucket
-    table, skipping buckets with more than `max_bucket` members.
+    """(id_a < id_b) candidate pairs from a (id, band, bh) bucket table —
+    distinct unless a payload rides along (below) — skipping buckets with
+    more than `max_bucket` members.
 
     `payload_col` names an extra bucket column to carry through the
     self-join as `<payload>_a` / `<payload>_b` — for a FIXED-WIDTH
@@ -335,16 +336,11 @@ def capped_candidate_pairs(
     attached, paying `bands * 8` extra bytes of bucket shuffle instead
     of a broadcast plus two join stages. (Do NOT use it for wide
     payloads — the MinHash shingle sets would multiply the shuffle by
-    the band count; that family keeps the broadcast-join verify.)
-    `distinct=False` skips the candidate dedup so a caller with a
-    highly selective verify filter can dedup AFTER it, shuffling only
-    surviving pairs. REQUIREMENT when payload_col is combined with
-    distinct=True: the payload must be a FUNCTION OF THE IDS (one value
-    per id, like the simhash fingerprint) — dropDuplicates keeps one
-    arbitrary row per (id_a, id_b), so a many-valued payload (e.g. the
-    substring family's per-anchor positions) would silently lose rows;
-    such callers must pass distinct=False (as the substring family
-    does).
+    the band count; that family keeps the broadcast-join verify.) With
+    a payload the candidates are NOT deduplicated: a pair colliding in
+    several bands arrives once per band (the substring family keeps
+    every anchor position), and a caller with a selective verify filter
+    dedups after it, shuffling only surviving pairs.
 
     The cap bounds the self-join at B buckets x max_bucket^2 pairs instead
     of the unbounded sum of bucket-size squares (one pathological bucket of
@@ -410,13 +406,8 @@ def capped_candidate_pairs(
         & (F.col("x.bh") == F.col("y.bh"))
         & (F.col("x.id") < F.col("y.id")),
     ).select(*cols)
-    if distinct:
-        # payload columns must be functions of the ids here (see the
-        # docstring REQUIREMENT) — dedup on ids only
-        cand = (
-            cand.dropDuplicates(["id_a", "id_b"]) if payload_col
-            else cand.distinct()
-        )
+    if payload_col is None:
+        cand = cand.distinct()
     if finishers:
         if release is not None:
             release.extend(finishers)
@@ -427,32 +418,109 @@ def capped_candidate_pairs(
     return cand
 
 
-def lsh_bucket_stats(buckets: DataFrame, max_bucket: int) -> dict:
-    """Eager bucket-skew report for the no-silent-caps rule: how many
-    buckets (and member rows) exceed the cap. Run alongside (not inside)
-    the pairs plan; logs and returns the counts."""
-    import logging
+# -- the representative level --------------------------------------------------
 
-    row = (
-        buckets.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.sum(F.when(F.col("bc") > max_bucket, 1).otherwise(0)).alias("n_over"),
-            F.sum(F.when(F.col("bc") > max_bucket, F.col("bc")).otherwise(0)).alias("rows_over"),
-            F.max("bc").alias("max_bucket_size"),
+
+class RepLevelRun(NamedTuple):
+    """The one result of an exact-dup-collapsing near-dup run — MinHash
+    or SimHash, in session (minhash_lsh_*, simhash_*_from_fingerprints)
+    or checkpointed (lineage.Checkpointed*Dedup.run_rep_level): verified
+    representative pairs plus the member view that maps documents onto
+    them. Every consumer is a view of it: pairs() is the member-level
+    pair list, edges() its linear connectivity equivalent, and
+    clusters.rep_keep_list(members, rep_pairs, reps) the keep-list of
+    pairs() without materializing it.
+
+      members      (grp, id) — every document and its exact-dup group key;
+      rep_pairs    verified rep pairs (id_a, id_b, <value_col>, grp_a,
+                   grp_b), each id its group's minimum id;
+      reps         (grp, rid) — every eligible group with more than one
+                   member, rid its minimum id. Eligible groups are the
+                   ones whose members pair with each other: MinHash
+                   groups with a sig row (at least k tokens), and every
+                   SimHash group;
+      value_col    "jaccard" | "hamming";
+      intra_value  the value of an exact-duplicate pair (1.0 | 0).
+
+    Members of a group are exact duplicates of its representative, so
+    rep-to-rep distance IS member-to-member distance: no view re-reads
+    text."""
+
+    members: DataFrame
+    rep_pairs: DataFrame
+    reps: DataFrame
+    value_col: str
+    intra_value: float | int
+
+    def pairs(self) -> DataFrame:
+        """Member-level pairs (id_a, id_b, <value_col>): cross-group pairs
+        inherit their representatives' value through the broadcast rep
+        pairs; intra-group pairs, a self-join of the members of `reps`
+        groups, get intra_value. Lazy: the list is quadratic in exact-dup
+        cluster size, so it is never materialized here."""
+        v = self.value_col
+        m = self.members
+        cross = (
+            m.select(F.col("grp").alias("grp_a"), F.col("id").alias("ia"))
+            .join(F.broadcast(self.rep_pairs.select("grp_a", "grp_b", v)), "grp_a")
+            .join(m.select(F.col("grp").alias("grp_b"), F.col("id").alias("ib")),
+                  "grp_b")
+            .select(F.least("ia", "ib").alias("id_a"),
+                    F.greatest("ia", "ib").alias("id_b"), v)
         )
-        .collect()[0]
+        mi = m.join(self.reps.select("grp"), "grp")
+        xi, yi = mi.alias("xi"), mi.alias("yi")
+        intra = xi.join(
+            yi, (F.col("xi.grp") == F.col("yi.grp")) & (F.col("xi.id") < F.col("yi.id"))
+        ).select(F.col("xi.id").alias("id_a"), F.col("yi.id").alias("id_b"),
+                 F.lit(self.intra_value).alias(v))
+        return cross.unionByName(intra)
+
+    def edges(self) -> DataFrame:
+        """(id_a, id_b) edges whose connected components equal those of
+        pairs(): one rep -> member star edge per other member of each
+        `reps` group, plus the rep pairs. Linear where pairs() is
+        quadratic (a 10^6-copy cluster is 5*10^11 intra pairs), and
+        components only need connectivity — the input a clustering or
+        keep-list pipeline should consume at scale."""
+        star = (
+            self.members.join(self.reps.select("grp", "rid"), "grp")
+            .where(F.col("id") != F.col("rid"))
+            .select(F.col("rid").alias("id_a"), F.col("id").alias("id_b"))
+        )
+        # With either branch order, Spark 4.1's AQE can fail to re-plan
+        # the localCheckpoints that connected_components' star rounds
+        # derive from this union (NoSuchElementException: key not found
+        # <attr>); its round loop re-wraps the edge checkpoint when that
+        # happens. tests/test_clusters.py runs both orders on both paths.
+        return star.unionByName(self.rep_pairs.select("id_a", "id_b"))
+
+
+def _checkpoint_together(
+    *frames: DataFrame, sizer: DataFrame | None = None
+) -> tuple[DataFrame, ...]:
+    """Materialize `frames` with ONE eager localCheckpoint: each rides
+    its own struct column of a tagged union (`part` = its position, the
+    other frames' columns null), the union is right-sized by _compact
+    (estimated from `sizer`), and each frame is split back out of the
+    checkpoint with its own columns."""
+    def tagged(i: int, f: DataFrame) -> DataFrame:
+        return f.select(F.lit(i).alias("part"), *[
+            (F.struct(*f.columns) if j == i else F.lit(None).cast(g.schema))
+            .alias(f"_{j}")
+            for j, g in enumerate(frames)
+        ])
+
+    ck = (
+        functools.reduce(
+            DataFrame.unionByName, [tagged(i, f) for i, f in enumerate(frames)]
+        )
+        .transform(lambda u: _compact(u, sizer=sizer))
+        .localCheckpoint(eager=True)
     )
-    stats = {k: int(row[k] or 0) for k in
-             ("n_buckets", "n_over", "rows_over", "max_bucket_size")}
-    if stats["n_over"]:
-        logging.getLogger(__name__).warning(
-            "LSH bucket cap %d drops %d/%d buckets (%d member rows; largest %d)",
-            max_bucket, stats["n_over"], stats["n_buckets"],
-            stats["rows_over"], stats["max_bucket_size"],
-        )
-    return stats
+    return tuple(
+        ck.filter(F.col("part") == i).select(f"_{i}.*") for i in range(len(frames))
+    )
 
 
 def minhash_lsh_pairs(
@@ -479,50 +547,43 @@ def minhash_lsh_pairs(
          representatives only.
       2. ONE kernel pass (minhash_sigs_and_sets) builds the checkpointed
          rep-level sig table (id, s, bhs, grp, csize); blocking, verify
-         and the expansion all read it.
+         and the eligible groups all read it.
       3. band buckets are size-capped (see capped_candidate_pairs).
       4. verified representative pairs (tiny, broadcast) are expanded back
-         to member pairs: cross-group pairs inherit the representatives'
-         jaccard (identical normalized text => identical shingle set);
-         intra-group pairs are exact duplicates => jaccard 1.0. With
-         expand_exact_dups=False the expansion is skipped and the output
-         is representative-level (at 10^12 docs you want the dup *groups*
-         table plus rep-level near-dup pairs, not the quadratic pair list).
+         to member pairs (RepLevelRun.pairs): cross-group pairs inherit
+         the representatives' jaccard (identical normalized text =>
+         identical shingle set); intra-group pairs are exact duplicates
+         => jaccard 1.0. With expand_exact_dups=False the output is the
+         representative-level pairs (at 10^12 docs you want the dup
+         *groups* table plus rep-level near-dup pairs, not the quadratic
+         pair list).
 
     md5 collision risk for the pre-collapse is ~n^2/2^128 — far below the
     shingle-hash collision tolerance minhash itself assumes."""
-    members, rep_pairs, ss = _minhash_rep_level(
-        df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-        with_elig=expand_exact_dups,
+    run = _minhash_rep_level(
+        df, k, num_perm, bands, threshold, text_col, id_col, max_bucket
     )
     if not expand_exact_dups:
-        return rep_pairs.select("id_a", "id_b", "jaccard")
-    return expand_rep_pairs(members, rep_pairs, ss)
+        return run.rep_pairs.select("id_a", "id_b", "jaccard")
+    return run.pairs()
 
 
 def _minhash_rep_level(
-    df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-    *, with_elig: bool,
-):
-    """Steps 1-4 of minhash_lsh_pairs, shared with minhash_lsh_edges.
-    Returns (members, rep_pairs, ss):
+    df, k, num_perm, bands, threshold, text_col, id_col, max_bucket
+) -> RepLevelRun:
+    """Steps 1-3 of minhash_lsh_pairs as a RepLevelRun, shared with
+    minhash_lsh_edges.
 
-      ss         the localCheckpointed sig table (id, s, bhs, grp,
-                 csize) — one row per shingle-eligible representative,
-                 so the expansion reads eligibility and (grp, rid, csize)
-                 from it with no scan or exchange;
-      rep_pairs  checkpointed (id_a, id_b, jaccard, grp_a, grp_b);
-      members    the checkpointed (grp, id) table of every doc when
-                 with_elig (the expansion needs it), else None.
+    Eager jobs: the kernel checkpoint of the sig table, then ONE
+    checkpoint of rep_pairs and members together, plus the cap-stats
+    finisher — the job budget in tests/test_job_budget.py holds this.
+    The kernel runs exactly once: every branch reads its checkpoint.
+    `reps` reads the sig checkpoint lazily (fusing it into the second
+    checkpoint measured one construct job and two keep-list jobs more).
 
-    Eager jobs: the kernel checkpoint, then ONE checkpoint of rep_pairs
-    (fused with members when with_elig), plus the cap-stats finisher —
-    the job budget in tests/test_job_budget.py holds this. The kernel
-    runs exactly once: every branch reads its checkpoint.
-
-    Storage: `ss` stays pinned for as long as the returned `ss` or any
-    frame derived from it (the expansion's eligibility and rep-group
-    reads) is alive; it is released by GC together with them."""
+    Storage: the sig checkpoint stays pinned for as long as `reps` or
+    any frame derived from it is alive; it is released by GC together
+    with them."""
     docs, reps = dup_groups(df, text_col, id_col)
     ss = minhash_sigs_and_sets(
         reps, k, num_perm, "txt", "id", passthrough=("grp", "csize"),
@@ -533,35 +594,23 @@ def _minhash_rep_level(
         ss, bands=bands, r=num_perm // bands, threshold=threshold,
         max_bucket=max_bucket, release=handles,
     )
-    if with_elig:
-        nulls = [
-            F.lit(None).cast("long").alias("id_b"),
-            F.lit(None).cast("double").alias("jaccard"),
-            F.lit(None).cast("string").alias("grp_a"),
-            F.lit(None).cast("string").alias("grp_b"),
-        ]
-        mem = docs.select("grp", "id")
-        combined = (
-            rp.select(F.lit(0).alias("part"),
-                      F.lit(None).cast("string").alias("grp"),
-                      "id_a", "id_b", "jaccard", "grp_a", "grp_b")
-            .unionByName(
-                mem.select(F.lit(2).alias("part"), "grp",
-                           F.col("id").alias("id_a"), *nulls))
-            .transform(lambda u: _compact(u, sizer=mem))
-            .localCheckpoint(eager=True)
-        )
-        rep_pairs = combined.filter("part = 0").select(
-            "id_a", "id_b", "jaccard", "grp_a", "grp_b"
-        )
-        members = combined.filter("part = 2").select(
-            "grp", F.col("id_a").alias("id")
-        )
-    else:
-        rep_pairs, members = rp.localCheckpoint(eager=True), None
+    members = docs.select("grp", "id")
+    rep_pairs, members = _checkpoint_together(rp, members, sizer=members)
     for fin in handles:
         fin()
-    return members, rep_pairs, ss
+    return _minhash_run(members, rep_pairs, ss)
+
+
+def _minhash_run(
+    members: DataFrame, rep_pairs: DataFrame, ss: DataFrame
+) -> RepLevelRun:
+    """The MinHash RepLevelRun over a rep-level sig table `ss` (id, s,
+    bhs, grp, csize), in session or read from stored chunks. Its rows
+    are exactly the shingle-eligible representatives, so `reps` is its
+    csize > 1 rows: documents with fewer than k tokens have no jaccard to
+    anything, matching the exact oracle."""
+    reps = ss.filter(F.col("csize") > 1).select("grp", F.col("id").alias("rid"))
+    return RepLevelRun(members, rep_pairs, reps, "jaccard", 1.0)
 
 
 def minhash_lsh_edges(
@@ -570,34 +619,16 @@ def minhash_lsh_edges(
     max_bucket: int | None = 512,
 ) -> DataFrame:
     """(id_a, id_b) edge list whose connected components EQUAL those of
-    minhash_lsh_pairs(df, ...): the rep-level near-dup pairs plus one
-    member->representative star edge per exact duplicate (shingle-
-    eligible groups only — groups whose text has < k tokens produce no
-    pairs at all, matching the pair list's semantics).
-
-    This is the input a clustering/keep-list pipeline should consume at
-    scale: the member-level pair list is QUADRATIC in exact-dup cluster
-    sizes (a 10^6-copy boilerplate cluster is 5*10^11 intra pairs), but
-    connected components only need connectivity, and a star reaches the
-    same components with ONE edge per member. Use with
-    clusters.connected_components / dedup_keep_list; keep
-    minhash_lsh_pairs for consumers that need the actual pair list with
-    jaccard values."""
-    members, rep_pairs, ss = _minhash_rep_level(
-        df, k, num_perm, bands, threshold, text_col, id_col, max_bucket,
-        with_elig=True,
-    )
-    elig_groups = ss.filter(F.col("csize") > 1).select(
-        "grp", F.col("id").alias("rid")
-    )
-    # With either branch order, Spark 4.1's AQE can fail to re-plan the
-    # localCheckpoints that connected_components' star rounds derive from
-    # this union (NoSuchElementException: key not found <attr>); its
-    # round loop re-wraps the edge checkpoint when that happens.
-    # tests/test_clusters.py runs both orders on both of its paths.
-    return _star_edges(members, elig_groups).unionByName(
-        rep_pairs.select("id_a", "id_b")
-    )
+    minhash_lsh_pairs(df, ...) — RepLevelRun.edges() of the same run:
+    the rep-level near-dup pairs plus one member -> representative star
+    edge per exact duplicate (shingle-eligible groups only — groups whose
+    text has < k tokens produce no pairs at all, matching the pair list's
+    semantics). Use with clusters.connected_components / dedup_keep_list;
+    keep minhash_lsh_pairs for consumers that need the actual pair list
+    with jaccard values."""
+    return _minhash_rep_level(
+        df, k, num_perm, bands, threshold, text_col, id_col, max_bucket
+    ).edges()
 
 
 def dup_groups(
@@ -652,95 +683,6 @@ def verify_rep_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
                 "grp_a", "grp_b")
-    )
-
-
-def _star_edges(members: DataFrame, elig_groups: DataFrame) -> DataFrame:
-    """(id_a=rep, id_b=member) — one edge per non-representative member
-    of each eligible group: the LINEAR connectivity equivalent of the
-    quadratic intra-group pair expansion."""
-    return (
-        members.join(elig_groups.select("grp", "rid"), "grp")
-        .where(F.col("id") != F.col("rid"))
-        .select(F.col("rid").alias("id_a"), F.col("id").alias("id_b"))
-    )
-
-
-def _expand_pairs(
-    members: DataFrame,
-    rep_pairs: DataFrame,
-    value_col: str,
-    intra_value,
-    elig: DataFrame | None,
-) -> DataFrame:
-    """Shared rep→member pair expansion (the join choreography behind
-    both the MinHash and SimHash paths — one implementation so a fix in
-    one reaches the other): cross-group pairs inherit the
-    representatives' `value_col` (members of a group are exact dups of
-    their rep, so rep-to-rep distance IS member-to-member distance);
-    intra-group pairs get the exact-duplicate constant `intra_value`.
-
-    members:   (grp, id) — every document and its exact-dup group key;
-    rep_pairs: (grp_a, grp_b, value_col, ...) — verified rep pairs
-               carrying both group keys;
-    elig:      (grp) — groups eligible for intra pairs, or None when
-               EVERY group is eligible (the SimHash family: any
-               same-fingerprint group of size > 1 pairs, and singleton
-               groups emit nothing from a self-join anyway — skipping the
-               eligibility join saves a shuffle; MinHash keeps it for the
-               shingle-eligibility semantics)."""
-    cross = (
-        members.select(F.col("grp").alias("grp_a"), F.col("id").alias("ia"))
-        .join(F.broadcast(rep_pairs.select("grp_a", "grp_b", value_col)), "grp_a")
-        .join(
-            members.select(F.col("grp").alias("grp_b"), F.col("id").alias("ib")),
-            "grp_b",
-        )
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            value_col,
-        )
-    )
-    mi = members if elig is None else members.join(elig, "grp")
-    xi, yi = mi.alias("xi"), mi.alias("yi")
-    intra = (
-        xi.join(
-            yi,
-            (F.col("xi.grp") == F.col("yi.grp"))
-            & (F.col("xi.id") < F.col("yi.id")),
-        )
-        .select(
-            F.col("xi.id").alias("id_a"),
-            F.col("yi.id").alias("id_b"),
-            F.lit(intra_value).alias(value_col),
-        )
-    )
-    return cross.unionByName(intra)
-
-
-def expand_rep_pairs(
-    members: DataFrame, rep_pairs: DataFrame, ss: DataFrame
-) -> DataFrame:
-    """Expand verified representative pairs to member pairs (id_a, id_b,
-    jaccard): cross-group pairs inherit the representatives' jaccard
-    (identical normalized text => identical shingle set); intra-group
-    pairs are exact duplicates (jaccard 1.0).
-
-    members:   (grp, id) of every doc (dup_groups' docs projection);
-    rep_pairs: verify_rep_pairs output, carrying (grp_a, grp_b);
-    ss:        the rep-level sig table (id, s, bhs, grp, csize), in
-               session or read from stored chunks. Its rows are exactly
-               the shingle-eligible representatives, so intra pairs are
-               emitted for the groups with a sig row and csize > 1 —
-               docs without shingles have no jaccard to anything,
-               matching the exact oracle.
-
-    Text is never re-read here: every input is a (grp, id) projection, a
-    verified pair, or the sig table."""
-    elig = ss.filter(F.col("csize") > 1).select("grp")
-    return _expand_pairs(
-        members.select("grp", "id"), rep_pairs, "jaccard", 1.0, elig
     )
 
 
@@ -883,55 +825,35 @@ def simhash_pairs_from_fingerprints(
     expensive part) and for property-testing the blocking directly.
     Returns (id_a, id_b, hamming).
 
-    The fingerprint table is checkpointed once (linear, ~16 B/doc); the
-    collapsed rep table is cached only while the (tiny,
-    candidate-bounded) rep-level pairs are computed and checkpointed,
-    then released — no storage leak across repeated calls. The
-    member-level expansion stays LAZY (it can be quadratic for giant dup
-    clusters — never eagerly materialized here); at 10^12-doc scale use
-    expand_exact_dups=False (rep-level pairs + the dup-groups table) as
-    documented on minhash_lsh_pairs."""
-    sh, rep_pairs, _ = _simhash_rep_level(
-        sh, max_hamming, n_blocks, max_bucket, with_groups=False,
-    )
+    The fingerprint table is checkpointed once (linear, ~16 B/doc) and
+    the (tiny, candidate-bounded) rep-level pairs once, the bucket cache
+    being released after — no storage leak across repeated calls. The
+    member-level expansion (RepLevelRun.pairs) stays LAZY (it can be
+    quadratic for giant dup clusters — never eagerly materialized here);
+    at 10^12-doc scale use expand_exact_dups=False (rep-level pairs + the
+    dup-groups table) as documented on minhash_lsh_pairs."""
+    run = _simhash_rep_level(sh, max_hamming, n_blocks, max_bucket)
     if not expand_exact_dups:
-        return rep_pairs.select("id_a", "id_b", "hamming")
-    return expand_simhash_rep_pairs(sh, rep_pairs)
+        return run.rep_pairs.select("id_a", "id_b", "hamming")
+    return run.pairs()
 
 
-def _simhash_rep_level(
-    sh: DataFrame, max_hamming: int, n_blocks: int | None,
-    max_bucket: int | None, *, with_groups: bool,
-):
-    """Blocking + verify shared by simhash_pairs_from_fingerprints,
-    simhash_edges_from_fingerprints and CheckpointedSimhashDedup.
-    Returns (checkpointed sh, rep_pairs, rg): rep_pairs is the
-    checkpointed (id_a, id_b, hamming, grp_a, grp_b) table, the group
-    keys being the fingerprints themselves; rg is the (grp, rid, csize)
-    rep-group aggregate when with_groups (the edge path's star edges),
-    fused into the SAME localCheckpoint as rep_pairs, else None."""
-    # materialize the fingerprint table ONCE (localCheckpoint — linear,
-    # ~16 B/doc, nothing like the quadratic member-pair list): the plan
-    # branches (buckets, rep->group aggregate, member expansion) all
-    # read it without ever re-running the simhash kernel pass; the
-    # checkpoint blocks are freed when the returned frame is
-    # garbage-collected. With adaptive width the checkpoint is LAZY and
-    # the count() both materializes it and returns the size in ONE job.
-    if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
-        sh = sh.localCheckpoint(eager=n_blocks is not None)
-    if n_blocks is None:
-        # adaptive width (see simhash_pairs): this count is what
-        # materializes the lazy checkpoint — never a second text scan
-        n_blocks = 4 if sh.count() <= 200_000 else 6
-    # one representative per distinct fingerprint; the 8-byte fingerprint
-    # RIDES the bucket rows (payload_col) so the verify needs NO joins at
-    # all — each candidate pair arrives with both fingerprints attached
-    # (bands * 8 extra shuffle bytes instead of a broadcast + two join
-    # stages), and the candidate dedup runs AFTER the bit_count filter,
-    # shuffling only surviving pairs
-    groups = sh.groupBy("simhash").agg(
-        F.min("id").alias("id"), F.count(F.lit(1)).alias("csize")
-    )
+def simhash_rep_pairs(
+    sh: DataFrame, max_hamming: int, n_blocks: int,
+    max_bucket: int | None, *, release: list | None = None,
+) -> DataFrame:
+    """(id_a, id_b, hamming, grp_a, grp_b) rep-level near-dup pairs from a
+    fingerprint table (id, simhash) — the SimHash counterpart of
+    verify_rep_pairs, and like it a lazy plan. One representative
+    (minimum id) per distinct fingerprint; the group keys are the
+    fingerprints themselves. The 8-byte fingerprint RIDES the bucket
+    rows (payload_col), so the verify needs NO joins at all — each
+    candidate pair arrives with both fingerprints attached (bands * 8
+    extra shuffle bytes instead of a broadcast + two join stages) — and
+    the candidate dedup runs AFTER the bit_count filter, shuffling only
+    surviving pairs. `release` forwards to capped_candidate_pairs
+    (cache-release contract)."""
+    groups = sh.groupBy("simhash").agg(F.min("id").alias("id"))
     buckets = groups.select(
         "id", "simhash",
         F.explode(simhash_band_struct(n_blocks, max_hamming)).alias("bb"),
@@ -939,61 +861,65 @@ def _simhash_rep_level(
         "id", "simhash", F.col("bb.band").alias("band"),
         F.col("bb.bh").alias("bh"),
     )
-    handles: list = []
     cand = capped_candidate_pairs(
-        buckets, max_bucket, release=handles,
-        payload_col="simhash", distinct=False,
+        buckets, max_bucket, release=release, payload_col="simhash"
     )
-    rp = (
+    return (
         cand.select(
             "id_a", "id_b",
             F.bit_count(
                 F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
             ).alias("hamming"),
-            # the fingerprints ARE the group keys the expansion joins
-            # on (functions of the ids, so the dedup keeps a consistent
-            # value)
             F.col("simhash_a").alias("grp_a"),
             F.col("simhash_b").alias("grp_b"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-    if with_groups:
-        mem = sh.select(F.col("simhash").alias("grp"), "id")
-        combined = (
-            rp.select(F.lit(0).alias("part"),
-                      F.lit(None).cast("long").alias("grp"),
-                      "id_a", "id_b", "hamming", "grp_a", "grp_b")
-            .unionByName(
-                # the rep-group aggregate IS `groups` (min(id) = rid,
-                # count = csize, keyed by the fingerprint): reusing the
-                # same frame lets ReuseExchange serve this branch and
-                # the bucket branch from ONE groupBy(simhash) shuffle
-                groups.select(
-                    F.lit(1).alias("part"),
-                    F.col("simhash").alias("grp"),
-                    F.col("id").alias("id_a"),
-                    F.col("csize").alias("id_b"),
-                    F.lit(None).cast("int").alias("hamming"),
-                    F.lit(None).cast("long").alias("grp_a"),
-                    F.lit(None).cast("long").alias("grp_b"))
-            )
-            .transform(lambda u: _compact(u, sizer=mem))
-            .localCheckpoint(eager=True)  # rep_pairs candidate-bounded,
-        )                                 # rg ~24 B/distinct fingerprint
-        rep_pairs = combined.filter("part = 0").select(
-            "id_a", "id_b", "hamming", "grp_a", "grp_b"
-        )
-        rg = combined.filter("part = 1").select(
-            "grp", F.col("id_a").alias("rid"), F.col("id_b").alias("csize")
-        )
-    else:
-        rep_pairs = rp.localCheckpoint(eager=True)  # tiny: cand-bounded
-        rg = None
+
+
+def _simhash_run(sh: DataFrame, rep_pairs: DataFrame) -> RepLevelRun:
+    """The SimHash RepLevelRun over a fingerprint table (id, simhash), in
+    session or read from stored chunks: the fingerprint is the group key,
+    and every group is eligible (equal fingerprints are hamming 0)."""
+    members = sh.select(F.col("simhash").alias("grp"), "id")
+    reps = (
+        members.groupBy("grp")
+        .agg(F.min("id").alias("rid"), F.count(F.lit(1)).alias("csize"))
+        .filter(F.col("csize") > 1)
+        .select("grp", "rid")
+    )
+    return RepLevelRun(members, rep_pairs, reps, "hamming", 0)
+
+
+def _simhash_rep_level(
+    sh: DataFrame, max_hamming: int, n_blocks: int | None,
+    max_bucket: int | None,
+) -> RepLevelRun:
+    """The in-session SimHash RepLevelRun, shared by
+    simhash_pairs_from_fingerprints and simhash_edges_from_fingerprints.
+    Only the rep pairs are checkpointed; members and reps read the
+    fingerprint checkpoint lazily."""
+    # materialize the fingerprint table ONCE (localCheckpoint — linear,
+    # ~16 B/doc, nothing like the quadratic member-pair list): the plan
+    # branches (buckets, members, reps) all read it without ever
+    # re-running the simhash kernel pass; the checkpoint blocks are freed
+    # when the returned frames are garbage-collected. With adaptive width
+    # the checkpoint is LAZY and the count() both materializes it and
+    # returns the size in ONE job.
+    if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
+        sh = sh.localCheckpoint(eager=n_blocks is not None)
+    if n_blocks is None:
+        # adaptive width (see simhash_pairs): this count is what
+        # materializes the lazy checkpoint — never a second text scan
+        n_blocks = 4 if sh.count() <= 200_000 else 6
+    handles: list = []
+    rep_pairs = simhash_rep_pairs(
+        sh, max_hamming, n_blocks, max_bucket, release=handles
+    ).localCheckpoint(eager=True)  # tiny: candidate-bounded
     for fin in handles:
         fin()
-    return sh, rep_pairs, rg
+    return _simhash_run(sh, rep_pairs)
 
 
 def simhash_edges_from_fingerprints(
@@ -1001,39 +927,12 @@ def simhash_edges_from_fingerprints(
     max_bucket: int | None = 512,
 ) -> DataFrame:
     """(id_a, id_b) edge list whose connected components EQUAL those of
-    simhash_pairs_from_fingerprints(sh, ...): rep-level pairs plus one
-    member->representative star edge per identical-fingerprint duplicate —
-    the SimHash counterpart of minhash_lsh_edges (linear in corpus size
-    where the member-level pair list is quadratic in dup-cluster sizes;
-    connected components only need connectivity). Same fresh-attribute
-    branch ordering as minhash_lsh_edges (Spark 4.1 AQE checkpoint
-    quirk)."""
-    # materialize the fingerprint table ONCE for BOTH branches — passing
-    # raw simhash(df) output here must not run the text kernel twice
-    # (the pairs path checkpoints only its local copy)
-    sh, rep_pairs, rg = _simhash_rep_level(
-        sh, max_hamming, n_blocks, max_bucket, with_groups=True,
-    )
-    members = sh.select(F.col("simhash").alias("grp"), "id")
-    elig_groups = rg.filter(F.col("csize") > 1)
-    return _star_edges(members, elig_groups).unionByName(
-        rep_pairs.select("id_a", "id_b")
-    )
-
-
-def expand_simhash_rep_pairs(sh: DataFrame, rep_pairs: DataFrame) -> DataFrame:
-    """Expand rep-level SimHash pairs (carrying the fingerprints as
-    grp_a, grp_b — _simhash_rep_level output, in session or read from
-    stored chunks) to member pairs (id_a, id_b, hamming) over a
-    fingerprint table (id, simhash): cross-group pairs inherit the
-    representatives' hamming (equal simhash => equal distance to
-    everything); intra-group pairs are hamming 0. Integer shuffles only;
-    join choreography lives in _expand_pairs (one implementation for
-    both dedup families)."""
-    members = sh.select(F.col("simhash").alias("grp"), "id")
-    # elig=None: every same-fingerprint group is intra-eligible (see
-    # _expand_pairs) — singleton groups emit nothing from the self-join
-    return _expand_pairs(members, rep_pairs, "hamming", 0, None)
+    simhash_pairs_from_fingerprints(sh, ...) — RepLevelRun.edges() of
+    the same run: rep-level pairs plus one member -> representative star
+    edge per identical-fingerprint duplicate, the SimHash counterpart of
+    minhash_lsh_edges. The fingerprint table is checkpointed once for
+    both branches, so raw simhash(df) output runs the text kernel once."""
+    return _simhash_rep_level(sh, max_hamming, n_blocks, max_bucket).edges()
 
 
 # -- snapshot collapse --------------------------------------------------------

@@ -38,8 +38,7 @@ proportional to the INCREMENT, not the corpus:
   bucket's hashes ≈ tens of MB; 10^12 docs at fpr 1e-2 ≈ 1.2 TB of
   filter total, fine across 10k buckets / 1000 executors, never on one
   node). The only driver-side data is the candidate bucket-id list
-  (bounded by n_buckets, a config — same justification as
-  lsh_bucket_stats).
+  (bounded by n_buckets, a config).
 
 Equality is hash equality on (h, h2): 128 independent bits per
 normalized text, so a false "duplicate" verdict needs a double xxhash64

@@ -704,7 +704,7 @@ def lsh_buckets(
     seed: int = 42,
 ) -> DataFrame:
     """(id, band, bh) hyperplane-signature bucket table — the same shape
-    operators.dedup.capped_candidate_pairs / lsh_bucket_stats consume."""
+    operators.dedup.capped_candidate_pairs consumes."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_bands, n_planes, dim))
     # all bands in ONE GEMM: (n, dim) @ (dim, n_bands*n_planes). Each

@@ -27,7 +27,6 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 from typing import Iterator
 
@@ -229,18 +228,19 @@ def _unpack_partial(blob: bytes, spec: SketchSpec):
     return "partial", np.frombuffer(body, dtype=np.float64), None
 
 
+# Cache tiling: an Arrow batch (10k docs) spawns per-stage uint64
+# temporaries ~10-30x the text bytes; at full batch size every stage
+# round-trips DRAM, and DRAM bandwidth is the shared resource that caps
+# 4->16-slot scaling on one socket. Processing a cache-sized slice of
+# documents at a time keeps the hash/shingle intermediates
+# L2/L3-resident; the (bin, spec) buffers already accumulate across
+# slices, so output is unchanged.
+_CHUNK_DOCS = 2048
+
+
 def _partial_builder(specs: list[SketchSpec], has_html: bool):
     dense = {s.name: _dense_bytes(s) for s in specs}
     by_name = {s.name: s for s in specs}
-
-    # Cache tiling: an Arrow batch (10k docs) spawns per-stage uint64
-    # temporaries ~10-30x the text bytes; at full batch size every stage
-    # round-trips DRAM, and DRAM bandwidth is the shared resource that
-    # caps 4->16-slot scaling on one socket (see scripts/membw_probe.py).
-    # Processing a cache-sized slice of documents at a time keeps the
-    # hash/shingle intermediates L2/L3-resident; the (bin, spec) buffers
-    # already accumulate across slices, so output is unchanged.
-    chunk_docs = int(os.environ.get("TETREX_CHUNK_DOCS", "2048"))
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # (bin, spec) -> either buffered arrays or a materialized sketch
@@ -291,11 +291,11 @@ def _partial_builder(specs: list[SketchSpec], has_html: bool):
         for whole in batches:
             if whole.empty:
                 continue
-            if len(whole) <= chunk_docs:
+            if len(whole) <= _CHUNK_DOCS:
                 _consume_chunk(whole)
             else:
-                for lo in range(0, len(whole), chunk_docs):
-                    _consume_chunk(whole.iloc[lo : lo + chunk_docs])
+                for lo in range(0, len(whole), _CHUNK_DOCS):
+                    _consume_chunk(whole.iloc[lo : lo + _CHUNK_DOCS])
 
         out = {"bin_id": [], "name": [], "payload": [], "n_items": []}
         for kk, sk in sketches.items():

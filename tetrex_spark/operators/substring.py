@@ -244,8 +244,7 @@ def substring_dup_spans(
     )
     handles: list = []
     cand = capped_candidate_pairs(
-        buckets, max_bucket, release=handles,
-        payload_col="pos", distinct=False,
+        buckets, max_bucket, release=handles, payload_col="pos"
     )
     pair_anchors = (
         cand.groupBy("id_a", "id_b")
