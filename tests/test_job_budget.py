@@ -152,3 +152,76 @@ def test_motif_index_job_budget(spark, tmp_path):
     assert loaded.dgram.max_gap == 21
     assert n_load == 0, f"MotifIndex.load ran {n_load} jobs"
     corpus.unpersist()
+
+
+def test_sketch_stream_append_job_budget(spark, tmp_path):
+    """A SketchStream append onto existing state: the stored state rows
+    and the batch's partial sketches meet in one merge exchange, and the
+    state is read with the schema recorded in its parquet footer, so no
+    schema-inference job runs."""
+    from tetrex_spark.operators.sketch_build import SketchSpec
+    from tetrex_spark.sources.corpus import webtext_small, with_bin_id
+    from tetrex_spark.streaming.sketch_stream import SketchStream
+
+    corpus = with_bin_id(webtext_small(spark), 8).cache()
+    corpus.count()
+    ss = SketchStream(str(tmp_path / "state"), [
+        SketchSpec("hll", "hll", "token_shingle", k=2, params={"p": 11}),
+        SketchSpec("cms", "cms", "token", k=1, params={"width": 2048, "depth": 5}),
+    ], n_bins=8)
+    ss.process_batch(corpus.filter("pmod(xxhash64(url), 2) = 0"), 0)
+    _, n_jobs = _jobs(spark, "stream-append", lambda: ss.process_batch(
+        corpus.filter("pmod(xxhash64(url), 2) = 1"), 1))
+    assert ss.current_version() == 1
+    # 2 jobs when written (the merge exchange + the state write), + 1 slack
+    assert n_jobs <= 3, f"SketchStream append ran {n_jobs} jobs"
+    corpus.unpersist()
+
+
+def _gate_text(i, edit=""):
+    return (f"crawl page {i} about engine internals {i * 17} and the partition "
+            f"shuffle topic {i % 13} {edit} with a cookie notice and more words")
+
+
+@pytest.fixture(scope="module")
+def gate_paths(spark, tmp_path_factory):
+    """A 400-doc reference corpus and a 300-doc increment of it: 100 exact
+    copies, 100 one-word edits, 100 fresh pages."""
+    root = tmp_path_factory.mktemp("gates")
+    ref = [(i, _gate_text(i)) for i in range(400)]
+    inc = ([(1000 + i, _gate_text(i)) for i in range(100)]
+           + [(1100 + i, _gate_text(100 + i, "zq9")) for i in range(100)]
+           + [(1200 + i, _gate_text(5000 + i)) for i in range(100)])
+    paths = {"ref": str(root / "ref"), "inc": str(root / "inc")}
+    spark.createDataFrame(ref, "doc_id long, text string").write.parquet(paths["ref"])
+    spark.createDataFrame(inc, "doc_id long, text string").write.parquet(paths["inc"])
+    return paths
+
+
+@pytest.mark.parametrize("gate,index,budget", [
+    # measured 17 / 21 jobs (+1 with --new-only), + 3 slack
+    ("membgate", "membindex", 20),
+    ("ndgate", "ndindex", 24),
+])
+def test_cli_gate_job_budget(spark, gate_paths, tmp_path, gate, index, budget):
+    """`cli membgate` / `cli ndgate`: the verdict plan runs once (an eager
+    local checkpoint) and feeds both the write and one aggregate for the
+    printed new/total counts, instead of two counts that each re-run the
+    whole gate."""
+    import contextlib
+    import io
+
+    from tetrex_spark import cli
+
+    idx = str(tmp_path / "idx")
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert cli.main([index, "--corpus", gate_paths["ref"], "--output", idx]) == 0
+    for extra in ([], ["--new-only"]):
+        with contextlib.redirect_stdout(io.StringIO()) as out:
+            rc, n_jobs = _jobs(spark, f"{gate}{extra}", lambda: cli.main([
+                gate, "--increment", gate_paths["inc"], "--index", idx,
+                "--output", str(tmp_path / f"out{len(extra)}"), *extra,
+            ]))
+        assert rc == 0 and "/300 increment docs are new." in out.getvalue()
+        limit = budget + len(extra)
+        assert n_jobs <= limit, f"{gate} {extra} ran {n_jobs} jobs"

@@ -132,7 +132,8 @@ def test_real_audio_video_raise_when_libs_absent():
 
 def test_stream_equals_batch(spark, tmp_path):
     """Feeding the corpus in two file drops through the streaming path
-    must produce byte-identical lattice sketches to one batch build."""
+    must produce byte-identical lattice sketches (bloom, hll, cms) and
+    equal item counts to one batch build."""
     from tetrex_spark.operators.sketch_build import SketchSpec, build_sketches
     from tetrex_spark.sources.corpus import webtext_small, with_bin_id
     from tetrex_spark.streaming.sketch_stream import SketchStream
@@ -142,9 +143,10 @@ def test_stream_equals_batch(spark, tmp_path):
         SketchSpec("bloom", "bloom", "token_shingle", k=2,
                    params={"m_bits": 1 << 14, "n_hashes": 3}),
         SketchSpec("hll", "hll", "token_shingle", k=2, params={"p": 11}),
+        SketchSpec("cms", "cms", "token", k=1, params={"width": 2048, "depth": 5}),
     ]
     batch = {
-        (r["bin_id"], r["name"]): bytes(r["payload"])
+        (r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"])
         for r in build_sketches(corpus, specs).collect()
     }
 
@@ -165,7 +167,7 @@ def test_stream_equals_batch(spark, tmp_path):
     assert ss.current_version() > v1
 
     streamed = {
-        (r["bin_id"], r["name"]): bytes(r["payload"])
+        (r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"])
         for r in ss.current_state(spark).collect()
     }
     assert streamed == batch

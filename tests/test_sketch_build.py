@@ -7,6 +7,7 @@ import pytest
 
 from tetrex_spark.functions.text import corpus_text_series, token_shingle_hashes_series
 from tetrex_spark.kernel import from_bytes
+from tetrex_spark.operators import sketch_build
 from tetrex_spark.operators.sketch_build import (
     SketchSpec,
     build_sketches,
@@ -123,13 +124,30 @@ def test_deterministic_across_parallelism(spark, corpus):
     assert ka == kb
 
 
-def test_two_level_merge_same_result(corpus):
-    sp = [s for s in specs() if s.kind in ("bloom", "hll", "cms")]
-    wide = build_sketches(corpus.repartition(16), sp, fanin=4).collect()
-    narrow = build_sketches(corpus.repartition(16), sp, fanin=1000).collect()
-    kw = {(r["bin_id"], r["name"]): bytes(r["payload"]) for r in wide}
-    kn = {(r["bin_id"], r["name"]): bytes(r["payload"]) for r in narrow}
-    assert kw == kn
+def test_two_level_merge_same_result(corpus, monkeypatch):
+    """All five kinds through the salted inner level (16 partitions, fan-in
+    4) vs the final level alone: equal n_items, byte-identical payloads
+    for bloom/hll/cms/tdigest. KLL keeps level-0 items in arrival order,
+    which the tree shape permutes, so its payloads must hold the same
+    items per level (the same sketch, up to that order)."""
+    wide_input = corpus.repartition(16)
+    narrow = build_sketches(wide_input, specs()).collect()
+    monkeypatch.setattr(sketch_build, "_FANIN", 4)
+    plan = sketch_build.sketch_partials(wide_input, specs())._jdf.queryExecution()
+    assert "FlatMapGroupsInPandas" in plan.executedPlan().toString()  # inner level on
+    wide = build_sketches(wide_input, specs()).collect()
+    kw = {(r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"]) for r in wide}
+    kn = {(r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"]) for r in narrow}
+    assert kw.keys() == kn.keys()
+    for key, (payload, n_items) in kw.items():
+        assert n_items == kn[key][1], key
+        if key[1] != "len_kll":
+            assert payload == kn[key][0], key
+            continue
+        a, b = from_bytes(payload), from_bytes(kn[key][0])
+        assert a.n == b.n and len(a.levels) == len(b.levels), key
+        for la, lb in zip(a.levels, b.levels):
+            assert np.array_equal(np.sort(la), np.sort(lb)), key
 
 
 def test_n_items_matches_exact_shingle_count(built, corpus_pdf):

@@ -328,10 +328,13 @@ def cmd_stripdup(args) -> int:
     lowest doc key survives). Span discovery runs ONCE; the committed
     spans/ parquet feeds the cleaning pass. The surviving copy is picked
     by the smallest doc key: the id column itself when integral, else a
-    deterministic xxhash64 of it (stable but arbitrary precedence)."""
+    deterministic xxhash64 of it (stable but arbitrary precedence). The
+    printed counts are read from the written parquet footers on the
+    driver, so --output must be a driver-local path."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    from .lineage import parquet_rows, read_stored
     from .operators.substring import strip_dup_spans, substring_dup_spans
 
     spark = _spark("stripdup")
@@ -350,7 +353,7 @@ def cmd_stripdup(args) -> int:
         all_spans=True, text_col=args.text_col, id_col="_did",
     )
     spans.write.mode("overwrite").parquet(f"{args.output}/spans")
-    stored = spark.read.parquet(f"{args.output}/spans")
+    stored = read_stored(spark, f"{args.output}/spans")
     clean = strip_dup_spans(
         keyed, args.min_len, args.k, spans=stored,
         text_col=args.text_col, id_col="_did",
@@ -363,10 +366,9 @@ def cmd_stripdup(args) -> int:
             ids, clean["doc_id"] == ids["_did"]
         ).select(args.id_col, "clean_text")
     out.write.mode("overwrite").parquet(f"{args.output}/clean")
-    n_docs = spark.read.parquet(f"{args.output}/clean").count()
     print(
-        f"Stripped {stored.count()} duplicated spans "
-        f"across {n_docs} documents."
+        f"Stripped {parquet_rows(f'{args.output}/spans')} duplicated spans "
+        f"across {parquet_rows(f'{args.output}/clean')} documents."
     )
     return 0
 
@@ -390,31 +392,49 @@ def cmd_membindex(args) -> int:
     return 0
 
 
+def _write_verdicts(docs, verdict, id_col: str, flag: str,
+                    flagged_only: bool, path: str) -> tuple[int, int]:
+    """Write `verdict` (one row per doc of `docs`: id_col, the boolean
+    column `flag`, ...) to `path` — or, with `flagged_only`, the rows of
+    `docs` whose flag is true — and return the verdict's (flagged, total)
+    counts. The verdict plan runs once: an eager localCheckpoint feeds
+    the write and one aggregate for both counts."""
+    from pyspark.sql import functions as F
+
+    verdict = verdict.localCheckpoint(eager=True)
+    out = (
+        docs.join(verdict.filter(F.col(flag)).select(id_col), id_col)
+        if flagged_only else verdict
+    )
+    out.write.mode("overwrite").parquet(path)
+    row = verdict.agg(
+        F.count(F.when(F.col(flag), 1)).alias("flagged"),
+        F.count(F.lit(1)).alias("total"),
+    ).collect()[0]
+    return row["flagged"], row["total"]
+
+
+def _gate(args, app: str, gate, label: str) -> int:
+    """Shared body of the gate commands: verdict an increment against a
+    frozen index with `gate`, write it and print the new/total line."""
+    spark = _spark(app)
+    inc = read_corpus(spark, args.increment)
+    verdict = gate(inc, args.index, text_col=args.text_col, id_col=args.id_col)
+    n_new, n_all = _write_verdicts(
+        inc, verdict, args.id_col, "is_new", args.new_only, args.output
+    )
+    print(f"{label}: {n_new}/{n_all} increment docs are new.")
+    return 0
+
+
 def cmd_membgate(args) -> int:
     """Gate a crawl increment against a frozen membership index: write
     (id, is_new) verdicts, or only the new rows with --new-only. Cost is
     proportional to the increment; the reference corpus is never read
     beyond the candidate buckets' hash files."""
-    from pyspark.sql import functions as F
-
     from .operators.incremental import incremental_exact_dedup
 
-    spark = _spark("membgate")
-    inc = read_corpus(spark, args.increment)
-    verdict = incremental_exact_dedup(
-        inc, args.index, text_col=args.text_col, id_col=args.id_col
-    )
-    if args.new_only:
-        out = inc.join(
-            verdict.filter("is_new").select(args.id_col), args.id_col
-        )
-    else:
-        out = verdict
-    out.write.mode("overwrite").parquet(args.output)
-    n_new = verdict.filter("is_new").count()
-    n_all = verdict.count()
-    print(f"Gate: {n_new}/{n_all} increment docs are new.")
-    return 0
+    return _gate(args, "membgate", incremental_exact_dedup, "Gate")
 
 
 def cmd_ndindex(args) -> int:
@@ -445,29 +465,12 @@ def cmd_ndgate(args) -> int:
     candidates; the frozen corpus text is never read."""
     from .operators.incremental import incremental_neardup_gate
 
-    spark = _spark("ndgate")
-    inc = read_corpus(spark, args.increment)
-    verdict = incremental_neardup_gate(
-        inc, args.index, text_col=args.text_col, id_col=args.id_col
-    )
-    if args.new_only:
-        out = inc.join(
-            verdict.filter("is_new").select(args.id_col), args.id_col
-        )
-    else:
-        out = verdict
-    out.write.mode("overwrite").parquet(args.output)
-    n_new = verdict.filter("is_new").count()
-    n_all = verdict.count()
-    print(f"Near-dup gate: {n_new}/{n_all} increment docs are new.")
-    return 0
+    return _gate(args, "ndgate", incremental_neardup_gate, "Near-dup gate")
 
 
 def cmd_decont(args) -> int:
     """Flag (or drop, with --clean-only) training docs sharing token
     n-grams with a benchmark/eval set."""
-    from pyspark.sql import functions as F
-
     from .operators.decontam import decontaminate
 
     spark = _spark("decont")
@@ -478,15 +481,10 @@ def cmd_decont(args) -> int:
         text_col=args.text_col, id_col=args.id_col,
         bench_text_col=args.bench_text_col,
     )
-    if args.clean_only:
-        out = docs.join(
-            verdict.filter("is_clean").select(args.id_col), args.id_col
-        )
-    else:
-        out = verdict
-    out.write.mode("overwrite").parquet(args.output)
-    n_bad = verdict.filter(~F.col("is_clean")).count()
-    n_all = verdict.count()
+    n_clean, n_all = _write_verdicts(
+        docs, verdict, args.id_col, "is_clean", args.clean_only, args.output
+    )
+    n_bad = n_all - n_clean
     print(f"Decontamination: {n_bad}/{n_all} docs contaminated.")
     return 0
 

@@ -19,8 +19,8 @@ shares one checkpoint-dir layout:
 
 A parquet write is atomic via _SUCCESS, and only then does the lineage
 record commit the stage. Resume = skip committed stages; a sketch build's
-finalize merges all chunk partials with the same associative merge the
-two-level tree uses, so a resumed build is byte-identical (lattice
+finalize merges all chunk rows with the build's own final level
+(merge_sketch_rows), so a resumed build is byte-identical (lattice
 sketches) to a single-shot one — property-tested. Build ids never share
 artifact paths, so two builds in one dir cannot mix their chunks.
 
@@ -41,7 +41,7 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.sketch_build import SKETCH_ROW_SCHEMA, SketchSpec, _merger, build_sketches
+from .operators.sketch_build import SketchSpec, build_sketches, merge_sketch_rows
 
 if TYPE_CHECKING:
     from .operators.dedup import RepLevelRun
@@ -275,15 +275,16 @@ class CheckpointedBuild(_StagedCheckpoint):
         return self.finalize(corpus.sparkSession)
 
     def finalize(self, spark: SparkSession) -> DataFrame:
-        """Merge every committed chunk's partials -> final sketch rows."""
+        """Every committed chunk's sketch rows -> final sketch rows, one
+        per (bin, spec), through the build's own final level
+        (merge_sketch_rows)."""
         missing = set(range(self.n_chunks)) - self.committed_chunks()
         if missing:
             raise RuntimeError(f"cannot finalize: chunks {sorted(missing)} not committed")
-        return (
+        return merge_sketch_rows(
             read_stored(spark, *self._chunk_paths("chunks"))
-            .select("bin_id", "name", "payload", "n_items")
-            .groupBy("bin_id", "name")
-            .applyInPandas(_merger, SKETCH_ROW_SCHEMA)
+            .select("bin_id", "name", "payload", "n_items"),
+            self.specs,
         )
 
     def skew_report(self) -> dict:

@@ -374,7 +374,7 @@ def _pack_blocks(
     ~block*d*8 bytes — the unit every blocked cosine operator below
     shuffles and matmuls."""
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy(np.int64)
         order = np.argsort(ids)
         ids = ids[order]

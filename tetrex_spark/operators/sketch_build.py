@@ -5,22 +5,29 @@ The reference's index build (populate_index,
 sizes the filter to the largest bin (A2, :133-139) and bulk-inserts (A3,
 :88-99) — all single-process. The Spark-first re-expression:
 
-  stage 1 (map side, NO shuffle of raw data):
+  stage 1 (map side, NO shuffle of raw data) — sketch_partials:
       mapInPandas over corpus partitions; each task folds its rows into
-      one partial sketch per (bin_id, spec) it sees, Arrow-batch at a
-      time, fully numpy-vectorized. This is the map-side combine: the
-      shuffle then moves only serialized payloads (KB), never shingles.
-  stage 2 (merge tree):
-      groupBy(bin_id, name) + applyInPandas merging payloads. When the
-      task count is large an intermediate salted level caps the fan-in
-      (the treeAggregate shape, but expressed on DataFrames so AQE still
-      plans it).
+      one partial per (bin_id, spec) it sees, Arrow-batch at a time, fully
+      numpy-vectorized: a compact partial (reduced keys) while that is
+      smaller than the dense sketch, else the dense sketch (_payload holds
+      the rule). The shuffle then moves only serialized payloads, never
+      shingles. When the task count is large, a salted inner level merges
+      ~_FANIN partials per bucket and keeps its output compact (the
+      treeAggregate shape, but expressed on DataFrames so AQE still plans
+      it).
+  stage 2 (final level) — merge_sketch_rows:
+      groupBy(bin_id, name) + applyInPandas with the one merger, which
+      takes any mix of dense sketches and compact partials and emits one
+      dense row per (bin, spec). Its three callers: build_sketches (over
+      sketch_partials), CheckpointedBuild.finalize (over the stored chunk
+      rows) and SketchStream.process_batch (over the previous state plus
+      the batch's partials, in one exchange).
 
 Scale notes (100 TB / 1000 executors):
   - raw keys never shuffle; partial count = tasks x bins-per-task.
-  - merge fan-in capped by `fanin` via a deterministic-enough salt
+  - merge fan-in capped by _FANIN via a deterministic-enough salt
     (spark_partition_id); merge is associative+commutative so grouping
-    layout cannot change results (property-tested).
+    layout cannot change lattice results (property-tested).
   - skewed hosts don't skew this build: partials are per *task*, so a hot
     bin simply appears in more tasks; no repartition-by-bin is needed.
 """
@@ -52,6 +59,7 @@ SKETCH_ROW_SCHEMA = T.StructType(
 KEY_SOURCES = ("token_shingle", "char_kgram", "token", "dgram")
 VALUE_SOURCES = ("doc_length_chars", "doc_length_tokens")
 DGRAM_PAD = 3  # fixed 3+3 d-gram pads, like the reference (dGramIndex.h)
+_FANIN = 64  # partials per inner-level bucket; the inner level engages above 2x
 
 
 @dataclass(frozen=True)
@@ -147,11 +155,6 @@ class _BatchDerived:
         raise AssertionError(spec.source)
 
 
-def _extract(spec: SketchSpec, text: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """(concatenated keys/values, per-doc counts) for one Arrow batch."""
-    return _BatchDerived(text).extract(spec)
-
-
 def _dense_bytes(spec: SketchSpec) -> int:
     """Approximate serialized size of the dense sketch — the spill/compact
     threshold."""
@@ -165,67 +168,86 @@ def _dense_bytes(spec: SketchSpec) -> int:
     return 4096  # kll / tdigest payloads are small and value-count-bound
 
 
-def _update_sketch(spec: SketchSpec, sk, keys: np.ndarray, counts: np.ndarray | None):
-    if spec.kind == "cms" and counts is not None:
+def _payload(spec: SketchSpec, sk, keys=None, counts=None, *, compact=False) -> bytes:
+    """The one exit of a sketch row: a dense sketch `sk` and/or pending
+    keys/values (`counts` per key, CMS only; either may be None, not
+    both) -> payload.
+
+    With `compact` and no dense sketch, the keys are reduced — unique keys
+    (bloom/hll), unique (key, count) pairs (cms), float64 values
+    (kll/tdigest) — and shipped as a `partial` payload while that is
+    smaller than the dense sketch (_dense_bytes). This is A1, the
+    reference's per-bin k-mer buffering before the filter is built
+    (include/index_ibf.h:71-99), made distributed: sparse (task, bin)
+    segments shuffle their keys, not full bitmaps, and inner merge levels
+    stay compact instead of multiplying shuffle bytes by the fan-out.
+    Otherwise the keys fold into the sketch, which is serialized."""
+    if keys is None:
+        return sk.to_bytes()
+    if compact and sk is None:
+        if spec.kind in ("bloom", "hll"):
+            keys = np.unique(keys)
+            form, body = "keys", keys.tobytes()
+        elif spec.kind == "cms":
+            if counts is None:
+                keys, counts = np.unique(keys, return_counts=True)
+            else:
+                keys, inv = np.unique(keys, return_inverse=True)
+                summed = np.zeros(keys.size, dtype=np.int64)
+                np.add.at(summed, inv, counts)
+                counts = summed
+            form, body = "pairs", keys.tobytes() + counts.astype(np.int64).tobytes()
+        else:
+            keys = keys.astype(np.float64)
+            form, body = "values", keys.tobytes()
+        if len(body) < _dense_bytes(spec):
+            return pack_payload("partial", {"spec": spec.name, "form": form}, body)
+    if sk is None:
+        sk = spec.make()
+    if counts is not None:
         sk.update(keys, counts)
     else:
         sk.update(keys)
-    return sk
+    return sk.to_bytes()
 
 
-def _compact(spec: SketchSpec, bufs: list[np.ndarray]) -> tuple[bytes, object | None]:
-    """Buffered keys/values of one (bin, spec) -> the smaller of a compact
-    raw partial or the dense sketch. The raw-buffer path is the analog of
-    the reference's A1 per-bin k-mer buffering before init_ibf
-    (/root/reference/include/index_ibf.h:71-99): the shuffle then moves
-    unique keys (or key-count pairs), not full bitmaps — typically 10-100x
-    less traffic for sparse (task, bin) segments."""
-    allv = np.concatenate(bufs)
-    dense = _dense_bytes(spec)
-    if spec.kind in ("bloom", "hll"):
-        u = np.unique(allv)
-        if u.nbytes < dense:
-            return pack_payload(
-                "partial", {"spec": spec.name, "form": "keys"}, u.tobytes()
-            ), None
-    elif spec.kind == "cms":
-        u, c = np.unique(allv, return_counts=True)
-        if u.nbytes * 2 < dense:
-            body = u.tobytes() + c.astype(np.int64).tobytes()
-            return pack_payload(
-                "partial", {"spec": spec.name, "form": "pairs"}, body
-            ), None
-    else:  # kll / tdigest: raw float values
-        if allv.nbytes < dense:
-            return pack_payload(
-                "partial", {"spec": spec.name, "form": "values"},
-                allv.astype(np.float64).tobytes(),
-            ), None
-    sk = spec.make()
-    if spec.kind == "cms":
-        u, c = np.unique(allv, return_counts=True)
-        sk.update(u, c)
-    else:
-        sk.update(allv)
-    return sk.to_bytes(), sk
+def _merger(specs: list[SketchSpec], compact: bool):
+    """applyInPandas body merging one (bin_id, name) group of sketch rows,
+    whatever mix of dense sketches and compact partials it holds: dense
+    sketches merge, partial keys concatenate, and the row exits through
+    _payload. `compact` keeps an all-partial group compact (inner tree
+    levels); without it the row is dense (the final level)."""
+    by_name = {s.name: s for s in specs}
 
-
-def _unpack_partial(blob: bytes, spec: SketchSpec):
-    """-> ('partial', keys, counts) | ('sketch', sketch, None)."""
-    kind, params, body = unpack_payload(bytes(blob))
-    if kind != "partial":
-        return "sketch", from_bytes(bytes(blob)), None
-    form = params["form"]
-    if form == "keys":
-        return "partial", np.frombuffer(body, dtype=np.uint64), None
-    if form == "pairs":
-        half = len(body) // 2
-        return (
-            "partial",
-            np.frombuffer(body[:half], dtype=np.uint64),
-            np.frombuffer(body[half:], dtype=np.int64),
+    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        spec = by_name[pdf["name"].iloc[0]]
+        sk, keys, counts = None, [], []
+        for blob in pdf["payload"]:
+            kind, params, body = unpack_payload(bytes(blob))
+            if kind != "partial":
+                part = from_bytes(bytes(blob))
+                sk = part if sk is None else sk.merge(part)
+            elif params["form"] == "pairs":
+                half = len(body) // 2
+                keys.append(np.frombuffer(body[:half], dtype=np.uint64))
+                counts.append(np.frombuffer(body[half:], dtype=np.int64))
+            else:
+                dtype = np.float64 if params["form"] == "values" else np.uint64
+                keys.append(np.frombuffer(body, dtype=dtype))
+        payload = _payload(
+            spec, sk,
+            np.concatenate(keys) if keys else None,
+            np.concatenate(counts) if counts else None,
+            compact=compact,
         )
-    return "partial", np.frombuffer(body, dtype=np.float64), None
+        return pd.DataFrame({
+            "bin_id": [pdf["bin_id"].iloc[0]],
+            "name": [spec.name],
+            "payload": [payload],
+            "n_items": [int(pdf["n_items"].sum())],
+        })
+
+    return merge
 
 
 # Cache tiling: an Arrow batch (10k docs) spawns per-stage uint64
@@ -278,7 +300,7 @@ def _partial_builder(specs: list[SketchSpec], has_html: bool):
                     kk = (int(b), spec.name)
                     items[kk] = items.get(kk, 0) + seg.size
                     if kk in sketches:
-                        _update_sketch(spec, sketches[kk], seg, None)
+                        sketches[kk].update(seg)
                         continue
                     bufs.setdefault(kk, []).append(seg)
                     buf_bytes[kk] = buf_bytes.get(kk, 0) + seg.nbytes
@@ -286,7 +308,7 @@ def _partial_builder(specs: list[SketchSpec], has_html: bool):
                         # buffer outgrew the dense form: spill into a sketch
                         allv = np.concatenate(bufs.pop(kk))
                         buf_bytes.pop(kk)
-                        sketches[kk] = _update_sketch(spec, spec.make(), allv, None)
+                        sketches[kk] = spec.make().update(allv)
 
         for whole in batches:
             if whole.empty:
@@ -298,120 +320,27 @@ def _partial_builder(specs: list[SketchSpec], has_html: bool):
                     _consume_chunk(whole.iloc[lo : lo + _CHUNK_DOCS])
 
         out = {"bin_id": [], "name": [], "payload": [], "n_items": []}
-        for kk, sk in sketches.items():
+        for kk, n in items.items():
+            buf = bufs.get(kk)
             out["bin_id"].append(kk[0])
             out["name"].append(kk[1])
-            out["payload"].append(sk.to_bytes())
-            out["n_items"].append(items[kk])
-        for kk, arrs in bufs.items():
-            blob, _ = _compact(by_name[kk[1]], arrs)
-            out["bin_id"].append(kk[0])
-            out["name"].append(kk[1])
-            out["payload"].append(blob)
-            out["n_items"].append(items[kk])
+            out["payload"].append(_payload(
+                by_name[kk[1]], sketches.get(kk),
+                None if buf is None else np.concatenate(buf), compact=True,
+            ))
+            out["n_items"].append(n)
         if out["bin_id"]:
             yield pd.DataFrame(out)
 
     return fn
 
 
-def _make_merger(specs: list[SketchSpec], final: bool = True):
-    """Merge partial rows per group. With final=False (intermediate tree
-    levels) the output stays in COMPACT form whenever that is smaller than
-    the dense sketch — densifying at inner levels would multiply shuffle
-    bytes by the fan-out (observed 20k premature bitmaps = more CPU than
-    the whole build). Only the last level materializes dense sketches."""
-    by_name = {s.name: s for s in specs}
-
-    def merger(pdf: pd.DataFrame) -> pd.DataFrame:
-        name = pdf["name"].iloc[0]
-        spec = by_name[name]
-        sk = None
-        pending: list[tuple[np.ndarray, np.ndarray | None]] = []
-        for blob in pdf["payload"]:
-            what, a, c = _unpack_partial(blob, spec)
-            if what == "sketch":
-                sk = a if sk is None else sk.merge(a)
-            else:
-                pending.append((a, c))
-        row = {
-            "bin_id": [pdf["bin_id"].iloc[0]],
-            "name": [name],
-            "n_items": [int(pdf["n_items"].sum())],
-        }
-        if pending:
-            keys = np.concatenate([p[0] for p in pending])
-            counts = (
-                np.concatenate([p[1] for p in pending])
-                if spec.kind == "cms"
-                else None
-            )
-            if sk is None and not final:
-                # all-compact group at an inner level: re-compact
-                if spec.kind == "cms":
-                    u, inv = np.unique(keys, return_inverse=True)
-                    summed = np.zeros(u.size, dtype=np.int64)
-                    np.add.at(summed, inv, counts)
-                    if u.nbytes * 2 < _dense_bytes(spec):
-                        row["payload"] = [pack_payload(
-                            "partial", {"spec": name, "form": "pairs"},
-                            u.tobytes() + summed.tobytes())]
-                        return pd.DataFrame(row)
-                    keys, counts = u, summed
-                elif spec.kind in ("bloom", "hll"):
-                    u = np.unique(keys)
-                    if u.nbytes < _dense_bytes(spec):
-                        row["payload"] = [pack_payload(
-                            "partial", {"spec": name, "form": "keys"},
-                            u.tobytes())]
-                        return pd.DataFrame(row)
-                    keys = u
-                else:
-                    if keys.nbytes < _dense_bytes(spec):
-                        row["payload"] = [pack_payload(
-                            "partial", {"spec": name, "form": "values"},
-                            keys.astype(np.float64).tobytes())]
-                        return pd.DataFrame(row)
-            if sk is None:
-                sk = spec.make()
-            _update_sketch(spec, sk, keys, counts)
-        elif sk is None:
-            sk = spec.make()
-        row["payload"] = [sk.to_bytes()]
-        return pd.DataFrame(row)
-
-    return merger
-
-
-def _merger(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge rows that are all REAL sketches (final-table merging, used by
-    lineage finalize and streaming state union — compact partials never
-    appear there)."""
-    sk = from_bytes(bytes(pdf["payload"].iloc[0]))
-    for blob in pdf["payload"].iloc[1:]:
-        sk.merge(from_bytes(bytes(blob)))
-    return pd.DataFrame(
-        {
-            "bin_id": [pdf["bin_id"].iloc[0]],
-            "name": [pdf["name"].iloc[0]],
-            "payload": [sk.to_bytes()],
-            "n_items": [int(pdf["n_items"].sum())],
-        }
-    )
-
-
-def build_sketches(
-    corpus: DataFrame,
-    specs: list[SketchSpec],
-    *,
-    fanin: int = 64,
-) -> DataFrame:
-    """corpus (must carry bin_id, text[, html]) -> sketch rows
-    (bin_id, name, payload, n_items), one row per (bin, spec).
-
-    Two-level merge tree engages automatically when the input has more
-    partitions than `fanin` — partial rows first combine within salted
-    sub-groups, then per (bin, name)."""
+def sketch_partials(corpus: DataFrame, specs: list[SketchSpec]) -> DataFrame:
+    """corpus (must carry bin_id, text[, html]) -> partial sketch rows
+    (SKETCH_ROW_SCHEMA), each a dense sketch or a compact partial, any
+    number per (bin, spec): the map side, plus the salted inner merge
+    level when the input has more than 2 x _FANIN partitions (~_FANIN
+    partials per bucket, compact output). Finish with merge_sketch_rows."""
     if "bin_id" not in corpus.columns:
         raise ValueError("corpus needs a bin_id column (sources.corpus.with_bin_id)")
     has_html = "html" in corpus.columns
@@ -420,19 +349,32 @@ def build_sketches(
         _partial_builder(specs, has_html), SKETCH_ROW_SCHEMA
     )
     n_parts = corpus.rdd.getNumPartitions()
-    if n_parts > 2 * fanin:
-        # intermediate level: ~fanin partials per bucket, compact output
-        inner = _make_merger(specs, final=False)
-        n_buckets = (n_parts + fanin - 1) // fanin
-        salted = partials.withColumn(
-            "salt", (F.spark_partition_id() % F.lit(n_buckets)).cast("int")
+    if n_parts > 2 * _FANIN:
+        n_buckets = (n_parts + _FANIN - 1) // _FANIN
+        partials = (
+            partials.withColumn(
+                "salt", (F.spark_partition_id() % F.lit(n_buckets)).cast("int")
+            )
+            .groupBy("bin_id", "name", "salt")
+            .applyInPandas(_merger(specs, compact=True), SKETCH_ROW_SCHEMA)
         )
-        partials = salted.groupBy("bin_id", "name", "salt").applyInPandas(
-            lambda pdf: inner(pdf.drop(columns=["salt"])),
-            SKETCH_ROW_SCHEMA,
-        )
-    final = _make_merger(specs, final=True)
-    return partials.groupBy("bin_id", "name").applyInPandas(final, SKETCH_ROW_SCHEMA)
+    return partials
+
+
+def merge_sketch_rows(rows: DataFrame, specs: list[SketchSpec]) -> DataFrame:
+    """Sketch rows of `specs` (SKETCH_ROW_SCHEMA, any mix of dense
+    sketches and compact partials, any number per (bin, spec)) -> one
+    dense row per (bin, spec). The one final merge level: build_sketches,
+    CheckpointedBuild.finalize and SketchStream.process_batch end here."""
+    return rows.groupBy("bin_id", "name").applyInPandas(
+        _merger(specs, compact=False), SKETCH_ROW_SCHEMA
+    )
+
+
+def build_sketches(corpus: DataFrame, specs: list[SketchSpec]) -> DataFrame:
+    """corpus (must carry bin_id, text[, html]) -> sketch rows
+    (bin_id, name, payload, n_items), one row per (bin, spec)."""
+    return merge_sketch_rows(sketch_partials(corpus, specs), specs)
 
 
 # -- sizing (reference parity: find_largest_bin + compute_bitcount) ----------

@@ -47,49 +47,6 @@ def prune_to_bins(corpus: DataFrame, bin_ids: list[int], n_bins: int) -> DataFra
     return corpus.filter(F.col("bin_id").isin(bin_ids))
 
 
-def _verify_batches(pattern: str, id_col: str, has_html: bool):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rx = re.compile(pattern, re.IGNORECASE)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            text = corpus_text_series(
-                pdf["text"], pdf["html"] if has_html and "html" in pdf else None
-            )
-            # vectorized prefilter: one C-level contains pass over the
-            # batch; the per-doc Python finditer loop (needed for match
-            # offsets) then touches only docs that DO match — in the
-            # pruned-bin scan most rows are Bloom false positives or
-            # bin co-residents, so this skips the Python loop for the
-            # overwhelming majority of rows
-            hit = text.str.contains(rx).to_numpy()
-            urls, matches, starts, ends = [], [], [], []
-            for url, doc in zip(
-                pdf[id_col].to_numpy()[hit], text.to_numpy()[hit]
-            ):
-                for m in rx.finditer(doc):
-                    urls.append(url)
-                    matches.append(m.group(0))
-                    starts.append(m.start())
-                    ends.append(m.end())
-            yield pd.DataFrame(
-                {"url": urls, "match": matches, "start": starts, "end": ends}
-            ).astype({"start": "int64", "end": "int64"})
-
-    return fn
-
-
-def verify_regex(corpus: DataFrame, pattern: str, id_col: str = "url") -> DataFrame:
-    """All matches of `pattern` (case-insensitive, over normalized text)
-    in every row of `corpus` -> (url, match, start, end)."""
-    has_html = "html" in corpus.columns
-    cols = [id_col, "text"] + (["html"] if has_html else [])
-    out = corpus.select(*cols).mapInPandas(
-        _verify_batches(pattern, id_col, has_html), MATCH_SCHEMA
-    )
-    return out
-
-
 MULTI_MATCH_SCHEMA = T.StructType(
     [T.StructField("query_id", T.StringType(), False)] + list(MATCH_SCHEMA)
 )
@@ -108,7 +65,9 @@ def verify_regex_many(
     patterns share a single pruned corpus pass, and the per-row work is
     gated by the same bin bitvectors the single-query path prunes with."""
     has_html = "html" in corpus.columns
-    has_bin = "bin_id" in corpus.columns
+    has_bin = "bin_id" in corpus.columns and any(
+        bins is not None for _, _, bins in pattern_bins
+    )
     cols = [id_col, "text"] + (["html"] if has_html else []) + (
         ["bin_id"] if has_bin else []
     )
@@ -158,6 +117,13 @@ def verify_regex_many(
             yield pd.DataFrame(out).astype({"start": "int64", "end": "int64"})
 
     return corpus.select(*cols).mapInPandas(fn, MULTI_MATCH_SCHEMA)
+
+
+def verify_regex(corpus: DataFrame, pattern: str, id_col: str = "url") -> DataFrame:
+    """All matches of `pattern` (case-insensitive, over normalized text)
+    in every row of `corpus` -> (url, match, start, end): the one-pattern
+    case of verify_regex_many."""
+    return verify_regex_many(corpus, [("", pattern, None)], id_col).drop("query_id")
 
 
 def verify_conjunctive(corpus: DataFrame, patterns: list[str], id_col: str = "url") -> DataFrame:

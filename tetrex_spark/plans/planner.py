@@ -47,44 +47,23 @@ from .traverse import TraversalResult, collect
 MOTIF_SKETCH_NAME = "char_bloom"
 
 
-def corpus_alphabet(corpus: DataFrame) -> str:
-    """Distinct characters of the normalized corpus — JVM-side aggregate
-    (explode on a char split; runs once at build time, stored in the
-    manifest). The query side expands '.' and negated classes over this
-    closed alphabet, which is what makes dot-expansion sound AND finite."""
-    norm = F.lower(F.coalesce(F.col("text"), F.decode(F.col("html"), "UTF-8"), F.lit("")))
-    rows = (
-        # per-doc array_distinct first: the explode then emits <= |alphabet|
-        # rows per doc instead of one row per character of the corpus
-        corpus.select(F.explode(F.array_distinct(F.split(norm, ""))).alias("c"))
-        .filter(F.col("c") != "")
-        .distinct()
-        .collect()
-    )
-    chars = {r["c"] for r in rows}
-    # normalization collapses all whitespace to single spaces
-    chars = {(" " if c.isspace() else c) for c in chars}
-    return "".join(sorted(chars))
-
-
 def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
     """(max per-bin char-gram count for each of `widths`..., corpus
-    alphabet) in ONE aggregation job — the build used to pay separate full
-    corpus scans for the Bloom-sizing pre-pass (max_bin_cardinality), the
-    alphabet pre-pass (corpus_alphabet) and, at track time, the d-gram
-    sizing pre-pass; at 100 TB each pre-pass is a full pass over the text
-    column, so fusing them removes all but one.
+    alphabet) from ONE aggregation job over `binned` (bin_id, text[, html]).
+
+    A width-w entry is the largest per-bin sum of max(len - w + 1, 0) over
+    the bin's docs — what max_bin_cardinality(binned, "char_kgram", w)
+    returns, the Bloom sizing input. The alphabet is every distinct char of
+    the lowered, tag-stripped text, whitespace folded to ' ', as a sorted
+    string: a sound closed set for dot-expansion, since it covers every
+    char the indexed (extracted, normalized) text can contain — a superset
+    only ever adds candidate probes, which verify removes.
 
     Shape: per row, project (bin_id, one gram count per width, distinct
-    chars of the lowered tag-stripped text), posexplode the char array
-    (<= |alphabet| rows per doc), attribute the counts to pos==0 only, then
-    ONE groupBy(bin_id) with map-side-combined partials (per-bin sums +
-    char set, all tiny) and a final fold to (maxes, union). A width-w count
-    is max(len - w + 1, 0) per doc, the count max_bin_cardinality(...,
-    "char_kgram", w) sums. The alphabet is a sound closed set for
-    dot-expansion: it covers every char the indexed (extracted,
-    normalized) text can contain — a superset only ever adds candidate
-    probes, which verify removes."""
+    chars), posexplode the char array (<= |alphabet| rows per doc),
+    attribute the counts to pos==0 only, then ONE groupBy(bin_id) with
+    map-side-combined partials (per-bin sums + char set, all tiny) and a
+    final fold to (maxes, union)."""
     html_text = (
         F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", " ")
         if "html" in binned.columns

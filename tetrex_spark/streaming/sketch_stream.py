@@ -9,8 +9,8 @@ index. Merge associativity (tests/test_kernel_merge.py) is what makes
 (lattice sketches) to a one-shot batch build over the same rows.
 
 Shape: readStream(parquet dir) -> foreachBatch:
-  batch rows -> build_sketches (map-side partials + merge) ->
-  merge with previous state -> atomic versioned state swap.
+  previous state rows ∪ sketch_partials(batch rows) -> merge_sketch_rows
+  (one exchange) -> atomic versioned state swap.
 State versions are directories state_v<N>; a `_CURRENT` pointer file is
 rewritten last, so readers never see a torn state (rename-free, works on
 object stores where rename is non-atomic).
@@ -24,7 +24,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.sketch_build import SKETCH_ROW_SCHEMA, SketchSpec, _merger, build_sketches
+from ..lineage import read_stored
+from ..operators.sketch_build import SketchSpec, merge_sketch_rows, sketch_partials
 
 
 class SketchStream:
@@ -49,7 +50,7 @@ class SketchStream:
         v = self.current_version()
         if v < 0:
             return None
-        return spark.read.parquet(os.path.join(self.state_dir, f"state_v{v}"))
+        return read_stored(spark, os.path.join(self.state_dir, f"state_v{v}"))
 
     def _commit_state(self, df: DataFrame, version: int) -> None:
         path = os.path.join(self.state_dir, f"state_v{version}")
@@ -72,16 +73,11 @@ class SketchStream:
             from ..sources.corpus import with_bin_id
 
             batch_df = with_bin_id(batch_df, self.n_bins)
-        spark = batch_df.sparkSession
-        new_rows = build_sketches(batch_df, self.specs)
-        prev = self.current_state(spark)
+        rows = sketch_partials(batch_df, self.specs)
+        prev = self.current_state(batch_df.sparkSession)
         if prev is not None:
-            new_rows = (
-                prev.unionByName(new_rows)
-                .groupBy("bin_id", "name")
-                .applyInPandas(_merger, SKETCH_ROW_SCHEMA)
-            )
-        self._commit_state(new_rows, self.current_version() + 1)
+            rows = prev.unionByName(rows)
+        self._commit_state(merge_sketch_rows(rows, self.specs), self.current_version() + 1)
 
     def start(
         self,
