@@ -274,3 +274,29 @@ def test_cli_ndindex_ndgate_end_to_end(spark, tmp_path, capsys):
     kept = spark.read.parquet(out2)
     assert [r["doc_id"] for r in kept.collect()] == [1002]
     assert set(kept.columns) == {"doc_id", "text"}
+
+
+@pytest.mark.parametrize("kind", ["membership", "neardup"])
+def test_index_build_jobs_stay_in_callers_job_group(spark, tmp_path, kind):
+    """Both index writes run on pool threads; every job the build starts,
+    the writes included, carries the caller's job group, so a caller can
+    count or cancel the whole build by its group."""
+    from tetrex_spark.operators.incremental import build_neardup_index
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    corpus = _corpus(spark, NEARDUP_REF)
+    corpus.count()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = f"index-build-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        if kind == "membership":
+            build_membership_index(corpus, str(tmp_path / "idx"), n_buckets=8)
+        else:
+            build_neardup_index(corpus, str(tmp_path / "idx"), n_shards=4)
+    finally:
+        sc.setJobGroup(None, None)
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped
+    # the two writes alone are two jobs
+    assert len(tracker.getJobIdsForGroup(group)) >= 2

@@ -126,28 +126,51 @@ def test_deterministic_across_parallelism(spark, corpus):
 
 def test_two_level_merge_same_result(corpus, monkeypatch):
     """All five kinds through the salted inner level (16 partitions, fan-in
-    4) vs the final level alone: equal n_items, byte-identical payloads
-    for bloom/hll/cms/tdigest. KLL keeps level-0 items in arrival order,
-    which the tree shape permutes, so its payloads must hold the same
-    items per level (the same sketch, up to that order)."""
+    4) vs the final level alone: equal n_items and byte-identical
+    payloads. KLL writes each level sorted, so the order in which the
+    tree shape delivers its items does not reach the payload."""
     wide_input = corpus.repartition(16)
     narrow = build_sketches(wide_input, specs()).collect()
     monkeypatch.setattr(sketch_build, "_FANIN", 4)
     plan = sketch_build.sketch_partials(wide_input, specs())._jdf.queryExecution()
-    assert "FlatMapGroupsInPandas" in plan.executedPlan().toString()  # inner level on
+    plan = plan.executedPlan().toString()
+    assert "MapInArrow" in plan  # inner level on, as an Arrow fold
+    assert "FlatMapGroupsInPandas" not in plan
     wide = build_sketches(wide_input, specs()).collect()
     kw = {(r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"]) for r in wide}
     kn = {(r["bin_id"], r["name"]): (bytes(r["payload"]), r["n_items"]) for r in narrow}
-    assert kw.keys() == kn.keys()
-    for key, (payload, n_items) in kw.items():
-        assert n_items == kn[key][1], key
-        if key[1] != "len_kll":
-            assert payload == kn[key][0], key
-            continue
-        a, b = from_bytes(payload), from_bytes(kn[key][0])
-        assert a.n == b.n and len(a.levels) == len(b.levels), key
-        for la, lb in zip(a.levels, b.levels):
-            assert np.array_equal(np.sort(la), np.sort(lb)), key
+    assert kw == kn
+
+
+def test_final_level_one_arrow_pass_per_core(spark, corpus):
+    """merge_sketch_rows runs on defaultParallelism partitions whatever
+    the shuffle setting. With one group (heavy hitters' constant bin) all
+    partitions but one are empty, and the one row equals a build whose
+    map side saw every row in one task (CMS is a lattice sketch), also
+    when every Arrow batch holds one row, so the group spans batches;
+    empty input gives no rows."""
+    from pyspark.sql import functions as F
+
+    spec = SketchSpec("one_cms", "cms", "token", k=1,
+                      params={"width": 2048, "depth": 5})
+    one_bin = corpus.repartition(8).withColumn("bin_id", F.lit(0))
+    partials = sketch_build.sketch_partials(one_bin, [spec])
+    assert partials.count() > 1
+    merged = sketch_build.merge_sketch_rows(partials, [spec])
+    n = spark.sparkContext.defaultParallelism
+    rows_per_part = merged.rdd.glom().map(len).collect()
+    assert sorted(rows_per_part) == [0] * (n - 1) + [1]
+    [row] = merged.collect()
+    [ref] = build_sketches(one_bin.coalesce(1), [spec]).collect()
+    assert (row["bin_id"], row["name"], row["n_items"]) == (0, "one_cms", ref["n_items"])
+    assert bytes(row["payload"]) == bytes(ref["payload"])
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        [row1] = merged.collect()
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert row1 == row
+    assert sketch_build.merge_sketch_rows(partials.limit(0), [spec]).count() == 0
 
 
 def test_n_items_matches_exact_shingle_count(built, corpus_pdf):

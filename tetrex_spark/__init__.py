@@ -9,6 +9,13 @@ Layout (SURVEY.md §7):
   operators/  sketch build/merge UDAFs, dedup, similarity, verify, multimodal
   plans/      regex -> postfix -> NFA -> Bloom traversal -> candidate bins
   streaming/  incremental sketch maintenance (foreachBatch)
+
+Importing the package installs `_pyworker`, which stops PySpark workers
+re-reading unchanged zip archives at the start of every task.
 """
+
+from . import _pyworker
+
+_pyworker.install()
 
 __version__ = "0.1.0"

@@ -7,10 +7,12 @@ parameter k answers any rank query within eps * n where eps ~= C / k
 confidence). We property-test |est_rank - true_rank| <= 3.0/k * n across
 shuffled merge orders (tests/test_kernel_merge.py).
 
-Sampling sketch: payloads are NOT byte-identical across merge orders (the
-compaction coin flips differ) — only the estimates are bound-preserving.
-The RNG is seeded from a fixed constant plus a compaction counter, so a
-fixed pipeline is fully deterministic run-to-run.
+Sampling sketch: payloads are NOT byte-identical across merge orders that
+compact differently (the compaction coin flips differ) — only the
+estimates are bound-preserving. The RNG is seeded from a fixed constant
+plus a compaction counter, so a fixed pipeline is fully deterministic
+run-to-run. Levels are serialized sorted, so the order in which items
+reached a level never changes the payload.
 """
 
 from __future__ import annotations
@@ -127,10 +129,13 @@ class KLL(Sketch):
     def _body(self) -> bytes:
         import struct
 
+        # each level is written sorted: the order items arrived in (merge
+        # order, tree shape) never reaches the payload, and no estimate
+        # depends on it (_compact sorts before it samples)
         parts = [struct.pack("<qq", self.n, len(self.levels))]
         for lv in self.levels:
             parts.append(struct.pack("<q", lv.size))
-            parts.append(lv.astype(np.float64).tobytes())
+            parts.append(np.sort(lv).astype(np.float64, copy=False).tobytes())
         return b"".join(parts)
 
     @classmethod

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
@@ -59,6 +60,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from ..kernel.bloom import BloomFilter, bloom_m_bits
 from .dedup import norm_col
@@ -136,14 +138,16 @@ def build_membership_index(
     blooms = hashes.groupBy("bucket").applyInPandas(build, _BLOOM_SCHEMA).persist()
 
     # the two index writes are independent readers of the checkpoint /
-    # the persisted bloom rows — run them as concurrent jobs (§2.6)
-    from concurrent.futures import ThreadPoolExecutor
+    # the persisted bloom rows — run them as concurrent jobs (§2.6) in
+    # threads that inherit the caller's job group and tags
 
+    @inheritable_thread_target(df.sparkSession)
     def _write_hashes() -> None:
         hashes.write.mode("overwrite").partitionBy("bucket").parquet(
             f"{out_dir}/hashes"
         )
 
+    @inheritable_thread_target(df.sparkSession)
     def _write_blooms() -> None:
         blooms.write.mode("overwrite").parquet(f"{out_dir}/blooms")
 
@@ -362,8 +366,9 @@ def build_neardup_index(
     # reads open few. The two index writes are INDEPENDENT readers of
     # the checkpointed sig table, so they run as concurrent jobs: the
     # second write's tasks back-fill executors freed by the first's tail.
-    from concurrent.futures import ThreadPoolExecutor
+    # The threads inherit the caller's job group and tags.
 
+    @inheritable_thread_target(df.sparkSession)
     def _write_buckets() -> None:
         buckets.withColumn(
             "shard", _sshard(F.col("bh"), n_shards)
@@ -371,6 +376,7 @@ def build_neardup_index(
             "shard"
         ).parquet(f"{out_dir}/buckets")
 
+    @inheritable_thread_target(df.sparkSession)
     def _write_sets() -> None:
         ss.select(
             _sshard(F.col("id"), n_shards).alias("sshard"), "id", "s"

@@ -16,12 +16,16 @@ sizes the filter to the largest bin (A2, :133-139) and bulk-inserts (A3,
       treeAggregate shape, but expressed on DataFrames so AQE still plans
       it).
   stage 2 (final level) — merge_sketch_rows:
-      groupBy(bin_id, name) + applyInPandas with the one merger, which
-      takes any mix of dense sketches and compact partials and emits one
-      dense row per (bin, spec). Its three callers: build_sketches (over
-      sketch_partials), CheckpointedBuild.finalize (over the stored chunk
-      rows) and SketchStream.process_batch (over the previous state plus
-      the batch's partials, in one exchange).
+      repartition(defaultParallelism, bin_id, name) +
+      sortWithinPartitions(bin_id, name) + mapInArrow with the one
+      merger, which folds each run of equal keys — any mix of dense
+      sketches and compact partials — into one dense row per (bin, spec):
+      one Arrow pass per core, no pandas round trip per group (_merge_level;
+      the inner level is the same shape keyed by salt too). Its three
+      callers: build_sketches (over sketch_partials),
+      CheckpointedBuild.finalize (over the stored chunk rows) and
+      SketchStream.process_batch (over the previous state plus the
+      batch's partials, in one exchange).
 
 Scale notes (100 TB / 1000 executors):
   - raw keys never shuffle; partial count = tasks x bins-per-task.
@@ -211,43 +215,89 @@ def _payload(spec: SketchSpec, sk, keys=None, counts=None, *, compact=False) -> 
     return sk.to_bytes()
 
 
-def _merger(specs: list[SketchSpec], compact: bool):
-    """applyInPandas body merging one (bin_id, name) group of sketch rows,
-    whatever mix of dense sketches and compact partials it holds: dense
-    sketches merge, partial keys concatenate, and the row exits through
-    _payload. `compact` keeps an all-partial group compact (inner tree
-    levels); without it the row is dense (the final level)."""
-    by_name = {s.name: s for s in specs}
+def _merger(specs: list[SketchSpec], keys: tuple[str, ...], compact: bool):
+    """mapInArrow body of a merge level: its input is sorted on `keys`,
+    and each run of equal keys (one (bin_id, name[, salt]) group) is
+    merged, whatever mix of dense sketches and compact partials it holds:
+    dense sketches merge, partial keys concatenate, and the row exits
+    through _payload. Runs may span Arrow batches. `compact` keeps an
+    all-partial group compact (inner tree levels); without it the row is
+    dense (the final level)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        spec = by_name[pdf["name"].iloc[0]]
-        sk, keys, counts = None, [], []
-        for blob in pdf["payload"]:
-            kind, params, body = unpack_payload(bytes(blob))
+    by_name = {s.name: s for s in specs}
+    schema = to_arrow_schema(SKETCH_ROW_SCHEMA)
+
+    def merge(name: str, blobs: list[bytes]) -> bytes:
+        spec = by_name[name]
+        sk, parts, counts = None, [], []
+        for blob in blobs:
+            kind, params, body = unpack_payload(blob)
             if kind != "partial":
-                part = from_bytes(bytes(blob))
+                part = from_bytes(blob)
                 sk = part if sk is None else sk.merge(part)
             elif params["form"] == "pairs":
                 half = len(body) // 2
-                keys.append(np.frombuffer(body[:half], dtype=np.uint64))
+                parts.append(np.frombuffer(body[:half], dtype=np.uint64))
                 counts.append(np.frombuffer(body[half:], dtype=np.int64))
             else:
                 dtype = np.float64 if params["form"] == "values" else np.uint64
-                keys.append(np.frombuffer(body, dtype=dtype))
-        payload = _payload(
+                parts.append(np.frombuffer(body, dtype=dtype))
+        return _payload(
             spec, sk,
-            np.concatenate(keys) if keys else None,
+            np.concatenate(parts) if parts else None,
             np.concatenate(counts) if counts else None,
             compact=compact,
         )
-        return pd.DataFrame({
-            "bin_id": [pdf["bin_id"].iloc[0]],
-            "name": [spec.name],
-            "payload": [payload],
-            "n_items": [int(pdf["n_items"].sum())],
-        })
 
-    return merge
+    def fold(batches):
+        out = {f: [] for f in schema.names}
+        run, blobs, n_items = None, [], 0
+
+        def emit() -> None:
+            out["bin_id"].append(run[0])
+            out["name"].append(run[1])
+            out["payload"].append(merge(run[1], blobs))
+            out["n_items"].append(n_items)
+
+        for batch in batches:
+            cols = [batch.column(k).to_pylist() for k in keys]
+            for key, blob, n in zip(
+                zip(*cols),
+                batch.column("payload").to_pylist(),
+                batch.column("n_items").to_pylist(),
+            ):
+                if key != run:
+                    if blobs:
+                        emit()
+                    run, blobs, n_items = key, [], 0
+                blobs.append(blob)
+                n_items += n
+            if out["bin_id"]:
+                yield pa.RecordBatch.from_pydict(out, schema=schema)
+                out = {f: [] for f in schema.names}
+        if blobs:
+            emit()
+            yield pa.RecordBatch.from_pydict(out, schema=schema)
+
+    return fold
+
+
+def _merge_level(
+    rows: DataFrame, specs: list[SketchSpec], keys: tuple[str, ...], compact: bool
+) -> DataFrame:
+    """One merge level: one hash exchange on `keys` into one partition per
+    core, a JVM sort on `keys`, and one Arrow pass per partition that
+    folds each group (_merger). A pandas group UDF would pay a pandas
+    round trip per group instead, on the one task AQE coalesces the
+    small sketch-row shuffle into."""
+    n = rows.sparkSession.sparkContext.defaultParallelism
+    return (
+        rows.repartition(n, *keys)
+        .sortWithinPartitions(*keys)
+        .mapInArrow(_merger(specs, keys, compact), SKETCH_ROW_SCHEMA)
+    )
 
 
 # Cache tiling: an Arrow batch (10k docs) spawns per-stage uint64
@@ -351,13 +401,10 @@ def sketch_partials(corpus: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     n_parts = corpus.rdd.getNumPartitions()
     if n_parts > 2 * _FANIN:
         n_buckets = (n_parts + _FANIN - 1) // _FANIN
-        partials = (
-            partials.withColumn(
-                "salt", (F.spark_partition_id() % F.lit(n_buckets)).cast("int")
-            )
-            .groupBy("bin_id", "name", "salt")
-            .applyInPandas(_merger(specs, compact=True), SKETCH_ROW_SCHEMA)
+        salted = partials.withColumn(
+            "salt", (F.spark_partition_id() % F.lit(n_buckets)).cast("int")
         )
+        partials = _merge_level(salted, specs, ("bin_id", "name", "salt"), compact=True)
     return partials
 
 
@@ -366,9 +413,7 @@ def merge_sketch_rows(rows: DataFrame, specs: list[SketchSpec]) -> DataFrame:
     sketches and compact partials, any number per (bin, spec)) -> one
     dense row per (bin, spec). The one final merge level: build_sketches,
     CheckpointedBuild.finalize and SketchStream.process_batch end here."""
-    return rows.groupBy("bin_id", "name").applyInPandas(
-        _merger(specs, compact=False), SKETCH_ROW_SCHEMA
-    )
+    return _merge_level(rows, specs, ("bin_id", "name"), compact=False)
 
 
 def build_sketches(corpus: DataFrame, specs: list[SketchSpec]) -> DataFrame:
