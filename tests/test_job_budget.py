@@ -154,6 +154,33 @@ def test_motif_index_job_budget(spark, tmp_path):
     corpus.unpersist()
 
 
+def test_motif_index_file_backed_job_budget(spark, tmp_path):
+    """A corpus read from files: build also writes the bin-sorted text
+    copy, in a thread whose jobs count in the caller's group, within the
+    in-memory build's bound; a selective query, query_many and query_all
+    then verify on the driver from that copy and run no Spark job."""
+    from tetrex_spark.plans.planner import MotifIndex
+    from tetrex_spark.sources.corpus import webtext_small
+
+    webtext_small(spark).repartition(3).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    path = str(tmp_path / "motif_idx")
+    idx, n_build = _jobs(spark, "motif-build-files", lambda: MotifIndex.build(
+        corpus, path, n_bins=16, k=3))
+    assert idx.manifest["corpus_fingerprint"] is not None
+    # 7 jobs when written (the in-memory build's 5 + 2 text-copy write)
+    assert n_build <= 7, f"file-backed MotifIndex.build ran {n_build} jobs"
+    pats = ["zyzzyva", "filter (window|merge)", "approximate membership query"]
+    for name, call in [
+        ("query", lambda: idx.query(corpus, pats[0])),
+        ("query_many", lambda: idx.query_many(corpus, pats)),
+        ("query_all", lambda: idx.query_all(corpus, ["zyzzyva", "filter"])),
+    ]:
+        rows, n_query = _jobs(spark, f"motif-{name}-files", lambda: call().collect())
+        assert rows, name
+        assert n_query == 0, f"{name} ran {n_query} jobs"
+
+
 def test_sketch_stream_append_job_budget(spark, tmp_path):
     """A SketchStream append onto existing state: the stored state rows
     and the batch's partial sketches meet in one merge exchange, and the

@@ -3,12 +3,14 @@ pruned verify, checked for hit-set EQUALITY against a full-scan Python
 `re` oracle (FIXTURES.md §6) — the reference's correctness bar
 (test/cli/kbioreg_test.cpp golden hit-sets), exceeded with properties."""
 
+import os
 import re
 
 import pytest
 
 from tetrex_spark.functions.text import corpus_text_series
 from tetrex_spark.plans.planner import MotifIndex
+from tetrex_spark.sources.bin_text import corpus_fingerprint
 from tetrex_spark.sources.corpus import motif_mini, motif_split5, webtext_small
 
 
@@ -177,11 +179,17 @@ def test_fused_sizing_alphabet_matches_two_pass(spark):
 
     corpus = webtext_small(spark)
     binned = with_bin_id(corpus, 16)
-    n_max, alpha = alphabet_and_sizing(binned, 3)
+    n_max, alpha, bin_chars = alphabet_and_sizing(binned, 3)
     assert n_max == max_bin_cardinality(binned, "char_kgram", 3)
     pdf = corpus.toPandas()
     norm = corpus_text_series(pdf["text"], pdf["html"])
     assert set("".join(norm)) <= set(alpha)
+    # per-bin characters: text, or the tag-stripped html where text is null
+    pdf = binned.toPandas()
+    stripped = pdf["html"].map(
+        lambda h: None if h is None else re.sub("<[^>]*>", " ", bytes(h).decode()))
+    chars = pdf["text"].fillna(stripped).str.len().groupby(pdf["bin_id"]).sum()
+    assert bin_chars == {int(b): int(n) for b, n in chars.items()}
 
 
 def test_query_many_equals_sequential(webtext):
@@ -312,3 +320,175 @@ def test_old_format_version_refused(tmp_path):
     }))
     with pytest.raises(ValueError, match="rebuild required"):
         read_manifest(str(tmp_path))
+
+
+def test_format_2_refused(spark, tmp_path, webtext):
+    """Format 2 had no per-bin character totals or corpus fingerprint, so
+    its queries could not choose the driver path: a format 2 index is
+    refused with a rebuild message, not read."""
+    import json
+
+    _, idx, _ = webtext
+    manifest = {k: v for k, v in idx.manifest.items()
+                if k not in ("bin_chars", "corpus_fingerprint")}
+    (tmp_path / "manifest.json").write_text(json.dumps({**manifest, "format_version": 2}))
+    with pytest.raises(ValueError, match="rebuild required"):
+        MotifIndex.load(spark, str(tmp_path))
+
+
+# -- the driver-side verify over the bin-sorted text copy -------------------
+
+
+def _n_jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group) or [])
+
+
+def _both_paths(spark, idx, corpus, call):
+    """(rows, jobs) of `call(idx, corpus)` on the indexed file scan, which
+    verifies on the driver, and on a filtered view of it, which is not a
+    bare file scan and so runs the Spark scan."""
+    spark_corpus = corpus.filter("url is not null")
+    local, n_local = _n_jobs(spark, "driver-path", lambda: call(idx, corpus).collect())
+    remote, n_remote = _n_jobs(spark, "spark-path", lambda: call(idx, spark_corpus).collect())
+    assert n_local == 0 and n_remote > 0, (n_local, n_remote)
+    return sorted(map(tuple, local)), sorted(map(tuple, remote))
+
+
+@pytest.fixture(scope="module")
+def webfiles(spark, tmp_path_factory):
+    """webtext_small stored as 3 parquet files and read back (a bare file
+    scan), indexed with a text copy and tracked for gap queries."""
+    root = tmp_path_factory.mktemp("webfiles")
+    webtext_small(spark).repartition(3).write.parquet(str(root / "corpus"))
+    corpus = spark.read.parquet(str(root / "corpus"))
+    idx = MotifIndex.build(corpus, str(root / "idx"), n_bins=16, k=3)
+    assert idx.manifest["corpus_fingerprint"] is not None
+    idx = idx.track(corpus, str(root / "idx"), min_gap=0, max_gap=6)
+    pdf = corpus.toPandas()
+    pdf["norm"] = corpus_text_series(pdf["text"], pdf["html"])
+    return corpus, idx, pdf
+
+
+@pytest.mark.parametrize("pattern", [
+    "zyzzyva",                # literal
+    "filter (window|merge)",  # alternation with a capture group
+    "w.{2}ld",                # gap
+    "data .{0,5}stream",      # gap, tracked range
+    "qjxzvq",                 # no match, (almost surely) no candidate bin
+])
+def test_driver_path_equals_spark_path(spark, webfiles, recwarn, pattern):
+    corpus, idx, pdf = webfiles
+    local, remote = _both_paths(
+        spark, idx, corpus, lambda i, c: i.query(c, pattern))
+    assert local == remote
+    assert {(u, m, s, e) for u, m, s, e in local} == oracle_hits(pdf, pattern)
+    assert not [w for w in recwarn if "match groups" in str(w.message)]
+
+
+def test_driver_path_query_many_and_query_all(spark, webfiles):
+    corpus, idx, pdf = webfiles
+    pats = {f"q{i}": p for i, p in enumerate(WEB_PATTERNS)}
+    local, remote = _both_paths(
+        spark, idx, corpus, lambda i, c: i.query_many(c, pats))
+    assert local == remote
+    for qid, p in pats.items():
+        assert {r[1:] for r in local if r[0] == qid} == oracle_hits(pdf, p), qid
+    both = ["zyzzyva", "filter"]
+    local, remote = _both_paths(
+        spark, idx, corpus, lambda i, c: i.query_all(c, both))
+    assert local == remote
+    assert {u for (u,) in local} == {
+        u for u, d in zip(pdf["url"], pdf["norm"]) if all(p in d for p in both)
+    }
+
+
+def test_driver_path_reads_html_of_null_text_rows(spark, webfiles):
+    """The copy keeps html only where text is null, and the driver verify
+    extracts it like the Spark verify does."""
+    corpus, idx, pdf = webfiles
+    doc = pdf[pdf["text"].isna()].iloc[0]
+    token = doc["norm"].split()[1]
+    local, remote = _both_paths(spark, idx, corpus, lambda i, c: i.query(c, token))
+    assert local == remote
+    assert doc["url"] in {u for u, _, _, _ in local}
+
+
+def test_driver_path_salted_and_prebinned(spark, tmp_path, webfiles):
+    """The copy carries the build's bin ids: a salted assignment
+    (salt_hot_hosts='auto') and a pre-binned corpus's own bin_id."""
+    from tetrex_spark.sources.corpus import with_bin_id
+
+    corpus, _, pdf = webfiles
+    salted = MotifIndex.build(corpus, str(tmp_path / "salted"), n_bins=16, k=3,
+                              salt_hot_hosts="auto", hot_factor=2.0)
+    assert salted.manifest["salted_hosts"] == ["h0.example"]
+    with_bin_id(corpus, 16, salt_hot_hosts=["h0.example"]).write.parquet(
+        str(tmp_path / "prebinned"))
+    prebinned = spark.read.parquet(str(tmp_path / "prebinned"))
+    pre_idx = MotifIndex.build(prebinned, str(tmp_path / "pre_idx"), n_bins=16, k=3)
+    for idx, c in ((salted, corpus), (pre_idx, prebinned)):
+        for pattern in WEB_PATTERNS[:4]:
+            local, remote = _both_paths(spark, idx, c, lambda i, c: i.query(c, pattern))
+            assert local == remote
+            assert set(local) == oracle_hits(pdf, pattern)
+
+
+def test_rewritten_corpus_file_falls_back_to_spark(spark, tmp_path):
+    """Rewriting one corpus file changes the fingerprint: the query scans
+    the corpus with Spark, and answers from the new rows, not from the
+    index's now stale text copy."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "corpus")
+    webtext_small(spark).repartition(2).write.parquet(path)
+    idx = MotifIndex.build(spark.read.parquet(path), str(tmp_path / "idx"), n_bins=16, k=3)
+    victim = next(f.path for f in os.scandir(path) if f.name.endswith(".parquet")
+                  and spark.read.parquet(f.path).filter(F.col("text").contains("zyzzyva")).count())
+    kept = spark.read.parquet(victim).filter(~F.col("text").contains("zyzzyva")).toPandas()
+    os.remove(victim)
+    spark.createDataFrame(kept, spark.read.parquet(path).schema).coalesce(1) \
+        .write.parquet(str(tmp_path / "rewrite"))
+    (new_file,) = (f.path for f in os.scandir(tmp_path / "rewrite") if f.name.endswith(".parquet"))
+    os.replace(new_file, victim)
+    # the local file system's checksum file goes with it
+    crc = lambda f: os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")  # noqa: E731
+    os.replace(crc(new_file), crc(victim))
+
+    corpus = spark.read.parquet(path)
+    assert corpus_fingerprint(corpus) != idx.manifest["corpus_fingerprint"]
+    rows, n_jobs = _n_jobs(spark, "stale", lambda: idx.query(corpus, "zyzzyva").collect())
+    assert n_jobs > 0
+    pdf = corpus.toPandas()
+    pdf["norm"] = corpus_text_series(pdf["text"], pdf["html"])
+    assert spark_hits(idx.query(corpus, "zyzzyva")) == oracle_hits(pdf, "zyzzyva")
+    assert len(rows) < 37  # the copy still holds all 37 planted tokens
+
+
+@pytest.mark.parametrize("failing", ["write_bin_text", "write_sketch_rows"])
+def test_failed_build_leaves_no_manifest(spark, tmp_path, monkeypatch, webfiles, failing):
+    """Either side of the build failing (the text-copy write in its thread,
+    or the sketch write) fails the build after joining the other, and
+    leaves no manifest, also where a previous build stood, so `load`
+    refuses the directory; nothing stays persisted."""
+    from tetrex_spark.plans import planner
+
+    corpus, _, _ = webfiles
+    path = str(tmp_path / "idx")
+    MotifIndex.build(corpus, path, n_bins=16, k=3)
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected write failure")
+
+    monkeypatch.setattr(planner, failing, boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        MotifIndex.build(corpus, path, n_bins=16, k=3)
+    with pytest.raises(FileNotFoundError):
+        MotifIndex.load(spark, path)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted

@@ -4,39 +4,63 @@ verification together. The Spark analog of `tetrex index` + `tetrex query`
 
   build:  corpus -> bin_id -> char-kgram Bloom per bin (sketch table +
           manifest, including the observed corpus alphabet — the closed
-          alphabet TetRex gets for free from the 20-AA residue set).
+          alphabet TetRex gets for free from the 20-AA residue set — and
+          the characters of text per bin). A corpus that is a bare file
+          scan also gets a bin-sorted copy of its text (sources.bin_text),
+          written concurrently with the sketch jobs.
   query:  normalize + trim -> postfix -> NFA (bounded unroll) ->
           traversal over the stacked Bloom matrix -> candidate bins ->
-          isin-pruned corpus scan -> Arrow-batched regex verify ->
-          (url, match, start, end) DataFrame.
+          verify, by one of two reads:
+            - the candidate bins' row groups of the text copy, read and
+              verified on the driver into a local DataFrame (no Spark
+              job), when the query's corpus is the indexed file scan and
+              the candidate bins hold at most DRIVER_VERIFY_MAX_CHARS;
+            - otherwise an isin-pruned corpus scan with an Arrow-batched
+              regex verify on the executors.
+          Either way -> (url, match, start, end) DataFrame.
 
 The traversal runs on the driver exactly as in TetRex — the Bloom matrix
-is tiny relative to the corpus (B x m bits), and this is the honest
-reading of 'per-partition Bloom bins' in the north star: the *corpus*
+is tiny relative to the corpus (B x m bits). On the Spark path the corpus
 never moves; only candidate bin ids cross back into the cluster as a
-pushed-down predicate.
-"""
+pushed-down predicate. On the driver path, like TetRex re-opening its
+candidate bin files, only the candidate bins' text is read."""
 
 from __future__ import annotations
 
+import os
+import shutil
+from concurrent.futures import ThreadPoolExecutor
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.text import normalize_query
 from ..operators.sketch_build import SketchSpec, build_sketches
 from ..operators.verify import (
+    MATCH_SCHEMA,
+    MULTI_MATCH_SCHEMA,
+    all_match_batch,
+    compile_patterns,
+    conjunctive_schema,
+    local_frame,
+    match_batch,
     prune_to_bins,
     verify_conjunctive,
     verify_regex,
     verify_regex_many,
 )
+from ..sources.bin_text import TEXT_DIR, corpus_fingerprint, read_bin_text, write_bin_text
 from ..sources.corpus import hot_hosts, with_bin_id
 from ..sources.sketch_store import (
+    MANIFEST_NAME,
     BloomMatrix,
     read_manifest,
     read_sketch_payloads,
-    write_sketch_table,
+    write_manifest,
+    write_sketch_rows,
 )
 from ..kernel.bloom import bloom_m_bits
 from .dgram import MAX_BIN_PADGRAMS, PAD, DGramIndex, build_dgram_index
@@ -45,11 +69,20 @@ from .rx import trim_regex
 from .traverse import TraversalResult, collect
 
 MOTIF_SKETCH_NAME = "char_bloom"
+# The most characters of text a query verifies on the driver (summed over
+# its patterns' candidate bins); above it the verify is a Spark job.
+# Measured on a 4-core host (local[4], median of 7) over the perfbench
+# sketch_motif corpus (seed 302, 3.26M chars in 32 bins), one alternation
+# verified over growing bin sets: the driver read + verify took 46 ms at
+# 19k chars, 132 ms at 866k and 211 ms at 1.57M, the Spark scan 170-220 ms
+# at any size. The bound sits below that ~1.5M break-even.
+DRIVER_VERIFY_MAX_CHARS = 1_000_000
 
 
 def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
     """(max per-bin char-gram count for each of `widths`..., corpus
-    alphabet) from ONE aggregation job over `binned` (bin_id, text[, html]).
+    alphabet, {bin_id: characters of text}) from ONE aggregation job over
+    `binned` (bin_id, text[, html]).
 
     A width-w entry is the largest per-bin sum of max(len - w + 1, 0) over
     the bin's docs — what max_bin_cardinality(binned, "char_kgram", w)
@@ -57,13 +90,16 @@ def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
     the lowered, tag-stripped text, whitespace folded to ' ', as a sorted
     string: a sound closed set for dot-expansion, since it covers every
     char the indexed (extracted, normalized) text can contain — a superset
-    only ever adds candidate probes, which verify removes.
+    only ever adds candidate probes, which verify removes. The per-bin
+    character totals (text, or tag-stripped html where text is null) are
+    the sums the width entries take the max of, at width 1; a query
+    prices its verify with them.
 
-    Shape: per row, project (bin_id, one gram count per width, distinct
-    chars), posexplode the char array (<= |alphabet| rows per doc),
-    attribute the counts to pos==0 only, then ONE groupBy(bin_id) with
-    map-side-combined partials (per-bin sums + char set, all tiny) and a
-    final fold to (maxes, union)."""
+    Shape: per row, project (bin_id, chars, one gram count per width,
+    distinct chars), posexplode the char array (<= |alphabet| rows per
+    doc), attribute the counts to pos==0 only, then ONE groupBy(bin_id)
+    with map-side-combined partials (per-bin sums + char set, all tiny)
+    and a final fold to (maxes, union, per-bin chars)."""
     html_text = (
         F.regexp_replace(F.decode(F.col("html"), "UTF-8"), "<[^>]*>", " ")
         if "html" in binned.columns
@@ -75,12 +111,17 @@ def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
         for i, w in enumerate(widths)
     ]
     chars = F.array_distinct(F.split(F.lower(text), ""))
-    ex = binned.select("bin_id", *cnts, F.posexplode(chars).alias("pos", "c"))
+    ex = binned.select(
+        "bin_id", F.length(text).alias("len"), *cnts,
+        F.posexplode(chars).alias("pos", "c"),
+    )
+    first = F.col("pos") == 0
     row = (
         ex.groupBy("bin_id")
         .agg(
+            F.sum(F.when(first, F.col("len")).otherwise(0)).alias("chars"),
             *[
-                F.sum(F.when(F.col("pos") == 0, F.col(f"cnt{i}")).otherwise(0)).alias(f"n{i}")
+                F.sum(F.when(first, F.col(f"cnt{i}")).otherwise(0)).alias(f"n{i}")
                 for i in range(len(widths))
             ],
             F.collect_set("c").alias("cs"),
@@ -88,13 +129,15 @@ def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
         .agg(
             *[F.max(f"n{i}").alias(f"mx{i}") for i in range(len(widths))],
             F.array_distinct(F.flatten(F.collect_list("cs"))).alias("alpha"),
+            F.collect_list(F.struct("bin_id", "chars")).alias("bins"),
         )
         .collect()[0]
     )
     chars_out = {c for c in (row["alpha"] or []) if c != ""}
     chars_out = {(" " if c.isspace() else c) for c in chars_out}
     maxes = [int(row[f"mx{i}"] or 0) for i in range(len(widths))]
-    return (*maxes, "".join(sorted(chars_out)))
+    bin_chars = {int(r["bin_id"]): int(r["chars"]) for r in row["bins"] or []}
+    return (*maxes, "".join(sorted(chars_out)), bin_chars)
 
 
 class MotifIndex:
@@ -103,15 +146,19 @@ class MotifIndex:
 
     The index directory is driver-local: `load` reads the manifest and
     every sketch row with one pyarrow read on the driver and runs no Spark
-    job, whatever the number of tracked gaps."""
+    job, whatever the number of tracked gaps. A query against the indexed
+    file scan may read the index's bin-sorted text copy there too
+    (sources.bin_text)."""
 
     def __init__(self, bloom: BloomMatrix, manifest: dict, k: int, alphabet: str,
-                 dgram=None):
+                 dgram=None, path: str | None = None):
         self.bloom = bloom
         self.manifest = manifest
         self.k = k
         self.alphabet = alphabet
         self.dgram = dgram
+        self.path = path
+        self.bin_chars = np.asarray(manifest.get("bin_chars", []), dtype=np.int64)
 
     # -- build ---------------------------------------------------------------
 
@@ -145,7 +192,15 @@ class MotifIndex:
 
         A corpus that already carries bin_id (e.g. pre-salted via
         with_bin_id(salt_hot_hosts=...)) keeps its assignment — query()
-        honors the same rule, so build and prune always agree."""
+        honors the same rule, so build and prune always agree.
+
+        A corpus that is a bare file scan (sources.bin_text.
+        corpus_fingerprint) also gets a bin-sorted copy of its text under
+        `path/text`, written by a JVM-only job that runs in a thread
+        alongside the sizing and sketch jobs; queries of that same scan
+        verify small candidate sets from it on the driver. The manifest is
+        written last, after both sides finished: a failed build leaves no
+        manifest, so `load` refuses the directory."""
         if "bin_id" in corpus.columns:
             # the pre-assigned bin ids ARE the index layout; recording a
             # salt we never applied would make query() re-bin hot hosts
@@ -169,20 +224,36 @@ class MotifIndex:
                 corpus, n_bins, bin_key=bin_key,
                 salt_hot_hosts=salted or None, n_salt=n_salt,
             )
-        # ONE fused pre-pass for Bloom sizing, the manifest alphabet and
-        # the PAD-gram count that sizes a later track's d-gram filter
-        n_max, n_padgrams, alphabet = alphabet_and_sizing(binned, k, PAD)
-        m_bits = bloom_m_bits(n_max, fpr)
-        spec = SketchSpec(
-            MOTIF_SKETCH_NAME,
-            "bloom",
-            "char_kgram",
-            k=k,
-            params={"m_bits": m_bits, "n_hashes": n_hashes},
-        )
-        rows = build_sketches(binned, [spec])
-        write_sketch_table(
-            rows,
+        spark = corpus.sparkSession
+        fingerprint = corpus_fingerprint(corpus)
+        # a rebuild first drops what could describe the previous build
+        if os.path.exists(os.path.join(path, MANIFEST_NAME)):
+            os.remove(os.path.join(path, MANIFEST_NAME))
+        shutil.rmtree(os.path.join(path, TEXT_DIR), ignore_errors=True)
+        n_files = min(n_bins, spark.sparkContext.defaultParallelism)
+        # leaving the pool joins the text write, whichever side failed
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            text_written = None
+            if fingerprint is not None:
+                text_written = pool.submit(
+                    inheritable_thread_target(spark)(write_bin_text), binned, path, n_files
+                )
+            # ONE fused pre-pass for Bloom sizing, the manifest alphabet,
+            # the per-bin character totals and the PAD-gram count that
+            # sizes a later track's d-gram filter
+            n_max, n_padgrams, alphabet, bin_chars = alphabet_and_sizing(binned, k, PAD)
+            m_bits = bloom_m_bits(n_max, fpr)
+            spec = SketchSpec(
+                MOTIF_SKETCH_NAME,
+                "bloom",
+                "char_kgram",
+                k=k,
+                params={"m_bits": m_bits, "n_hashes": n_hashes},
+            )
+            write_sketch_rows(build_sketches(binned, [spec]), path)
+            if text_written:
+                text_written.result()
+        write_manifest(
             path,
             [spec],
             n_bins,
@@ -190,9 +261,10 @@ class MotifIndex:
                 "k": k, "fpr": fpr, "alphabet": alphabet,
                 "salted_hosts": salted, "n_salt": n_salt,
                 MAX_BIN_PADGRAMS: n_padgrams,
+                "bin_chars": [bin_chars.get(b, 0) for b in range(n_bins)],
+                "corpus_fingerprint": fingerprint,
             },
         )
-        spark = corpus.sparkSession
         return MotifIndex.load(spark, path)
 
     @staticmethod
@@ -205,7 +277,7 @@ class MotifIndex:
         bloom = BloomMatrix.load(payloads, MOTIF_SKETCH_NAME, manifest["n_bins"])
         dgram = DGramIndex.load(manifest, payloads)
         return MotifIndex(bloom, manifest, manifest["k"], manifest["alphabet"],
-                          dgram=dgram)
+                          dgram=dgram, path=path)
 
     def _binned(self, corpus: DataFrame, n_bins: int, bin_key=None) -> DataFrame:
         """Bin assignment matching THIS index's manifest — including any
@@ -251,6 +323,25 @@ class MotifIndex:
 
     # -- execute ---------------------------------------------------------------
 
+    def _on_driver(self, corpus: DataFrame, n_bins: int,
+                   verified: list[list[int] | None]) -> bool:
+        """Whether to verify on the driver from this index's text copy.
+        `verified` holds the bins each pattern is tested against (None:
+        every bin). Yes when the characters the kernel scans are at most
+        DRIVER_VERIFY_MAX_CHARS and `corpus` is the file scan the copy was
+        taken from (same fingerprint, so the same rows and bin ids)."""
+        fingerprint = self.manifest.get("corpus_fingerprint")
+        if fingerprint is None or self.path is None or n_bins != self.manifest["n_bins"]:
+            return False
+        chars = sum(
+            int(self.bin_chars.sum() if bins is None else self.bin_chars[bins].sum())
+            for bins in verified
+        )
+        return chars <= DRIVER_VERIFY_MAX_CHARS and corpus_fingerprint(corpus) == fingerprint
+
+    def _driver_rows(self, bin_ids: list[int] | None) -> pd.DataFrame:
+        return read_bin_text(self.path, bin_ids).to_pandas()
+
     def query(
         self,
         corpus: DataFrame,
@@ -263,12 +354,18 @@ class MotifIndex:
 
         `corpus` may be the same DataFrame the index was built from or a
         re-read of the same table; bin assignment is recomputed with the
-        same deterministic hash so ids line up."""
+        same deterministic hash so ids line up. A re-read of the indexed
+        files verifies a small candidate set on the driver (see
+        `_on_driver`) and returns a local DataFrame: no Spark job."""
         n_bins = n_bins or self.manifest["n_bins"]
-        res = self.candidate_bins(pattern)
+        bins = self.candidate_bins(pattern).bin_ids()
+        pattern = normalize_query(pattern)
+        if self._on_driver(corpus, n_bins, [bins]):
+            rxs = compile_patterns([("", pattern, None)])
+            return local_frame(corpus.sparkSession,
+                               match_batch(self._driver_rows(bins), rxs), MATCH_SCHEMA)
         binned = self._binned(corpus, n_bins, bin_key)
-        pruned = prune_to_bins(binned, res.bin_ids(), n_bins)
-        return verify_regex(pruned, normalize_query(pattern))
+        return verify_regex(prune_to_bins(binned, bins, n_bins), pattern)
 
     def query_many(
         self,
@@ -284,8 +381,8 @@ class MotifIndex:
         traversal (sub-ms each), the corpus is pruned ONCE to the union
         of candidate bins, and a single verify pass applies each pattern
         only to rows of its own bins. N patterns cost one scan instead
-        of N sequential jobs. Returns (query_id, url, match, start,
-        end)."""
+        of N sequential jobs, or none when the verify runs on the driver
+        (as in `query`). Returns (query_id, url, match, start, end)."""
         n_bins = n_bins or self.manifest["n_bins"]
         if not isinstance(patterns, dict):
             patterns = {p: p for p in patterns}
@@ -301,12 +398,13 @@ class MotifIndex:
             else:
                 spec.append((qid, normalize_query(pat), bins))
                 union.update(bins)
+        read = None if full_scan else sorted(union)
+        if self._on_driver(corpus, n_bins, [bins for _, _, bins in spec]):
+            return local_frame(corpus.sparkSession,
+                               match_batch(self._driver_rows(read), compile_patterns(spec)),
+                               MULTI_MATCH_SCHEMA)
         binned = self._binned(corpus, n_bins, bin_key)
-        pruned = (
-            binned
-            if full_scan
-            else prune_to_bins(binned, sorted(union), n_bins)
-        )
+        pruned = binned if read is None else prune_to_bins(binned, read, n_bins)
         return verify_regex_many(pruned, spec)
 
     def query_all(
@@ -318,13 +416,18 @@ class MotifIndex:
         bin_key=None,
     ) -> DataFrame:
         """Conjunctive multi-motif (A5 + F11): candidate vectors AND-ed
-        across queries (include/query.h:267), then one pruned scan where
-        every pattern must match."""
+        across queries (include/query.h:267), then one pruned scan (or a
+        driver-side verify, as in `query`) where every pattern must
+        match."""
         n_bins = n_bins or self.manifest["n_bins"]
         vec = np.ones(self.bloom.n_bins, dtype=bool)
         for p in patterns:
             vec &= self.candidate_bins(p).bins
         bin_ids = [int(i) for i in np.nonzero(vec)[0]]
+        patterns = [normalize_query(p) for p in patterns]
+        if self._on_driver(corpus, n_bins, [bin_ids] * len(patterns)):
+            return local_frame(corpus.sparkSession,
+                               all_match_batch(self._driver_rows(bin_ids), patterns),
+                               conjunctive_schema(corpus.schema["url"].dataType))
         binned = self._binned(corpus, n_bins, bin_key)
-        pruned = prune_to_bins(binned, bin_ids, n_bins)
-        return verify_conjunctive(pruned, [normalize_query(p) for p in patterns])
+        return verify_conjunctive(prune_to_bins(binned, bin_ids, n_bins), patterns)

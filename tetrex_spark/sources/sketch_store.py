@@ -16,9 +16,12 @@ the driver, and `read_sketch_payloads` reads every `rows/` partition there
 too, with pyarrow and no Spark job. A motif index load is therefore one
 file-system read, whatever the number of sketch names it holds.
 
-Format 2 (this version) stores a motif index's d-grams as ONE sketch name,
-`dgram_bloom`, holding every tracked gap's keys; format 1 kept one name per
-gap. Format 1 directories are refused, not read.
+Format 3 (this version) adds two manifest entries for the query's
+driver-side verify: `bin_chars`, the characters of text per bin, and
+`corpus_fingerprint`, the file scan a bin-sorted text copy under `text/`
+was taken from (sources.bin_text; null when the build wrote none). Format
+2 had neither; format 1 kept one d-gram sketch name per gap. Both are
+refused, not read.
 """
 
 from __future__ import annotations
@@ -36,11 +39,14 @@ from ..kernel import from_bytes, unpack_payload
 from ..operators.sketch_build import SketchSpec
 
 MANIFEST_NAME = "manifest.json"
-FORMAT_VERSION = 2
+FORMAT_VERSION = 3
 
 
-def write_sketch_table(
-    sketch_df: DataFrame,
+def write_sketch_rows(sketch_df: DataFrame, path: str) -> None:
+    sketch_df.write.mode("overwrite").partitionBy("name").parquet(f"{path}/rows")
+
+
+def write_manifest(
     path: str,
     specs: list[SketchSpec],
     n_bins: int,
@@ -48,7 +54,8 @@ def write_sketch_table(
     build_id: str = "build-0",
     extra: dict | None = None,
 ) -> None:
-    sketch_df.write.mode("overwrite").partitionBy("name").parquet(f"{path}/rows")
+    """Write `manifest.json`, the last file of an index build: a
+    directory without one is refused by `read_manifest`."""
     manifest = {
         "format_version": FORMAT_VERSION,
         "tokenizer_version": TOKENIZER_VERSION,
@@ -102,17 +109,6 @@ def read_sketch_payloads(path: str) -> dict[str, list[tuple[int, bytes]]]:
     ):
         out.setdefault(name, []).append((bin_id, payload))
     return out
-
-
-def spec_from_manifest(manifest: dict, name: str) -> SketchSpec:
-    for e in manifest["specs"]:
-        if e["name"] == name:
-            return SketchSpec(
-                name=e["name"], kind=e["kind"], source=e["source"],
-                k=e["k"], params=e["params"], seed=e["seed"],
-                gaps=tuple(e["gaps"]) if e["gaps"] else None,
-            )
-    raise KeyError(f"spec {name!r} not in manifest")
 
 
 class BloomMatrix:
