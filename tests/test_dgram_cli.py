@@ -1,6 +1,9 @@
 """D-gram (track) index: gap probes tighten candidates without losing
 recall; CLI surface goldens."""
 
+import hashlib
+import json
+import os
 import re
 
 import numpy as np
@@ -10,6 +13,7 @@ import pytest
 from tetrex_spark.functions.text import corpus_text_series
 from tetrex_spark.plans.planner import MotifIndex
 from tetrex_spark.sources.corpus import webtext_small
+from tetrex_spark.sources.sketch_store import read_sketch_payloads
 
 
 @pytest.fixture(scope="module")
@@ -93,18 +97,104 @@ def test_retrack_replaces_dgram_filter(tracked, spark, tmp_path):
                     == fresh.candidate_bins(pattern).bin_ids()), pattern
 
 
-def test_track_rejects_mismatched_bins(spark, tmp_path):
-    """A d-gram build with a different modulus than the index manifest
-    would AND mis-mapped bin vectors into query paths (silent recall
-    loss) — it must raise instead."""
-    from tetrex_spark.plans.dgram import build_dgram_index
-    from tetrex_spark.sources.corpus import motif_mini
+def test_track_into_another_directory_raises_before_any_job(spark, tmp_path):
+    """`track` writes into its index's own directory only: another path
+    raises before a Spark job runs and before anything is written there;
+    a symlink to the index's directory is the same directory."""
+    corpus = webtext_small(spark)
+    path = tmp_path / "idx"
+    idx = MotifIndex.build(corpus, str(path), n_bins=16, k=3)
+    other = tmp_path / "other"
+    sc = spark.sparkContext
+    sc.setJobGroup("track-elsewhere", "track-elsewhere")
+    try:
+        with pytest.raises(ValueError, match="own directory"):
+            idx.track(corpus, str(other), min_gap=1, max_gap=3)
+    finally:
+        sc.setJobGroup(None, None)
+    assert not sc.statusTracker().getJobIdsForGroup("track-elsewhere")
+    assert not other.exists()
+    (tmp_path / "link").symlink_to(path)
+    tracked = idx.track(corpus, str(tmp_path / "link"), min_gap=1, max_gap=3)
+    assert (tracked.dgram.min_gap, tracked.dgram.max_gap) == (1, 3)
 
-    corpus = motif_mini(spark)
-    path = str(tmp_path / "idx_mm")
-    MotifIndex.build(corpus, path, n_bins=2, k=3)
-    with pytest.raises(ValueError, match="n_bins"):
-        build_dgram_index(corpus, path, n_bins=4)
+
+def test_failed_retrack_is_never_read_as_complete(spark, tmp_path, monkeypatch):
+    """A re-track that dies at its last manifest write (the one that
+    records the new gap range) leaves an index that loads untracked or
+    with the new gaps, never with the old gap range over the new rows:
+    a gap query keeps every true bin."""
+    corpus = webtext_small(spark)
+    path = str(tmp_path / "idx")
+    idx = MotifIndex.build(corpus, path, n_bins=16, k=3)
+    idx = idx.track(corpus, path, min_gap=1, max_gap=3)
+    dump = json.dump
+
+    def dump_fails_on_new_gaps(obj, *args, **kwargs):
+        if isinstance(obj, dict) and obj.get("dgram", {}).get("max_gap") == 8:
+            raise OSError("disk full")
+        return dump(obj, *args, **kwargs)
+
+    monkeypatch.setattr(json, "dump", dump_fails_on_new_gaps)
+    with pytest.raises(OSError, match="disk full"):
+        idx.track(corpus, path, min_gap=5, max_gap=8)
+    monkeypatch.undo()
+    loaded = MotifIndex.load(spark, path)
+    assert loaded.dgram is None or (loaded.dgram.min_gap, loaded.dgram.max_gap) == (5, 8)
+    pdf = corpus.toPandas()
+    pdf["norm"] = corpus_text_series(pdf["text"], pdf["html"])
+    pattern = "w.{2}ld"  # gap 2
+    truth = {
+        (url, m.group(0), m.start(), m.end())
+        for url, doc in zip(pdf["url"], pdf["norm"])
+        for m in re.finditer(pattern, doc, re.IGNORECASE)
+    }
+    assert truth
+    got = {(r["url"], r["match"], r["start"], r["end"])
+           for r in loaded.query(corpus, pattern).collect()}
+    assert got == truth
+
+
+def _index_digests(path):
+    """sha256 of manifest.json, and of every (name, bin_id, payload) row
+    of `rows/` in sorted order."""
+    manifest = hashlib.sha256(open(os.path.join(path, "manifest.json"), "rb").read())
+    rows = hashlib.sha256()
+    for name, bin_rows in sorted(read_sketch_payloads(path).items()):
+        for bin_id, payload in sorted(bin_rows):
+            rows.update(name.encode() + b"\0" + str(bin_id).encode() + b"\0" + bytes(payload))
+    return manifest.hexdigest(), rows.hexdigest()
+
+
+# The index bytes of webtext_small (16 bins, k=3) after a track of gaps
+# 1..6 and after a re-track of gaps 0..4 at fpr 0.01. They are the index
+# format: a change to them needs a FORMAT_VERSION bump.
+INDEX_DIGESTS = {
+    None: [
+        ("dd6926361cba07cabb64d745dd9ad515d3513c9f6e9e47c654380029411667c7",
+         "60dff207e07c2e0f759ae2c1567602af86aa945266f0b3186b91695b96c23f36"),
+        ("947aa16f3007b62de30228ccd78b0123b2e697b2fbacde5b7976851c8cb5e400",
+         "7f8697c0f6de94a52f75846dda4eab5047feb8a8921f1d509f06a6629097e882"),
+    ],
+    "auto": [
+        ("fbc283a16b44f9972565da6dae44f18e005da5589bdac38e9d29594aea908ed3",
+         "51a214724c992b1de9417a21cdb965100faf518785276cf024df1bd0fa2d6d64"),
+        ("098f833363c2086f50ab559f2d738558a173c23240c072bacc286515df7db3f0",
+         "a82b938ed6e768406337907893fe8089aba7b5a090707ad14b39be527355d5de"),
+    ],
+}
+
+
+@pytest.mark.parametrize("salt", [None, "auto"])
+def test_index_bytes_after_track_and_retrack(spark, tmp_path, salt):
+    corpus = webtext_small(spark)
+    path = str(tmp_path / "idx")
+    idx = MotifIndex.build(corpus, path, n_bins=16, k=3, salt_hot_hosts=salt, hot_factor=2.0)
+    idx = idx.track(corpus, path, min_gap=1, max_gap=6)
+    got = [_index_digests(path)]
+    idx.track(corpus, path, min_gap=0, max_gap=4, fpr=0.01)
+    got.append(_index_digests(path))
+    assert got == INDEX_DIGESTS[salt]
 
 
 def test_gap0_tracked_min_gap_zero(spark, tmp_path):
@@ -161,10 +251,18 @@ def test_cli_index_query_inspect(spark, tmp_path, capsys):
         "http://bin1.example/snippet1.2\tacg\t1,4",
     ]
 
-    rc = main(["inspect", "--index", idx_path])
+    sc = spark.sparkContext
+    sc.setJobGroup("inspect", "inspect")
+    try:
+        rc = main(["inspect", "--index", idx_path])
+    finally:
+        sc.setJobGroup(None, None)
     out = capsys.readouterr().out
     assert rc == 0
     assert "char_bloom" in out and '"n_bins": 2' in out
+    assert "char_bloom: bins=2 items=" in out
+    # read on the driver: no Spark job
+    assert not sc.statusTracker().getJobIdsForGroup("inspect")
 
 
 def test_cli_regex_file(spark, tmp_path, capsys):
@@ -315,26 +413,39 @@ def test_cli_dedup_rep_level_keep_list_equals_member_pairs(spark, tmp_path, meth
     )
 
 
-def test_cli_track_twice_standalone_dgram_index(spark, tmp_path, capsys):
-    """Tracking into a directory that holds only a standalone d-gram
-    index (no motif index) works again: the second run rebuilds the
-    d-gram filter with its own gaps instead of loading a motif index
-    that is not there."""
+def test_cli_track_twice_on_index_dir(spark, tmp_path, capsys):
+    """`track` on the directory `index` wrote takes its bins from the
+    manifest; tracking again ends with the second run's gaps."""
     from tetrex_spark.cli import main
-    from tetrex_spark.plans.dgram import DGramIndex
-    from tetrex_spark.sources.sketch_store import read_manifest, read_sketch_payloads
 
     corpus_path = str(tmp_path / "corpus")
     webtext_small(spark).write.parquet(corpus_path)
-    path = str(tmp_path / "dg")
+    path = str(tmp_path / "idx")
+    assert main(["index", "--corpus", corpus_path, "--output", path, "--bins", "8"]) == 0
     assert main(["track", "--corpus", corpus_path, "--output", path,
-                 "--bins", "8", "--min-gap", "2", "--max-gap", "4"]) == 0
+                 "--min-gap", "2", "--max-gap", "4"]) == 0
     assert main(["track", "--corpus", corpus_path, "--output", path,
                  "--min-gap", "1", "--max-gap", "6"]) == 0
     assert "Tracked d-grams (gap 1..6) across 8 bins." in capsys.readouterr().out
-    dgram = DGramIndex.load(read_manifest(path), read_sketch_payloads(path))
+    dgram = MotifIndex.load(spark, path).dgram
     assert (dgram.min_gap, dgram.max_gap) == (1, 6)
     assert dgram.bloom.n_bins == 8
+
+
+def test_cli_track_without_index_fails_cleanly(spark, tmp_path, capsys):
+    """`track` into an empty or missing directory exits non-zero with a
+    message that names `tetrex index`, and writes nothing."""
+    from tetrex_spark.cli import main
+    from tetrex_spark.sources.corpus import motif_mini
+
+    corpus_path = str(tmp_path / "corpus")
+    motif_mini(spark).write.parquet(corpus_path)
+    empty, missing = tmp_path / "empty", tmp_path / "missing"
+    empty.mkdir()
+    for out in (empty, missing):
+        assert main(["track", "--corpus", corpus_path, "--output", str(out)]) != 0
+        assert "tetrex index" in capsys.readouterr().err
+    assert list(empty.iterdir()) == [] and not missing.exists()
 
 
 def test_cli_regex_file_duplicate_qids_not_dropped(spark, tmp_path, capsys):

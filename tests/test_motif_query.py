@@ -391,6 +391,25 @@ def test_driver_path_equals_spark_path(spark, webfiles, recwarn, pattern):
     assert not [w for w in recwarn if "match groups" in str(w.message)]
 
 
+@pytest.mark.parametrize("pattern", [
+    "zyzzyva",                # literal
+    "filter (window|merge)",  # alternation with a capture group
+    "w.{2}ld",                # gap
+    "the",                    # unselective: a candidate in every non-empty bin
+    "^.{3}",                  # trims to an empty pattern: every bin, no prune
+])
+def test_query_is_one_pattern_query_many(spark, webfiles, pattern):
+    """`query` returns `query_many`'s rows for the one pattern, without
+    the query id, on the driver path and on the Spark path."""
+    corpus, idx, _ = webfiles
+    if pattern == "^.{3}":
+        assert idx.candidate_bins(pattern).bins.all()
+    one = _both_paths(spark, idx, corpus, lambda i, c: i.query(c, pattern))
+    many = _both_paths(spark, idx, corpus, lambda i, c: i.query_many(c, {"q": pattern}))
+    for rows, qid_rows in zip(one, many):
+        assert rows and rows == [r[1:] for r in qid_rows]
+
+
 def test_driver_path_query_many_and_query_all(spark, webfiles):
     corpus, idx, pdf = webfiles
     pats = {f"q{i}": p for i, p in enumerate(WEB_PATTERNS)}

@@ -7,6 +7,7 @@ spark-submit. Usage:
   ... query  --index <index_dir> --corpus <parquet> --regex 'AC+G' [--regex-file f.tsv]
   ... inspect --index <index_dir>
   ... track  --corpus <parquet> --output <index_dir> [--min-gap 3 --max-gap 21]
+      (track adds to the index `index` wrote; its bins come from the manifest)
 
 The regex file format matches the reference's TSV (id \\t motif) source
 (src/query.cpp:342-363); '-' reads patterns from stdin (S5, :479).
@@ -99,66 +100,39 @@ def cmd_query(args) -> int:
 
 
 def cmd_inspect(args) -> int:
-    """S9 parity (src/inspect_idx.cpp): print index params + bin stats."""
-    from .sources.sketch_store import read_manifest, read_sketch_rows
+    """S9 parity (src/inspect_idx.cpp): print index params + bin stats,
+    read on the driver with no Spark session."""
+    from .sources.sketch_store import read_manifest, read_sketch_table
 
-    spark = _spark("inspect")
     manifest = read_manifest(args.index)
     print(json.dumps({k: v for k, v in manifest.items() if k != "specs"}, indent=2))
     for spec in manifest["specs"]:
         print(f"spec: {json.dumps(spec)}")
-    rows = read_sketch_rows(spark, args.index)
-    from pyspark.sql import functions as F
-
-    stats = rows.groupBy("name").agg(
-        F.count(F.lit(1)).alias("bins"),
-        F.sum("n_items").alias("items"),
-        F.max("n_items").alias("max_bin_items"),
-    )
-    for r in stats.collect():
-        print(f"{r['name']}: bins={r['bins']} items={r['items']} "
-              f"max_bin_items={r['max_bin_items']}")
+    stats = read_sketch_table(args.index, ["name", "bin_id", "n_items"]).group_by(
+        "name").aggregate([("bin_id", "count"), ("n_items", "sum"), ("n_items", "max")])
+    for r in sorted(stats.to_pylist(), key=lambda r: r["name"]):
+        print(f"{r['name']}: bins={r['bin_id_count']} items={r['n_items_sum']} "
+              f"max_bin_items={r['n_items_max']}")
     return 0
 
 
 def cmd_track(args) -> int:
-    """`tetrex track` analog: build the d-gram (gapped-gram) sketch
-    (src/dGramIndex.cpp:20-38) alongside an existing index dir, or as a
-    standalone d-gram index in a dir without a motif index."""
-    import os
+    """`tetrex track` analog: add the d-gram (gapped-gram) filter
+    (src/dGramIndex.cpp:20-38) to the motif index in --output, which
+    `tetrex index` built."""
+    from .plans.planner import MotifIndex
 
-    from .plans.dgram import build_dgram_index
-    from .plans.planner import MOTIF_SKETCH_NAME, MotifIndex
-    from .sources.sketch_store import MANIFEST_NAME, read_manifest
-
+    try:
+        idx = MotifIndex.load(None, args.output)
+    except (FileNotFoundError, ValueError) as e:
+        print(f"no motif index at {args.output} ({e}); build one with "
+              "`tetrex index` first", file=sys.stderr)
+        return 1
     spark = _spark("track")
-    corpus = read_corpus(spark, args.corpus)
-    manifest = (
-        read_manifest(args.output)
-        if os.path.exists(f"{args.output}/{MANIFEST_NAME}") else {}
-    )
-    # default --bins to the existing manifest's n_bins: a different
-    # modulus would bucket d-grams into the wrong bin vectors (silent
-    # recall loss); build_dgram_index raises on an explicit mismatch
-    n_bins = args.bins or manifest.get("n_bins") or 64
-    if any(s["name"] == MOTIF_SKETCH_NAME for s in manifest.get("specs", [])):
-        # a motif index: route through MotifIndex.track so the manifest's
-        # (possibly hot-host-salted) bin assignment applies — binning the
-        # d-grams with a different assignment would prune wrong bins at
-        # gap-query time (silent recall loss)
-        MotifIndex.load(spark, args.output).track(
-            corpus, args.output,
-            min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr,
-        )
-        n_bins = manifest["n_bins"]
-    else:
-        # no index, or a standalone d-gram index from an earlier track
-        build_dgram_index(
-            corpus, args.output, n_bins=n_bins,
-            min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr,
-        )
+    idx.track(read_corpus(spark, args.corpus), args.output,
+              min_gap=args.min_gap, max_gap=args.max_gap, fpr=args.fpr)
     print(f"Tracked d-grams (gap {args.min_gap}..{args.max_gap}) "
-          f"across {n_bins} bins.")
+          f"across {idx.manifest['n_bins']} bins.")
     return 0
 
 
@@ -543,9 +517,8 @@ def main(argv: list[str] | None = None) -> int:
 
     pt = sub.add_parser("track")
     pt.add_argument("--corpus", required=True)
-    pt.add_argument("--output", required=True)
-    pt.add_argument("--bins", type=int, default=None,
-                    help="default: the existing index manifest's n_bins")
+    pt.add_argument("--output", required=True,
+                    help="the index directory `index` wrote")
     pt.add_argument("--min-gap", type=int, default=3)
     pt.add_argument("--max-gap", type=int, default=21)
     pt.add_argument("--fpr", type=float, default=0.05)

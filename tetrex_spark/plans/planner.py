@@ -40,7 +40,6 @@ from pyspark.util import inheritable_thread_target
 from ..functions.text import normalize_query
 from ..operators.sketch_build import SketchSpec, build_sketches
 from ..operators.verify import (
-    MATCH_SCHEMA,
     MULTI_MATCH_SCHEMA,
     all_match_batch,
     compile_patterns,
@@ -49,7 +48,6 @@ from ..operators.verify import (
     match_batch,
     prune_to_bins,
     verify_conjunctive,
-    verify_regex,
     verify_regex_many,
 )
 from ..sources.bin_text import TEXT_DIR, corpus_fingerprint, read_bin_text, write_bin_text
@@ -57,18 +55,21 @@ from ..sources.corpus import hot_hosts, with_bin_id
 from ..sources.sketch_store import (
     MANIFEST_NAME,
     BloomMatrix,
+    index_manifest,
     read_manifest,
     read_sketch_payloads,
     write_manifest,
     write_sketch_rows,
 )
 from ..kernel.bloom import bloom_m_bits
-from .dgram import MAX_BIN_PADGRAMS, PAD, DGramIndex, build_dgram_index
+from .dgram import DGRAM_SKETCH_NAME, MAX_BIN_PADGRAMS, PAD, DGramIndex
 from .nfa import compile_nfa
 from .rx import trim_regex
 from .traverse import TraversalResult, collect
 
 MOTIF_SKETCH_NAME = "char_bloom"
+# salt-shards per hot host of a salted build (recorded in the manifest)
+N_SALT = 8
 # The most characters of text a query verifies on the driver (summed over
 # its patterns' candidate bins); above it the verify is a Spark job.
 # Measured on a 4-core host (local[4], median of 7) over the perfbench
@@ -171,9 +172,7 @@ class MotifIndex:
         k: int = 3,
         fpr: float = 0.05,
         n_hashes: int = 3,
-        bin_key=None,
         salt_hot_hosts: str | list[str] | None = None,
-        n_salt: int = 8,
         hot_factor: float = 4.0,
     ) -> "MotifIndex":
         """`tetrex index` analog. Sizes the filters to the largest bin
@@ -182,13 +181,13 @@ class MotifIndex:
         `salt_hot_hosts` wires the north-rule salted-repartitioning clause
         into the build itself: 'auto' detects hosts exceeding `hot_factor`
         x the mean bin load (sources.corpus.hot_hosts) and spreads each
-        over `n_salt` salt-shards; an explicit host list skips detection
+        over N_SALT salt-shards; an explicit host list skips detection
         (e.g. fed from lineage.skew_report). The salted assignment is
-        RECORDED IN THE MANIFEST, so query()/query_all() recompute the
-        identical bin ids with zero caller involvement — hit sets are
-        unchanged (salted shards are ordinary bins; property-tested), only
-        the hot host's verify scan stops concentrating in one bin. This is
-        the recommended setting for skewed web corpora.
+        RECORDED IN THE MANIFEST, so track and the queries recompute the
+        identical bin ids from it alone — hit sets are unchanged (salted
+        shards are ordinary bins; property-tested), only the hot host's
+        verify scan stops concentrating in one bin. This is the
+        recommended setting for skewed web corpora.
 
         A corpus that already carries bin_id (e.g. pre-salted via
         with_bin_id(salt_hot_hosts=...)) keeps its assignment — query()
@@ -221,8 +220,7 @@ class MotifIndex:
             else:
                 salted = sorted(salt_hot_hosts) if salt_hot_hosts else []
             binned = with_bin_id(
-                corpus, n_bins, bin_key=bin_key,
-                salt_hot_hosts=salted or None, n_salt=n_salt,
+                corpus, n_bins, salt_hot_hosts=salted or None, n_salt=N_SALT,
             )
         spark = corpus.sparkSession
         fingerprint = corpus_fingerprint(corpus)
@@ -253,18 +251,13 @@ class MotifIndex:
             write_sketch_rows(build_sketches(binned, [spec]), path)
             if text_written:
                 text_written.result()
-        write_manifest(
-            path,
-            [spec],
-            n_bins,
-            extra={
-                "k": k, "fpr": fpr, "alphabet": alphabet,
-                "salted_hosts": salted, "n_salt": n_salt,
-                MAX_BIN_PADGRAMS: n_padgrams,
-                "bin_chars": [bin_chars.get(b, 0) for b in range(n_bins)],
-                "corpus_fingerprint": fingerprint,
-            },
-        )
+        write_manifest(path, index_manifest([spec], n_bins, {
+            "k": k, "fpr": fpr, "alphabet": alphabet,
+            "salted_hosts": salted, "n_salt": N_SALT,
+            MAX_BIN_PADGRAMS: n_padgrams,
+            "bin_chars": [bin_chars.get(b, 0) for b in range(n_bins)],
+            "corpus_fingerprint": fingerprint,
+        }))
         return MotifIndex.load(spark, path)
 
     @staticmethod
@@ -279,35 +272,51 @@ class MotifIndex:
         return MotifIndex(bloom, manifest, manifest["k"], manifest["alphabet"],
                           dgram=dgram, path=path)
 
-    def _binned(self, corpus: DataFrame, n_bins: int, bin_key=None) -> DataFrame:
+    def _binned(self, corpus: DataFrame) -> DataFrame:
         """Bin assignment matching THIS index's manifest — including any
         recorded hot-host salting, so build, d-gram track and query prune
         always agree on bin ids."""
         if "bin_id" in corpus.columns:
             return corpus
         return with_bin_id(
-            corpus, n_bins, bin_key=bin_key,
-            salt_hot_hosts=self.manifest.get("salted_hosts") or None,
-            n_salt=self.manifest.get("n_salt", 8),
+            corpus, self.manifest["n_bins"],
+            salt_hot_hosts=self.manifest["salted_hosts"] or None,
+            n_salt=self.manifest["n_salt"],
         )
 
     def track(self, corpus: DataFrame, path: str, *, min_gap: int = 1,
-              max_gap: int = 21, fpr: float = 0.05, bin_key=None) -> "MotifIndex":
+              max_gap: int = 21, fpr: float = 0.05) -> "MotifIndex":
         """`tetrex track` analog: add the one gapped-gram filter
         (`dgram_bloom`, every gap in [min_gap, max_gap]) to this index and
-        reload (src/dGramIndex.cpp:20-38). The corpus is binned with the
-        manifest's (possibly salted) assignment before the d-gram build so
+        reload (src/dGramIndex.cpp:20-38). It is the index's second sketch
+        spec: the corpus is binned from the manifest like the build's, so
         both sketch families prune identically.
 
-        `corpus` must be the corpus the index was built from: the filter
-        is sized from the PAD-gram count the build recorded in the
-        manifest, so track runs no sizing scan. Tracking again replaces
-        the previous d-gram filter and its gap range."""
-        build_dgram_index(
-            self._binned(corpus, self.manifest["n_bins"], bin_key), path,
-            n_bins=self.manifest["n_bins"],
-            min_gap=min_gap, max_gap=max_gap, fpr=fpr, bin_key=bin_key,
+        `corpus` must be the corpus the index was built from, and `path`
+        this index's own directory: the filter is sized from the PAD-gram
+        count the build recorded in the manifest, so track runs no sizing
+        scan. Tracking again replaces the previous d-gram filter and its
+        gap range. The manifest loses its `dgram` entry before the rows
+        are rewritten and gets the new one after, so a failed track leaves
+        an untracked index, never a gap range over rows of other gaps."""
+        if self.path is None or os.path.realpath(path) != os.path.realpath(self.path):
+            raise ValueError(
+                f"track writes into the index's own directory {self.path!r}, "
+                f"not {path!r}"
+            )
+        manifest = {k: v for k, v in self.manifest.items() if k != "dgram"}
+        # per-bin keys of one gap <= the bin's PAD-gram count
+        m_bits = bloom_m_bits((max_gap - min_gap + 1) * manifest[MAX_BIN_PADGRAMS], fpr)
+        spec = SketchSpec(
+            DGRAM_SKETCH_NAME, "bloom", "dgram", k=PAD, gaps=(min_gap, max_gap),
+            params={"m_bits": m_bits, "n_hashes": 3},
         )
+        write_manifest(path, manifest)
+        build_sketches(self._binned(corpus), [spec]).drop("name").write.mode(
+            "overwrite").parquet(f"{path}/rows/name={DGRAM_SKETCH_NAME}")
+        write_manifest(path, {**manifest, "dgram": {
+            "min_gap": min_gap, "max_gap": max_gap, **spec.params, "seed": spec.seed,
+        }})
         return MotifIndex.load(corpus.sparkSession, path)
 
     # -- plan ----------------------------------------------------------------
@@ -323,15 +332,14 @@ class MotifIndex:
 
     # -- execute ---------------------------------------------------------------
 
-    def _on_driver(self, corpus: DataFrame, n_bins: int,
-                   verified: list[list[int] | None]) -> bool:
+    def _on_driver(self, corpus: DataFrame, verified: list[list[int] | None]) -> bool:
         """Whether to verify on the driver from this index's text copy.
         `verified` holds the bins each pattern is tested against (None:
         every bin). Yes when the characters the kernel scans are at most
         DRIVER_VERIFY_MAX_CHARS and `corpus` is the file scan the copy was
         taken from (same fingerprint, so the same rows and bin ids)."""
         fingerprint = self.manifest.get("corpus_fingerprint")
-        if fingerprint is None or self.path is None or n_bins != self.manifest["n_bins"]:
+        if fingerprint is None or self.path is None:
             return False
         chars = sum(
             int(self.bin_chars.sum() if bins is None else self.bin_chars[bins].sum())
@@ -342,39 +350,18 @@ class MotifIndex:
     def _driver_rows(self, bin_ids: list[int] | None) -> pd.DataFrame:
         return read_bin_text(self.path, bin_ids).to_pandas()
 
-    def query(
-        self,
-        corpus: DataFrame,
-        pattern: str,
-        *,
-        n_bins: int | None = None,
-        bin_key=None,
-    ) -> DataFrame:
-        """Full pipeline -> matches (url, match, start, end).
+    def query(self, corpus: DataFrame, pattern: str) -> DataFrame:
+        """Full pipeline -> matches (url, match, start, end): the
+        one-pattern case of `query_many`.
 
         `corpus` may be the same DataFrame the index was built from or a
-        re-read of the same table; bin assignment is recomputed with the
-        same deterministic hash so ids line up. A re-read of the indexed
-        files verifies a small candidate set on the driver (see
-        `_on_driver`) and returns a local DataFrame: no Spark job."""
-        n_bins = n_bins or self.manifest["n_bins"]
-        bins = self.candidate_bins(pattern).bin_ids()
-        pattern = normalize_query(pattern)
-        if self._on_driver(corpus, n_bins, [bins]):
-            rxs = compile_patterns([("", pattern, None)])
-            return local_frame(corpus.sparkSession,
-                               match_batch(self._driver_rows(bins), rxs), MATCH_SCHEMA)
-        binned = self._binned(corpus, n_bins, bin_key)
-        return verify_regex(prune_to_bins(binned, bins, n_bins), pattern)
+        re-read of the same table; bin assignment is recomputed from the
+        manifest so ids line up. A re-read of the indexed files verifies a
+        small candidate set on the driver (see `_on_driver`) and returns a
+        local DataFrame: no Spark job."""
+        return self.query_many(corpus, {"": pattern}).drop("query_id")
 
-    def query_many(
-        self,
-        corpus: DataFrame,
-        patterns: dict[str, str] | list[str],
-        *,
-        n_bins: int | None = None,
-        bin_key=None,
-    ) -> DataFrame:
+    def query_many(self, corpus: DataFrame, patterns: dict[str, str] | list[str]) -> DataFrame:
         """Batched multi-pattern query — the reference's TSV query-file
         path (S6, run_multiple_queries src/query.cpp:342-373) done
         Spark-first: every pattern's candidate bins come from the driver
@@ -382,8 +369,7 @@ class MotifIndex:
         of candidate bins, and a single verify pass applies each pattern
         only to rows of its own bins. N patterns cost one scan instead
         of N sequential jobs, or none when the verify runs on the driver
-        (as in `query`). Returns (query_id, url, match, start, end)."""
-        n_bins = n_bins or self.manifest["n_bins"]
+        (see `_on_driver`). Returns (query_id, url, match, start, end)."""
         if not isinstance(patterns, dict):
             patterns = {p: p for p in patterns}
         spec: list[tuple[str, str, list[int] | None]] = []
@@ -399,35 +385,27 @@ class MotifIndex:
                 spec.append((qid, normalize_query(pat), bins))
                 union.update(bins)
         read = None if full_scan else sorted(union)
-        if self._on_driver(corpus, n_bins, [bins for _, _, bins in spec]):
+        if self._on_driver(corpus, [bins for _, _, bins in spec]):
             return local_frame(corpus.sparkSession,
                                match_batch(self._driver_rows(read), compile_patterns(spec)),
                                MULTI_MATCH_SCHEMA)
-        binned = self._binned(corpus, n_bins, bin_key)
-        pruned = binned if read is None else prune_to_bins(binned, read, n_bins)
+        binned = self._binned(corpus)
+        pruned = binned if read is None else prune_to_bins(binned, read, self.bloom.n_bins)
         return verify_regex_many(pruned, spec)
 
-    def query_all(
-        self,
-        corpus: DataFrame,
-        patterns: list[str],
-        *,
-        n_bins: int | None = None,
-        bin_key=None,
-    ) -> DataFrame:
+    def query_all(self, corpus: DataFrame, patterns: list[str]) -> DataFrame:
         """Conjunctive multi-motif (A5 + F11): candidate vectors AND-ed
         across queries (include/query.h:267), then one pruned scan (or a
-        driver-side verify, as in `query`) where every pattern must
+        driver-side verify, as in `query_many`) where every pattern must
         match."""
-        n_bins = n_bins or self.manifest["n_bins"]
         vec = np.ones(self.bloom.n_bins, dtype=bool)
         for p in patterns:
             vec &= self.candidate_bins(p).bins
         bin_ids = [int(i) for i in np.nonzero(vec)[0]]
         patterns = [normalize_query(p) for p in patterns]
-        if self._on_driver(corpus, n_bins, [bin_ids] * len(patterns)):
+        if self._on_driver(corpus, [bin_ids] * len(patterns)):
             return local_frame(corpus.sparkSession,
                                all_match_batch(self._driver_rows(bin_ids), patterns),
                                conjunctive_schema(corpus.schema["url"].dataType))
-        binned = self._binned(corpus, n_bins, bin_key)
-        return verify_conjunctive(prune_to_bins(binned, bin_ids, n_bins), patterns)
+        return verify_conjunctive(
+            prune_to_bins(self._binned(corpus), bin_ids, self.bloom.n_bins), patterns)

@@ -186,13 +186,12 @@ def host_of_url(col):
 def with_bin_id(
     df: DataFrame,
     n_bins: int,
-    bin_key=None,
     *,
     salt_hot_hosts: list[str] | None = None,
     n_salt: int = 8,
 ) -> DataFrame:
     """Assign each row to a bin — the analog of one-FASTA-file-per-bin
-    (/root/reference/include/index_base.h:26). Default key = host(url), so
+    (/root/reference/include/index_base.h:26). The key is host(url), so
     a host's pages land in one bin (TetRex's 'which bin may match' unit of
     retrieval becomes 'which host bucket may match').
 
@@ -210,7 +209,7 @@ def with_bin_id(
     Bloom rows, and the global merge of all bins is byte-identical to the
     unsalted build (merge associativity — property-tested). Feed the list
     from `hot_hosts(...)` or lineage.skew_report metrics."""
-    key = bin_key if bin_key is not None else host_of_url(F.col("url"))
+    key = host_of_url(F.col("url"))
     if salt_hot_hosts:
         hot = F.array(*[F.lit(h) for h in salt_hot_hosts])
         key = F.when(

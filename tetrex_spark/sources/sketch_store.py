@@ -12,9 +12,10 @@ them at query time to dispatch (src/query.cpp:477-498). We persist:
     (silent-recall-loss guard).
 
 Index directories are driver-local: `read_manifest` opens manifest.json on
-the driver, and `read_sketch_payloads` reads every `rows/` partition there
+the driver, and `read_sketch_table` reads every `rows/` partition there
 too, with pyarrow and no Spark job. A motif index load is therefore one
 file-system read, whatever the number of sketch names it holds.
+`write_manifest` is the one writer of manifest.json.
 
 Format 3 (this version) adds two manifest entries for the query's
 driver-side verify: `bin_chars`, the characters of text per bin, and
@@ -32,7 +33,7 @@ import os
 import numpy as np
 import pyarrow as pa
 import pyarrow.dataset as pads
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from ..functions.text import TOKENIZER_VERSION
 from ..kernel import from_bytes, unpack_payload
@@ -46,27 +47,28 @@ def write_sketch_rows(sketch_df: DataFrame, path: str) -> None:
     sketch_df.write.mode("overwrite").partitionBy("name").parquet(f"{path}/rows")
 
 
-def write_manifest(
-    path: str,
-    specs: list[SketchSpec],
-    n_bins: int,
-    *,
-    build_id: str = "build-0",
-    extra: dict | None = None,
-) -> None:
-    """Write `manifest.json`, the last file of an index build: a
-    directory without one is refused by `read_manifest`."""
-    manifest = {
+def index_manifest(specs: list[SketchSpec], n_bins: int, extra: dict) -> dict:
+    """The manifest of a new index over `specs` in `n_bins` bins."""
+    return {
         "format_version": FORMAT_VERSION,
         "tokenizer_version": TOKENIZER_VERSION,
         "n_bins": n_bins,
-        "build_id": build_id,
+        "build_id": "build-0",
         "specs": [s.manifest_entry() for s in specs],
-        **(extra or {}),
+        **extra,
     }
+
+
+def write_manifest(path: str, manifest: dict) -> None:
+    """Write `manifest.json`, the last file of an index build (a
+    directory without one is refused by `read_manifest`). The file is
+    replaced in one rename, so a reader finds the previous manifest or
+    this one, never a part of one."""
     os.makedirs(path, exist_ok=True)
-    with open(f"{path}/{MANIFEST_NAME}", "w") as f:
+    tmp = f"{path}/{MANIFEST_NAME}.tmp"
+    with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2, sort_keys=True)
+    os.replace(tmp, f"{path}/{MANIFEST_NAME}")
 
 
 def read_manifest(path: str) -> dict:
@@ -87,20 +89,21 @@ def read_manifest(path: str) -> dict:
     return manifest
 
 
-def read_sketch_rows(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(f"{path}/rows")
-
-
-def read_sketch_payloads(path: str) -> dict[str, list[tuple[int, bytes]]]:
-    """Every sketch row under `path/rows`, read on the driver in one pass
-    with pyarrow (no Spark job): name -> [(bin_id, payload)]. The `name`
-    partition directories are decoded as strings; pyarrow's default ignore
-    prefixes skip Spark's `_SUCCESS` markers and `_temporary` dirs."""
-    table = pads.dataset(
+def read_sketch_table(path: str, columns: list[str]) -> pa.Table:
+    """`columns` of every sketch row under `path/rows`, read on the driver
+    in one pass with pyarrow (no Spark job). The `name` partition
+    directories are decoded as strings; pyarrow's default ignore prefixes
+    skip Spark's `_SUCCESS` markers and `_temporary` dirs."""
+    return pads.dataset(
         f"{path}/rows",
         format="parquet",
         partitioning=pads.partitioning(pa.schema([("name", pa.string())]), flavor="hive"),
-    ).to_table(columns=["name", "bin_id", "payload"])
+    ).to_table(columns=columns)
+
+
+def read_sketch_payloads(path: str) -> dict[str, list[tuple[int, bytes]]]:
+    """Every sketch row under `path/rows` as name -> [(bin_id, payload)]."""
+    table = read_sketch_table(path, ["name", "bin_id", "payload"])
     out: dict[str, list[tuple[int, bytes]]] = {}
     for name, bin_id, payload in zip(
         table.column("name").to_pylist(),
