@@ -393,6 +393,32 @@ def test_blocked_cosine_pairs_equal_exact(vectors):
         assert got == want and len(want) > 0
 
 
+@pytest.mark.parametrize("vec_type", ["float", "double"])
+def test_packed_blocks_pinned(spark, vectors, vec_type):
+    """_pack_blocks rows are byte-identical to the grouped-pandas packing:
+    sha256 of the sorted (b, ids, mat) rows, for array<float> and
+    array<double> input with a zero vector among them."""
+    import hashlib
+
+    from tetrex_spark.operators.similarity import _pack_blocks
+
+    rows = [(i, [0.0] * 16 if i == 3 else v) for i, v, _ in vectors[1]]
+    df = spark.createDataFrame(rows, f"vec_id long, embedding array<{vec_type}>")
+    packed = _pack_blocks(df, 4, vec_col="embedding", id_col="vec_id").collect()
+    h = hashlib.sha256()
+    for r in sorted((r["b"], bytes(r["ids"]), bytes(r["mat"])) for r in packed):
+        h.update(repr(r).encode())
+    assert h.hexdigest() == {"float": "78e06d512e9df77cc77505e3d8dfc7c9d5342135314b4a4104bea43a32260832", "double": "facb2bca6fad54d631ba59cf778c0f7caa8b91cb6a323de22f0a2241ebb22b62"}[vec_type]
+
+
+def test_cosine_topk_batch_zero_query(vectors):
+    """A zero query vector scores 0 against every row instead of NaN."""
+    df, _ = vectors
+    out = cosine_topk_batch(df, {0: [0.0] * 16}, k=3).collect()
+    assert [r["cosine"] for r in out] == [0.0, 0.0, 0.0]
+    assert [r["vec_id"] for r in out] == [0, 1, 2]
+
+
 def test_blocked_cosine_pairs_never_broadcasts_packed_table(vectors):
     """The block-pair join must be a SHUFFLE join on (b1, b2) keys —
     broadcasting the packed table ships the entire corpus matrix (n*d*8

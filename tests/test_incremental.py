@@ -5,6 +5,7 @@ adversarially small filters."""
 
 import json
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -300,3 +301,99 @@ def test_index_build_jobs_stay_in_callers_job_group(spark, tmp_path, kind):
     assert set(tracker.getJobIdsForGroup(None)) == ungrouped
     # the two writes alone are two jobs
     assert len(tracker.getJobIdsForGroup(group)) >= 2
+
+
+@pytest.mark.parametrize("kind,failing", [
+    ("membership", "blooms"), ("membership", "hashes"),
+    ("neardup", "sets"), ("neardup", "buckets"),
+])
+def test_failed_rebuild_is_refused_and_leaks_no_storage(
+    spark, tmp_path, monkeypatch, kind, failing
+):
+    """A rebuild over an existing index whose write of `failing` dies
+    leaves no params.json, so a gate refuses the directory instead of
+    reading the old params over a mix of old and new files; the build's
+    persisted frames and checkpoints are released."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tetrex_spark.operators.incremental import _read_params, build_neardup_index
+
+    corpus = _corpus(spark, NEARDUP_REF)
+    d = str(tmp_path / "idx")
+    if kind == "membership":
+        def build():
+            return build_membership_index(corpus, d, n_buckets=8)
+    else:
+        def build():
+            return build_neardup_index(corpus, d, n_shards=4)
+    build()
+    assert _read_params(d, kind)["kind"] == kind
+    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    parquet = DataFrameWriter.parquet
+
+    def dying(self, path, *args, **kwargs):
+        if path.endswith(f"/{failing}"):
+            raise RuntimeError("injected write failure")
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying)
+    with pytest.raises(RuntimeError, match="injected"):
+        build()
+    with pytest.raises(FileNotFoundError):
+        _read_params(d, kind)
+    # no RDD the failed build persisted is left (an earlier test's frames
+    # may be collected meanwhile, so the set can only shrink)
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted
+
+
+def _digest(rows) -> str:
+    import hashlib
+
+    h = hashlib.sha256()
+    for row in rows:
+        h.update(repr(tuple(row)).encode())
+    return h.hexdigest()
+
+
+def test_bloom_rows_pinned(spark, index_dir):
+    """The per-bucket Bloom rows are byte-identical to the ones the
+    grouped-pandas build wrote: sha256 of the sorted
+    (bucket, m_bits, n_hashes, n_keys, payload) rows."""
+    import pyarrow.dataset as ds
+
+    rows = ds.dataset(f"{index_dir}/blooms", format="parquet").to_table().to_pylist()
+    assert _digest(sorted(
+        (r["bucket"], r["m_bits"], r["n_hashes"], r["n_keys"], r["payload"]) for r in rows
+    )) == "561d0990783f29f0d899343f04e3c4780592121c3f937de0d60d35c745678ad2"
+
+
+def test_gate_verdicts_pinned(spark, tmp_path):
+    """Verdicts on an index with empty buckets (a reference routed to 4 of
+    8 buckets) and Bloom false positives (fpr 0.5) equal the pinned
+    verdicts of the cogroup plan, and both cases do occur."""
+    import pyarrow.dataset as ds
+
+    from tetrex_spark.kernel.bloom import BloomFilter
+    from tetrex_spark.operators.incremental import _hashed
+
+    pool = [f"reference document number {i} about topic {i % 7}" for i in range(400)]
+    routed = _hashed(_corpus(spark, pool), 8, "text", "doc_id").collect()
+    ref = [pool[r["doc_id"]] for r in sorted(routed) if r["bucket"] < 4]
+    d = str(tmp_path / "idx_fp")
+    build_membership_index(_corpus(spark, ref), d, n_buckets=8, fpr=0.5)
+    texts = [f"fresh text {i}" for i in range(150)] + ref[::10]
+    got = sorted(_gate(spark, d, texts).items())
+    assert sum(not v for _, v in got) == len(ref[::10])
+    assert _digest(got) == "e95c38292d110d344d93a691c527784e86bf12a2384dfcb139fd28a80e111955"
+    blooms = {
+        r["bucket"]: BloomFilter(r["m_bits"], r["n_hashes"], bits=np.frombuffer(r["payload"], np.uint8))
+        for r in ds.dataset(f"{d}/blooms", format="parquet").to_table().to_pylist()
+    }
+    assert sorted(blooms) == [0, 1, 2, 3]
+    fresh = _hashed(_corpus(spark, texts[:150]), 8, "text", "doc_id").collect()
+    assert any(r["bucket"] not in blooms for r in fresh)  # empty-reference bucket
+    assert any(  # a fresh text the filter passes: confirmed away later
+        r["bucket"] in blooms
+        and blooms[r["bucket"]].contains(np.array([r["h"]], np.int64).view(np.uint64))[0]
+        for r in fresh
+    )

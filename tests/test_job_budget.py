@@ -181,6 +181,34 @@ def test_motif_index_file_backed_job_budget(spark, tmp_path):
         assert n_query == 0, f"{name} ran {n_query} jobs"
 
 
+def test_cli_query_on_parquet_corpus_runs_no_job(spark, tmp_path):
+    """`cli index` then `cli query` (selective pattern, stdout sink) over a
+    parquet corpus Spark wrote: the corpus is read with the schema in its
+    footer, so the query runs no job at all and still verifies on the
+    driver (the read's fingerprint matches the one the index recorded)."""
+    import contextlib
+    import io
+
+    from tetrex_spark import cli
+    from tetrex_spark.plans.planner import MotifIndex
+    from tetrex_spark.sources.bin_text import corpus_fingerprint
+    from tetrex_spark.sources.corpus import read_corpus, webtext_small
+
+    src, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
+    webtext_small(spark).repartition(2).write.parquet(src)
+    with contextlib.redirect_stdout(io.StringIO()):
+        assert cli.main(["index", "--corpus", src, "--output", idx, "--bins", "8"]) == 0
+    loaded = MotifIndex.load(spark, idx)
+    fingerprint = loaded.manifest["corpus_fingerprint"]
+    assert fingerprint is not None
+    with contextlib.redirect_stdout(io.StringIO()) as out:
+        rc, n_jobs = _jobs(spark, "cli-query", lambda: cli.main(
+            ["query", "--index", idx, "--corpus", src, "--regex", "zyzzyva"]))
+    assert rc == 0 and out.getvalue().count("zyzzyva") > 0
+    assert n_jobs == 0, f"cli query ran {n_jobs} jobs"
+    assert corpus_fingerprint(read_corpus(spark, src)) == fingerprint
+
+
 def test_sketch_stream_append_job_budget(spark, tmp_path):
     """A SketchStream append onto existing state: the stored state rows
     and the batch's partial sketches meet in one merge exchange, and the

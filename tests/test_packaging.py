@@ -90,3 +90,23 @@ def test_rebalance_is_noop_when_splits_suffice(spark, tmp_path):
     out2 = rebalance(few, min_partitions=8)
     assert out2.rdd.getNumPartitions() >= 8
     assert out2.count() == 1000
+
+
+def test_grouped_python_work_has_one_shape():
+    """Grouped Python work in the library runs as the sorted-run Arrow
+    fold (operators/runs.py): no pandas group UDF or cogroup is called
+    outside streaming/, whose applyInPandasWithState has no batch
+    counterpart."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "tetrex_spark"
+    calls = re.compile(r"\.(applyInPandas|cogroup)\(")
+    found = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if "streaming" not in path.relative_to(root).parts
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if calls.search(line)
+    ]
+    assert found == []

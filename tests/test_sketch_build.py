@@ -173,6 +173,97 @@ def test_final_level_one_arrow_pass_per_core(spark, corpus):
     assert sketch_build.merge_sketch_rows(partials.limit(0), [spec]).count() == 0
 
 
+def _fold_rows(run):
+    """A non-sketch fold: one (k, s, n, vals) row per run, vals in arrival order."""
+    vals = run.column("v").to_pylist()
+    return {"k": run.column("k")[0].as_py(), "s": run.column("s")[0].as_py(),
+            "n": len(vals), "vals": vals}
+
+
+@pytest.mark.parametrize("cuts", [
+    [],                      # one batch, several runs
+    [1, 2, 3, 4, 5, 6, 7],   # one-row batches: every run spans batches
+    [2, 5],                  # runs cut mid-run and at run bounds
+    [0, 0, 8, 8],            # empty batches around the rows
+])
+def test_fold_runs_batch_shapes(cuts):
+    """runs._folder calls the fold once per run of equal keys whatever the
+    batch cuts; null keys form one run, as in a SQL GROUP BY."""
+    import pyarrow as pa
+
+    from tetrex_spark.operators.runs import _folder
+
+    t = pa.table({"k": pa.array([None, None, 1, 1, 1, 2, 2, 3], pa.int64()),
+                  "s": ["a", "a", "a", "a", "b", "b", "b", "b"],
+                  "v": list(range(8))})
+    bounds = [0, *cuts, t.num_rows]
+    batches = [t.slice(lo, hi - lo).to_batches(max_chunksize=8)[0] if hi > lo
+               else pa.RecordBatch.from_pylist([], schema=t.schema)
+               for lo, hi in zip(bounds[:-1], bounds[1:])]
+    seen = []
+    list(_folder(("k", "s"), lambda run: seen.append(_fold_rows(run)), None)(iter(batches)))
+    assert seen == [
+        {"k": None, "s": "a", "n": 2, "vals": [0, 1]},
+        {"k": 1, "s": "a", "n": 2, "vals": [2, 3]},
+        {"k": 1, "s": "b", "n": 1, "vals": [4]},
+        {"k": 2, "s": "b", "n": 2, "vals": [5, 6]},
+        {"k": 3, "s": "b", "n": 1, "vals": [7]},
+    ]
+    # an empty partition folds nothing; a partition that is one run folds once
+    assert list(_folder(("k",), _fold_rows, None)(iter([]))) == []
+    one = [b.slice(i, 1) for b in batches if b.num_rows for i in range(b.num_rows)]
+    calls = []
+    list(_folder(("s",), lambda run: calls.append(run.num_rows), None)(
+        iter([b for b in one if b.column("s")[0].as_py() == "b"])))
+    assert calls == [4]
+
+
+def test_fold_runs_equals_group_by(spark):
+    """fold_runs with a non-sketch fold on defaultParallelism partitions:
+    one output row per group, equal to a JVM groupBy, with one-row Arrow
+    batches (every group spans batches) and with partitions left empty
+    (3 groups on at least 4 partitions); a fold returning several rows
+    as a Table, or None, keeps its rows."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from tetrex_spark.operators.runs import fold_runs
+
+    df = spark.range(60).select(
+        (F.col("id") % 3).alias("k"), F.lit("x").alias("s"), F.col("id").alias("v")
+    )
+    schema = T.StructType([
+        T.StructField("k", T.LongType()), T.StructField("s", T.StringType()),
+        T.StructField("n", T.LongType()), T.StructField("vals", T.ArrayType(T.LongType())),
+    ])
+    want = {r["k"]: r["n"] for r in df.groupBy("k").agg(F.count("*").alias("n")).collect()}
+    out = fold_runs(df, ("k",), lambda run: {
+        "k": run.column("k")[0].as_py(), "s": run.column("s")[0].as_py(),
+        "n": run.num_rows, "vals": run.column("v").to_pylist(),
+    }, schema)
+    for batch_rows in (None, "1"):
+        if batch_rows:
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", batch_rows)
+        try:
+            rows = out.collect()
+            per_part = out.rdd.glom().map(len).collect()
+        finally:
+            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        assert {r["k"]: r["n"] for r in rows} == want
+        assert all(sorted(r["vals"]) == list(range(r["k"], 60, 3)) for r in rows)
+        assert len(per_part) == spark.sparkContext.defaultParallelism
+        assert sum(per_part) == 3 and per_part.count(0) >= len(per_part) - 3
+
+    def evens(run):
+        kept = run.filter(pa.compute.equal(pa.compute.bit_wise_and(run.column("v"), 1), 0))
+        return kept.select(["v"]) if kept.num_rows else None
+
+    flat = fold_runs(df.filter("k = 0"), ("k",), evens,
+                     T.StructType([T.StructField("v", T.LongType())]))
+    assert sorted(r["v"] for r in flat.collect()) == list(range(0, 60, 6))
+
+
 def test_n_items_matches_exact_shingle_count(built, corpus_pdf):
     rows = built.filter("name = 'tok_bloom'").collect()
     total = sum(r["n_items"] for r in rows)

@@ -65,14 +65,9 @@ def read_stored(spark: SparkSession, *paths: str) -> DataFrame:
     Spark recorded in the first path's footer (read on the driver, like
     parquet_rows) instead of a schema-inference job. Every stage output
     carries that footer, an empty one included."""
-    import pyarrow.dataset as ds
-    from pyspark.sql.types import StructType
+    from .sources.corpus import spark_footer_schema
 
-    meta = ds.dataset(paths[0], format="parquet").schema.metadata
-    schema = StructType.fromJson(
-        json.loads(meta[b"org.apache.spark.sql.parquet.row.metadata"])
-    )
-    return spark.read.schema(schema).parquet(*paths)
+    return spark.read.schema(spark_footer_schema(paths[0])).parquet(*paths)
 
 
 class _StagedCheckpoint:

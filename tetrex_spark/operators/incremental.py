@@ -18,23 +18,28 @@ proportional to the INCREMENT, not the corpus:
                      bucket's own key count at `fpr`
                      (kernel/bloom.py — same sizing rule as the
                      reference's per-bin filters)
-      <dir>/params.json  normalization + layout guard
+      <dir>/params.json  normalization + layout guard, written last
+                         (a rebuild removes it first, so a directory
+                         whose build died is refused, not half-read)
 
   gate (per increment):
     1. hash + route the increment the same way: ONE shuffle of the
        increment only; the reference is untouched.
-    2. cogrouped Bloom probe: each bucket's filter is deserialized once
-       per task and probed vectorized against that bucket's increment
-       rows. "Definitely new" rows (no Bloom hit — no false negatives)
-       exit here, which at realistic dup rates is almost everything.
+    2. Bloom probe: the increment rows and the stored filter rows go
+       through one exchange together (runs.fold_runs on bucket), so each
+       bucket's run holds its increment rows and its filter, if any; the
+       filter is deserialized once per run and probed vectorized against
+       those rows. "Definitely new" rows (no Bloom hit — no false
+       negatives) exit here, which at realistic dup rates is almost
+       everything.
     3. confirm the survivors: semi-join on (bucket, h, h2) against the
        hashes table, read with an explicit bucket IN (...) partition
        filter so only candidate buckets' files are scanned. Bloom false
        positives die here, making the gate EXACT (up to the 2^-128
        double-hash collision, documented below).
 
-  Scale knobs: `n_buckets` bounds per-task memory (a bucket's filter +
-  its increment rows are held by one cogroup task — size n_buckets so a
+  Scale knobs: `n_buckets` bounds per-run memory (a bucket's filter +
+  its increment rows are held by one fold call — size n_buckets so a
   bucket's hashes ≈ tens of MB; 10^12 docs at fpr 1e-2 ≈ 1.2 TB of
   filter total, fine across 10k buckets / 1000 executors, never on one
   node). The only driver-side data is the candidate bucket-id list
@@ -50,23 +55,26 @@ intra-increment dedup.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from concurrent.futures import ThreadPoolExecutor
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from ..kernel.bloom import BloomFilter, bloom_m_bits
+from ..sources.corpus import read_parquet
 from .dedup import norm_col
+from .runs import fold_runs
 
 LAYOUT_VERSION = 1
 NORM_VERSION = 1  # the norm_col / normalize_series convention
+_N_HASHES = 3  # hash functions per bucket filter, recorded in params.json
 
 _BLOOM_SCHEMA = T.StructType(
     [
@@ -92,13 +100,43 @@ def _hashed(df: DataFrame, n_buckets: int, text_col: str, id_col: str) -> DataFr
     )
 
 
+def _clear_params(out_dir: str) -> None:
+    """Drop `params.json` before an index build's first write: until the
+    build writes it again, a reader refuses the directory instead of
+    reading the previous build's params over a mix of old and new files."""
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(os.path.join(out_dir, "params.json"))
+
+
+def _write_params(out_dir: str, params: dict) -> None:
+    """Write `params.json`, the last file of an index build, in one rename."""
+    tmp = os.path.join(out_dir, "params.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(params, f, indent=2, sort_keys=True)
+    os.replace(tmp, os.path.join(out_dir, "params.json"))
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD behind a localCheckpoint'ed frame, which
+    otherwise holds its blocks until the JVM collects the frame."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _concurrent(*writes) -> None:
+    """Run independent index writes as concurrent jobs (§2.6). Each write
+    is an inheritable_thread_target, so its jobs join the caller's job
+    group and tags."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        for fut in [pool.submit(w) for w in writes]:
+            fut.result()
+
+
 def build_membership_index(
     df: DataFrame,
     out_dir: str,
     *,
     n_buckets: int = 64,
     fpr: float = 0.01,
-    n_hashes: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> dict:
@@ -110,9 +148,8 @@ def build_membership_index(
     # bucket dir is one file, not one-per-upstream-task — the rows are
     # 16 B, the extra shuffle is cheap; the gate's pruned confirm reads
     # open few). The hashes write, the Bloom build and the stats all
-    # read this checkpoint — the r5 shape wrote the parquet, then READ
-    # IT BACK for the Bloom pass, then read the blooms parquet back
-    # again for stats (three extra scans' worth of jobs per freeze).
+    # read this checkpoint.
+    _clear_params(out_dir)
     hashes = (
         _hashed(df, n_buckets, text_col, id_col)
         .select("bucket", "h", "h2")
@@ -121,25 +158,19 @@ def build_membership_index(
         .localCheckpoint(eager=True)
     )
 
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf["h"].to_numpy(dtype="int64").view(np.uint64)
-        bf = BloomFilter(bloom_m_bits(len(keys), fpr), n_hashes)
+    def build(run: pa.Table) -> dict:
+        keys = run.column("h").to_numpy().view(np.uint64)
+        bf = BloomFilter(bloom_m_bits(len(keys), fpr), _N_HASHES)
         bf.update(keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["bucket"].iat[0])],
-                "m_bits": [bf.m_bits],
-                "n_hashes": [n_hashes],
-                "n_keys": [len(keys)],
-                "payload": [bf.bits.tobytes()],
-            }
-        )
+        return {
+            "bucket": run.column("bucket")[0].as_py(),
+            "m_bits": bf.m_bits,
+            "n_hashes": _N_HASHES,
+            "n_keys": len(keys),
+            "payload": bf.bits.tobytes(),
+        }
 
-    blooms = hashes.groupBy("bucket").applyInPandas(build, _BLOOM_SCHEMA).persist()
-
-    # the two index writes are independent readers of the checkpoint /
-    # the persisted bloom rows — run them as concurrent jobs (§2.6) in
-    # threads that inherit the caller's job group and tags
+    blooms = fold_runs(hashes, ("bucket",), build, _BLOOM_SCHEMA).persist()
 
     @inheritable_thread_target(df.sparkSession)
     def _write_hashes() -> None:
@@ -151,29 +182,28 @@ def build_membership_index(
     def _write_blooms() -> None:
         blooms.write.mode("overwrite").parquet(f"{out_dir}/blooms")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_hashes), pool.submit(_write_blooms)]:
-            fut.result()
-
-    stats = blooms.agg(
-        F.sum("n_keys").alias("n_keys"),
-        F.count(F.lit(1)).alias("n_filled_buckets"),
-    ).collect()[0]
-    blooms.unpersist()
-    params = {
+    try:
+        _concurrent(_write_hashes, _write_blooms)
+        stats = blooms.agg(
+            F.sum("n_keys").alias("n_keys"),
+            F.count(F.lit(1)).alias("n_filled_buckets"),
+        ).collect()[0]
+    finally:
+        blooms.unpersist()
+        _release_checkpoint(hashes)
+    n_keys = int(stats["n_keys"] or 0)
+    _write_params(out_dir, {
         "_layout": LAYOUT_VERSION,
         "kind": "membership",
         "norm_version": NORM_VERSION,
         "n_buckets": n_buckets,
         "fpr": fpr,
-        "n_hashes": n_hashes,
-        "n_keys": int(stats["n_keys"] or 0),
-    }
-    with open(os.path.join(out_dir, "params.json"), "w") as f:
-        json.dump(params, f, indent=2, sort_keys=True)
+        "n_hashes": _N_HASHES,
+        "n_keys": n_keys,
+    })
     return {
         "n_buckets": n_buckets,
-        "n_keys": params["n_keys"],
+        "n_keys": n_keys,
         "n_filled_buckets": int(stats["n_filled_buckets"]),
     }
 
@@ -219,8 +249,7 @@ def incremental_exact_dedup(
     n_buckets = int(params["n_buckets"])
 
     inc = _hashed(increment, n_buckets, text_col, id_col)
-    blooms = spark.read.parquet(f"{index_dir}/blooms")
-
+    blooms = read_parquet(spark, f"{index_dir}/blooms")
     out_schema = T.StructType(
         [
             increment.schema[id_col],
@@ -230,47 +259,30 @@ def incremental_exact_dedup(
             T.StructField("maybe_dup", T.BooleanType()),
         ]
     )
+    inc_cols = [id_col, "h", "h2", "bucket"]
 
-    def probe(inc_pdf: pd.DataFrame, bloom_pdf: pd.DataFrame) -> pd.DataFrame:
-        if inc_pdf.empty:
-            return pd.DataFrame(
-                {
-                    id_col: pd.Series(dtype=inc_pdf[id_col].dtype),
-                    "h": pd.Series(dtype="int64"),
-                    "h2": pd.Series(dtype="int64"),
-                    "bucket": pd.Series(dtype="int32"),
-                    "maybe_dup": pd.Series(dtype=bool),
-                }
-            )
-        if bloom_pdf.empty:
-            # reference has no keys in this bucket: definitely new
-            hit = np.zeros(len(inc_pdf), dtype=bool)
-        else:
-            row = bloom_pdf.iloc[0]
+    def probe(run: pa.Table) -> pa.Table | None:
+        is_bloom = run.column("payload").is_valid().to_numpy(zero_copy_only=False)
+        rows = run.filter(~is_bloom).select(inc_cols)
+        if rows.num_rows == 0:
+            return None
+        hit = np.zeros(rows.num_rows, dtype=bool)
+        if is_bloom.any():
+            bloom = run.filter(is_bloom).slice(0, 1).to_pylist()[0]
             bf = BloomFilter(
-                int(row["m_bits"]),
-                int(row["n_hashes"]),
-                bits=np.frombuffer(row["payload"], dtype=np.uint8),
+                bloom["m_bits"], bloom["n_hashes"],
+                bits=np.frombuffer(bloom["payload"], dtype=np.uint8),
             )
-            hit = bf.contains(
-                inc_pdf["h"].to_numpy(dtype="int64").view(np.uint64)
-            )
-        return pd.DataFrame(
-            {
-                id_col: inc_pdf[id_col],
-                "h": inc_pdf["h"],
-                "h2": inc_pdf["h2"],
-                "bucket": inc_pdf["bucket"],
-                "maybe_dup": hit,
-            }
-        )
+            hit = bf.contains(rows.column("h").to_numpy().view(np.uint64))
+        # else the reference has no keys in this bucket: definitely new
+        return rows.append_column("maybe_dup", pa.array(hit))
 
-    probed = (
-        inc.groupBy("bucket")
-        .cogroup(blooms.groupBy("bucket"))
-        .applyInPandas(probe, out_schema)
-        .localCheckpoint(eager=True)  # one pass; reused by 3 consumers
-    )
+    # one exchange of the increment rows and the bloom rows together:
+    # each bucket's run holds its increment rows and its filter, if any
+    probed = fold_runs(
+        inc.unionByName(blooms, allowMissingColumns=True), ("bucket",),
+        probe, out_schema,
+    ).localCheckpoint(eager=True)  # one pass; reused by 3 consumers
 
     cand = probed.filter("maybe_dup")
     # candidate bucket list: bounded by n_buckets (a config), so the
@@ -279,7 +291,7 @@ def incremental_exact_dedup(
     # join key alone would only get via best-effort DPP).
     cand_buckets = [int(r["bucket"]) for r in cand.select("bucket").distinct().collect()]
     if cand_buckets:
-        hashes = spark.read.parquet(f"{index_dir}/hashes").filter(
+        hashes = read_parquet(spark, f"{index_dir}/hashes").filter(
             F.col("bucket").isin(cand_buckets)
         )
         confirmed = cand.join(hashes, ["bucket", "h", "h2"], "left_semi")
@@ -339,6 +351,7 @@ def build_neardup_index(
     num_perm/bands (default 32x4) give recall ~1-5e-8 at jaccard >= 0.8."""
     from .dedup import band_buckets, cap_buckets, dup_groups, minhash_sigs_and_sets
 
+    _clear_params(out_dir)
     _, reps = dup_groups(df, text_col, id_col)
     # ONE kernel pass: the buckets write (and its over-cap branch), the
     # sets write and the over.count() all read this checkpoint. It is
@@ -347,53 +360,53 @@ def build_neardup_index(
     ss = minhash_sigs_and_sets(
         reps, k, num_perm, "txt", "id", bands=bands
     ).localCheckpoint(eager=False)
-    n_reps = ss.count()
-    if n_shards is None:
-        # scale-adaptive sharding: target ~100k representatives per shard
-        # (sets dominate at ~1-2 KB/rep -> shard files land in the
-        # 100-300 MB range), floor 4, cap 4096 — a toy corpus does not pay
-        # many tiny file opens per pruned gate read, and a 10^9-rep
-        # corpus gets real pruning granularity. Recorded in params, so
-        # gates never depend on the default.
-        n_shards = max(4, min(4096, -(-n_reps // 100_000)))
-    buckets = band_buckets(ss, bands, num_perm // bands)
-    over = None
-    if max_bucket is not None:
-        buckets, over = cap_buckets(buckets, max_bucket)
-    # repartition ON the partition column before the partitioned write:
-    # otherwise every task writes into every shard dir (tasks x shards
-    # tiny files); this way each shard is one file and the gate's pruned
-    # reads open few. The two index writes are INDEPENDENT readers of
-    # the checkpointed sig table, so they run as concurrent jobs: the
-    # second write's tasks back-fill executors freed by the first's tail.
-    # The threads inherit the caller's job group and tags.
+    over, n_dropped = None, 0
+    try:
+        n_reps = ss.count()
+        if n_shards is None:
+            # scale-adaptive sharding: target ~100k representatives per shard
+            # (sets dominate at ~1-2 KB/rep -> shard files land in the
+            # 100-300 MB range), floor 4, cap 4096 — a toy corpus does not pay
+            # many tiny file opens per pruned gate read, and a 10^9-rep
+            # corpus gets real pruning granularity. Recorded in params, so
+            # gates never depend on the default.
+            n_shards = max(4, min(4096, -(-n_reps // 100_000)))
+        buckets = band_buckets(ss, bands, num_perm // bands)
+        if max_bucket is not None:
+            buckets, over = cap_buckets(buckets, max_bucket)
+        # repartition ON the partition column before the partitioned write:
+        # otherwise every task writes into every shard dir (tasks x shards
+        # tiny files); this way each shard is one file and the gate's pruned
+        # reads open few. The two index writes are INDEPENDENT readers of
+        # the checkpointed sig table, so they run as concurrent jobs: the
+        # second write's tasks back-fill executors freed by the first's tail.
+        # The threads inherit the caller's job group and tags.
 
-    @inheritable_thread_target(df.sparkSession)
-    def _write_buckets() -> None:
-        buckets.withColumn(
-            "shard", _sshard(F.col("bh"), n_shards)
-        ).repartition(F.col("shard")).write.mode("overwrite").partitionBy(
-            "shard"
-        ).parquet(f"{out_dir}/buckets")
+        @inheritable_thread_target(df.sparkSession)
+        def _write_buckets() -> None:
+            buckets.withColumn(
+                "shard", _sshard(F.col("bh"), n_shards)
+            ).repartition(F.col("shard")).write.mode("overwrite").partitionBy(
+                "shard"
+            ).parquet(f"{out_dir}/buckets")
 
-    @inheritable_thread_target(df.sparkSession)
-    def _write_sets() -> None:
-        ss.select(
-            _sshard(F.col("id"), n_shards).alias("sshard"), "id", "s"
-        ).repartition(F.col("sshard")).write.mode("overwrite").partitionBy(
-            "sshard"
-        ).parquet(f"{out_dir}/sets")
+        @inheritable_thread_target(df.sparkSession)
+        def _write_sets() -> None:
+            ss.select(
+                _sshard(F.col("id"), n_shards).alias("sshard"), "id", "s"
+            ).repartition(F.col("sshard")).write.mode("overwrite").partitionBy(
+                "sshard"
+            ).parquet(f"{out_dir}/sets")
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [pool.submit(_write_buckets), pool.submit(_write_sets)]:
-            fut.result()
-
-    n_dropped = 0
-    if over is not None:
-        # one partition: the count needs no exchange (one job, not two)
-        n_dropped = int(over.coalesce(1).count())
-        over.unpersist()
-    params = {
+        _concurrent(_write_buckets, _write_sets)
+        if over is not None:
+            # one partition: the count needs no exchange (one job, not two)
+            n_dropped = int(over.coalesce(1).count())
+    finally:
+        if over is not None:
+            over.unpersist()
+        _release_checkpoint(ss)
+    _write_params(out_dir, {
         "_layout": LAYOUT_VERSION,
         "kind": "neardup",
         "norm_version": NORM_VERSION,
@@ -405,9 +418,7 @@ def build_neardup_index(
         "max_bucket": max_bucket,
         "n_reps": n_reps,
         "n_dropped_buckets": n_dropped,
-    }
-    with open(os.path.join(out_dir, "params.json"), "w") as f:
-        json.dump(params, f, indent=2, sort_keys=True)
+    })
     return {"n_reps": n_reps, "n_dropped_buckets": n_dropped}
 
 
@@ -445,7 +456,7 @@ def _neardup_rep_matches(
     if not shards:
         return docs, empty
     ref_b = (
-        spark.read.parquet(f"{index_dir}/buckets")
+        read_parquet(spark, f"{index_dir}/buckets")
         .filter(F.col("shard").isin(shards))
         .select("band", "bh", F.col("id").alias("ref_id"))
     )
@@ -463,7 +474,7 @@ def _neardup_rep_matches(
     if not sshards:
         return docs, empty
     ref_sets = (
-        spark.read.parquet(f"{index_dir}/sets")
+        read_parquet(spark, f"{index_dir}/sets")
         .filter(F.col("sshard").isin(sshards))
         .select(F.col("id").alias("ref_id"), F.col("s").alias("s_b"))
     )

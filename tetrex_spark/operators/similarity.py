@@ -12,10 +12,46 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .runs import fold_runs
+
+_MAX_BROADCAST_ROWS = 2_000_000  # cosine_pairs_exact's driver-matrix ceiling
+
+
+def _vectors(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """(n, d) float64 matrix of an array<float> or array<double> Arrow
+    column, read from the list's flat values buffer (no Python object
+    per vector)."""
+    flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+    n = len(col)
+    return flat.astype(np.float64, copy=False).reshape(n, flat.size // max(n, 1))
+
+
+def _unit_rows(M: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; a zero row stays zero."""
+    return M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+
+
+_PAIR_SCHEMA = T.StructType(
+    [
+        T.StructField("id_a", T.LongType(), False),
+        T.StructField("id_b", T.LongType(), False),
+        T.StructField("cosine", T.DoubleType(), False),
+    ]
+)
+
+
+def _pair_rows(id_a: np.ndarray, id_b: np.ndarray, cosine: np.ndarray) -> pa.RecordBatch:
+    return pa.RecordBatch.from_pydict(
+        {"id_a": id_a, "id_b": id_b, "cosine": cosine},
+        schema=to_arrow_schema(_PAIR_SCHEMA),
+    )
 
 
 def _dot_expr(col, vec: list[float]):
@@ -75,6 +111,59 @@ def _topk_idx(s: np.ndarray, ids: np.ndarray, top: int) -> np.ndarray:
     return cand[np.lexsort((ids[cand], -s[cand]))][:top]
 
 
+def _map_vectors(
+    df: DataFrame, id_col: str, vec_col: str, kernel, schema: T.StructType
+) -> DataFrame:
+    """mapInArrow over df's (id, vector) rows: `kernel(ids, M)` once per
+    non-empty Arrow batch, M the batch's (n, d) float64 vectors
+    (_vectors); it returns the batch's output columns, a dict following
+    `schema`, or None."""
+    out = to_arrow_schema(schema)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            if batch.num_rows:
+                cols = kernel(batch.column(id_col).to_numpy(), _vectors(batch.column(vec_col)))
+                if cols is not None:
+                    yield pa.RecordBatch.from_pydict(cols, schema=out)
+
+    return df.select(id_col, vec_col).mapInArrow(fn, schema)
+
+
+def _ranked_topk(df: DataFrame, id_col: str, vec_col: str, k: int, kernel) -> DataFrame:
+    """(query_id, id, cosine, rank) for rank <= k: `kernel(ids, M)` gives
+    each Arrow batch's partial top-k as [(query id, ids, cosines)], and
+    one global window rank runs over those partials only. Each partial
+    uses the window's total order (cosine desc, id asc) and _topk_idx
+    keeps boundary ties, so the id the global tie-break picks survives."""
+    from pyspark.sql.window import Window
+
+    def cols(ids, M):
+        picks = kernel(ids, M)
+        if not picks:
+            return None
+        return {
+            "query_id": np.repeat([q for q, _, _ in picks], [len(i) for _, i, _ in picks]),
+            id_col: np.concatenate([i for _, i, _ in picks]),
+            "cosine": np.concatenate([c for _, _, c in picks]),
+        }
+
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType(), False),
+            T.StructField(id_col, T.LongType(), False),
+            T.StructField("cosine", T.DoubleType(), False),
+        ]
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col(id_col))
+    return (
+        _map_vectors(df, id_col, vec_col, cols, schema)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", id_col, F.round("cosine", 6).alias("cosine"), "rank")
+    )
+
+
 def cosine_topk_batch(
     df: DataFrame,
     queries: dict[int, list[float]],
@@ -87,46 +176,15 @@ def cosine_topk_batch(
     matmul per Arrow batch (partial top-k per partition), then a global
     window rank over Q x partitions x k rows only."""
     qids = sorted(queries)
-    Q = np.asarray([queries[i] for i in qids], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
+    Qn = _unit_rows(np.asarray([queries[i] for i in qids], dtype=np.float64))
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            scores = Qn @ Mn.T  # (Q, n)
-            ids = pdf[id_col].to_numpy()
-            top = min(k, scores.shape[1])
-            rows = {"query_id": [], id_col: [], "cosine": []}
-            for qi, qid in enumerate(qids):
-                # partial top-k under the SAME total order as the final
-                # window (cosine desc, id asc): _topk_idx keeps boundary
-                # ties so the id the global tie-break will pick survives,
-                # without lexsorting the whole partition per query
-                part = _topk_idx(scores[qi], ids, top)
-                rows["query_id"].extend([qid] * len(part))
-                rows[id_col].extend(ids[part])
-                rows["cosine"].extend(scores[qi, part])
-            yield pd.DataFrame(rows)
+    def topk(ids, M):
+        scores = Qn @ _unit_rows(M).T  # (Q, n)
+        top = min(k, scores.shape[1])
+        parts = [_topk_idx(scores[qi], ids, top) for qi in range(len(qids))]
+        return [(qid, ids[p], scores[qi, p]) for qi, (qid, p) in enumerate(zip(qids, parts))]
 
-    partials = df.select(id_col, vec_col).mapInPandas(fn, schema)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _ranked_topk(df, id_col, vec_col, k, topk)
 
 
 def cosine_pairs_exact(
@@ -135,48 +193,29 @@ def cosine_pairs_exact(
     *,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    max_broadcast_rows: int = 2_000_000,
 ) -> DataFrame:
     """Exact all-pairs cosine >= threshold via broadcast matmul: the full
     (normalized) matrix is broadcast once, each Arrow batch multiplies
     against it with BLAS and emits only surviving (id_a < id_b) pairs.
     O(n^2) work but O(n·d) shuffle — right up to ~1e6 rows; beyond that
     use hyperplane_lsh_pairs (blocking) instead."""
-    rows = df.select(id_col, vec_col).collect()
-    if len(rows) > max_broadcast_rows:
+    table = df.select(id_col, vec_col).toArrow()
+    if table.num_rows > _MAX_BROADCAST_ROWS:
         raise ValueError("too many rows for exact all-pairs; use the LSH variant")
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    M = np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
-    Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
+    ids = table.column(id_col).to_numpy().astype(np.int64)
+    Mn = _unit_rows(_vectors(table.column(vec_col)))
     spark = df.sparkSession
     b_ids = spark.sparkContext.broadcast(ids)
     b_m = spark.sparkContext.broadcast(Mn)
-    schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType(), False),
-            T.StructField("id_b", T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        all_ids, all_m = b_ids.value, b_m.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            X = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-            xid = pdf[id_col].to_numpy(dtype=np.int64)
-            S = Xn @ all_m.T  # (batch, n)
-            bi, bj = np.nonzero((S >= threshold) & (xid[:, None] < all_ids[None, :]))
-            yield pd.DataFrame(
-                {"id_a": xid[bi], "id_b": all_ids[bj], "cosine": S[bi, bj]}
-            )
+    def pairs(xid, M):
+        all_ids = b_ids.value
+        S = _unit_rows(M) @ b_m.value.T  # (batch, n)
+        bi, bj = np.nonzero((S >= threshold) & (xid[:, None] < all_ids[None, :]))
+        return {"id_a": xid[bi], "id_b": all_ids[bj], "cosine": S[bi, bj]}
 
-    return (
-        df.select(id_col, vec_col)
-        .mapInPandas(fn, schema)
-        .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
+    return _map_vectors(df, id_col, vec_col, pairs, _PAIR_SCHEMA).select(
+        "id_a", "id_b", F.round("cosine", 6).alias("cosine")
     )
 
 
@@ -203,8 +242,7 @@ def train_ivf_centroids(
         .limit(sample)
         .collect()
     )
-    X = np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64)
-    X /= np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    X = _unit_rows(np.asarray([list(r[vec_col]) for r in rows], dtype=np.float64))
     rng = np.random.default_rng(seed)
     C = X[rng.permutation(len(X))[:n_cells]].copy()
     for _ in range(iters):
@@ -213,7 +251,7 @@ def train_ivf_centroids(
             members = X[assign == c]
             if len(members):
                 C[c] = members.sum(axis=0)
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+        C = _unit_rows(C)
     return C
 
 
@@ -240,17 +278,10 @@ def ivf_assign(
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        C = b_c.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cell = np.argmax(Mn @ C.T, axis=1).astype(np.int32)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "cell": cell})
+    def assign(ids, M):
+        return {id_col: ids, "cell": np.argmax(_unit_rows(M) @ b_c.value.T, axis=1).astype(np.int32)}
 
-    assigned = df.select(id_col, vec_col).mapInPandas(fn, schema)
+    assigned = _map_vectors(df, id_col, vec_col, assign, schema)
     if with_vec:
         return df.select(id_col, vec_col).join(assigned, id_col)
     return assigned
@@ -280,8 +311,7 @@ def ivf_topk_batch(
             df, n_cells, vec_col=vec_col, id_col=id_col, seed=seed
         )
     qids = sorted(queries)
-    Q = np.asarray([queries[i] for i in qids], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
+    Qn = _unit_rows(np.asarray([queries[i] for i in qids], dtype=np.float64))
     # n_probe nearest cells per query (driver-side: Q x n_cells dots)
     probe = np.argsort(-(Qn @ centroids.T), axis=1)[:, :n_probe]
     probe_sets = {qid: set(map(int, probe[qi])) for qi, qid in enumerate(qids)}
@@ -298,54 +328,25 @@ def ivf_topk_batch(
     # ivf_assign with_vec=True) filter on `cell` FIRST for file pruning,
     # then this pass rescopes to per-query probe cells for free.
     b_q = spark.sparkContext.broadcast((qids, Qn, probe_sets, centroids))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField(id_col, T.LongType(), False),
-            T.StructField("cosine", T.DoubleType(), False),
-        ]
-    )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def topk(ids, M):
         _qids, _Qn, _probe, _C = b_q.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-            cells = np.argmax(Mn @ _C.T, axis=1)
-            ids = pdf[id_col].to_numpy()
-            # drop rows in cells no query probes before any scoring
-            needed = np.isin(cells, cells_needed)
-            if not needed.any():
-                continue
-            Mn, cells, ids = Mn[needed], cells[needed], ids[needed]
-            scores = _Qn @ Mn.T  # (Q, n_kept)
-            rows = {"query_id": [], id_col: [], "cosine": []}
-            for qi, qid in enumerate(_qids):
-                mask = np.isin(cells, list(_probe[qid]))
-                if not mask.any():
-                    continue
-                s = scores[qi][mask]
-                mids = ids[mask]
-                # same total order as the final window (cosine desc, id
-                # asc) — _topk_idx keeps boundary ties so the id the
-                # deterministic global tie-break needs survives
+        Mn = _unit_rows(M)
+        cells = np.argmax(Mn @ _C.T, axis=1)
+        # drop rows in cells no query probes before any scoring
+        needed = np.isin(cells, cells_needed)
+        Mn, cells, ids = Mn[needed], cells[needed], ids[needed]
+        scores = _Qn @ Mn.T  # (Q, n_kept)
+        picks = []
+        for qi, qid in enumerate(_qids):
+            mask = np.isin(cells, list(_probe[qid]))
+            if mask.any():
+                s, mids = scores[qi][mask], ids[mask]
                 part = _topk_idx(s, mids, min(k, s.size))
-                rows["query_id"].extend([qid] * len(part))
-                rows[id_col].extend(mids[part])
-                rows["cosine"].extend(s[part])
-            yield pd.DataFrame(rows)
+                picks.append((qid, mids[part], s[part]))
+        return picks
 
-    partials = df.select(id_col, vec_col).mapInPandas(fn, schema)
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("cosine", 6).alias("cosine"), "rank")
-    )
+    return _ranked_topk(df, id_col, vec_col, k, topk)
 
 
 _PACKED_SCHEMA = T.StructType(
@@ -353,14 +354,6 @@ _PACKED_SCHEMA = T.StructType(
         T.StructField("b", T.IntegerType(), False),
         T.StructField("ids", T.BinaryType(), False),
         T.StructField("mat", T.BinaryType(), False),
-    ]
-)
-
-_PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("id_a", T.LongType(), False),
-        T.StructField("id_b", T.LongType(), False),
-        T.StructField("cosine", T.DoubleType(), False),
     ]
 )
 
@@ -374,24 +367,19 @@ def _pack_blocks(
     ~block*d*8 bytes — the unit every blocked cosine operator below
     shuffles and matmuls."""
 
-    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy(np.int64)
+    def pack(run: pa.Table) -> dict:
+        ids = run.column(id_col).to_numpy().astype(np.int64)
         order = np.argsort(ids)
-        ids = ids[order]
-        M = np.asarray(list(pdf[vec_col]), dtype=np.float64)[order]
-        M /= np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        return pd.DataFrame(
-            {"b": [key[0]], "ids": [ids.tobytes()], "mat": [M.tobytes()]}
-        )
+        return {
+            "b": run.column("b")[0].as_py(),
+            "ids": ids[order].tobytes(),
+            "mat": _unit_rows(_vectors(run.column(vec_col)))[order].tobytes(),
+        }
 
-    return (
-        df.select(id_col, vec_col)
-        .withColumn(
-            "b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(nblocks)).cast("int")
-        )
-        .groupBy("b")
-        .applyInPandas(pack, _PACKED_SCHEMA)
+    blocked = df.select(id_col, vec_col).withColumn(
+        "b", F.pmod(F.xxhash64(F.col(id_col)), F.lit(nblocks)).cast("int")
     )
+    return fold_runs(blocked, ("b",), pack, _PACKED_SCHEMA)
 
 
 def cosine_pairs_blocked(
@@ -455,29 +443,25 @@ def cosine_pairs_blocked(
             (F.col("b") == F.col("rb")) & (F.col("b2") == F.col("rb2")),
         )
 
-    def emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples():  # a handful of block pairs per batch
-                ids1 = np.frombuffer(r.ids, np.int64)
-                ids2 = np.frombuffer(r.ids2, np.int64)
-                A = np.frombuffer(r.mat, np.float64).reshape(len(ids1), -1)
-                B = np.frombuffer(r.mat2, np.float64).reshape(len(ids2), -1)
+    def emit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for r in batch.to_pylist():  # a handful of block pairs per batch
+                ids1 = np.frombuffer(r["ids"], np.int64)
+                ids2 = np.frombuffer(r["ids2"], np.int64)
+                A = np.frombuffer(r["mat"], np.float64).reshape(len(ids1), -1)
+                B = np.frombuffer(r["mat2"], np.float64).reshape(len(ids2), -1)
                 S = A @ B.T
-                if r.b == r.b2:
+                if r["b"] == r["b2"]:
                     ii, jj = np.triu_indices(len(ids1), k=1)
                     keep = S[ii, jj] >= threshold
                     ii, jj = ii[keep], jj[keep]
                 else:
                     ii, jj = np.nonzero(S >= threshold)
                 ia, ib = ids1[ii], ids2[jj]
-                lo = np.minimum(ia, ib)
-                hi = np.maximum(ia, ib)
-                yield pd.DataFrame(
-                    {"id_a": lo, "id_b": hi, "cosine": S[ii, jj]}
-                )
+                yield _pair_rows(np.minimum(ia, ib), np.maximum(ia, ib), S[ii, jj])
 
     return (
-        pairs.mapInPandas(emit, _PAIR_SCHEMA)
+        pairs.mapInArrow(emit, _PAIR_SCHEMA)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )
 
@@ -520,27 +504,27 @@ def cosine_verify_pairs(
             F.collect_list("id_b").alias("ibs"),
         )
     )
-    pa = packed.select(
+    side_a = packed.select(
         F.col("b").alias("ba"), F.col("ids").alias("ids_a"),
         F.col("mat").alias("mat_a"),
     )
-    pb = packed.select(
+    side_b = packed.select(
         F.col("b").alias("bb"), F.col("ids").alias("ids_b"),
         F.col("mat").alias("mat_b"),
     )
-    j = grouped.join(pa.hint("shuffle_hash"), "ba").join(
-        pb.hint("shuffle_hash"), "bb"
+    j = grouped.join(side_a.hint("shuffle_hash"), "ba").join(
+        side_b.hint("shuffle_hash"), "bb"
     )
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for r in pdf.itertuples():
-                ids_a = np.frombuffer(r.ids_a, np.int64)
-                ids_b = np.frombuffer(r.ids_b, np.int64)
-                A = np.frombuffer(r.mat_a, np.float64).reshape(len(ids_a), -1)
-                B = np.frombuffer(r.mat_b, np.float64).reshape(len(ids_b), -1)
-                ia = np.asarray(r.ias, dtype=np.int64)
-                ib = np.asarray(r.ibs, dtype=np.int64)
+    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for r in batch.to_pylist():
+                ids_a = np.frombuffer(r["ids_a"], np.int64)
+                ids_b = np.frombuffer(r["ids_b"], np.int64)
+                A = np.frombuffer(r["mat_a"], np.float64).reshape(len(ids_a), -1)
+                B = np.frombuffer(r["mat_b"], np.float64).reshape(len(ids_b), -1)
+                ia = np.asarray(r["ias"], dtype=np.int64)
+                ib = np.asarray(r["ibs"], dtype=np.int64)
                 # packed ids are sorted; candidates whose id is absent
                 # from df (stale pair list) are DROPPED, not scored
                 # against a neighboring row
@@ -550,12 +534,10 @@ def cosine_verify_pairs(
                 ia, ib, ra, rb = ia[present], ib[present], ra[present], rb[present]
                 cos = np.einsum("ij,ij->i", A[ra], B[rb])
                 keep = cos >= threshold
-                yield pd.DataFrame(
-                    {"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]}
-                )
+                yield _pair_rows(ia[keep], ib[keep], cos[keep])
 
     return (
-        j.mapInPandas(score, _PAIR_SCHEMA)
+        j.mapInArrow(score, _PAIR_SCHEMA)
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )
 
@@ -722,23 +704,18 @@ def lsh_buckets(
         ]
     )
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            M = np.asarray(list(pdf[vec_col]), dtype=np.float64)
-            ids = pdf[id_col].to_numpy()
-            n = len(ids)
-            bits = (M @ planes_flat.T) > 0  # (n, n_bands*n_planes)
-            sig = bits.reshape(n, n_bands, n_planes) @ weights  # (n, bands)
-            # one Arrow row per VECTOR (band index = array position):
-            # the (id, band, bh) long form crossed the Python boundary
-            # as n_bands x n rows; the JVM-side posexplode below emits
-            # the identical bucket rows from n-row batches
-            yield pd.DataFrame({"id": ids, "bhs": list(sig)})
+    def signatures(ids, M):
+        n = len(ids)
+        bits = (M @ planes_flat.T) > 0  # (n, n_bands*n_planes)
+        sig = bits.reshape(n, n_bands, n_planes) @ weights  # (n, bands)
+        # one Arrow row per VECTOR (band index = array position):
+        # the (id, band, bh) long form crossed the Python boundary
+        # as n_bands x n rows; the JVM-side posexplode below emits
+        # the identical bucket rows from n-row batches
+        offsets = np.arange(0, n * n_bands + 1, n_bands, dtype=np.int32)
+        return {"id": ids, "bhs": pa.ListArray.from_arrays(offsets, sig.ravel())}
 
     return (
-        df.select(id_col, vec_col)
-        .mapInPandas(fn, schema)
+        _map_vectors(df, id_col, vec_col, signatures, schema)
         .select("id", F.posexplode("bhs").alias("band", "bh"))
     )

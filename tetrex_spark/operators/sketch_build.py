@@ -16,13 +16,13 @@ sizes the filter to the largest bin (A2, :133-139) and bulk-inserts (A3,
       treeAggregate shape, but expressed on DataFrames so AQE still plans
       it).
   stage 2 (final level) — merge_sketch_rows:
-      repartition(defaultParallelism, bin_id, name) +
-      sortWithinPartitions(bin_id, name) + mapInArrow with the one
-      merger, which folds each run of equal keys — any mix of dense
-      sketches and compact partials — into one dense row per (bin, spec):
-      one Arrow pass per core, no pandas round trip per group (_merge_level;
-      the inner level is the same shape keyed by salt too). Its three
-      callers: build_sketches (over sketch_partials),
+      the library's one shape for grouped Python work (runs.fold_runs):
+      a hash exchange on (bin_id, name) into defaultParallelism
+      partitions, a sort on those keys, and one mapInArrow pass per
+      partition whose fold (_merge_level) turns each run of equal keys —
+      any mix of dense sketches and compact partials — into one dense
+      row per (bin, spec); the inner level is the same fold keyed by salt
+      too. Its three callers: build_sketches (over sketch_partials),
       CheckpointedBuild.finalize (over the stored chunk rows) and
       SketchStream.process_batch (over the previous state plus the
       batch's partials, in one exchange).
@@ -50,6 +50,7 @@ from pyspark.sql import types as T
 from ..kernel import REGISTRY, from_bytes, pack_payload, unpack_payload
 from ..kernel.hashing import concat_ranges
 from ..functions.text import corpus_text_series
+from .runs import fold_runs
 
 SKETCH_ROW_SCHEMA = T.StructType(
     [
@@ -215,24 +216,21 @@ def _payload(spec: SketchSpec, sk, keys=None, counts=None, *, compact=False) -> 
     return sk.to_bytes()
 
 
-def _merger(specs: list[SketchSpec], keys: tuple[str, ...], compact: bool):
-    """mapInArrow body of a merge level: its input is sorted on `keys`,
-    and each run of equal keys (one (bin_id, name[, salt]) group) is
-    merged, whatever mix of dense sketches and compact partials it holds:
-    dense sketches merge, partial keys concatenate, and the row exits
-    through _payload. Runs may span Arrow batches. `compact` keeps an
-    all-partial group compact (inner tree levels); without it the row is
-    dense (the final level)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
+def _merge_level(
+    rows: DataFrame, specs: list[SketchSpec], keys: tuple[str, ...], compact: bool
+) -> DataFrame:
+    """One merge level (runs.fold_runs on `keys`): each run of equal keys
+    (one (bin_id, name[, salt]) group) is merged, whatever mix of dense
+    sketches and compact partials it holds: dense sketches merge, partial
+    keys concatenate, and the row exits through _payload. `compact`
+    keeps an all-partial group compact (inner tree levels); without it
+    the row is dense (the final level)."""
     by_name = {s.name: s for s in specs}
-    schema = to_arrow_schema(SKETCH_ROW_SCHEMA)
 
-    def merge(name: str, blobs: list[bytes]) -> bytes:
-        spec = by_name[name]
+    def merge(run) -> dict:
+        name = run.column("name")[0].as_py()
         sk, parts, counts = None, [], []
-        for blob in blobs:
+        for blob in run.column("payload").to_pylist():
             kind, params, body = unpack_payload(blob)
             if kind != "partial":
                 part = from_bytes(blob)
@@ -244,60 +242,20 @@ def _merger(specs: list[SketchSpec], keys: tuple[str, ...], compact: bool):
             else:
                 dtype = np.float64 if params["form"] == "values" else np.uint64
                 parts.append(np.frombuffer(body, dtype=dtype))
-        return _payload(
-            spec, sk,
+        payload = _payload(
+            by_name[name], sk,
             np.concatenate(parts) if parts else None,
             np.concatenate(counts) if counts else None,
             compact=compact,
         )
+        return {
+            "bin_id": run.column("bin_id")[0].as_py(),
+            "name": name,
+            "payload": payload,
+            "n_items": int(run.column("n_items").to_numpy().sum()),
+        }
 
-    def fold(batches):
-        out = {f: [] for f in schema.names}
-        run, blobs, n_items = None, [], 0
-
-        def emit() -> None:
-            out["bin_id"].append(run[0])
-            out["name"].append(run[1])
-            out["payload"].append(merge(run[1], blobs))
-            out["n_items"].append(n_items)
-
-        for batch in batches:
-            cols = [batch.column(k).to_pylist() for k in keys]
-            for key, blob, n in zip(
-                zip(*cols),
-                batch.column("payload").to_pylist(),
-                batch.column("n_items").to_pylist(),
-            ):
-                if key != run:
-                    if blobs:
-                        emit()
-                    run, blobs, n_items = key, [], 0
-                blobs.append(blob)
-                n_items += n
-            if out["bin_id"]:
-                yield pa.RecordBatch.from_pydict(out, schema=schema)
-                out = {f: [] for f in schema.names}
-        if blobs:
-            emit()
-            yield pa.RecordBatch.from_pydict(out, schema=schema)
-
-    return fold
-
-
-def _merge_level(
-    rows: DataFrame, specs: list[SketchSpec], keys: tuple[str, ...], compact: bool
-) -> DataFrame:
-    """One merge level: one hash exchange on `keys` into one partition per
-    core, a JVM sort on `keys`, and one Arrow pass per partition that
-    folds each group (_merger). A pandas group UDF would pay a pandas
-    round trip per group instead, on the one task AQE coalesces the
-    small sketch-row shuffle into."""
-    n = rows.sparkSession.sparkContext.defaultParallelism
-    return (
-        rows.repartition(n, *keys)
-        .sortWithinPartitions(*keys)
-        .mapInArrow(_merger(specs, keys, compact), SKETCH_ROW_SCHEMA)
-    )
+    return fold_runs(rows, keys, merge, SKETCH_ROW_SCHEMA)
 
 
 # Cache tiling: an Arrow batch (10k docs) spawns per-stage uint64

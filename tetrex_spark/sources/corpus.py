@@ -137,10 +137,44 @@ def read_corpus(spark: SparkSession, src: str) -> DataFrame:
     runtime + catalog are configured on the cluster (north-rule target;
     this sandbox has no Iceberg jars, so the table path is exercised with
     session-catalog views in tests). Iceberg then supplies snapshot
-    isolation + partition pruning underneath the exact same plan."""
+    isolation + partition pruning underneath the exact same plan. A path
+    goes through read_parquet, so parquet Spark wrote costs no job."""
     if "/" in src or src.endswith(".parquet"):
-        return spark.read.parquet(src)
+        return read_parquet(spark, src)
     return spark.read.table(src)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path), with the schema recorded in the footer of
+    parquet Spark wrote (spark_footer_schema) instead of Spark's
+    schema-inference job; other parquet, and any read under
+    spark.sql.parquet.mergeSchema, keeps the inference. Partition
+    columns are discovered from the directory names either way."""
+    schema = None
+    if spark.conf.get("spark.sql.parquet.mergeSchema") != "true":
+        schema = spark_footer_schema(path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def spark_footer_schema(path: str) -> T.StructType | None:
+    """The schema Spark recorded in the footer of the parquet it wrote at
+    `path` (a file, or a directory's first file, as Spark's own inference
+    reads without mergeSchema), read on the driver with pyarrow; None
+    when the driver cannot read `path` or the footer carries no Spark
+    schema."""
+    import json
+    from urllib.parse import urlparse
+
+    import pyarrow.dataset as ds
+
+    if urlparse(path).scheme not in ("", "file"):
+        return None
+    try:
+        meta = ds.dataset(path, format="parquet").schema.metadata or {}
+    except (OSError, ValueError):
+        return None
+    raw = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if raw is None else T.StructType.fromJson(json.loads(raw))
 
 
 def rebalance(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
