@@ -836,3 +836,27 @@ def test_shingles_col_let_binding_equivalence(spark):
         .count()
     )
     assert diff == 0
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash"])
+def test_rep_level_failure_leaks_no_storage(
+    spark, docs, family, fail_after, no_new_persisted_rdds
+):
+    """An in-session run failing inside its verify block, after the
+    capped candidate plan ran (the rep-pair checkpoint), leaves neither
+    the cached bucket table nor the over-cap list persisted."""
+    from tetrex_spark.operators import dedup
+
+    if family == "minhash":
+        fail_after(dedup, "_checkpoint_together")
+
+        def run():
+            return minhash_lsh_pairs(docs, max_bucket=2)
+    else:
+        fail_after(type(docs), "localCheckpoint", nth=2)  # fingerprints, rep pairs
+
+        def run():
+            return simhash_pairs(docs, n_blocks=4, max_bucket=2)
+    with no_new_persisted_rdds(allow_checkpoints=True), \
+            pytest.raises(RuntimeError, match="injected"):
+        run()

@@ -308,7 +308,7 @@ def test_index_build_jobs_stay_in_callers_job_group(spark, tmp_path, kind):
     ("neardup", "sets"), ("neardup", "buckets"),
 ])
 def test_failed_rebuild_is_refused_and_leaks_no_storage(
-    spark, tmp_path, monkeypatch, kind, failing
+    spark, tmp_path, monkeypatch, kind, failing, no_new_persisted_rdds
 ):
     """A rebuild over an existing index whose write of `failing` dies
     leaves no params.json, so a gate refuses the directory instead of
@@ -328,7 +328,6 @@ def test_failed_rebuild_is_refused_and_leaks_no_storage(
             return build_neardup_index(corpus, d, n_shards=4)
     build()
     assert _read_params(d, kind)["kind"] == kind
-    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     parquet = DataFrameWriter.parquet
 
     def dying(self, path, *args, **kwargs):
@@ -337,13 +336,27 @@ def test_failed_rebuild_is_refused_and_leaks_no_storage(
         return parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", dying)
-    with pytest.raises(RuntimeError, match="injected"):
+    with no_new_persisted_rdds(), pytest.raises(RuntimeError, match="injected"):
         build()
     with pytest.raises(FileNotFoundError):
         _read_params(d, kind)
-    # no RDD the failed build persisted is left (an earlier test's frames
-    # may be collected meanwhile, so the set can only shrink)
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) <= persisted
+
+
+def test_neardup_build_failing_after_its_writes_leaks_no_storage(
+    spark, tmp_path, fail_after, no_new_persisted_rdds
+):
+    """build_neardup_index failing after both index writes ran (the
+    capped bucket plan included) releases the over-cap list and the sig
+    checkpoint, and writes no params.json."""
+    from tetrex_spark.operators import incremental
+
+    corpus = _corpus(spark, NEARDUP_REF)
+    d = str(tmp_path / "idx")
+    fail_after(incremental, "_concurrent")
+    with no_new_persisted_rdds(), pytest.raises(RuntimeError, match="injected"):
+        incremental.build_neardup_index(corpus, d, n_shards=4, max_bucket=1)
+    with pytest.raises(FileNotFoundError):
+        incremental._read_params(d, "neardup")
 
 
 def _digest(rows) -> str:

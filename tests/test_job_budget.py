@@ -42,7 +42,7 @@ def test_minhash_lsh_pairs_job_budget(spark, corpus):
         spark, "mh-construct", lambda: minhash_lsh_pairs(corpus, threshold=0.8)
     )
     # ONE kernel checkpoint + ONE fused rep_pairs/members checkpoint +
-    # the cap-stats finisher ( + AQE stage jobs inside each)
+    # the cap-stats job at the block exit ( + AQE stage jobs inside each)
     assert n_construct <= 18, f"minhash construction ran {n_construct} jobs"
     # the member-level expansion must be cache-only: no text re-scan
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -61,7 +61,7 @@ def test_simhash_pairs_job_budget(spark, corpus):
     # r5 plan: fingerprint checkpoint whose materializing count IS the
     # adaptive-width probe (one job where r4 paid two) + rep-pair
     # checkpoint with the fingerprint riding the bucket rows (NO verify
-    # joins, no broadcast) + cap-stats finisher
+    # joins, no broadcast) + the cap-stats job
     assert n_construct <= 17, f"simhash construction ran {n_construct} jobs"
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan and "Scan parquet" not in plan
@@ -82,7 +82,7 @@ def test_minhash_keep_list_job_budget(spark, corpus):
         corpus.select("doc_id"), minhash_lsh_edges(corpus, threshold=0.8)
     ).collect())
     assert len(rows) == 200
-    # 22 jobs when written (the cap-stats finisher is one job), + 3 slack
+    # 22 jobs when written (the cap-stats job is one), + 3 slack
     assert n_jobs <= 25, f"minhash keep-list ran {n_jobs} jobs"
 
 
@@ -102,6 +102,42 @@ def test_checkpointed_dedup_job_budget(spark, corpus, tmp_path):
     assert n > 0
     # 23 jobs when written, plus the slack the budgets above allow
     assert n_jobs <= 26, f"checkpointed dedup ran {n_jobs} jobs"
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "cosine"])
+def test_resumed_checkpointed_pipeline_runs_no_job(spark, corpus, tmp_path, family):
+    """Re-running a finished checkpointed pipeline: every stage is
+    committed, so the pairs stage's candidate block is never entered —
+    no candidate plan, no cap-stats job — and the stored stages are read
+    through their footers. run_rep_level (MinHash, SimHash) and the
+    cosine pipeline's run run 0 jobs."""
+    import numpy as np
+
+    from tetrex_spark.lineage import (
+        CheckpointedCosineDedup,
+        CheckpointedDedup,
+        CheckpointedSimhashDedup,
+    )
+
+    d = str(tmp_path / "ck")
+    if family == "cosine":
+        rng = np.random.default_rng(3)
+        df = spark.createDataFrame(
+            [(i, rng.standard_normal(16).tolist()) for i in range(40)],
+            "vec_id long, embedding array<double>",
+        )
+
+        def resume():
+            return CheckpointedCosineDedup(d, dim=16, n_chunks=2).run(df)
+    else:
+        make = CheckpointedDedup if family == "minhash" else CheckpointedSimhashDedup
+
+        def resume():
+            return make(d, n_chunks=2).run_rep_level(corpus)
+    assert resume() is not None
+    out, n_jobs = _jobs(spark, f"resume-{family}", resume)
+    assert out is not None
+    assert n_jobs == 0, f"resumed {family} pipeline ran {n_jobs} jobs"
 
 
 def test_cli_dedup_job_budget(spark, corpus, tmp_path):

@@ -434,3 +434,70 @@ def test_checkpoint_layout_guard(spark, tmp_path):
     CheckpointedDedup(d2, n_chunks=4)
     stored = json.loads(open(f"{d2}/params_dedup-0.json").read())
     assert stored["_layout"] == _StagedCheckpoint.LAYOUT_VERSION
+
+
+def _cosine_vectors(spark):
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((30, 16))
+    rows = [(i, base[i].tolist()) for i in range(30)]
+    for i in range(5):  # planted near-dups of vectors 0..4
+        rows.append((100 + i, (base[i] + 0.01).tolist()))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("family", ["minhash", "simhash", "cosine"])
+def test_failure_after_pairs_write_leaks_no_storage(
+    spark, dedup_docs, tmp_path, family, fail_after, no_new_persisted_rdds
+):
+    """A checkpointed pipeline failing just after its pairs stage wrote —
+    the capped candidate plan ran with its bucket table and over-cap list
+    cached — leaves neither persisted: the stage's block releases them on
+    the way out."""
+    from tetrex_spark.lineage import (
+        CheckpointedCosineDedup,
+        CheckpointedDedup,
+        CheckpointedSimhashDedup,
+        _StagedCheckpoint,
+    )
+
+    d = str(tmp_path / "ck")
+    if family == "minhash":
+        cd, df = CheckpointedDedup(d, max_bucket=2, n_chunks=2), dedup_docs
+    elif family == "simhash":
+        cd, df = CheckpointedSimhashDedup(d, n_blocks=4, n_chunks=2), dedup_docs
+    else:
+        cd = CheckpointedCosineDedup(d, dim=16, threshold=0.9, max_bucket=3, n_chunks=2)
+        df = _cosine_vectors(spark)
+    fail_after(_StagedCheckpoint, "_commit", nth=3)  # 2 chunk stages, then pairs
+    with no_new_persisted_rdds(), pytest.raises(RuntimeError, match="injected"):
+        cd.run(df)
+    assert "pairs" in cd.committed()
+
+
+def test_interrupted_params_write_is_rewritten(tmp_path, monkeypatch):
+    """A params write that dies midway leaves no params file, so the next
+    open of the checkpoint writes it afresh instead of failing to parse a
+    truncated one."""
+    import json
+
+    from tetrex_spark.lineage import CheckpointedDedup
+
+    iterencode = json.JSONEncoder.iterencode
+
+    def dying(self, o, _one_shot=False):
+        if not self.sort_keys:  # the params normalization, not the write
+            yield from iterencode(self, o, _one_shot)
+            return
+        yield next(iter(iterencode(self, o, _one_shot)))
+        raise OSError("injected: disk full")
+
+    d = str(tmp_path / "ck")
+    monkeypatch.setattr(json.JSONEncoder, "iterencode", dying)
+    with pytest.raises(OSError, match="injected"):
+        CheckpointedDedup(d, n_chunks=2)
+    monkeypatch.undo()
+    CheckpointedDedup(d, n_chunks=2)
+    with open(f"{d}/params_dedup-0.json") as f:
+        assert json.load(f)["n_chunks"] == 2
+    with pytest.raises(ValueError, match="stale"):
+        CheckpointedDedup(d, n_chunks=4)

@@ -490,7 +490,9 @@ def test_rewritten_corpus_file_falls_back_to_spark(spark, tmp_path):
 
 
 @pytest.mark.parametrize("failing", ["write_bin_text", "write_sketch_rows"])
-def test_failed_build_leaves_no_manifest(spark, tmp_path, monkeypatch, webfiles, failing):
+def test_failed_build_leaves_no_manifest(
+    spark, tmp_path, monkeypatch, webfiles, failing, no_new_persisted_rdds
+):
     """Either side of the build failing (the text-copy write in its thread,
     or the sketch write) fails the build after joining the other, and
     leaves no manifest, also where a previous build stood, so `load`
@@ -500,14 +502,12 @@ def test_failed_build_leaves_no_manifest(spark, tmp_path, monkeypatch, webfiles,
     corpus, _, _ = webfiles
     path = str(tmp_path / "idx")
     MotifIndex.build(corpus, path, n_bins=16, k=3)
-    persisted = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
     def boom(*args, **kwargs):
         raise RuntimeError("injected write failure")
 
     monkeypatch.setattr(planner, failing, boom)
-    with pytest.raises(RuntimeError, match="injected"):
+    with no_new_persisted_rdds(), pytest.raises(RuntimeError, match="injected"):
         MotifIndex.build(corpus, path, n_bins=16, k=3)
     with pytest.raises(FileNotFoundError):
         MotifIndex.load(spark, path)
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == persisted

@@ -110,3 +110,44 @@ def test_grouped_python_work_has_one_shape():
         if calls.search(line)
     ]
     assert found == []
+
+
+def test_storage_is_scoped():
+    """Every library function that persists a frame also releases it on
+    every exit — in a `finally`, or through an ExitStack callback — so a
+    failure cannot leave a cached table behind; a context manager whose
+    block yields the frame releases it in its own `finally`. No library
+    function takes a `release` parameter: callers never carry finisher
+    lists to drain."""
+    import ast
+    import pathlib
+
+    def calls(node, attr):
+        return any(
+            isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == attr
+            for n in ast.walk(node)
+        )
+
+    def releases(fn):
+        return any(
+            isinstance(n, ast.Try) and any(calls(s, "unpersist") for s in n.finalbody)
+            or isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "callback" and "unpersist" in ast.unparse(n)
+            for n in ast.walk(fn)
+        )
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "tetrex_spark"
+    unscoped, release = [], []
+    for path in sorted(root.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            where = f"{path.relative_to(root)}:{fn.lineno} {fn.name}"
+            a = fn.args
+            if any(p.arg == "release" for p in a.posonlyargs + a.args + a.kwonlyargs):
+                release.append(where)
+            if calls(fn, "persist") and not releases(fn):
+                unscoped.append(where)
+    assert unscoped == []
+    assert release == []

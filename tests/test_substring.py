@@ -317,3 +317,19 @@ def test_strip_dup_spans_non_ascii_no_crash(spark):
     assert out[3] == rows[2][1]
     for t in out.values():  # every result is valid text
         t.encode()
+
+
+def test_failure_after_candidates_leaks_no_storage(
+    spark, fail_after, no_new_persisted_rdds
+):
+    """substring_dup_spans failing after its capped candidate plan ran
+    (the pair-anchor checkpoint) leaves neither the cached anchor buckets
+    nor the over-cap list persisted."""
+    from tetrex_spark.operators.substring import substring_dup_spans
+
+    rows = [(i, f"doc {i} {BOILER} tail {i}") for i in range(5)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    fail_after(type(df), "localCheckpoint")
+    with no_new_persisted_rdds(allow_checkpoints=True), \
+            pytest.raises(RuntimeError, match="injected"):
+        substring_dup_spans(df, min_len=40, k=16, max_bucket=2)

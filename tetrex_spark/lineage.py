@@ -33,6 +33,7 @@ overwrites the same path and re-commits the same content.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -42,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.sketch_build import SketchSpec, build_sketches, merge_sketch_rows
+from .sources.sketch_store import write_json
 
 if TYPE_CHECKING:
     from .operators.dedup import RepLevelRun
@@ -133,8 +135,7 @@ class _StagedCheckpoint:
                     "return stale results — use a new build_id or dir"
                 )
         else:
-            with open(ppath, "w") as f:
-                f.write(json.dumps(params, sort_keys=True))
+            write_json(ppath, params)
 
     def _apath(self, name: str) -> str:
         """Artifact path namespaced by build_id: two pipelines (or two
@@ -199,16 +200,21 @@ class _StagedCheckpoint:
         return False
 
     def _run_write_stage(
-        self, stage: str, name: str, make_df,
+        self, stage: str, name: str, scoped_df,
         done: set[str], stop_after: str | None,
     ) -> bool:
         """Write a single whole-output stage (e.g. verified pairs) if not
-        committed. Returns True when `stop_after` simulated a kill."""
+        committed. `scoped_df()` returns the block (a context manager,
+        such as operators.dedup.verify_rep_pairs) that yields the stage's
+        frame; it is entered only when the stage runs, and the write and
+        its commit happen inside it. Returns True when `stop_after`
+        simulated a kill."""
         if stage not in done:
             t0 = time.time()
-            make_df().write.mode("overwrite").parquet(self._apath(name))
-            self._commit(stage, rows=parquet_rows(self._apath(name)),
-                         duration_sec=round(time.time() - t0, 3))
+            with scoped_df() as df:
+                df.write.mode("overwrite").parquet(self._apath(name))
+                self._commit(stage, rows=parquet_rows(self._apath(name)),
+                             duration_sec=round(time.time() - t0, 3))
             if stop_after == stage:
                 return True
         return False
@@ -450,22 +456,14 @@ class CheckpointedDedup(_RepLevelDedup):
         ):
             return None
         ss = read_stored(spark, *self._chunk_paths("sigsets"))
-        handles: list = []
-
-        def make_pairs():
-            return verify_rep_pairs(
+        if self._run_write_stage(
+            "pairs", "rep_pairs",
+            lambda: verify_rep_pairs(
                 ss, bands=self.bands, r=self.num_perm // self.bands,
                 threshold=self.threshold, max_bucket=self.max_bucket,
-                release=handles,
-            )
-
-        killed = self._run_write_stage(
-            "pairs", "rep_pairs", make_pairs,
+            ),
             self.committed() if resume else set(), stop_after,
-        )
-        for fin in handles:
-            fin()
-        if killed:
+        ):
             return None
         rep_pairs = read_stored(spark, self._apath("rep_pairs"))
         # the (grp, id) membership frame is checkpointed once (~40 B/doc),
@@ -548,21 +546,13 @@ class CheckpointedSimhashDedup(_RepLevelDedup):
         ):
             return None
         sh = read_stored(spark, *self._chunk_paths("fps"))
-        handles: list = []
-
-        def make_pairs():
-            return simhash_rep_pairs(
-                sh, self.max_hamming, self.n_blocks, self.max_bucket,
-                release=handles,
-            )
-
-        killed = self._run_write_stage(
-            "pairs", "rep_pairs", make_pairs,
+        if self._run_write_stage(
+            "pairs", "rep_pairs",
+            lambda: simhash_rep_pairs(
+                sh, self.max_hamming, self.n_blocks, self.max_bucket
+            ),
             self.committed() if resume else set(), stop_after,
-        )
-        for fin in handles:
-            fin()
-        if killed:
+        ):
             return None
         return _simhash_run(sh, read_stored(spark, self._apath("rep_pairs")))
 
@@ -632,7 +622,7 @@ class CheckpointedCosineDedup(_StagedCheckpoint):
         resume: bool = True,
         stop_after: str | None = None,
     ) -> DataFrame | None:
-        from .operators.dedup import capped_candidate_pairs
+        from .operators.dedup import candidate_pairs
         from .operators.similarity import cosine_verify_pairs, lsh_buckets
 
         spark = df.sparkSession
@@ -647,24 +637,19 @@ class CheckpointedCosineDedup(_StagedCheckpoint):
             done, stop_after,
         ):
             return None
-        handles: list = []
 
-        def make_pairs():
+        @contextlib.contextmanager
+        def verified_pairs():
             buckets = read_stored(spark, *self._chunk_paths("buckets"))
-            cand = capped_candidate_pairs(
-                buckets, self.max_bucket, release=handles
-            )
-            return cosine_verify_pairs(
-                df, cand, self.threshold,
-                vec_col=vec_col, id_col=id_col, block=self.block,
-            )
+            with candidate_pairs(buckets, self.max_bucket) as cand:
+                yield cosine_verify_pairs(
+                    df, cand, self.threshold,
+                    vec_col=vec_col, id_col=id_col, block=self.block,
+                )
 
-        killed = self._run_write_stage(
-            "pairs", "pairs", make_pairs,
+        if self._run_write_stage(
+            "pairs", "pairs", verified_pairs,
             self.committed() if resume else set(), stop_after,
-        )
-        for fin in handles:
-            fin()
-        if killed:
+        ):
             return None
         return read_stored(spark, self._apath("pairs"))

@@ -17,7 +17,9 @@ Bloom index feeds these. Scale design:
 
 from __future__ import annotations
 
+import contextlib
 import functools
+import logging
 from typing import Iterator, NamedTuple
 
 import numpy as np
@@ -298,36 +300,42 @@ def band_buckets(sig_df: DataFrame, bands: int, r: int) -> DataFrame:
     return sig_df.select("id", F.posexplode(bhs).alias("band", "bh"))
 
 
+@contextlib.contextmanager
 def cap_buckets(
     buckets: DataFrame, max_bucket: int
-) -> tuple[DataFrame, DataFrame]:
-    """The LSH over-cap rule: (buckets minus every (band, bh) bucket with
-    more than `max_bucket` members, over), where `over` is the persisted
-    (band, bh, bc) list of dropped buckets. The list stays a distributed
-    DataFrame end to end and the anti-join against it is unconditional
-    (against an empty list it is a no-op), hinted — not forced —
-    broadcast, so no eager job runs before the caller's plan exists.
-    The caller reads its drop statistics from `over` after materializing
-    and then unpersists it."""
+) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """A block over the LSH over-cap rule. It yields (buckets minus
+    every (band, bh) bucket with more than `max_bucket` members, over),
+    where `over` is the persisted (band, bh, bc) list of dropped buckets.
+    The list stays a distributed DataFrame end to end and the anti-join
+    against it is unconditional (against an empty list it is a no-op),
+    hinted — not forced — broadcast, so no eager job runs before the
+    caller's plan exists. The caller materializes its plan and reads its
+    drop statistics from `over` inside the block; `over` is unpersisted
+    when the block exits, normally or not."""
     over = (
         buckets.groupBy("band", "bh")
         .agg(F.count(F.lit(1)).alias("bc"))
         .filter(F.col("bc") > max_bucket)
         .persist()
     )
-    kept = buckets.join(
-        over.select("band", "bh").hint("broadcast"), ["band", "bh"], "left_anti"
-    )
-    return kept, over
+    try:
+        yield buckets.join(
+            over.select("band", "bh").hint("broadcast"), ["band", "bh"],
+            "left_anti",
+        ), over
+    finally:
+        over.unpersist()
 
 
-def capped_candidate_pairs(
+@contextlib.contextmanager
+def candidate_pairs(
     buckets: DataFrame, max_bucket: int | None, *, log_drops: bool = True,
-    release: list | None = None, payload_col: str | None = None,
-) -> DataFrame:
-    """(id_a < id_b) candidate pairs from a (id, band, bh) bucket table —
-    distinct unless a payload rides along (below) — skipping buckets with
-    more than `max_bucket` members.
+    payload_col: str | None = None,
+) -> Iterator[DataFrame]:
+    """A block yielding the lazy (id_a < id_b) candidate-pair plan of a
+    (id, band, bh) bucket table — distinct unless a payload rides along
+    (below) — skipping buckets with more than `max_bucket` members.
 
     `payload_col` names an extra bucket column to carry through the
     self-join as `<payload>_a` / `<payload>_b` — for a FIXED-WIDTH
@@ -346,76 +354,75 @@ def capped_candidate_pairs(
     of the unbounded sum of bucket-size squares (one pathological bucket of
     10^6 members is 5*10^11 pairs). Over-cap buckets are *whole-bucket*
     drops (see cap_buckets) — a pair can still surface via its other
-    bands — and are NEVER silent: the warn-log scalars (count / member
-    rows / largest) are read from the persisted over-cap list in a
-    release finisher AFTER the caller materializes the pairs, so no
-    eager job precedes the plan and nothing bucket-shaped is ever
-    collected. (In-plan DataFrame.observe is not used: observed metrics
-    do not propagate when the subtree executes inside the verify's
+    bands — and are NEVER silent: when the block exits normally, the
+    warn-log scalars (count / member rows / largest) are read from the
+    persisted over-cap list in one job, AFTER the caller materialized
+    the pairs, so no eager job precedes the plan and nothing
+    bucket-shaped is ever collected (log_drops=False skips that job).
+    (In-plan DataFrame.observe is not used: observed metrics do not
+    propagate when the subtree executes inside the verify's
     BroadcastExchange.) With exact-dup pre-collapse upstream (see
     minhash_lsh_pairs) an over-cap bucket requires > max_bucket
     *distinct* texts colliding in one band — a genuine giant near-dup
     cluster, which the cap converts from a quadratic join into a
     bounded one.
 
-    Cache-release contract: with a cap active the bucket table is
-    persisted for its plan branches (unless the caller already cached
-    it); the unpersist finishers run either through the caller's
-    `release` list (callables invoked right after the caller
-    materializes its result) or, with release=None, here after an eager
-    localCheckpoint of the (bounded) candidate list."""
-    finishers: list = []
-    if max_bucket is not None:
-        import logging
+    Block contract: materialize the yielded plan (or any plan built on
+    it) inside the block. With a cap active the bucket table is persisted
+    for the plan's branches (unless the caller already cached it) and the
+    over-cap list is persisted for the anti-join; both are unpersisted
+    when the block exits, normally or by an exception, so a plan read
+    after the block recomputes what it reads."""
+    with contextlib.ExitStack() as scope:
+        over = None
+        if max_bucket is not None:
+            if not (buckets.storageLevel.useMemory or buckets.storageLevel.useDisk):
+                buckets = buckets.persist()
+                scope.callback(buckets.unpersist)
+            buckets, over = scope.enter_context(cap_buckets(buckets, max_bucket))
+        x, y = buckets.alias("x"), buckets.alias("y")
+        cols = [F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b")]
+        if payload_col:
+            cols += [
+                F.col(f"x.{payload_col}").alias(f"{payload_col}_a"),
+                F.col(f"y.{payload_col}").alias(f"{payload_col}_b"),
+            ]
+        cand = x.join(
+            y,
+            (F.col("x.band") == F.col("y.band"))
+            & (F.col("x.bh") == F.col("y.bh"))
+            & (F.col("x.id") < F.col("y.id")),
+        ).select(*cols)
+        yield cand.distinct() if payload_col is None else cand
+        if over is not None and log_drops:
+            # the over-cap list is small; read through one partition,
+            # the aggregate needs no exchange and runs as one job
+            stats = over.coalesce(1).agg(
+                F.count(F.lit(1)).alias("n_over"),
+                F.sum("bc").alias("rows_over"),
+                F.max("bc").alias("max_bc"),
+            ).collect()[0]
+            if stats["n_over"]:
+                logging.getLogger(__name__).warning(
+                    "LSH bucket cap %d drops %d buckets (%d member rows;"
+                    " largest %d); pairs in them surface only via other"
+                    " bands",
+                    max_bucket, int(stats["n_over"]), int(stats["rows_over"]),
+                    int(stats["max_bc"]),
+                )
 
-        if not (buckets.storageLevel.useMemory or buckets.storageLevel.useDisk):
-            buckets = buckets.persist()
-            finishers.append(buckets.unpersist)
-        buckets, over = cap_buckets(buckets, max_bucket)
 
-        def _log_and_release(_over=over, _cap=max_bucket, _log=log_drops):
-            if _log:
-                # the over-cap list is small; read through one partition,
-                # the aggregate needs no exchange and runs as one job
-                stats = _over.coalesce(1).agg(
-                    F.count(F.lit(1)).alias("n_over"),
-                    F.sum("bc").alias("rows_over"),
-                    F.max("bc").alias("max_bc"),
-                ).collect()[0]
-                if stats["n_over"]:
-                    logging.getLogger(__name__).warning(
-                        "LSH bucket cap %d drops %d buckets (%d member rows;"
-                        " largest %d); pairs in them surface only via other"
-                        " bands",
-                        _cap, int(stats["n_over"]), int(stats["rows_over"]),
-                        int(stats["max_bc"]),
-                    )
-            _over.unpersist()
-
-        finishers.append(_log_and_release)
-    x, y = buckets.alias("x"), buckets.alias("y")
-    cols = [F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b")]
-    if payload_col:
-        cols += [
-            F.col(f"x.{payload_col}").alias(f"{payload_col}_a"),
-            F.col(f"y.{payload_col}").alias(f"{payload_col}_b"),
-        ]
-    cand = x.join(
-        y,
-        (F.col("x.band") == F.col("y.band"))
-        & (F.col("x.bh") == F.col("y.bh"))
-        & (F.col("x.id") < F.col("y.id")),
-    ).select(*cols)
-    if payload_col is None:
-        cand = cand.distinct()
-    if finishers:
-        if release is not None:
-            release.extend(finishers)
-        else:
-            cand = cand.localCheckpoint(eager=True)
-            for fin in finishers:
-                fin()
-    return cand
+def capped_candidate_pairs(
+    buckets: DataFrame, max_bucket: int | None, *, log_drops: bool = True,
+    payload_col: str | None = None,
+) -> DataFrame:
+    """The candidate_pairs block as one call: with a cap active the pairs
+    are localCheckpointed (bounded by the cap) inside the block, which
+    then releases its caches; without one the lazy plan is returned."""
+    with candidate_pairs(
+        buckets, max_bucket, log_drops=log_drops, payload_col=payload_col
+    ) as cand:
+        return cand if max_bucket is None else cand.localCheckpoint(eager=True)
 
 
 # -- the representative level --------------------------------------------------
@@ -576,7 +583,8 @@ def _minhash_rep_level(
 
     Eager jobs: the kernel checkpoint of the sig table, then ONE
     checkpoint of rep_pairs and members together, plus the cap-stats
-    finisher — the job budget in tests/test_job_budget.py holds this.
+    job as the verify block exits — the job budget in
+    tests/test_job_budget.py holds this.
     The kernel runs exactly once: every branch reads its checkpoint.
     `reps` reads the sig checkpoint lazily (fusing it into the second
     checkpoint measured one construct job and two keep-list jobs more).
@@ -589,15 +597,12 @@ def _minhash_rep_level(
         reps, k, num_perm, "txt", "id", passthrough=("grp", "csize"),
         bands=bands,
     ).localCheckpoint(eager=True)
-    handles: list = []
-    rp = verify_rep_pairs(
-        ss, bands=bands, r=num_perm // bands, threshold=threshold,
-        max_bucket=max_bucket, release=handles,
-    )
     members = docs.select("grp", "id")
-    rep_pairs, members = _checkpoint_together(rp, members, sizer=members)
-    for fin in handles:
-        fin()
+    with verify_rep_pairs(
+        ss, bands=bands, r=num_perm // bands, threshold=threshold,
+        max_bucket=max_bucket,
+    ) as rp:
+        rep_pairs, members = _checkpoint_together(rp, members, sizer=members)
     return _minhash_run(members, rep_pairs, ss)
 
 
@@ -653,37 +658,36 @@ def dup_groups(
     return docs, reps
 
 
+@contextlib.contextmanager
 def verify_rep_pairs(
     ss: DataFrame, *, bands: int, r: int, threshold: float,
-    max_bucket: int | None, release: list | None = None,
-) -> DataFrame:
-    """(id_a, id_b, jaccard, grp_a, grp_b) rep-level near-dup pairs from
-    a sig table carrying `grp` (minhash_sigs_and_sets with the grp
-    passthrough): banded blocking (size-capped) then exact-Jaccard
-    verify on candidates only — the reference's filter-then-verify
-    (query.h:265-281) transplanted to similarity. The (tiny)
-    candidate-pair side is broadcast into two map-side joins; jaccard is
-    array_intersect arithmetic on the sets, and each side's group key
-    rides the same joins so the member expansion needs no rep-id ->
-    group lookup. `release` forwards to capped_candidate_pairs
-    (cache-release contract)."""
-    cand = capped_candidate_pairs(
-        band_buckets(ss, bands, r), max_bucket, release=release
-    )
-
+    max_bucket: int | None,
+) -> Iterator[DataFrame]:
+    """A block yielding the lazy (id_a, id_b, jaccard, grp_a, grp_b)
+    rep-level near-dup pairs of a sig table carrying `grp`
+    (minhash_sigs_and_sets with the grp passthrough): banded blocking
+    (size-capped) then exact-Jaccard verify on candidates only — the
+    reference's filter-then-verify (query.h:265-281) transplanted to
+    similarity. The (tiny) candidate-pair side is broadcast into two
+    map-side joins; jaccard is array_intersect arithmetic on the sets,
+    and each side's group key rides the same joins so the member
+    expansion needs no rep-id -> group lookup. It is a candidate_pairs
+    block: materialize the pairs inside it; its exit logs cap drops
+    (normal exit) and releases the bucket caches (every exit)."""
     def side(x: str) -> DataFrame:
         return ss.select(F.col("id").alias(f"id_{x}"),
                          F.col("s").alias(f"s_{x}"),
                          F.col("grp").alias(f"grp_{x}"))
 
     inter = F.size(F.array_intersect("s_a", "s_b"))
-    return (
-        F.broadcast(cand).join(side("a"), "id_a").join(side("b"), "id_b")
-        .withColumn("jaccard", inter / (F.size("s_a") + F.size("s_b") - inter))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
-                "grp_a", "grp_b")
-    )
+    with candidate_pairs(band_buckets(ss, bands, r), max_bucket) as cand:
+        yield (
+            F.broadcast(cand).join(side("a"), "id_a").join(side("b"), "id_b")
+            .withColumn("jaccard", inter / (F.size("s_a") + F.size("s_b") - inter))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"),
+                    "grp_a", "grp_b")
+        )
 
 
 # -- simhash -----------------------------------------------------------------
@@ -838,21 +842,21 @@ def simhash_pairs_from_fingerprints(
     return run.pairs()
 
 
+@contextlib.contextmanager
 def simhash_rep_pairs(
     sh: DataFrame, max_hamming: int, n_blocks: int,
-    max_bucket: int | None, *, release: list | None = None,
-) -> DataFrame:
-    """(id_a, id_b, hamming, grp_a, grp_b) rep-level near-dup pairs from a
-    fingerprint table (id, simhash) — the SimHash counterpart of
-    verify_rep_pairs, and like it a lazy plan. One representative
-    (minimum id) per distinct fingerprint; the group keys are the
-    fingerprints themselves. The 8-byte fingerprint RIDES the bucket
-    rows (payload_col), so the verify needs NO joins at all — each
-    candidate pair arrives with both fingerprints attached (bands * 8
-    extra shuffle bytes instead of a broadcast + two join stages) — and
-    the candidate dedup runs AFTER the bit_count filter, shuffling only
-    surviving pairs. `release` forwards to capped_candidate_pairs
-    (cache-release contract)."""
+    max_bucket: int | None,
+) -> Iterator[DataFrame]:
+    """A block yielding the lazy (id_a, id_b, hamming, grp_a, grp_b)
+    rep-level near-dup pairs of a fingerprint table (id, simhash) — the
+    SimHash counterpart of verify_rep_pairs, with the same block
+    contract. One representative (minimum id) per distinct fingerprint;
+    the group keys are the fingerprints themselves. The 8-byte
+    fingerprint RIDES the bucket rows (payload_col), so the verify needs
+    NO joins at all — each candidate pair arrives with both fingerprints
+    attached (bands * 8 extra shuffle bytes instead of a broadcast + two
+    join stages) — and the candidate dedup runs AFTER the bit_count
+    filter, shuffling only surviving pairs."""
     groups = sh.groupBy("simhash").agg(F.min("id").alias("id"))
     buckets = groups.select(
         "id", "simhash",
@@ -861,21 +865,19 @@ def simhash_rep_pairs(
         "id", "simhash", F.col("bb.band").alias("band"),
         F.col("bb.bh").alias("bh"),
     )
-    cand = capped_candidate_pairs(
-        buckets, max_bucket, release=release, payload_col="simhash"
-    )
-    return (
-        cand.select(
-            "id_a", "id_b",
-            F.bit_count(
-                F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
-            ).alias("hamming"),
-            F.col("simhash_a").alias("grp_a"),
-            F.col("simhash_b").alias("grp_b"),
+    with candidate_pairs(buckets, max_bucket, payload_col="simhash") as cand:
+        yield (
+            cand.select(
+                "id_a", "id_b",
+                F.bit_count(
+                    F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))
+                ).alias("hamming"),
+                F.col("simhash_a").alias("grp_a"),
+                F.col("simhash_b").alias("grp_b"),
+            )
+            .filter(F.col("hamming") <= max_hamming)
+            .dropDuplicates(["id_a", "id_b"])
         )
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )
 
 
 def _simhash_run(sh: DataFrame, rep_pairs: DataFrame) -> RepLevelRun:
@@ -913,12 +915,8 @@ def _simhash_rep_level(
         # adaptive width (see simhash_pairs): this count is what
         # materializes the lazy checkpoint — never a second text scan
         n_blocks = 4 if sh.count() <= 200_000 else 6
-    handles: list = []
-    rep_pairs = simhash_rep_pairs(
-        sh, max_hamming, n_blocks, max_bucket, release=handles
-    ).localCheckpoint(eager=True)  # tiny: candidate-bounded
-    for fin in handles:
-        fin()
+    with simhash_rep_pairs(sh, max_hamming, n_blocks, max_bucket) as rp:
+        rep_pairs = rp.localCheckpoint(eager=True)  # tiny: candidate-bounded
     return _simhash_run(sh, rep_pairs)
 
 

@@ -69,6 +69,7 @@ from pyspark.util import inheritable_thread_target
 
 from ..kernel.bloom import BloomFilter, bloom_m_bits
 from ..sources.corpus import read_parquet
+from ..sources.sketch_store import write_json
 from .dedup import norm_col
 from .runs import fold_runs
 
@@ -106,14 +107,6 @@ def _clear_params(out_dir: str) -> None:
     reading the previous build's params over a mix of old and new files."""
     with contextlib.suppress(FileNotFoundError):
         os.remove(os.path.join(out_dir, "params.json"))
-
-
-def _write_params(out_dir: str, params: dict) -> None:
-    """Write `params.json`, the last file of an index build, in one rename."""
-    tmp = os.path.join(out_dir, "params.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(params, f, indent=2, sort_keys=True)
-    os.replace(tmp, os.path.join(out_dir, "params.json"))
 
 
 def _release_checkpoint(df: DataFrame) -> None:
@@ -192,7 +185,7 @@ def build_membership_index(
         blooms.unpersist()
         _release_checkpoint(hashes)
     n_keys = int(stats["n_keys"] or 0)
-    _write_params(out_dir, {
+    write_json(os.path.join(out_dir, "params.json"), {
         "_layout": LAYOUT_VERSION,
         "kind": "membership",
         "norm_version": NORM_VERSION,
@@ -361,7 +354,8 @@ def build_neardup_index(
         reps, k, num_perm, "txt", "id", bands=bands
     ).localCheckpoint(eager=False)
     over, n_dropped = None, 0
-    try:
+    with contextlib.ExitStack() as scope:
+        scope.callback(_release_checkpoint, ss)
         n_reps = ss.count()
         if n_shards is None:
             # scale-adaptive sharding: target ~100k representatives per shard
@@ -373,7 +367,7 @@ def build_neardup_index(
             n_shards = max(4, min(4096, -(-n_reps // 100_000)))
         buckets = band_buckets(ss, bands, num_perm // bands)
         if max_bucket is not None:
-            buckets, over = cap_buckets(buckets, max_bucket)
+            buckets, over = scope.enter_context(cap_buckets(buckets, max_bucket))
         # repartition ON the partition column before the partitioned write:
         # otherwise every task writes into every shard dir (tasks x shards
         # tiny files); this way each shard is one file and the gate's pruned
@@ -402,11 +396,7 @@ def build_neardup_index(
         if over is not None:
             # one partition: the count needs no exchange (one job, not two)
             n_dropped = int(over.coalesce(1).count())
-    finally:
-        if over is not None:
-            over.unpersist()
-        _release_checkpoint(ss)
-    _write_params(out_dir, {
+    write_json(os.path.join(out_dir, "params.json"), {
         "_layout": LAYOUT_VERSION,
         "kind": "neardup",
         "norm_version": NORM_VERSION,

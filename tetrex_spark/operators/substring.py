@@ -24,7 +24,7 @@ Scale design — no distributed suffix array needed:
      this is what makes the blocking shuffle linear-with-small-constant
      instead of len(text) rows per doc.
   2. BLOCK: anchors with equal hash meet in a bucket
-     (capped_candidate_pairs — the same size-capped machinery as the
+     (dedup.candidate_pairs — the same size-capped machinery as the
      MinHash/SimHash families, positions riding the bucket rows as the
      payload); candidate = two docs sharing an anchor hash, WITH the
      aligned positions attached.
@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import normalize_series
 from ..kernel.hashing import concat_ranges, hash_char_kgrams_series
-from .dedup import capped_candidate_pairs
+from .dedup import candidate_pairs
 
 _ANCHOR_SCHEMA = T.StructType(
     [
@@ -242,19 +242,14 @@ def substring_dup_spans(
     buckets = anchors.select(
         "id", F.lit(0).alias("band"), "bh", "pos"
     )
-    handles: list = []
-    cand = capped_candidate_pairs(
-        buckets, max_bucket, release=handles, payload_col="pos"
-    )
-    pair_anchors = (
-        cand.groupBy("id_a", "id_b")
-        .agg(
-            F.collect_list(F.struct("pos_a", "pos_b")).alias("anchors")
+    with candidate_pairs(buckets, max_bucket, payload_col="pos") as cand:
+        pair_anchors = (
+            cand.groupBy("id_a", "id_b")
+            .agg(
+                F.collect_list(F.struct("pos_a", "pos_b")).alias("anchors")
+            )
+            .localCheckpoint(eager=True)  # candidate-bounded
         )
-        .localCheckpoint(eager=True)  # candidate-bounded; releases the
-    )                                 # bucket cache via the finishers
-    for fin in handles:
-        fin()
     ta = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("__ta"))
     tb = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("__tb"))
     joined = F.broadcast(pair_anchors).join(ta, "id_a").join(tb, "id_b")

@@ -31,9 +31,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .dgram import PAD
 from .nfa import NFA, Kind
-
-PAD = 3  # d-gram pad width (fixed 3+3, like the reference's dGramIndex)
 
 
 class TraversalResult:

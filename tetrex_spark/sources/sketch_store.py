@@ -15,7 +15,8 @@ Index directories are driver-local: `read_manifest` opens manifest.json on
 the driver, and `read_sketch_table` reads every `rows/` partition there
 too, with pyarrow and no Spark job. A motif index load is therefore one
 file-system read, whatever the number of sketch names it holds.
-`write_manifest` is the one writer of manifest.json.
+`write_manifest` is the one writer of manifest.json, through
+`write_json`, which every index and checkpoint marker file goes through.
 
 Format 3 (this version) adds two manifest entries for the query's
 driver-side verify: `bin_chars`, the characters of text per bin, and
@@ -59,16 +60,23 @@ def index_manifest(specs: list[SketchSpec], n_bins: int, extra: dict) -> dict:
     }
 
 
+def write_json(path: str, obj: dict) -> None:
+    """Write a JSON marker file — an index manifest or params file, a
+    checkpoint's params, a stream's state pointer — through `<path>.tmp`
+    and one rename, so a reader finds the previous file or this one,
+    never a part of one. A write that dies leaves only the stray .tmp,
+    which the next write overwrites."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+
+
 def write_manifest(path: str, manifest: dict) -> None:
     """Write `manifest.json`, the last file of an index build (a
-    directory without one is refused by `read_manifest`). The file is
-    replaced in one rename, so a reader finds the previous manifest or
-    this one, never a part of one."""
+    directory without one is refused by `read_manifest`)."""
     os.makedirs(path, exist_ok=True)
-    tmp = f"{path}/{MANIFEST_NAME}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=2, sort_keys=True)
-    os.replace(tmp, f"{path}/{MANIFEST_NAME}")
+    write_json(f"{path}/{MANIFEST_NAME}", manifest)
 
 
 def read_manifest(path: str) -> dict:

@@ -12,8 +12,9 @@ Shape: readStream(parquet dir) -> foreachBatch:
   previous state rows ∪ sketch_partials(batch rows) -> merge_sketch_rows
   (one exchange) -> atomic versioned state swap.
 State versions are directories state_v<N>; a `_CURRENT` pointer file is
-rewritten last, so readers never see a torn state (rename-free, works on
-object stores where rename is non-atomic).
+rewritten last (sources.sketch_store.write_json: one file rename), so
+readers never see a torn state; the state directories themselves are
+never renamed.
 """
 
 from __future__ import annotations
@@ -26,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..lineage import read_stored
 from ..operators.sketch_build import SketchSpec, merge_sketch_rows, sketch_partials
+from ..sources.sketch_store import write_json
 
 
 class SketchStream:
@@ -55,10 +57,7 @@ class SketchStream:
     def _commit_state(self, df: DataFrame, version: int) -> None:
         path = os.path.join(self.state_dir, f"state_v{version}")
         df.write.mode("overwrite").parquet(path)
-        tmp = self._current_pointer() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, self._current_pointer())  # atomic pointer swap
+        write_json(self._current_pointer(), {"version": version})
         # retain only the two most recent versions
         for d in os.listdir(self.state_dir):
             if d.startswith("state_v") and int(d[7:]) < version - 1:
