@@ -299,10 +299,11 @@ def q_heavy_hitters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS candidate pass -> exact verify of candidates only (the scale
-    path kernel/cms.py exists for): same output as heavy_hitters_exact,
-    but the shuffle carries only tokens whose CMS estimate clears phi*N
-    instead of the whole distinct-token tail."""
+    """The scale path for heavy_hitters_exact's answer: one corpus pass in
+    which each task reports only its frequent tokens with exact counts,
+    collected without a shuffle, instead of shuffling the whole
+    distinct-token tail. The entry keeps its historical name (it once
+    ran a Count-Min candidate pass) because the benchmark keys on it."""
     from tetrex_spark.operators.heavy_hitters import heavy_hitters_topk
 
     return heavy_hitters_topk(_docs(spark, sf_dir), k=20, phi_num=1, phi_den=50)

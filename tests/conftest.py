@@ -27,26 +27,18 @@ def spark():
 
 @pytest.fixture
 def no_new_persisted_rdds(spark):
-    """no_new_persisted_rdds(allow_checkpoints=False): a block asserting
-    that it leaves no new persisted RDD id. Spark holds persisted RDDs as
-    weak values, so one an earlier test left can be collected during the
-    block: the check is that no id was added, not that the set is
-    unchanged. allow_checkpoints=True lets the block leave local
-    checkpoints, which live as long as the frames that hold them (an
-    in-session dedup's sig table or rep pairs); a cached frame stays
-    until it is unpersisted, so it is always counted."""
+    """no_new_persisted_rdds(): a block asserting that it leaves no new
+    persisted RDD id, cached frame or local checkpoint. Spark holds
+    persisted RDDs as weak values, so one an earlier test left can be
+    collected during the block: the check is that no id was added, not
+    that the set is unchanged."""
     rdds = spark.sparkContext._jsc.getPersistentRDDs
 
     @contextlib.contextmanager
-    def block(allow_checkpoints=False):
+    def block():
         before = set(rdds().keySet())
         yield
-        new = {
-            i for i, rdd in rdds().items()
-            if i not in before
-            and not (allow_checkpoints and rdd.rdd().isLocallyCheckpointed())
-        }
-        assert new == set()
+        assert set(rdds().keySet()) - before == set()
 
     return block
 
@@ -70,3 +62,15 @@ def fail_after(monkeypatch):
         monkeypatch.setattr(owner, name, wrapper)
 
     return patch
+
+
+@pytest.fixture(scope="session")
+def hh_fallback_docs(spark):
+    """Two hand-made partitions where no task's report decides `x` at
+    phi = 1/50: A holds 1,000 tokens with 90 x (reported), B 4,000 tokens
+    with 19 x (under B's bar, so B's tau is 19). x = 109 clears N/50 = 100,
+    but the reports bound it only to [90, 109]: the exact recount must run."""
+    a = " ".join(["x"] * 90 + [f"a{i}" for i in range(910)])
+    b = " ".join(["x"] * 19 + [f"b{i}" for i in range(3981)])
+    rdd = spark.sparkContext.parallelize([(0, a), (1, b)], 2)
+    return spark.createDataFrame(rdd, "doc_id long, text string")

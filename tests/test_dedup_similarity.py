@@ -857,6 +857,6 @@ def test_rep_level_failure_leaks_no_storage(
 
         def run():
             return simhash_pairs(docs, n_blocks=4, max_bucket=2)
-    with no_new_persisted_rdds(allow_checkpoints=True), \
+    with no_new_persisted_rdds(), \
             pytest.raises(RuntimeError, match="injected"):
         run()

@@ -1,14 +1,17 @@
-"""CMS-driven heavy-hitter identification vs exact pandas oracles:
-candidate recall (no false negatives by construction), exact verify
-(no false positives), threshold edge cases, and pruning effectiveness."""
+"""Exact heavy hitters from per-task frequent-token reports vs
+`collections.Counter`: threshold edge cases and ties, independence from
+partitioning, the exact recount of undecided tokens, and the bound on
+what one task reports."""
 
 import collections
 
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from tetrex_spark.operators.heavy_hitters import (
-    build_global_cms,
+    _SLACK,
+    _report,
     heavy_hitters,
     heavy_hitters_topk,
 )
@@ -38,54 +41,102 @@ def skewed_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def _exact_counts(df):
-    texts = [r["text"] for r in df.collect()]
+def _exact_counts(texts):
     c = collections.Counter()
     for t in texts:
-        c.update(t.lower().split())
+        c.update((t or "").lower().split())
     return c
 
 
+def _ranked(counts, phi_num, phi_den):
+    n = sum(counts.values())
+    hh = [(t, k) for t, k in counts.items() if k * phi_den >= n * phi_num]
+    return sorted(hh, key=lambda kv: (-kv[1], kv[0]))
+
+
+def _rows(df):
+    return [(r["token"], r["cnt"]) for r in df.collect()]
+
+
 def test_heavy_hitters_equals_exact_threshold(spark, skewed_docs):
-    c = _exact_counts(skewed_docs)
-    n = sum(c.values())
-    want = {t: k for t, k in c.items() if k * 50 >= n}
-    got = {r["token"]: r["cnt"] for r in heavy_hitters(skewed_docs, 1, 50).collect()}
-    assert got == want
+    c = _exact_counts(r["text"] for r in skewed_docs.collect())
+    got = _rows(heavy_hitters(skewed_docs, 1, 50))
+    assert got == _ranked(c, 1, 50)
     # the planted edge token (count*50 == N) is IN, the sub token is OUT
-    assert "edge" in got and "sub" not in got
+    assert "edge" in dict(got) and "sub" not in dict(got)
 
 
 def test_heavy_hitters_prunes_tail(spark, skewed_docs):
-    """The candidate pass must NOT pass the singleton tail through the
-    shuffle: with eps*N << phi*N, candidates ~= true heavy hitters."""
-    from pyspark.sql import types as T
+    """The report pass keeps the singleton tail inside its task: a task
+    sends at most _SLACK * phi_den / phi_num tokens plus its summary row,
+    and no token seen once in the corpus is among them."""
+    c = _exact_counts(r["text"] for r in skewed_docs.collect())
+    rep = _report(skewed_docs.repartition(4), 1, 50, "text").withColumn(
+        "part", F.spark_partition_id()
+    ).collect()
+    per_task = collections.Counter(r["part"] for r in rep)
+    assert max(per_task.values()) <= _SLACK * 50 + 1
+    summaries = [r for r in rep if r["token"] is None]
+    assert len(summaries) == len(per_task)  # one summary row per task
+    assert sum(r["cnt"] for r in summaries) == sum(c.values())
+    reported = {r["token"] for r in rep if r["token"] is not None}
+    assert all(c[t] > 1 for t in reported)
+    assert len(rep) < len(c) / 10
 
-    from tetrex_spark.operators.dedup import tokens_col
-    from tetrex_spark.operators.heavy_hitters import _CAND_SCHEMA
-    from tetrex_spark.kernel import from_bytes
 
-    cms, n = build_global_cms(skewed_docs, width=8192, depth=5)
-    c = _exact_counts(skewed_docs)
-    assert n == sum(c.values())
-    # probe every distinct token the way the operator does
-    import numpy as np
+def test_heavy_hitters_exact_recount(spark, hh_fallback_docs):
+    """x is reported by one task only, and the other task's tau leaves it
+    undecided: its count comes from the recount pass, exact."""
+    rep = _report(hh_fallback_docs, 1, 50, "text").collect()
+    assert [r["cnt"] for r in rep if r["token"] == "x"] == [90]
+    assert _rows(heavy_hitters(hh_fallback_docs, 1, 50)) == [("x", 109)]
 
-    from tetrex_spark.functions.text import hash_token_shingle
 
-    uniq = sorted(c)
-    est = cms.estimate(
-        np.array([hash_token_shingle([t]) for t in uniq], dtype=np.uint64)
+_VOCAB = ["a", "B", "cc", "d", "Ee", "f", "g"]
+_doc = st.one_of(
+    st.none(),
+    st.lists(
+        st.tuples(st.sampled_from(_VOCAB), st.sampled_from([" ", "  ", "\t", "\n "])),
+        max_size=12,
+    ).map(lambda ws: "".join(w + sep for w, sep in ws)),
+)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    docs=st.lists(_doc, max_size=30),
+    n_parts=st.sampled_from([1, 2, 3, 7]),
+    order=st.randoms(use_true_random=False),
+    pick=st.integers(0, 8),
+)
+def test_heavy_hitters_match_counter(spark, docs, n_parts, order, pick):
+    """Any corpus, any partitioning, any row order: the exact answer.
+    phi is often one token's share of N, so that token and its ties sit
+    exactly on the threshold."""
+    c = _exact_counts(docs)
+    n = sum(c.values())
+    ranked_counts = sorted(set(c.values()))
+    if pick < len(ranked_counts):
+        phi_num, phi_den = ranked_counts[pick], n
+    else:
+        phi_num, phi_den = 1, pick + 1
+    rows = list(enumerate(docs))
+    order.shuffle(rows)
+    df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, n_parts), "doc_id long, text string"
     )
-    cand = {t for t, e in zip(uniq, est) if e * 50 >= n}
-    true_hh = {t for t, k in c.items() if k * 50 >= n}
-    assert true_hh <= cand  # no false negatives, ever
-    # pruning: far fewer candidates than distinct tokens
-    assert len(cand) < len(c) / 10
+    want = _ranked(c, phi_num, phi_den)
+    assert _rows(heavy_hitters(df, phi_num, phi_den)) == want
+    top = heavy_hitters_topk(df, len(want), phi_num, phi_den).collect()
+    assert [(r["token"], r["cnt"], r["rank"]) for r in top] == [
+        (t, k, i + 1) for i, (t, k) in enumerate(want)
+    ]
+    with pytest.raises(ValueError, match="lower phi"):
+        heavy_hitters_topk(df, len(want) + 1, phi_num, phi_den)
 
 
 def test_heavy_hitters_topk_matches_exact(spark, skewed_docs):
-    c = _exact_counts(skewed_docs)
+    c = _exact_counts(r["text"] for r in skewed_docs.collect())
     want = sorted(c.items(), key=lambda kv: (-kv[1], kv[0]))[:3]
     got = [
         (r["token"], r["cnt"])

@@ -269,6 +269,27 @@ def test_sketch_stream_append_job_budget(spark, tmp_path):
     corpus.unpersist()
 
 
+def test_heavy_hitters_job_budget(spark, hh_fallback_docs):
+    """Top-k heavy hitters are one report pass collected to the driver,
+    and the result is a local frame whose collect runs no job. Every doc
+    carries the same 24 head tokens, so each task reports all of them and
+    the reports decide every count; only a corpus whose reports leave a
+    token undecided pays the one recount pass."""
+    from tetrex_spark.operators.heavy_hitters import heavy_hitters_topk
+
+    head = [f"w{j}" for j in range(24) for _ in range(j % 3 + 1)]
+    rows = [(i, " ".join(head + [f"u{i}a", f"u{i}b"])) for i in range(200)]
+    corpus = spark.createDataFrame(rows, "doc_id long, text string")
+    top, n_jobs = _jobs(spark, "hh-topk", lambda: heavy_hitters_topk(
+        corpus, k=20, phi_num=1, phi_den=50).collect())
+    assert [r["cnt"] for r in top] == [600] * 8 + [400] * 8 + [200] * 4
+    assert n_jobs <= 1, f"heavy_hitters_topk ran {n_jobs} jobs"
+    top, n_jobs = _jobs(spark, "hh-recount", lambda: heavy_hitters_topk(
+        hh_fallback_docs, k=1, phi_num=1, phi_den=50).collect())
+    assert [(r["token"], r["cnt"]) for r in top] == [("x", 109)]
+    assert n_jobs <= 2, f"heavy_hitters_topk with a recount ran {n_jobs} jobs"
+
+
 def _gate_text(i, edit=""):
     return (f"crawl page {i} about engine internals {i * 17} and the partition "
             f"shuffle topic {i % 13} {edit} with a cookie notice and more words")

@@ -330,6 +330,6 @@ def test_failure_after_candidates_leaks_no_storage(
     rows = [(i, f"doc {i} {BOILER} tail {i}") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     fail_after(type(df), "localCheckpoint")
-    with no_new_persisted_rdds(allow_checkpoints=True), \
+    with no_new_persisted_rdds(), \
             pytest.raises(RuntimeError, match="injected"):
         substring_dup_spans(df, min_len=40, k=16, max_bucket=2)

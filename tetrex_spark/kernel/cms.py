@@ -9,8 +9,9 @@ Merge = element-wise ADD (we deliberately use plain update, not
 conservative update, because conservative update breaks merge
 associativity). Byte-identical payloads under any merge order.
 
-Heavy-hitter *identification* at scale is done Spark-side (a candidate
-pass, see operators/heavy_hitters) — the kernel answers point queries.
+The kernel answers point queries. Heavy-hitter *identification* does
+not use it: operators/heavy_hitters finds the exact heavy hitters from
+per-task frequent-token reports in one corpus pass.
 """
 
 from __future__ import annotations

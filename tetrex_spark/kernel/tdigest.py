@@ -76,31 +76,28 @@ class TDigest(Sketch):
         self._compress()
 
     def _compress(self) -> None:
+        """Greedy left-to-right merge of the mean-sorted centroids, each
+        output centroid spanning <= 1 k-unit. On the k1 values of the
+        sorted cumulative weights, the next centroid starts at the first
+        input whose right edge lies more than one unit past the current
+        start: one searchsorted per OUTPUT centroid (<= ~delta of them),
+        none per input."""
         if self.means.size == 0:
             return
         order = np.argsort(self.means, kind="stable")
         means, weights = self.means[order], self.weights[order]
-        total = weights.sum()
-        out_m: list[float] = []
-        out_w: list[float] = []
-        cur_m, cur_w = means[0], weights[0]
-        q0 = 0.0
-        k0 = float(self._k(0.0))
-        for m, w in zip(means[1:], weights[1:]):
-            q_new = q0 + (cur_w + w) / total
-            if float(self._k(q_new)) - k0 <= 1.0:
-                cur_m += (m - cur_m) * (w / (cur_w + w))
-                cur_w += w
-            else:
-                out_m.append(cur_m)
-                out_w.append(cur_w)
-                q0 += cur_w / total
-                k0 = float(self._k(q0))
-                cur_m, cur_w = m, w
-        out_m.append(cur_m)
-        out_w.append(cur_w)
-        self.means = np.asarray(out_m)
-        self.weights = np.asarray(out_w)
+        right = np.cumsum(weights)
+        k_lo = self._k((right - weights) / right[-1])
+        k_hi = self._k(right / right[-1])
+        starts = [0]
+        while True:
+            s = starts[-1]
+            nxt = max(int(np.searchsorted(k_hi, k_lo[s] + 1.0, side="right")), s + 1)
+            if nxt >= means.size:
+                break
+            starts.append(nxt)
+        self.weights = np.add.reduceat(weights, starts)
+        self.means = np.add.reduceat(means * weights, starts) / self.weights
 
     # -- queries -----------------------------------------------------------
 

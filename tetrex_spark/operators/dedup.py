@@ -24,7 +24,7 @@ from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -329,6 +329,26 @@ def cap_buckets(
 
 
 @contextlib.contextmanager
+def released_on_failure(spark: SparkSession) -> Iterator[None]:
+    """A block that, when it raises, unpersists every local checkpoint
+    made while it ran; one that exits normally releases nothing. The
+    checkpoints are found by RDD id among the context's persisted RDDs,
+    since a checkpoint whose own call failed, or whose frame a failing
+    callee never returned, has no frame to release it by. A checkpoint
+    another thread makes on the same SparkContext while the block fails
+    is released too."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(rdds().keySet())
+    try:
+        yield
+    except BaseException:
+        for i, rdd in rdds().items():
+            if i not in before and rdd.rdd().isLocallyCheckpointed():
+                rdd.unpersist(False)
+        raise
+
+
+@contextlib.contextmanager
 def candidate_pairs(
     buckets: DataFrame, max_bucket: int | None, *, log_drops: bool = True,
     payload_col: str | None = None,
@@ -591,18 +611,19 @@ def _minhash_rep_level(
 
     Storage: the sig checkpoint stays pinned for as long as `reps` or
     any frame derived from it is alive; it is released by GC together
-    with them."""
+    with them. A failure releases both checkpoints at once."""
     docs, reps = dup_groups(df, text_col, id_col)
-    ss = minhash_sigs_and_sets(
-        reps, k, num_perm, "txt", "id", passthrough=("grp", "csize"),
-        bands=bands,
-    ).localCheckpoint(eager=True)
     members = docs.select("grp", "id")
-    with verify_rep_pairs(
-        ss, bands=bands, r=num_perm // bands, threshold=threshold,
-        max_bucket=max_bucket,
-    ) as rp:
-        rep_pairs, members = _checkpoint_together(rp, members, sizer=members)
+    with released_on_failure(df.sparkSession):
+        ss = minhash_sigs_and_sets(
+            reps, k, num_perm, "txt", "id", passthrough=("grp", "csize"),
+            bands=bands,
+        ).localCheckpoint(eager=True)
+        with verify_rep_pairs(
+            ss, bands=bands, r=num_perm // bands, threshold=threshold,
+            max_bucket=max_bucket,
+        ) as rp:
+            rep_pairs, members = _checkpoint_together(rp, members, sizer=members)
     return _minhash_run(members, rep_pairs, ss)
 
 
@@ -901,22 +922,23 @@ def _simhash_rep_level(
     """The in-session SimHash RepLevelRun, shared by
     simhash_pairs_from_fingerprints and simhash_edges_from_fingerprints.
     Only the rep pairs are checkpointed; members and reps read the
-    fingerprint checkpoint lazily."""
-    # materialize the fingerprint table ONCE (localCheckpoint — linear,
-    # ~16 B/doc, nothing like the quadratic member-pair list): the plan
-    # branches (buckets, members, reps) all read it without ever
-    # re-running the simhash kernel pass; the checkpoint blocks are freed
-    # when the returned frames are garbage-collected. With adaptive width
-    # the checkpoint is LAZY and the count() both materializes it and
-    # returns the size in ONE job.
-    if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
-        sh = sh.localCheckpoint(eager=n_blocks is not None)
-    if n_blocks is None:
-        # adaptive width (see simhash_pairs): this count is what
-        # materializes the lazy checkpoint — never a second text scan
-        n_blocks = 4 if sh.count() <= 200_000 else 6
-    with simhash_rep_pairs(sh, max_hamming, n_blocks, max_bucket) as rp:
-        rep_pairs = rp.localCheckpoint(eager=True)  # tiny: candidate-bounded
+    fingerprint checkpoint lazily. A failure releases both checkpoints."""
+    with released_on_failure(sh.sparkSession):
+        # materialize the fingerprint table ONCE (localCheckpoint — linear,
+        # ~16 B/doc, nothing like the quadratic member-pair list): the plan
+        # branches (buckets, members, reps) all read it without ever
+        # re-running the simhash kernel pass; the checkpoint blocks are
+        # freed when the returned frames are garbage-collected. With
+        # adaptive width the checkpoint is LAZY and the count() both
+        # materializes it and returns the size in ONE job.
+        if not (sh.storageLevel.useMemory or sh.storageLevel.useDisk):
+            sh = sh.localCheckpoint(eager=n_blocks is not None)
+        if n_blocks is None:
+            # adaptive width (see simhash_pairs): this count is what
+            # materializes the lazy checkpoint — never a second text scan
+            n_blocks = 4 if sh.count() <= 200_000 else 6
+        with simhash_rep_pairs(sh, max_hamming, n_blocks, max_bucket) as rp:
+            rep_pairs = rp.localCheckpoint(eager=True)  # tiny: candidate-bounded
     return _simhash_run(sh, rep_pairs)
 
 

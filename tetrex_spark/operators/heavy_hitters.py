@@ -1,133 +1,179 @@
-"""CMS-driven heavy-hitter identification — the candidate pass promised
-by kernel/cms.py (north-rule addition, SURVEY.md §2.6).
+"""Exact heavy hitters in one corpus pass, from per-task frequent-token
+reports (north-rule addition, SURVEY.md §2.6).
 
-The exact top-k token query (`__spark_entry__.q_heavy_hitters_exact`)
-shuffles every distinct token; at web scale the distinct-token set is the
-long tail CMS exists to avoid. This operator's shape:
+Contract. `heavy_hitters(df, phi_num, phi_den)` returns exactly the tokens
+with `count * phi_den >= N * phi_num`, each with its exact count, where N
+is the corpus token total. Tokens are the normalized text split on " "
+with "" dropped (`normalize_series`). The threshold is an integer test on
+the rational phi, so it is bit-identical across engines (no float ceil()
+edge cases vs the SQL oracle).
 
-  pass 1 (CMS build): one corpus scan -> per-task compact CMS partials
-      (build_sketches machinery, map-side only) -> one merged global CMS
-      on the driver (depth x width ints, KBs) + the exact token total N.
-  pass 2 (candidate identification + exact verify, one scan): broadcast
-      the CMS; per Arrow batch, probe the batch's DISTINCT tokens and emit
-      (token, local_count) ONLY for tokens whose estimate clears phi*N.
-      Because CMS never underestimates, every true heavy hitter is emitted
-      from every batch it appears in, so the downstream groupBy-sum is its
-      EXACT global count — and that shuffle carries candidates only, never
-      the tail.
+The pass. One `mapInArrow` over the text column; each task counts its own
+tokens exactly and reports
+  - every token with `cnt * phi_den * _SLACK >= n_t * phi_num`, with its
+    count, where n_t is the task's token total;
+  - one summary row: n_t and tau_t, the largest count it did not report.
+A task therefore sends at most `_SLACK * phi_den / phi_num + 1` rows, and
+the tail never leaves it. The rows reach the driver by a collect: there
+is no shuffle.
 
-Guarantees (Cormode & Muthukrishnan 2005): no false negatives (estimate
->= true count); false positives are removed by the exact verify, so the
-output is exactly {token : true_count * phi_den >= N * phi_num}. The
-threshold is a rational phi_num/phi_den compared in integer arithmetic —
-bit-identical across engines (no float ceil() edge cases vs the SQL
-oracle).
+The driver, per reported token: `lo` is the sum of its reported counts;
+`hi` adds the tau_t of every task that did not report it, an upper bound
+on its count. It is out when `hi * phi_den < N * phi_num`, and exact when
+`lo == hi`. Only tokens still undecided are counted again, by a second
+pass restricted to them.
+
+Completeness (pigeonhole). If `c * phi_den >= N * phi_num` and no task
+reported the token, then `c_t * phi_den * _SLACK < n_t * phi_num` in
+every task; summing over tasks gives `c * phi_den * _SLACK < N * phi_num
+<= c * phi_den`, which is false. So every heavy hitter is reported by
+some task, and none is missed.
+
+Results are driver-side frames (`verify.local_frame`): collecting them
+runs no Spark job.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections import Counter
+from typing import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
-from ..kernel import from_bytes
-from .sketch_build import SketchSpec, build_sketches
+from ..functions.text import normalize_series
+from .verify import local_frame
 
-_CAND_SCHEMA = T.StructType(
+# a task reports every token above 1/_SLACK of the global fraction phi:
+# more rows per task, fewer tokens left undecided on the driver
+_SLACK = 4
+
+# token rows carry the reporting task's tau; the task's summary row has a
+# null token and its token total in cnt
+_REPORT_SCHEMA = T.StructType(
     [
-        T.StructField("token", T.StringType(), False),
-        T.StructField("local_cnt", T.LongType(), False),
+        T.StructField("token", T.StringType(), True),
+        T.StructField("cnt", T.LongType(), False),
+        T.StructField("tau", T.LongType(), False),
     ]
 )
+_COUNT_SCHEMA = T.StructType(
+    [
+        T.StructField("token", T.StringType(), False),
+        T.StructField("cnt", T.LongType(), False),
+    ]
+)
+_TOPK_SCHEMA = T.StructType(
+    [*_COUNT_SCHEMA.fields, T.StructField("rank", T.IntegerType(), False)]
+)
+
+Pass = Callable[[Iterator[pa.RecordBatch]], Iterator[pa.RecordBatch]]
 
 
-def build_global_cms(
-    df: DataFrame, *, width: int = 8192, depth: int = 5, text_col: str = "text"
-) -> tuple[object, int]:
-    """One corpus scan -> (merged global CountMinSketch, exact token total).
+def _count_tokens(batches: Iterable[pa.RecordBatch], text_col: str) -> Counter:
+    """Exact token counts of one task's batches."""
+    counts: Counter = Counter()
+    for batch in batches:
+        if batch.num_rows:
+            text = normalize_series(batch.column(text_col).to_pandas())
+            # normalized docs hold single spaces only, so one join and
+            # split yields every doc's tokens, plus "" for empty docs
+            counts.update(" ".join(text).split(" "))
+    counts.pop("", None)
+    return counts
 
-    Reuses the sketch-build partial/merge machinery with a constant bin:
-    partials stay compact (unique key-count pairs) until they outgrow the
-    dense table, and the shuffle moves only serialized payloads."""
-    corpus = df.select(F.lit(0).alias("bin_id"), F.col(text_col).alias("text"))
-    spec = SketchSpec(
-        "hh_cms", "cms", "token", k=1, params={"width": width, "depth": depth}
+
+def _reporter(text_col: str, phi_num: int, phi_den: int) -> Pass:
+    schema = to_arrow_schema(_REPORT_SCHEMA)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        counts = _count_tokens(batches, text_col)
+        if not counts:
+            return
+        tokens = list(counts)
+        cnt = np.fromiter(counts.values(), dtype=np.int64, count=len(tokens))
+        n = int(cnt.sum())
+        keep = cnt * (phi_den * _SLACK) >= n * phi_num
+        tau = int(cnt[~keep].max(initial=0))
+        idx = np.flatnonzero(keep)
+        yield pa.RecordBatch.from_pydict(
+            {
+                "token": [tokens[i] for i in idx] + [None],
+                "cnt": np.append(cnt[idx], n),
+                "tau": np.full(len(idx) + 1, tau, dtype=np.int64),
+            },
+            schema=schema,
+        )
+
+    return fn
+
+
+def _counter(text_col: str, wanted: list[str]) -> Pass:
+    schema = to_arrow_schema(_COUNT_SCHEMA)
+
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        counts = _count_tokens(batches, text_col)
+        hit = [t for t in wanted if t in counts]
+        if hit:
+            yield pa.RecordBatch.from_pydict(
+                {"token": hit, "cnt": [counts[t] for t in hit]}, schema=schema
+            )
+
+    return fn
+
+
+def _report(df: DataFrame, phi_num: int, phi_den: int, text_col: str) -> DataFrame:
+    """The one corpus pass: per-task reports in `_REPORT_SCHEMA`."""
+    return df.select(text_col).mapInArrow(
+        _reporter(text_col, phi_num, phi_den), _REPORT_SCHEMA
     )
-    rows = build_sketches(corpus, [spec]).collect()
-    if not rows:
-        return None, 0
-    return from_bytes(bytes(rows[0]["payload"])), int(rows[0]["n_items"])
+
+
+def _heavy_counts(
+    df: DataFrame, phi_num: int, phi_den: int, text_col: str
+) -> pd.DataFrame:
+    """(token, cnt) of every heavy hitter, ranked by count desc, token."""
+    if phi_num <= 0 or phi_den <= 0:
+        raise ValueError("phi must be a positive rational")
+    rep = _report(df, phi_num, phi_den, text_col).toArrow().to_pandas()
+    summary = rep["token"].isna()
+    bar = int(rep["cnt"][summary].sum()) * phi_num
+    tok = (
+        rep[~summary]
+        .groupby("token", sort=False)
+        .agg(lo=("cnt", "sum"), tau_in=("tau", "sum"))
+    )
+    hi = tok["lo"] + (int(rep["tau"][summary].sum()) - tok["tau_in"])
+    live = tok[hi * phi_den >= bar]
+    exact = live["lo"] == hi[live.index]
+    counts = live["lo"][exact]
+    undecided = live.index[~exact].tolist()
+    if undecided:
+        recount = (
+            df.select(text_col)
+            .mapInArrow(_counter(text_col, undecided), _COUNT_SCHEMA)
+            .toArrow()
+            .to_pandas()
+            .groupby("token")["cnt"]
+            .sum()
+        )
+        counts = pd.concat([counts, recount])
+    out = counts[counts * phi_den >= bar].rename("cnt").rename_axis("token").reset_index()
+    return out.sort_values(["cnt", "token"], ascending=[False, True], ignore_index=True)
 
 
 def heavy_hitters(
-    df: DataFrame,
-    phi_num: int = 1,
-    phi_den: int = 50,
-    *,
-    width: int = 8192,
-    depth: int = 5,
-    text_col: str = "text",
+    df: DataFrame, phi_num: int = 1, phi_den: int = 50, *, text_col: str = "text"
 ) -> DataFrame:
     """All tokens with exact count >= (phi_num/phi_den) * N, with their
-    exact counts — identified by a CMS candidate pass, verified exactly.
-
-    Choose width so eps*N = (e/width)*N is well below the phi*N threshold,
-    or the candidate set degrades toward all distinct tokens (still
-    correct, just less pruning)."""
-    if phi_num <= 0 or phi_den <= 0:
-        raise ValueError("phi must be a positive rational")
-    cms, n_total = build_global_cms(df, width=width, depth=depth, text_col=text_col)
-    spark = df.sparkSession
-    if cms is None:
-        return spark.createDataFrame([], "token string, cnt long")
-    b_cms = spark.sparkContext.broadcast(cms.to_bytes())
-    bar = n_total * phi_num  # candidates: est * phi_den >= N * phi_num
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from ..functions.text import _combine_shingles, normalize_series
-        from ..kernel.hashing import hash_str_series
-
-        local = from_bytes(b_cms.value)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            # tokenize in-process: the Arrow transfer carries one row per
-            # DOC, not one per token (the exploded formulation shipped
-            # O(total tokens) rows through the Python worker for the same
-            # value_counts)
-            toks = normalize_series(pdf[text_col]).str.split(" ").explode()
-            toks = toks[toks != ""]
-            vc = toks.value_counts()
-            if vc.empty:
-                continue
-            uniq = vc.index.to_series(index=range(len(vc)))
-            # same key derivation as the build side's 'token' source: each
-            # unique token is a one-token doc through the shingle combiner
-            keys, _ = _combine_shingles(
-                hash_str_series(uniq), np.ones(len(uniq), dtype=np.int64), 1
-            )
-            est = local.estimate(keys)
-            keep = est * phi_den >= bar
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "token": uniq.to_numpy()[keep],
-                        "local_cnt": vc.to_numpy()[keep],
-                    }
-                )
-
-    cand_counts = df.select(text_col).mapInPandas(probe, _CAND_SCHEMA)
-    return (
-        cand_counts.groupBy("token")
-        .agg(F.sum("local_cnt").alias("cnt"))
-        .filter(F.col("cnt") * phi_den >= F.lit(bar))
-        .select("token", "cnt")
-    )
+    exact counts, as a driver-side frame (token, cnt) ranked by count
+    desc, then token."""
+    pdf = _heavy_counts(df, phi_num, phi_den, text_col)
+    return local_frame(df.sparkSession, pdf, _COUNT_SCHEMA)
 
 
 def heavy_hitters_topk(
@@ -136,35 +182,18 @@ def heavy_hitters_topk(
     phi_num: int = 1,
     phi_den: int = 50,
     *,
-    width: int = 8192,
-    depth: int = 5,
     text_col: str = "text",
 ) -> DataFrame:
-    """Exact top-k tokens (deterministic tie-break on the token), computed
-    over the CMS-pruned candidate set instead of a full distinct-token
-    shuffle. Equal to the exact full groupBy top-k WHENEVER the k-th true
-    count clears the phi threshold (i.e. there are >= k heavy hitters) —
-    the practical regime for head-token analytics; if fewer candidates
-    than k survive, the tail of the ranking would be wrong, so we raise
-    rather than silently return a short/incorrect list."""
-    from pyspark.sql.window import Window
-
-    hh = heavy_hitters(
-        df, phi_num, phi_den, width=width, depth=depth, text_col=text_col
-    )
-    w = Window.orderBy(F.desc("cnt"), F.col("token"))
-    ranked = hh.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= k
-    )
-    # localCheckpoint (<= k rows), not cache(): the count() guard needs a
-    # materialization, and an explicit cache left on the returned frame
-    # accumulates executor storage across repeated calls; checkpoint
-    # blocks are released when the frame is garbage-collected
-    out = ranked.select("token", "cnt", "rank").localCheckpoint(eager=True)
-    n = out.count()
-    if n < k:
+    """Exact top-k tokens (token, cnt, rank), ties broken on the token.
+    Equal to the exact full groupBy top-k whenever there are >= k heavy
+    hitters at phi; with fewer, the tail of the ranking would be wrong,
+    so it raises rather than return a short list."""
+    pdf = _heavy_counts(df, phi_num, phi_den, text_col)
+    if len(pdf) < k:
         raise ValueError(
-            f"only {n} tokens clear phi={phi_num}/{phi_den}; "
+            f"only {len(pdf)} tokens clear phi={phi_num}/{phi_den}; "
             f"top-{k} would be truncated — lower phi"
         )
-    return out
+    top = pdf.head(max(k, 0))
+    top = top.assign(rank=np.arange(1, len(top) + 1, dtype=np.int32))
+    return local_frame(df.sparkSession, top, _TOPK_SCHEMA)

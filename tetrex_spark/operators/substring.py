@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from ..functions.text import normalize_series
 from ..kernel.hashing import concat_ranges, hash_char_kgrams_series
-from .dedup import candidate_pairs
+from .dedup import candidate_pairs, released_on_failure
 
 _ANCHOR_SCHEMA = T.StructType(
     [
@@ -242,7 +242,8 @@ def substring_dup_spans(
     buckets = anchors.select(
         "id", F.lit(0).alias("band"), "bh", "pos"
     )
-    with candidate_pairs(buckets, max_bucket, payload_col="pos") as cand:
+    with released_on_failure(df.sparkSession), \
+            candidate_pairs(buckets, max_bucket, payload_col="pos") as cand:
         pair_anchors = (
             cand.groupBy("id_a", "id_b")
             .agg(
