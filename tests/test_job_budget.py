@@ -217,6 +217,29 @@ def test_motif_index_file_backed_job_budget(spark, tmp_path):
         assert n_query == 0, f"{name} ran {n_query} jobs"
 
 
+def test_motif_prefilter_job_budget(spark, tmp_path, monkeypatch):
+    """With the driver verify bound lowered under the candidate characters
+    of both patterns below: a constrained unselective pattern is
+    prefiltered and verified on the driver, 0 jobs; an unconstrained
+    (full_scan) one is not prefiltered and still runs the Spark verify."""
+    from tetrex_spark.plans import planner
+    from tetrex_spark.plans.planner import MotifIndex
+    from tetrex_spark.sources.corpus import webtext_small
+
+    webtext_small(spark).repartition(3).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    idx = MotifIndex.build(corpus, str(tmp_path / "motif_idx"), n_bins=16, k=3)
+    monkeypatch.setattr(planner, "DRIVER_VERIFY_MAX_CHARS", 22_000)
+    (unselective, full) = idx._scans(["zyzzyva (data|filter)", "w.{2}ld"])
+    assert unselective.nfa is not None and idx._chars(unselective.bins) > 22_000
+    assert full.nfa is None and idx._chars(full.bins) > 22_000
+    rows, n_jobs = _jobs(spark, "motif-prefilter", lambda: idx.query(
+        corpus, "zyzzyva (data|filter)").collect())
+    assert rows and n_jobs == 0, f"prefiltered query ran {n_jobs} jobs"
+    rows, n_jobs = _jobs(spark, "motif-full-scan", lambda: idx.query(corpus, "w.{2}ld").collect())
+    assert rows and n_jobs >= 1, f"full-scan query ran {n_jobs} jobs"
+
+
 def test_cli_query_on_parquet_corpus_runs_no_job(spark, tmp_path):
     """`cli index` then `cli query` (selective pattern, stdout sink) over a
     parquet corpus Spark wrote: the corpus is read with the schema in its

@@ -11,6 +11,7 @@ from tetrex_spark.kernel.hashing import (
     concat_ranges,
     hash_char_kgrams,
     hash_char_kgrams_series,
+    hash_str,
     hash_str_series,
     hash_ws_tokens_series,
 )
@@ -73,3 +74,12 @@ def test_concat_ranges_matches_naive(pairs):
         )
     )
     assert np.array_equal(concat_ranges(starts, counts), naive)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.text(max_size=40), st.integers(min_value=0, max_value=2**64 - 1))
+def test_hash_str_equals_series_hash(s, seed):
+    """The single-string hash (bytes straight to hash_bytes_buffer) equals
+    the Arrow-buffer Series hash, non-ASCII input included."""
+    assert hash_str(s, seed) == int(hash_str_series([s], seed)[0])
+    assert hash_str(s) == int(hash_str_series(pd.Series([s], dtype="object"))[0])

@@ -6,7 +6,10 @@ pruned verify, checked for hit-set EQUALITY against a full-scan Python
 import os
 import re
 
+import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from tetrex_spark.functions.text import corpus_text_series
 from tetrex_spark.plans.planner import MotifIndex
@@ -511,3 +514,139 @@ def test_failed_build_leaves_no_manifest(
         MotifIndex.build(corpus, path, n_bins=16, k=3)
     with pytest.raises(FileNotFoundError):
         MotifIndex.load(spark, path)
+
+
+# -- the document prefilter of unselective patterns --------------------------
+
+_DOC_CHARS = list("abcdeABCDE") + [" ", "\t", "\n", "\xa0", " ", "\x1c"]
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(st.text(alphabet=_DOC_CHARS, min_size=1, max_size=30), st.booleans()),
+        min_size=1, max_size=8,
+    ),
+    k=st.sampled_from([3, 5]),
+    data=st.data(),
+)
+def test_prefilter_keeps_every_matching_document(rows, k, data):
+    """The document prefilter (the NFA traversal over each document's exact
+    grams, gap terms dropped) keeps every document the verify regex
+    matches: upper case, Unicode whitespace (folded by the normalizer on
+    both sides) and html-only rows, under literal, dot, class,
+    alternation and gap patterns drawn from the documents."""
+    from tetrex_spark.functions.text import normalize_query
+    from tetrex_spark.plans.nfa import compile_nfa
+    from tetrex_spark.plans.rx import trim_regex
+    from tetrex_spark.plans.traverse import DocGrams, collect
+
+    text = pd.Series([None if html else t for t, html in rows], dtype="object")
+    html = pd.Series([f"<p>{t}</p>".encode() if html else None for t, html in rows],
+                     dtype="object")
+    docs = corpus_text_series(text, html).tolist()
+    src = data.draw(st.sampled_from([d for d in docs if d] or ["abc"]))
+    i = data.draw(st.integers(0, max(len(src) - 1, 0)))
+    s = src[i:i + data.draw(st.integers(3, 9))] or "abc"
+    other = data.draw(st.sampled_from(docs))[:6] or "e"
+    j = data.draw(st.integers(0, len(s) - 1))
+    pattern = data.draw(st.sampled_from([
+        s,
+        s[:j] + "." + s[j + 1:],
+        s[:j] + f"[{s[j]}x]" + s[j + 1:],
+        f"({s}|{other})",
+        f"{s[:j]}.{{0,3}}{s[j:]}",
+    ]))
+    if data.draw(st.booleans()):
+        pattern = pattern.upper().replace(" ", "\xa0")
+    rx = re.compile(normalize_query(pattern), re.IGNORECASE)
+    trimmed = trim_regex(normalize_query(pattern))
+    alphabet = frozenset("".join(docs)) | {" "}
+    if trimmed:
+        res = collect(compile_nfa(trimmed, k, alphabet), DocGrams(docs), k)
+        kept = np.ones(len(docs), dtype=bool) if res.full_scan else res.bins
+    else:
+        kept = np.ones(len(docs), dtype=bool)
+    for d, keep in zip(docs, kept):
+        assert keep or not rx.search(d), (pattern, d)
+
+
+# constrained patterns whose candidate bins hold 22.5k-45k of the webfiles
+# corpus's 45k characters, of which the prefilter keeps 3k-18k (k = 3: a
+# trigram of common words is in most documents)
+UNSELECTIVE = [
+    "zyzzyva (data|filter)",  # alternation
+    "dup token",              # literal
+    "d[aeiou]p token",        # class
+    "zyzzyva d.ta",           # dot
+    "zyzzyva .{0,3}filter",   # gap
+]
+
+
+@pytest.fixture
+def prefiltered(monkeypatch):
+    """The driver verify bound lowered to 22k characters: under every
+    UNSELECTIVE pattern's candidate characters, above what the prefilter
+    keeps of them. Yields the document counts the prefilter traversed."""
+    from tetrex_spark.plans import planner
+    from tetrex_spark.plans.traverse import DocGrams
+
+    runs = []
+
+    class CountingDocGrams(DocGrams):
+        def __init__(self, texts):
+            runs.append(len(texts))
+            super().__init__(texts)
+
+    monkeypatch.setattr(planner, "DRIVER_VERIFY_MAX_CHARS", 22_000)
+    monkeypatch.setattr(planner, "DocGrams", CountingDocGrams)
+    return runs
+
+
+@pytest.mark.parametrize("pattern", UNSELECTIVE)
+def test_prefilter_driver_rows_equal_spark_rows(spark, webfiles, prefiltered, pattern):
+    """An unselective pattern forced through the prefilter: the driver
+    rows equal the Spark rows and the oracle's, through query, query_many
+    and query_all, and the prefilter really ran on the driver path."""
+    corpus, idx, pdf = webfiles
+    (scan,) = idx._scans([pattern])
+    assert scan.nfa is not None and idx._chars(scan.bins) > 22_000
+    local, remote = _both_paths(spark, idx, corpus, lambda i, c: i.query(c, pattern))
+    assert prefiltered and local == remote
+    assert set(local) == oracle_hits(pdf, pattern)
+    pats = {"u": pattern, "d": "zyzzyva d.ta", "none": "qjxzvq"}
+    local, remote = _both_paths(spark, idx, corpus, lambda i, c: i.query_many(c, pats))
+    assert local == remote
+    for qid, p in pats.items():
+        assert {r[1:] for r in local if r[0] == qid} == oracle_hits(pdf, p), qid
+    both = [pattern, "zyzzyva"]
+    local, remote = _both_paths(spark, idx, corpus, lambda i, c: i.query_all(c, both))
+    assert local == remote
+    rxs = [re.compile(p, re.IGNORECASE) for p in both]
+    assert {u for (u,) in local} == {
+        u for u, d in zip(pdf["url"], pdf["norm"]) if all(r.search(d) for r in rxs)
+    }
+
+
+def test_prefilter_survivors_over_the_bound_go_to_spark(spark, webfiles, prefiltered):
+    """'the' is constrained, but 57 of 64 documents hold it: the
+    prefilter keeps 43k characters, over the bound, so the query takes the
+    Spark verify, with the oracle's rows."""
+    corpus, idx, pdf = webfiles
+    rows, n_jobs = _n_jobs(spark, "prefilter-over", lambda: idx.query(corpus, "the").collect())
+    assert prefiltered and n_jobs > 0
+    assert {tuple(r) for r in rows} == oracle_hits(pdf, "the")
+
+
+@pytest.mark.parametrize("pattern", [
+    "[^x]{3}zyzzyva", ".?zyzzyva", "[a-z]+filter", "[^q]{2}data .{0,5}stream",
+])
+def test_leading_quantified_atom_query(spark, webfiles, pattern):
+    """A leading uninformative atom with a quantifier is trimmed whole, so
+    the query plans (it raised IndexError in the NFA build) and answers
+    like the oracle on both verify paths."""
+    corpus, idx, pdf = webfiles
+    assert not idx.candidate_bins(pattern).full_scan
+    local, remote = _both_paths(spark, idx, corpus, lambda i, c: i.query(c, pattern))
+    assert local == remote
+    assert set(local) == oracle_hits(pdf, pattern)

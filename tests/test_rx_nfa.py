@@ -81,6 +81,14 @@ def test_trim_goldens():
     assert trim_regex("[a-z]acg") == "acg"
     assert trim_regex("acg") == "acg"
     assert trim_regex("a.g") == "a.g"  # interior dot untouched
+    # a stripped leading atom takes its quantifier along: '{6}', '+hello'
+    # or '?hello' left behind quantify nothing and broke the NFA build
+    assert trim_regex("[a-z]{6}") == ""
+    assert trim_regex("[^x]{3}hello") == "hello"
+    assert trim_regex("[a-z]+hello") == "hello"
+    assert trim_regex(".?hello") == "hello"
+    assert trim_regex(".{2}[^x]*hello") == "hello"
+    assert trim_regex("hello[a-z]{2,4}") == "hello"
 
 
 def test_negated_class_expands_against_alphabet():
@@ -195,6 +203,19 @@ def test_reference_golden_mini():
         idx.add_doc(b, hash_char_kgrams(d, 3))
     res = collect(compile_nfa("ac+g", 3, ALPHA), idx, 3)
     assert set(res.bin_ids()) == {0}
+
+
+def test_doc_grams_memo_keeps_docs_known_from_another_path():
+    """'bcd' is probed on two paths whose live documents overlap: the
+    second probe evaluates only the documents the first did not, and the
+    memo must answer the rest. Each A-type doc dies on one branch and
+    survives only on the other, whichever branch probes 'bcd' first."""
+    from tetrex_spark.plans.traverse import DocGrams
+
+    docs = ["zbcdw xbc", "zbcdw", "xbcdy zbc", "xbcdy"]
+    res = collect(compile_nfa("xbcdy|zbcdw", 3, frozenset("bcdwxyz ")), DocGrams(docs), 3)
+    assert res.bins.tolist() == [True] * 4 and not res.full_scan
+    assert res.n_cached == 0 and res.n_probes == 6  # 'bcd' probed twice
 
 
 def test_prosite_to_posix_goldens():

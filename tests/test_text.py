@@ -1,5 +1,8 @@
+import re
+
 import numpy as np
 import pandas as pd
+from hypothesis import given, settings, strategies as st
 
 from tetrex_spark.functions.text import (
     char_kgram_hashes_series,
@@ -17,6 +20,39 @@ def test_normalize_matches_query_normalizer():
     raw = "  The   QUICK\tBrown\nFox  "
     assert normalize_series(pd.Series([raw])).iloc[0] == normalize_query(raw)
     assert normalize_query(raw) == "the quick brown fox"
+
+
+def _regex_normalize(s: pd.Series) -> pd.Series:
+    """The regex form the normalizer replaced: the reference for its output."""
+    return s.fillna("").str.lower().str.replace(r"\s+", " ", regex=True).str.strip()
+
+
+def test_normalize_whitespace_is_re_whitespace_at_every_code_point():
+    r"""`str.split()`/`str.strip()` and `re`'s `\s` select the same 29 code
+    points, so the split form normalizes every character as the regex
+    form does (TOKENIZER_VERSION unchanged)."""
+    every = "".join(map(chr, range(0x110000)))
+    spaces = re.findall(r"\s", every)
+    assert spaces == [c for c in every if c.isspace()] and len(spaces) == 29
+    joined = "x".join(every)
+    assert normalize_query(joined) == re.sub(r"\s+", " ", joined.lower()).strip()
+    assert normalize_series(pd.Series([joined])).iat[0] == normalize_query(joined)
+
+
+_ws_text = st.text(alphabet=st.sampled_from(
+    list("aZ\u0130\u00df.") + [" ", "\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x1f",
+                              "\x85", "\xa0", "\u1680", "\u2003", "\u2028", "\u3000", "\u200b"]
+), max_size=40)
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.one_of(st.none(), _ws_text), max_size=8))
+def test_normalize_series_equals_regex_form(docs):
+    s = pd.Series(docs, dtype="object", index=range(10, 10 + len(docs)))
+    got = normalize_series(s)
+    assert got.index.equals(s.index)
+    assert got.tolist() == _regex_normalize(s).tolist()
+    assert got.tolist() == [normalize_query(d or "") for d in docs]
 
 
 def test_extract_html_deterministic_and_byte_identical():

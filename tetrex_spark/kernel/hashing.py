@@ -207,9 +207,12 @@ def hash_ws_tokens_series(
 def hash_str(s: str, seed: int = int(DEFAULT_SEED)) -> int:
     """Hash one string — the driver-side (query shingle) entry point.
 
-    Guaranteed equal to ``hash_str_series([s], seed)[0]`` (one code path).
+    Guaranteed equal to ``hash_str_series([s], seed)[0]`` (one code path:
+    the UTF-8 bytes go straight to ``hash_bytes_buffer``, without the
+    pandas/Arrow conversion a Series needs).
     """
-    return int(hash_str_series([s], seed)[0])
+    data = np.frombuffer(s.encode("utf-8"), dtype=np.uint8)
+    return int(hash_bytes_buffer(data, np.array([0, data.size], dtype=np.int64), seed)[0])
 
 
 def hash_char_kgrams(text: str, k: int, seed: int = int(DEFAULT_SEED)) -> np.ndarray:

@@ -3,21 +3,28 @@
 
 The reference re-opens candidate FASTA bins and scans every record with
 RE2 under an OMP parallel-for (include/query.h:126-138). Here the
-candidate rows reach the verify kernel by one of two reads:
-  - a driver-side read of the candidate bins' row groups from the index's
-    bin-sorted text copy (sources.bin_text), when the query's corpus is
-    the indexed file scan and the candidate bins hold few characters; the
-    kernel then runs on the driver and the result is a local DataFrame
-    (no Spark job until a consumer asks for one);
-  - otherwise a Spark scan of the whole corpus with the candidate-bin list
-    as an `isin` predicate on the per-row `bin_id`. Catalyst pushes it
-    into the scan, so it prunes only a corpus that stores bin_id; one
-    whose bin_id is computed per row is read in full.
+candidate rows reach the verify kernel by one of three reads, chosen by
+the planner's read rule (plans.planner, `MotifIndex._driver_scan`), which
+prices a query by the characters the kernel will scan:
+  - driver, as-is: the candidate bins' row groups of the index's
+    bin-sorted text copy (sources.bin_text), read with pyarrow, when the
+    query's corpus is the indexed file scan and the bins hold few
+    characters; the kernel runs on the driver and the result is a local
+    DataFrame (no Spark job until a consumer asks for one);
+  - driver, with a document prefilter: the same read for a pattern whose
+    bins hold too many characters but whose NFA traversal was
+    constrained; the read is normalized once, the traversal runs again
+    over each document's exact grams, and the kernel scans only the
+    documents it keeps, when those are few;
+  - Spark: a scan of the whole corpus with the candidate-bin list as an
+    `isin` predicate on the per-row `bin_id`. Catalyst pushes it into the
+    scan, so it prunes only a corpus that stores bin_id; one whose bin_id
+    is computed per row is read in full.
 
-Both reads call the same per-batch kernels (`match_batch`,
-`all_match_batch`), where Python's C regex engine plays RE2's role.
-Matches are emitted as (url, match, start, end) rows — the TSV sink (S7)
-becomes a DataFrame.
+All three call the same kernels (`match_rows`, `all_match_rows`; on the
+executors through `match_batch`, `all_match_batch`), where Python's C
+regex engine plays RE2's role. Matches are emitted as (url, match, start,
+end) rows — the TSV sink (S7) becomes a DataFrame.
 
 Offsets are relative to the NORMALIZED text (the index and the verifier
 must see the same bytes — same rule as the reference's reduced-alphabet
@@ -68,11 +75,16 @@ MULTI_MATCH_SCHEMA = T.StructType(
 PatternBins = list[tuple[str, str, "list[int] | None"]]
 
 
+def compile_pattern(pattern: str) -> re.Pattern:
+    """The verify's regex: case-insensitive, over normalized text."""
+    return re.compile(pattern, re.IGNORECASE)
+
+
 def compile_patterns(pattern_bins: PatternBins) -> list[tuple]:
-    """(query_id, compiled case-insensitive regex, int64 bin array or None)
-    per pattern: the form `match_batch` takes."""
+    """(query_id, compiled regex, int64 bin array or None) per pattern:
+    the form `match_batch` takes."""
     return [
-        (qid, re.compile(pat, re.IGNORECASE),
+        (qid, compile_pattern(pat),
          None if bins is None else np.asarray(sorted(bins), dtype=np.int64))
         for qid, pat, bins in pattern_bins
     ]
@@ -90,29 +102,23 @@ def _batch_text(pdf: pd.DataFrame) -> pd.Series:
     return corpus_text_series(pdf["text"], pdf["html"] if "html" in pdf else None)
 
 
-def match_batch(pdf: pd.DataFrame, rxs: list[tuple], id_col: str = "url") -> pd.DataFrame:
-    """The verify kernel of one batch: every match of every compiled
-    pattern of `rxs` (compile_patterns) in the rows of `pdf` (id_col,
-    text[, html][, bin_id]) -> (query_id, url, match, start, end). A
-    pattern with bins applies only to rows of those bins when `pdf` has
-    bin_id."""
-    text = _batch_text(pdf)
-    urls = pdf[id_col].to_numpy()
-    bin_ids = pdf["bin_id"].to_numpy() if "bin_id" in pdf else None
+def match_rows(text: pd.Series, ids: np.ndarray, rxs: list[tuple]) -> pd.DataFrame:
+    """The verify kernel: every match of every pattern of `rxs` —
+    (query_id, compiled regex, bool row mask or None for every row) — in
+    the normalized `text` rows -> (query_id, url, match, start, end), the
+    url being the row's entry of `ids`."""
     out = {"query_id": [], "url": [], "match": [], "start": [], "end": []}
-    for qid, rx, bins in rxs:
-        # bin gating + vectorized contains prefilter per pattern: the
-        # Python finditer loop touches only (candidate-bin, actually-
-        # matching) rows
-        if bins is not None and bin_ids is not None:
-            mask = np.isin(bin_ids, bins)
-            if not mask.any():
+    for qid, rx, rows in rxs:
+        # row gating + vectorized contains prefilter per pattern: the
+        # Python finditer loop touches only (gated, actually-matching) rows
+        if rows is not None:
+            if not rows.any():
                 continue
-            sub_text, sub_urls = text[mask], urls[mask]
+            sub_text, sub_ids = text[rows], ids[rows]
         else:
-            sub_text, sub_urls = text, urls
+            sub_text, sub_ids = text, ids
         hit = _contains(sub_text, rx)
-        for url, doc in zip(sub_urls[hit], sub_text.to_numpy()[hit]):
+        for url, doc in zip(sub_ids[hit], sub_text.to_numpy()[hit]):
             for m in rx.finditer(doc):
                 out["query_id"].append(qid)
                 out["url"].append(url)
@@ -122,14 +128,30 @@ def match_batch(pdf: pd.DataFrame, rxs: list[tuple], id_col: str = "url") -> pd.
     return pd.DataFrame(out).astype({"start": "int64", "end": "int64"})
 
 
-def all_match_batch(pdf: pd.DataFrame, patterns: list[str], id_col: str = "url") -> pd.DataFrame:
-    """The conjunctive kernel of one batch: the id_col of rows where every
-    pattern matches."""
-    text = _batch_text(pdf)
+def match_batch(pdf: pd.DataFrame, rxs: list[tuple], id_col: str = "url") -> pd.DataFrame:
+    """`match_rows` over one batch `pdf` (id_col, text[, html][, bin_id]),
+    normalized here; a pattern of `rxs` (compile_patterns) with bins
+    applies only to rows of those bins when `pdf` has bin_id."""
+    bin_ids = pdf["bin_id"].to_numpy() if "bin_id" in pdf else None
+    return match_rows(_batch_text(pdf), pdf[id_col].to_numpy(), [
+        (qid, rx, None if bins is None or bin_ids is None else np.isin(bin_ids, bins))
+        for qid, rx, bins in rxs
+    ])
+
+
+def all_match_rows(text: pd.Series, patterns: list[str]) -> np.ndarray:
+    """The conjunctive kernel: a bool mask of the normalized `text` rows
+    where every pattern matches."""
     mask = np.ones(len(text), dtype=bool)
     for pat in patterns:
-        mask &= _contains(text, re.compile(pat, re.IGNORECASE))
-    return pdf.loc[mask, [id_col]]
+        mask &= _contains(text, compile_pattern(pat))
+    return mask
+
+
+def all_match_batch(pdf: pd.DataFrame, patterns: list[str], id_col: str = "url") -> pd.DataFrame:
+    """`all_match_rows` over one batch: the id_col of rows where every
+    pattern matches."""
+    return pdf.loc[all_match_rows(_batch_text(pdf), patterns), [id_col]]
 
 
 def verify_regex_many(

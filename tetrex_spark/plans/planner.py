@@ -10,14 +10,33 @@ verification together. The Spark analog of `tetrex index` + `tetrex query`
           written concurrently with the sketch jobs.
   query:  normalize + trim -> postfix -> NFA (bounded unroll) ->
           traversal over the stacked Bloom matrix -> candidate bins ->
-          verify, by one of two reads:
-            - the candidate bins' row groups of the text copy, read and
-              verified on the driver into a local DataFrame (no Spark
-              job), when the query's corpus is the indexed file scan and
-              the candidate bins hold at most DRIVER_VERIFY_MAX_CHARS;
-            - otherwise an isin-pruned corpus scan with an Arrow-batched
-              regex verify on the executors.
-          Either way -> (url, match, start, end) DataFrame.
+          verify -> (url, match, start, end) DataFrame.
+
+The read rule (`MotifIndex._driver_scan`) is a contract. It prices a
+query by the characters the regex kernel will scan and picks one of three
+verifies, before any read where that is possible:
+  - driver, as-is: the query's corpus is the indexed file scan and its
+    patterns' candidate bins hold at most DRIVER_VERIFY_MAX_CHARS in all.
+    The bins' row groups of the text copy are read with pyarrow and
+    verified on the driver into a local DataFrame (no Spark job);
+  - driver, with a document prefilter: as above, but a pattern whose
+    traversal was constrained (not full_scan) and whose bins hold more
+    than DRIVER_VERIFY_MAX_CHARS is prefiltered. The read (at most
+    PREFILTER_MAX_READ_CHARS) is normalized once, the pattern's NFA is
+    traversed a second time with each candidate document as a "bin" and
+    its exact grams as the filter (traverse.DocGrams), and the kernel
+    scans only the documents that traversal keeps, if they and the as-is
+    patterns' bins hold at most DRIVER_VERIFY_MAX_CHARS;
+  - Spark: anything else — another corpus, an unconstrained (full_scan)
+    pattern over a large corpus, a prefilter whose read or probe work
+    would exceed its bound, or survivors that still exceed the verify
+    bound. An isin-pruned corpus scan with an Arrow-batched regex verify
+    on the executors.
+The prefilter is sound: it is the bin traversal with a false-positive-free
+filter per document, over the same normalized text the kernel searches,
+and gap terms dropped. It drops a document only where the bin traversal
+over an exact filter of that document would, so its recall equals the
+index's.
 
 The traversal runs on the driver exactly as in TetRex — the Bloom matrix
 is tiny relative to the corpus (B x m bits). On the Spark path the corpus
@@ -30,6 +49,7 @@ from __future__ import annotations
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -37,15 +57,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.util import inheritable_thread_target
 
-from ..functions.text import normalize_query
+from ..functions.text import corpus_text_series, normalize_query
 from ..operators.sketch_build import SketchSpec, build_sketches
 from ..operators.verify import (
     MULTI_MATCH_SCHEMA,
-    all_match_batch,
-    compile_patterns,
+    all_match_rows,
+    compile_pattern,
     conjunctive_schema,
     local_frame,
-    match_batch,
+    match_rows,
     prune_to_bins,
     verify_conjunctive,
     verify_regex_many,
@@ -63,21 +83,45 @@ from ..sources.sketch_store import (
 )
 from ..kernel.bloom import bloom_m_bits
 from .dgram import DGRAM_SKETCH_NAME, MAX_BIN_PADGRAMS, PAD, DGramIndex
-from .nfa import compile_nfa
+from .nfa import NFA, compile_nfa
 from .rx import trim_regex
-from .traverse import TraversalResult, collect
+from .traverse import DocGrams, TraversalResult, collect
 
 MOTIF_SKETCH_NAME = "char_bloom"
 # salt-shards per hot host of a salted build (recorded in the manifest)
 N_SALT = 8
-# The most characters of text a query verifies on the driver (summed over
-# its patterns' candidate bins); above it the verify is a Spark job.
-# Measured on a 4-core host (local[4], median of 7) over the perfbench
-# sketch_motif corpus (seed 302, 3.26M chars in 32 bins), one alternation
-# verified over growing bin sets: the driver read + verify took 46 ms at
-# 19k chars, 132 ms at 866k and 211 ms at 1.57M, the Spark scan 170-220 ms
-# at any size. The bound sits below that ~1.5M break-even.
-DRIVER_VERIFY_MAX_CHARS = 1_000_000
+# The read rule (module docstring) prices a query by the characters the
+# regex kernel scans. Measured on a 4-core host (local[4], median of 7)
+# over the perfbench sketch_motif corpus (seed 302, 3.26M chars in 32
+# bins), one alternation verified over growing bin sets: the driver read +
+# normalize + verify took 62 ms at 181k chars, 107 ms at 1.16M, 149 ms at
+# 2.27M and 216 ms at 3.26M; the Spark scan 180-310 ms at any size. The
+# most characters the kernel scans on the driver sits below that ~2.8M
+# break-even. (It was 1M when normalizing cost 3.5x more: 211 ms at 1.57M.)
+DRIVER_VERIFY_MAX_CHARS = 2_000_000
+# A document prefilter reads and normalizes its bins before it knows
+# whether the survivors fit: 88 ms for the 3.26M chars above (pyarrow read
+# 31, to pandas 9, normalize 48). A read of at most this many characters
+# loses ~110 ms when the query then goes to Spark anyway.
+PREFILTER_MAX_READ_CHARS = 4_000_000
+# A gram probe over every document costs ~0.8 ns a character (2.6 ms for
+# the 3.26M chars). A pattern's Bloom probes x its bins' characters bounds
+# its document traversal's work (the unselective perfbench patterns: 9-18
+# probes, 12-18 ms), and this cap holds it near 100 ms: '[aeiou]{5}' (3,125
+# probes, 12.5 s at document level) is verified on Spark.
+PREFILTER_MAX_PROBE_CHARS = 128_000_000
+
+
+class _Scan(NamedTuple):
+    """What the verify of one pattern scans: its normalized `pattern`, its
+    candidate `bins` (None: every bin), the `nfa` of a traversal that was
+    constrained (None when some accepting path was not: full_scan), and
+    the grams its Bloom traversal probed."""
+
+    pattern: str
+    bins: list[int] | None
+    nfa: NFA | None
+    n_probes: int
 
 
 def alphabet_and_sizing(binned: DataFrame, *widths: int) -> tuple:
@@ -321,34 +365,87 @@ class MotifIndex:
 
     # -- plan ----------------------------------------------------------------
 
-    def candidate_bins(self, pattern: str) -> TraversalResult:
-        """regex -> candidate bin vector (stages P7/P8 -> F1-F3 -> A5-A8)."""
+    def _plan(self, pattern: str) -> tuple[NFA | None, TraversalResult]:
+        """(NFA of the trimmed pattern, or None when trimming leaves
+        nothing; its traversal over the Bloom matrix)."""
         trimmed = trim_regex(normalize_query(pattern))
         if not trimmed:
             ones = np.ones(self.bloom.n_bins, dtype=bool)
-            return TraversalResult(ones, 0, 0, True)
+            return None, TraversalResult(ones, 0, 0, True)
         nfa = compile_nfa(trimmed, self.k, frozenset(self.alphabet))
-        return collect(nfa, self.bloom, self.k, dgram=self.dgram)
+        return nfa, collect(nfa, self.bloom, self.k, dgram=self.dgram)
+
+    def candidate_bins(self, pattern: str) -> TraversalResult:
+        """regex -> candidate bin vector (stages P7/P8 -> F1-F3 -> A5-A8)."""
+        return self._plan(pattern)[1]
+
+    def _scans(self, patterns: list[str], conjunctive: bool = False) -> list[_Scan]:
+        """One _Scan per pattern from one traversal each. In a conjunctive
+        query every pattern's candidate bins are the AND over all patterns
+        (include/query.h:267)."""
+        plans = [self._plan(p) for p in patterns]
+        vecs = [res.bins for _, res in plans]
+        if conjunctive:
+            vecs = [np.logical_and.reduce(vecs)] * len(vecs)
+        return [
+            _Scan(normalize_query(p),
+                  None if vec.all() else [int(i) for i in np.flatnonzero(vec)],
+                  None if res.full_scan else nfa, res.n_probes)
+            for p, (nfa, res), vec in zip(patterns, plans, vecs)
+        ]
 
     # -- execute ---------------------------------------------------------------
 
-    def _on_driver(self, corpus: DataFrame, verified: list[list[int] | None]) -> bool:
-        """Whether to verify on the driver from this index's text copy.
-        `verified` holds the bins each pattern is tested against (None:
-        every bin). Yes when the characters the kernel scans are at most
-        DRIVER_VERIFY_MAX_CHARS and `corpus` is the file scan the copy was
-        taken from (same fingerprint, so the same rows and bin ids)."""
+    def _driver_scan(
+        self, corpus: DataFrame, scans: list[_Scan], conjunctive: bool = False
+    ) -> tuple[np.ndarray, pd.Series, list[np.ndarray]] | None:
+        """The read rule of the module docstring: (urls, normalized text,
+        one row mask per scan) of this index's text copy when the verify
+        runs on the driver, None when it runs on Spark. A scan's mask holds
+        the rows its kernel scans: the rows of its bins, less what the
+        prefilter drops; in a conjunctive query, the rows every scan kept.
+        Each scan is priced by its bins' characters before the read, a
+        prefiltered one again by its survivors' after it."""
         fingerprint = self.manifest.get("corpus_fingerprint")
         if fingerprint is None or self.path is None:
-            return False
-        chars = sum(
-            int(self.bin_chars.sum() if bins is None else self.bin_chars[bins].sum())
-            for bins in verified
-        )
-        return chars <= DRIVER_VERIFY_MAX_CHARS and corpus_fingerprint(corpus) == fingerprint
+            return None
+        chars = [self._chars(sc.bins) for sc in scans]
+        prefilter = [sc.nfa is not None and c > DRIVER_VERIFY_MAX_CHARS
+                     for sc, c in zip(scans, chars)]
+        if sum(c for c, pf in zip(chars, prefilter) if not pf) > DRIVER_VERIFY_MAX_CHARS:
+            return None
+        read = _union(scans)
+        if any(prefilter) and (
+            self._chars(read) > PREFILTER_MAX_READ_CHARS
+            or any(pf and sc.n_probes * c > PREFILTER_MAX_PROBE_CHARS
+                   for sc, c, pf in zip(scans, chars, prefilter))
+        ):
+            return None
+        if corpus_fingerprint(corpus) != fingerprint:
+            return None
+        pdf = read_bin_text(self.path, read).to_pandas()
+        urls = pdf["url"].to_numpy()
+        text = corpus_text_series(pdf["text"], pdf["html"] if "html" in pdf else None)
+        bin_ids = pdf["bin_id"].to_numpy()
+        masks = [np.ones(len(pdf), dtype=bool) if sc.bins is None else np.isin(bin_ids, sc.bins)
+                 for sc in scans]
+        if not any(prefilter):
+            return urls, text, masks
+        docs = text.to_numpy()
+        for sc, pf, mask in zip(scans, prefilter, masks):
+            if pf:
+                rows = np.flatnonzero(mask)
+                mask[rows[~collect(sc.nfa, DocGrams(docs[rows].tolist()), self.k).bins]] = False
+        if conjunctive:
+            masks = [np.logical_and.reduce(masks)] * len(masks)
+        lengths = text.str.len().to_numpy()
+        if sum(int(lengths[m].sum()) for m in masks) > DRIVER_VERIFY_MAX_CHARS:
+            return None
+        return urls, text, masks
 
-    def _driver_rows(self, bin_ids: list[int] | None) -> pd.DataFrame:
-        return read_bin_text(self.path, bin_ids).to_pandas()
+    def _chars(self, bins: list[int] | None) -> int:
+        """Characters of text in `bins` (None: every bin)."""
+        return int(self.bin_chars.sum() if bins is None else self.bin_chars[bins].sum())
 
     def query(self, corpus: DataFrame, pattern: str) -> DataFrame:
         """Full pipeline -> matches (url, match, start, end): the
@@ -356,9 +453,9 @@ class MotifIndex:
 
         `corpus` may be the same DataFrame the index was built from or a
         re-read of the same table; bin assignment is recomputed from the
-        manifest so ids line up. A re-read of the indexed files verifies a
-        small candidate set on the driver (see `_on_driver`) and returns a
-        local DataFrame: no Spark job."""
+        manifest so ids line up. A re-read of the indexed files verifies
+        on the driver when the read rule allows (see `_driver_scan`) and
+        returns a local DataFrame: no Spark job."""
         return self.query_many(corpus, {"": pattern}).drop("query_id")
 
     def query_many(self, corpus: DataFrame, patterns: dict[str, str] | list[str]) -> DataFrame:
@@ -369,43 +466,47 @@ class MotifIndex:
         of candidate bins, and a single verify pass applies each pattern
         only to rows of its own bins. N patterns cost one scan instead
         of N sequential jobs, or none when the verify runs on the driver
-        (see `_on_driver`). Returns (query_id, url, match, start, end)."""
+        (see `_driver_scan`). Returns (query_id, url, match, start, end)."""
         if not isinstance(patterns, dict):
             patterns = {p: p for p in patterns}
-        spec: list[tuple[str, str, list[int] | None]] = []
-        union: set[int] = set()
-        full_scan = False
-        for qid, pat in patterns.items():
-            res = self.candidate_bins(pat)
-            bins = res.bin_ids()
-            if len(bins) >= self.bloom.n_bins:
-                spec.append((qid, normalize_query(pat), None))
-                full_scan = True
-            else:
-                spec.append((qid, normalize_query(pat), bins))
-                union.update(bins)
-        read = None if full_scan else sorted(union)
-        if self._on_driver(corpus, [bins for _, _, bins in spec]):
-            return local_frame(corpus.sparkSession,
-                               match_batch(self._driver_rows(read), compile_patterns(spec)),
-                               MULTI_MATCH_SCHEMA)
-        binned = self._binned(corpus)
-        pruned = binned if read is None else prune_to_bins(binned, read, self.bloom.n_bins)
-        return verify_regex_many(pruned, spec)
+        scans = self._scans(list(patterns.values()))
+        local = self._driver_scan(corpus, scans)
+        if local is not None:
+            urls, text, masks = local
+            return local_frame(corpus.sparkSession, match_rows(text, urls, [
+                (qid, compile_pattern(sc.pattern), mask)
+                for qid, sc, mask in zip(patterns, scans, masks)
+            ]), MULTI_MATCH_SCHEMA)
+        return verify_regex_many(self._pruned(corpus, scans),
+                                 [(qid, sc.pattern, sc.bins) for qid, sc in zip(patterns, scans)])
 
     def query_all(self, corpus: DataFrame, patterns: list[str]) -> DataFrame:
         """Conjunctive multi-motif (A5 + F11): candidate vectors AND-ed
         across queries (include/query.h:267), then one pruned scan (or a
-        driver-side verify, as in `query_many`) where every pattern must
-        match."""
-        vec = np.ones(self.bloom.n_bins, dtype=bool)
-        for p in patterns:
-            vec &= self.candidate_bins(p).bins
-        bin_ids = [int(i) for i in np.nonzero(vec)[0]]
-        patterns = [normalize_query(p) for p in patterns]
-        if self._on_driver(corpus, [bin_ids] * len(patterns)):
-            return local_frame(corpus.sparkSession,
-                               all_match_batch(self._driver_rows(bin_ids), patterns),
+        driver-side verify under the same read rule as `query_many`)
+        where every pattern must match."""
+        if not patterns:
+            raise ValueError("query_all needs at least one pattern")
+        scans = self._scans(patterns, conjunctive=True)
+        local = self._driver_scan(corpus, scans, conjunctive=True)
+        if local is not None:
+            urls, text, masks = local
+            rows = masks[0]
+            keep = all_match_rows(text[rows], [sc.pattern for sc in scans])
+            return local_frame(corpus.sparkSession, pd.DataFrame({"url": urls[rows][keep]}),
                                conjunctive_schema(corpus.schema["url"].dataType))
-        return verify_conjunctive(
-            prune_to_bins(self._binned(corpus), bin_ids, self.bloom.n_bins), patterns)
+        return verify_conjunctive(self._pruned(corpus, scans), [sc.pattern for sc in scans])
+
+    def _pruned(self, corpus: DataFrame, scans: list[_Scan]) -> DataFrame:
+        """The corpus binned by this index, pruned to the union of the
+        scans' candidate bins (Spark verify path)."""
+        binned = self._binned(corpus)
+        bins = _union(scans)
+        return binned if bins is None else prune_to_bins(binned, bins, self.bloom.n_bins)
+
+
+def _union(scans: list[_Scan]) -> list[int] | None:
+    """The sorted union of the scans' candidate bins (None: every bin)."""
+    if any(sc.bins is None for sc in scans):
+        return None
+    return sorted({b for sc in scans for b in sc.bins})

@@ -182,28 +182,35 @@ def to_postfix(pattern: str) -> list[Token]:
 # -- trim (P7) ---------------------------------------------------------------
 
 
+def _quantifier_span(s: str, pos: int) -> int:
+    """Length of a quantifier ('*', '+', '?', '{m}' or '{m,n}') starting at
+    pos, else 0."""
+    if pos < len(s) and s[pos] in "*+?":
+        return 1
+    if pos < len(s) and s[pos] == "{":
+        end = s.find("}", pos + 1)
+        if end != -1:
+            return end - pos + 1
+    return 0
+
+
 def _uninformative_span(s: str, pos: int) -> int:
-    """Length of an uninformative token starting at pos, else 0 — port of
-    matchUninformative (/root/reference/src/query.cpp:78-119)."""
+    """Length of an uninformative token starting at pos, with the
+    quantifier that follows it, else 0 — port of matchUninformative
+    (TetRex src/query.cpp:78-119). The quantifier goes with its
+    atom: stripping '[a-z]' from '[a-z]{6}' alone would leave '{6}',
+    which quantifies nothing."""
     c = s[pos]
     if c in "^$":
         return 1
     if c == ".":
-        if pos + 1 < len(s) and s[pos + 1] in "*+":
-            return 2
-        if pos + 1 < len(s) and s[pos + 1] == "{":
-            end = s.find("}", pos + 2)
-            if end != -1:
-                return end - pos + 1
-        return 1
+        return 1 + _quantifier_span(s, pos + 1)
     if c == "[":
         end = s.find("]", pos + 1)
         if end != -1:
             inside = s[pos + 1 : end]
-            if inside and (inside[0] == "^" or inside == "."):
-                return end - pos + 1
-            if "-" in inside:
-                return end - pos + 1
+            if inside and (inside[0] == "^" or inside == "." or "-" in inside):
+                return end - pos + 1 + _quantifier_span(s, end + 1)
     return 0
 
 

@@ -25,12 +25,30 @@ unconstrained (all-ones) vector — this implements for real the fallback
 the reference left dead in validate_regex (src/query.cpp:159-164): motifs
 with < k anchored literals degrade to a full scan instead of silently
 losing recall.
+
+The gram probe comes from the source `collect` is given, through one
+method, `probe_gram(gram, live) -> (hit, known)`: `hit` is the gram's
+membership vector over the source's B "bins", exact on the mask `known`,
+which covers `live` (the bins still live on the probing path). Two
+sources exist:
+  - a BloomMatrix (sources.sketch_store): bins are index bins; the gram is
+    hashed and probed in every bin at once (`known` is every bin);
+  - DocGrams: the "bins" are documents of normalized text, and a probe is
+    `gram in text`, evaluated for the live documents only. Run over the
+    candidate bins' documents, the traversal is TetRex's NFA x filter
+    product at document level with exact gram sets — the AND/OR gram
+    query of R. Cox, "Regular Expression Matching with a Trigram Index"
+    (2012) — and the planner uses it to prune an unselective pattern's
+    verify to the few documents that can match.
+Either way a gram is memoized per traversal with the mask it is known on,
+and probed again only for live bins outside that mask.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from ..functions.text import hash_char_kgram
 from .dgram import PAD
 from .nfa import NFA, Kind
 
@@ -49,29 +67,33 @@ class TraversalResult:
 MAX_STATES_PER_NODE = 4096
 
 
-def collect(nfa: NFA, bloom, k: int, dgram=None) -> TraversalResult:
-    """bloom: an object with probe_one(key)->bool[B] and n_bins; dgram:
+def collect(nfa: NFA, grams, k: int, dgram=None) -> TraversalResult:
+    """grams: the gram probe source, with n_bins and probe_gram(gram, live)
+    (a BloomMatrix, DocGrams, or the test oracle ExactBinIndex); dgram:
     optional plans.dgram.DGramIndex (or any probe_gap(l3, gaps, r3)
-    provider). Both duck-typed so tests can swap exact inverted indexes."""
-    from ..functions.text import hash_char_kgram
-
-    B = bloom.n_bins
+    provider), None at document level, where dropping the gap terms keeps
+    the filter sound. Both duck-typed so tests can swap exact inverted
+    indexes."""
+    B = grams.n_bins
     tail_len = max(k - 1, PAD)
     ones = np.ones(B, dtype=bool)
     result = np.zeros(B, dtype=bool)
-    cache: dict[str, np.ndarray] = {}
+    cache: dict[str, tuple[np.ndarray, np.ndarray]] = {}
     gap_cache: dict[tuple, np.ndarray] = {}
     stats = {"probes": 0, "cached": 0}
     full_scan = False
 
-    def probe(gram: str) -> np.ndarray:
-        hit = cache.get(gram)
-        if hit is None:
-            stats["probes"] += 1
-            hit = bloom.probe_one(hash_char_kgram(gram))
-            cache[gram] = hit
-        else:
+    def probe(gram: str, live: np.ndarray) -> np.ndarray:
+        memo = cache.get(gram)
+        todo = live if memo is None else live & ~memo[1]
+        if memo is not None and not todo.any():
             stats["cached"] += 1
+            return memo[0]
+        stats["probes"] += 1
+        hit, known = grams.probe_gram(gram, todo)
+        if memo is not None:
+            hit, known = np.where(known, hit, memo[0]), known | memo[1]
+        cache[gram] = (hit, known)
         return hit
 
     def probe_gap(left3: str, gaps: frozenset, right3: str) -> np.ndarray:
@@ -124,7 +146,7 @@ def collect(nfa: NFA, bloom, k: int, dgram=None) -> TraversalResult:
                         new_probed = probed
                         new_pending = pending
                         if len(seq) >= k:
-                            hit = probe(seq[-k:])
+                            hit = probe(seq[-k:], path)
                             new_path = new_path & hit
                             if not new_path.any():
                                 continue  # dead path short-circuit
@@ -158,6 +180,23 @@ def collect(nfa: NFA, bloom, k: int, dgram=None) -> TraversalResult:
     return TraversalResult(result, stats["probes"], stats["cached"], full_scan)
 
 
+class DocGrams:
+    """Exact gram membership over documents: "bin" i is document i of
+    `texts` (normalized text, as the verify kernel searches it). A probe
+    tests `gram in text` for the live documents only, so after the first
+    grams of a pattern it touches the few documents still on the path."""
+
+    def __init__(self, texts: list[str]):
+        self.texts = texts
+        self.n_bins = len(texts)
+
+    def probe_gram(self, gram: str, live: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        docs = np.flatnonzero(live)
+        hit = np.zeros(self.n_bins, dtype=bool)
+        hit[docs] = [gram in self.texts[i] for i in docs]
+        return hit, live
+
+
 class ExactBinIndex:
     """Test oracle: exact per-bin k-gram sets with the BloomMatrix probe
     interface — lets property tests separate traversal errors from Bloom
@@ -170,5 +209,6 @@ class ExactBinIndex:
     def add_doc(self, bin_id: int, keys: np.ndarray) -> None:
         self.sets[bin_id].update(int(x) for x in keys)
 
-    def probe_one(self, key: int) -> np.ndarray:
-        return np.array([key in s for s in self.sets], dtype=bool)
+    def probe_gram(self, gram: str, live: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        key = hash_char_kgram(gram)
+        return np.array([key in s for s in self.sets], dtype=bool), np.ones(self.n_bins, dtype=bool)

@@ -36,7 +36,7 @@ import pyarrow as pa
 import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 
-from ..functions.text import TOKENIZER_VERSION
+from ..functions.text import TOKENIZER_VERSION, hash_char_kgram
 from ..kernel import from_bytes, unpack_payload
 from ..operators.sketch_build import SketchSpec
 
@@ -175,6 +175,10 @@ class BloomMatrix:
         got = (self.matrix[:, byte_idx] & bit[None, :, :]) != 0
         return got.all(axis=2).T
 
-    def probe_one(self, key: int) -> np.ndarray:
-        """One key -> length-B bool vector (the bulk_contains analog)."""
-        return self.probe(np.array([key], dtype=np.uint64))[0]
+    def probe_gram(self, gram: str, live: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """The traversal's probe (plans.traverse.collect; the bulk_contains
+        analog): one char gram, hashed as the build hashes it, in every bin
+        at once, so the hit vector is known on every bin whatever `live`
+        holds."""
+        hit = self.probe(np.array([hash_char_kgram(gram)], dtype=np.uint64))[0]
+        return hit, np.ones(self.n_bins, dtype=bool)
